@@ -892,19 +892,18 @@ def fold_register_write(
     grouped by ``keys`` over exact integers, written sorted by
     (``keys``) exactly as the distributed ``union → groupBy →
     orderBy`` plan wrote it (register keys are unique post-group, so
-    the sort has no ties). Anything unexpected — over-caps state,
-    nested types, a failed collect — falls back to that distributed
+    the sort has no ties). Anything unexpected — a batch or state
+    over the driver gate's caps (``driver_gate``), state that cannot
+    be cast to the batch schema — falls back to that distributed
     plan verbatim.
     """
     import pyarrow as pa
     import pyspark.sql.functions as F
 
+    from oups_spark.store import driver_gate as gate
+
     assert merge in ("sum", "max")
-    tbl = None
-    try:
-        tbl = regs.toArrow()
-    except Exception:  # noqa: BLE001 — maxResultSize etc.
-        tbl = None
+    tbl = gate.collect(regs, max_rows=gate.MAX_ROWS)
     old = None
     if tbl is not None and ds.exists:
         old = ds.read_arrow()

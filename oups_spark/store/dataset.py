@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
 
 from oups_spark.functions.dates import floor_ts, floor_ts_scalar
+from oups_spark.store import driver_gate as gate
 from oups_spark.store.manifest import (
     FileEntry,
     Manifest,
@@ -52,20 +53,6 @@ DEFAULT_ROW_GROUP_TARGET_SIZE = 6_345_000
 # A file is "off target" below 80% of target (reference:
 # n_rows_strategy.py:33,136).
 ON_TARGET_SCALE_FACTOR = 0.8
-
-# batch + overlap row bound under which a merge write runs
-# driver-side with pyarrow (one Spark collect job) instead of the
-# distributed merge job train — the frequent-small-flush latency path
-_DRIVER_MERGE_MAX_ROWS = 100_000
-# ...and the BYTE bound on the collected Arrow table: the row cap does
-# not bound bytes when the payload is wide text (100k multi-KB
-# documents is multi-GB), so the auto gate also estimates bytes —
-# fixed-width from the schema, string columns measured with one cheap
-# octet_length agg, old files from their on-disk size — and only takes
-# the driver path under this budget.
-_DRIVER_MERGE_MAX_BYTES = 128 << 20
-# snappy-parquet -> in-memory Arrow inflation assumed for old files
-_PARQUET_INFLATION = 4
 
 _SRC = "__oups_src"
 _FIDX = "__oups_fidx"
@@ -165,9 +152,7 @@ class OrderedDataset:
         return self._manifest.n_rows if self._manifest else 0
 
     def file_paths(self) -> list[str]:
-        if not self._manifest:
-            return []
-        return [os.path.join(self.path, f.name) for f in self._manifest.files]
+        return self._paths(self._manifest.files) if self._manifest else []
 
     def schema(self) -> StructType | None:
         if self._manifest and self._manifest.schema_json:
@@ -175,70 +160,50 @@ class OrderedDataset:
         return None
 
     # ------------------------------------------------------------- read
-    def read_arrow(
-        self,
-        *,
-        max_rows: int | None = None,
-        max_bytes: int | None = None,
-    ):
+    def read_arrow(self):
         """The live rows as ONE pyarrow Table in manifest order —
         driver-side parquet reads, no Spark job. For driver-sized
         state tables (sketch registers, small incremental folds) this
         replaces a full scan+shuffle plan per maintenance step.
 
         Conservative: returns ``None`` (caller falls back to the
-        distributed ``read()``) when the dataset is over the
-        row/byte caps, stores flattened cmidx columns, or carries
-        files whose schemas cannot be unified under the manifest
-        schema — a ``None`` is never wrong, only slower."""
+        distributed ``read()``) when the dataset is over the driver
+        gate's caps (``driver_gate``), stores flattened cmidx columns,
+        or carries files whose schemas cannot be unified under the
+        manifest schema — a ``None`` is never wrong, only slower."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if not self.exists:
             return None
         man = self._manifest
-        if man.cmidx:
+        paths = self._paths(man.files)
+        if man.cmidx or not gate.fits(sum(e.n_rows for e in man.files), paths=paths):
             return None
-        row_cap = max_rows if max_rows is not None else _DRIVER_MERGE_MAX_ROWS
-        byte_cap = max_bytes if max_bytes is not None else _DRIVER_MERGE_MAX_BYTES
-        if sum(e.n_rows for e in man.files) > row_cap:
-            return None
-        if self._old_files_bytes(man.files) > byte_cap:
-            return None
-        want_names = None
-        if man.schema_json:
-            want_names = {
+        try:
+            tables = gate.decode(paths)
+            if not tables:
+                return None
+            schema = tables[0].schema
+            if man.schema_json and set(schema.names) != {
                 f["name"]
                 for f in __import__("json").loads(man.schema_json)["fields"]
-            }
-        schema = None
-        tables = []
-        total = 0
-        for e in man.files:
-            try:
-                t = pq.read_table(os.path.join(self.path, e.name))
-                if schema is None:
-                    if want_names is not None and set(t.schema.names) != want_names:
-                        # evolved dataset: read() would project missing
-                        # columns as NULL — leave that to the Spark path
-                        return None
-                    schema = t.schema
-                else:
-                    t = t.select(schema.names).cast(schema)
-            except (
-                OSError,
-                KeyError,
-                pa.ArrowInvalid,
-                pa.ArrowNotImplementedError,
-            ):
-                return None  # schema drift / missing file: fall back
-            total += t.nbytes
-            if total > 2 * byte_cap:
-                return None  # decoded far larger than on-disk estimate
-            tables.append(t)
-        if not tables:
-            return None
-        return pa.concat_tables(tables)
+            }:
+                # evolved dataset: read() would project missing
+                # columns as NULL — leave that to the Spark path
+                return None
+            return pa.concat_tables(
+                [tables[0]] + [t.select(schema.names).cast(schema) for t in tables[1:]]
+            )
+        except (
+            OSError,
+            KeyError,
+            pa.ArrowInvalid,
+            pa.ArrowNotImplementedError,
+        ):
+            return None  # schema drift / missing file: fall back
+
+    def _paths(self, entries) -> list[str]:
+        return [os.path.join(self.path, e.name) for e in entries]
 
     def read(
         self,
@@ -310,9 +275,7 @@ class OrderedDataset:
                         __import__("json").loads(man.schema_json)
                     )
                 )
-            df = reader.parquet(
-                *[os.path.join(self.path, e.name) for e in entries]
-            )
+            df = reader.parquet(*self._paths(entries))
         o = F.col(man.ordered_on)
         if start is not None:
             df = df.filter(o >= F.lit(start))
@@ -600,24 +563,15 @@ class OrderedDataset:
             and use_driver_merge is not False
             and isinstance(row_group_target_size, int)
             and target_schema is None
-            and not any(
-                t in f.dataType.simpleString()
-                for f in df.schema.fields
-                for t in ("binary", "array", "map", "struct")
-            )
+            and gate.arrow_safe(df.schema)
         ):
-            if batch_tbl is not None:
-                # the batch is already on the driver: no probe job
-                probe_tbl = batch_tbl
-            else:
-                try:
-                    probe_tbl = df.limit(_DRIVER_MERGE_MAX_ROWS + 1).toArrow()
-                except Exception:  # noqa: BLE001 — maxResultSize etc.
-                    probe_tbl = None
-            if (
-                probe_tbl is not None
-                and probe_tbl.num_rows > _DRIVER_MERGE_MAX_ROWS
-            ):
+            # a batch already on the driver needs no probe job
+            probe_tbl = (
+                batch_tbl
+                if batch_tbl is not None
+                else gate.collect(df, max_rows=gate.MAX_ROWS)
+            )
+            if probe_tbl is not None and not gate.fits(probe_tbl.num_rows):
                 probe_tbl = None  # oversized: classic path (stats agg)
         # string-payload bytes of the new batch ride along in the SAME
         # job as the bounds/monotonic pass (zero extra jobs) — the
@@ -709,35 +663,29 @@ class OrderedDataset:
         # identical (same overlap selection upstream, same keep-last
         # tiebreak, same footer-stats manifest entries via
         # _footer_stats); any arrow incompatibility falls back to the
-        # Spark path below. Binary/array/map/struct columns opt out
-        # (the ROW cap does not bound their bytes); string columns are
-        # allowed but measured — the estimated collected size must fit
-        # _DRIVER_MERGE_MAX_BYTES.
+        # Spark path below. Caps and column-type policy: driver_gate;
+        # string columns are measured, not excluded.
         n_old = sum(e.n_rows for e in replaced)
+        old_paths = self._paths(replaced)
         if use_driver_merge is None:
             if probe_tbl is not None:
                 # the batch is already collected: gate on its ACTUAL
-                # Arrow bytes (better than the schema estimate) plus
-                # the old files' footer-declared decoded size
-                use_driver_merge = (
-                    n_new + n_old <= _DRIVER_MERGE_MAX_ROWS
-                    and probe_tbl.nbytes + self._old_files_bytes(replaced)
-                    <= _DRIVER_MERGE_MAX_BYTES
+                # Arrow bytes (better than the schema estimate)
+                use_driver_merge = gate.fits(
+                    n_new + n_old, probe_tbl.nbytes, old_paths
                 )
             else:
                 use_driver_merge = (
                     isinstance(row_group_target_size, int)
                     and target_schema is None
-                    and n_new + n_old <= _DRIVER_MERGE_MAX_ROWS
-                    and not any(
-                        any(
-                            t in f.dataType.simpleString()
-                            for t in ("binary", "array", "map", "struct")
-                        )
-                        for f in df.schema.fields
+                    # rows first: the byte estimate may cost a job
+                    and n_new + n_old <= gate.MAX_ROWS
+                    and gate.arrow_safe(df.schema)
+                    and gate.fits(
+                        n_new + n_old,
+                        self._estimate_new_bytes(df, n_new, str_bytes),
+                        old_paths,
                     )
-                    and self._estimate_merge_bytes(df, n_new, replaced, str_bytes)
-                    <= _DRIVER_MERGE_MAX_BYTES
                 )
         if use_driver_merge and isinstance(row_group_target_size, int):
             new_entries = self._merge_write_driver(
@@ -772,9 +720,7 @@ class OrderedDataset:
                 )
             old = _with_file_rank(
                 self.spark,
-                old_reader.parquet(
-                    *[os.path.join(self.path, e.name) for e in replaced]
-                )
+                old_reader.parquet(*self._paths(replaced))
                 .withColumn(_POS, F.monotonically_increasing_id())
                 .withColumn(_SRC, F.lit(0)),
                 replaced,
@@ -817,7 +763,7 @@ class OrderedDataset:
         )
         by_file = build_file_blooms(
             self.spark,
-            [os.path.join(self.path, e.name) for e in new_entries],
+            self._paths(new_entries),
             data_schema,
             bloom_cols,
         )
@@ -1040,24 +986,19 @@ class OrderedDataset:
         "timestamp_ntz": 8,
     }
 
-    def _estimate_merge_bytes(
-        self, df: DataFrame, n_new: int, replaced, str_bytes: int | None
+    def _estimate_new_bytes(
+        self, df: DataFrame, n_new: int, str_bytes: int | None
     ) -> int:
-        """Estimated in-memory Arrow bytes of the driver-side merge.
-
-        New batch: fixed-width columns priced from the schema; string
-        columns use ``str_bytes`` — measured for free inside the
+        """Estimated in-memory Arrow bytes of the new batch for the
+        driver-merge gate: fixed-width columns priced from the schema;
+        string columns use ``str_bytes`` — measured for free inside the
         bounds/monotonic pass (``_check_monotonic`` / the stats agg),
         never with an extra job. When strings are present but were NOT
         measured (``known_stats`` writes, where the producer skipped
         the bounds job entirely), one bounded agg job measures them
         here — the only path that pays an extra job, and only for
-        string-bearing known-stats batches. Old files: the parquet
-        FOOTER's total_uncompressed_size (a local metadata read —
-        exact even for highly compressible text, where on-disk size ×
-        a fixed inflation factor underestimates by 10-50×), falling
-        back to on-disk size × ``_PARQUET_INFLATION``; if neither
-        works the estimate is ∞ (stay distributed).
+        string-bearing known-stats batches. The overlapped files are
+        priced by ``driver_gate.decoded_bytes``.
         """
         fixed = 0
         str_cols = []
@@ -1078,33 +1019,7 @@ class OrderedDataset:
                 ).collect()[0]
                 str_bytes = sum(int(v or 0) for v in row)
             new_bytes += str_bytes
-        return new_bytes + self._old_files_bytes(replaced)
-
-    def _old_files_bytes(self, replaced) -> int:
-        """Estimated decoded bytes of the overlapping files: the
-        parquet FOOTER's total_uncompressed_size (a local metadata
-        read), falling back to on-disk size × ``_PARQUET_INFLATION``;
-        ∞ when neither works (stay distributed)."""
-        old_bytes = 0
-        for e in replaced:
-            p = os.path.join(self.path, e.name)
-            try:
-                import pyarrow.parquet as pq
-
-                md = pq.ParquetFile(p).metadata
-                old_bytes += sum(
-                    md.row_group(g).column(c).total_uncompressed_size
-                    for g in range(md.num_row_groups)
-                    for c in range(md.num_columns)
-                )
-            except Exception:  # noqa: BLE001 — unreadable footer
-                try:
-                    old_bytes += (
-                        os.path.getsize(p) * _PARQUET_INFLATION
-                    )
-                except OSError:
-                    return 1 << 62
-        return old_bytes
+        return new_bytes
 
     def _check_monotonic(self, new: DataFrame, ordered_on: str, str_cols=()):
         """Reject unsorted input (reference: ``write.py:182-185``) and
@@ -1264,22 +1179,15 @@ class OrderedDataset:
         reader the Spark path uses, so manifest entries are
         indistinguishable. Returns None when the files cannot be
         unified under the batch's Arrow schema (caller falls back to
-        the distributed path).
-
-        HARD byte cap, independent of the auto gate's estimate: old
-        files are decoded batch-at-a-time and ACTUAL in-memory bytes
-        accumulate against 2× the gate budget — bail to the
-        distributed path the moment they exceed it. The estimate can
-        be fooled (parquet's footer "uncompressed" size is
-        post-dictionary-encoding, so heavily repeated strings decode
-        far larger); the cap cannot, and it bounds peak driver memory
-        to budget + one record batch."""
+        the distributed path) or when the batch and the decoded files
+        pass the driver gate's hard bail (``driver_gate``)."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if new_tbl is None:
-            new_tbl = df.toArrow()
+            new_tbl = gate.collect(df)
+            if new_tbl is None:
+                return None
         # relax nullability: a batch built from literals arrives with
         # non-nullable fields, but the DATASET schema is nullable —
         # casting old files (which may hold NULLs) to the stricter
@@ -1287,25 +1195,13 @@ class OrderedDataset:
         # just because one batch happened to be dense
         relaxed = pa.schema([f.with_nullable(True) for f in new_tbl.schema])
         new_tbl = new_tbl.cast(relaxed)
-        hard_cap = 2 * _DRIVER_MERGE_MAX_BYTES
-        actual = new_tbl.nbytes
-        if actual > hard_cap:
-            return None
         try:
-            tables = []
-            for e in replaced:
-                pf = pq.ParquetFile(os.path.join(self.path, e.name))
-                batches = []
-                for rb in pf.iter_batches(batch_size=16384):
-                    actual += rb.nbytes
-                    if actual > hard_cap:
-                        return None  # decoded larger than estimated
-                    batches.append(rb)
-                t = pa.Table.from_batches(batches, schema=pf.schema_arrow)
-                t = t.select(new_tbl.schema.names)
-                tables.append(t.cast(relaxed))
-            merged = (
-                pa.concat_tables(tables + [new_tbl]) if tables else new_tbl
+            tables = gate.decode(self._paths(replaced), used=new_tbl.nbytes)
+            if tables is None:
+                return None
+            merged = pa.concat_tables(
+                [t.select(new_tbl.schema.names).cast(relaxed) for t in tables]
+                + [new_tbl]
             )
         except (KeyError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
             return None  # schema drift (e.g. pre-evolution files)
@@ -1415,33 +1311,21 @@ class OrderedDataset:
         every file to carry the IDENTICAL Arrow schema (compact must
         not silently null evolved columns — mixed-schema runs take the
         distributed path, which projects through the manifest schema);
-        bails to the distributed path when decoded bytes exceed the
-        same hard cap as the driver merge."""
+        bails to the distributed path past the driver gate's hard
+        bail."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        hard_cap = 2 * _DRIVER_MERGE_MAX_BYTES
-        actual = 0
-        tables = []
-        schema = None
         try:
-            for e in run:
-                pf = pq.ParquetFile(os.path.join(self.path, e.name))
-                if schema is None:
-                    schema = pf.schema_arrow
-                elif not pf.schema_arrow.equals(schema):
-                    return None  # mixed pre/post-evolution schemas
-                batches = []
-                for rb in pf.iter_batches(batch_size=16384):
-                    actual += rb.nbytes
-                    if actual > hard_cap:
-                        return None
-                    batches.append(rb)
-                tables.append(pa.Table.from_batches(batches, schema=schema))
-            merged = pa.concat_tables(tables)
+            tables = gate.decode(self._paths(run))
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError, OSError):
             return None
-        return self._stage_arrow_chunks(merged, ordered_on, target)
+        if tables is None or any(
+            not t.schema.equals(tables[0].schema) for t in tables
+        ):
+            return None  # too big, or mixed pre/post-evolution schemas
+        return self._stage_arrow_chunks(
+            pa.concat_tables(tables), ordered_on, target
+        )
 
     def _finalize_staged(self, stats) -> list[FileEntry]:
         """Move staged files into the dataset under fresh opaque names
@@ -1697,21 +1581,19 @@ class OrderedDataset:
             # DRIVER FAST PATH: a small homogeneous-schema run
             # coalesces driver-side with pyarrow — zero Spark jobs for
             # the exact workload compact exists for (many tiny flush
-            # files). Same gates as the driver merge write (row cap +
-            # actual-bytes hard cap); mixed-schema or big runs fall
-            # through to the distributed rewrite below.
+            # files). Gated on the row cap and the hard bail
+            # (driver_gate); mixed-schema or big runs fall through to
+            # the distributed rewrite below.
             new_entries = (
                 self._compact_run_driver(run, ordered_on, row_group_target_size)
                 if isinstance(row_group_target_size, int)
-                and sum(e.n_rows for e in run) <= _DRIVER_MERGE_MAX_ROWS
+                and gate.fits(sum(e.n_rows for e in run))
                 else None
             )
             if new_entries is None:
                 merged = _with_file_rank(
                     self.spark,
-                    reader.parquet(
-                        *[os.path.join(self.path, e.name) for e in run]
-                    )
+                    reader.parquet(*self._paths(run))
                     .withColumn(_POS, F.monotonically_increasing_id())
                     .withColumn(_SRC, F.lit(0)),
                     run,
@@ -1806,18 +1688,12 @@ class OrderedDataset:
         # with one task per output file. The curve is a LAYOUT: rows
         # are preserved bit-for-bit (same reader, same writer as the
         # driver compact path), only their file assignment differs,
-        # so readers see identical data either way. Row/byte-gated
-        # with the distributed rewrite below as the 100 TB path.
+        # so readers see identical data either way. Gated by
+        # driver_gate, with the distributed rewrite below as the
+        # 100 TB path.
         new_entries = None
-        driver_cap = int(
-            os.environ.get(
-                "OUPS_ZORDER_DRIVER_MAX_ROWS", str(_DRIVER_MERGE_MAX_ROWS)
-            )
-        )
-        if (
-            sum(e.n_rows for e in old) <= driver_cap
-            and self._old_files_bytes(old) <= _DRIVER_MERGE_MAX_BYTES
-        ):
+        old_paths = self._paths(old)
+        if gate.fits(sum(e.n_rows for e in old), paths=old_paths):
             new_entries = self._zorder_rewrite_driver(
                 old, ordered_on, target, zorder_by
             )
@@ -1829,9 +1705,7 @@ class OrderedDataset:
                         __import__("json").loads(man.schema_json)
                     )
                 )
-            df = reader.parquet(
-                *[os.path.join(self.path, e.name) for e in old]
-            )
+            df = reader.parquet(*old_paths)
             # the rewrite input is consumed THREE times (percentile
             # sketch, range-partitioner sample, write) — persist it when
             # it fits a bounded budget so the file set is scanned once
@@ -1842,7 +1716,7 @@ class OrderedDataset:
                 os.environ.get("OUPS_COMPACT_CACHE_MAX_BYTES", str(4 << 30))
             )
             cached = None
-            if self._old_files_bytes(old) <= cache_cap:
+            if gate.decoded_bytes(old_paths) <= cache_cap:
                 from pyspark import StorageLevel
 
                 cached = df = df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1930,26 +1804,17 @@ class OrderedDataset:
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         from oups_spark.store.zorder import _ZBITS
 
-        hard_cap = 2 * _DRIVER_MERGE_MAX_BYTES
-        tables = []
-        total = 0
-        schema = None
         try:
-            for e in old:
-                t = pq.read_table(os.path.join(self.path, e.name))
-                if schema is None:
-                    schema = t.schema
-                else:
-                    t = t.select(schema.names).cast(schema)
-                total += t.nbytes
-                if total > hard_cap:
-                    return None
-                tables.append(t)
-            tbl = pa.concat_tables(tables)
+            tables = gate.decode(self._paths(old))
+            if tables is None:
+                return None
+            schema = tables[0].schema
+            tbl = pa.concat_tables(
+                [t.select(schema.names).cast(schema) for t in tables]
+            )
         except (KeyError, OSError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
             return None
         n_rows = tbl.num_rows
@@ -2326,23 +2191,13 @@ class OrderedDataset:
         # LOCAL relation instead of re-executing a computed source
         # under each broadcast. Oversized sources fall back to the
         # distributed stats pass at the cost of the bounded probe.
-        probe_tbl = None
-        if not any(
-            t in f.dataType.simpleString()
-            for f in source.schema.fields
-            for t in ("binary", "array", "map", "struct")
-        ):
-            try:
-                probe_tbl = source.limit(
-                    _DRIVER_MERGE_MAX_ROWS + 1
-                ).toArrow()
-            except Exception:  # noqa: BLE001 — maxResultSize etc.
-                probe_tbl = None
-            if probe_tbl is not None and (
-                probe_tbl.num_rows > _DRIVER_MERGE_MAX_ROWS
-                or probe_tbl.nbytes > _DRIVER_MERGE_MAX_BYTES
-            ):
-                probe_tbl = None
+        probe_tbl = (
+            gate.collect(
+                source, max_rows=gate.MAX_ROWS, max_bytes=gate.MAX_BYTES
+            )
+            if gate.arrow_safe(source.schema)
+            else None
+        )
         if probe_tbl is not None:
             import pyarrow.compute as pc
 
@@ -2458,7 +2313,7 @@ class OrderedDataset:
             lambda a, b: a & b,
             [F.col(f"t.{c}") == F.col(f"s.{c}") for c in on],
         )
-        cand_paths = [os.path.join(self.path, e.name) for e in cands]
+        cand_paths = self._paths(cands)
         # a CDC-sized source joins broadcast on every pass (hit scan,
         # rewrite, anti-join) — declared explicitly so the plan never
         # depends on AQE's runtime size estimate of a computed source.
@@ -2475,7 +2330,7 @@ class OrderedDataset:
             if local_src is not None
             else (
                 F.broadcast(source)
-                if n_src <= _DRIVER_MERGE_MAX_ROWS
+                if gate.fits(n_src)
                 else source
             )
         )
@@ -2594,9 +2449,7 @@ class OrderedDataset:
                 ]
             )
             tgt = (
-                reader.parquet(
-                    *[os.path.join(self.path, e.name) for e in touched]
-                )
+                reader.parquet(*self._paths(touched))
                 .withColumn(_FID, fid_map[basename])
                 .withColumn(_POS, F.monotonically_increasing_id())
             )
@@ -2734,8 +2587,7 @@ class OrderedDataset:
     ) -> dict | None:
         """Driver-side MERGE fast path (round-14, guide §1.2/§2.1):
         with the deduped source already collected by the Arrow probe
-        and the candidate files small (manifest row/byte gates plus a
-        hard cap on the actually-collected bytes), the whole merge
+        and the candidate files small (``driver_gate``), the whole merge
         runs off ONE more Spark job: the candidates are scanned once,
         left-joined to the local-relation source with the SAME
         matched/scope/drop flags and update projections as the
@@ -2757,12 +2609,8 @@ class OrderedDataset:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        if not isinstance(row_group_target_size, int):
-            return None
-        if any(
-            t in f.dataType.simpleString()
-            for f in schema.fields
-            for t in ("binary", "array", "map", "struct")
+        if not isinstance(row_group_target_size, int) or not gate.arrow_safe(
+            schema
         ):
             return None
         want_matched = delcond is not None or upd is not None
@@ -2775,11 +2623,10 @@ class OrderedDataset:
         for e in nbs_cands:
             scan.setdefault(e.name, e)
         entries = list(scan.values())
-        if entries and (
-            sum(e.n_rows for e in entries) + probe_tbl.num_rows
-            > _DRIVER_MERGE_MAX_ROWS
-            or self._old_files_bytes(entries) + probe_tbl.nbytes
-            > _DRIVER_MERGE_MAX_BYTES
+        if entries and not gate.fits(
+            sum(e.n_rows for e in entries) + probe_tbl.num_rows,
+            probe_tbl.nbytes,
+            self._paths(entries),
         ):
             return None
 
@@ -2814,9 +2661,7 @@ class OrderedDataset:
                 ]
             )
             tgt = (
-                reader.parquet(
-                    *[os.path.join(self.path, e.name) for e in entries]
-                )
+                reader.parquet(*self._paths(entries))
                 .withColumn(_FID, fid_map[basename])
                 .withColumn(_POS, F.monotonically_increasing_id())
             )
@@ -2848,9 +2693,9 @@ class OrderedDataset:
                     for c, k in zip(on, key_echo)
                 ],
             )
-            res_tbl = out.toArrow()
-            if res_tbl.nbytes > 2 * _DRIVER_MERGE_MAX_BYTES:
-                return None  # decoded far larger than the footer gate
+            res_tbl = gate.collect(out)
+            if res_tbl is None:
+                return None  # over the hard bail, or refused by Spark
 
         # touched files + per-clause counts (the distributed path's
         # hit-scan aggregate, replayed on the collected flags)
@@ -3143,9 +2988,7 @@ class OrderedDataset:
         hits = {
             r["__f"]: r["n"]
             for r in (
-                reader.parquet(
-                    *[os.path.join(self.path, e.name) for e in cands]
-                )
+                reader.parquet(*self._paths(cands))
                 .filter(pred)
                 .groupBy(basename.alias("__f"))
                 .agg(F.count(F.lit(1)).alias("n"))
@@ -3182,9 +3025,7 @@ class OrderedDataset:
             ]
         )
         df = (
-            reader.parquet(
-                *[os.path.join(self.path, e.name) for e in touched]
-            )
+            reader.parquet(*self._paths(touched))
             .withColumn(_FID, fid_map[basename])
             .withColumn(_POS, F.monotonically_increasing_id())
         )
@@ -3240,18 +3081,11 @@ class OrderedDataset:
         the commit are then driver-side pyarrow/fs work. Replaces the
         hit-count agg + distributed rewrite (2 jobs + shuffle) per
         DML statement. Returns None to fall back (complex column
-        types, oversized candidates, Arrow collect failure)."""
+        types, oversized candidates, a result too big for the driver)."""
         from pyspark.sql import Column
 
-        if any(
-            t in f.dataType.simpleString()
-            for f in schema.fields
-            for t in ("binary", "array", "map", "struct")
-        ):
-            return None
-        if (
-            sum(e.n_rows for e in cands) > _DRIVER_MERGE_MAX_ROWS
-            or self._old_files_bytes(cands) > _DRIVER_MERGE_MAX_BYTES
+        if not gate.arrow_safe(schema) or not gate.fits(
+            sum(e.n_rows for e in cands), paths=self._paths(cands)
         ):
             return None
         import numpy as np
@@ -3268,9 +3102,7 @@ class OrderedDataset:
             ]
         )
         df = (
-            reader.parquet(
-                *[os.path.join(self.path, e.name) for e in cands]
-            )
+            reader.parquet(*self._paths(cands))
             .withColumn(_FID, fid_map[basename])
             .withColumn(_POS, F.monotonically_increasing_id())
         )
@@ -3292,14 +3124,11 @@ class OrderedDataset:
                     )
                 else:
                     sel.append(F.col(fld.name))
-        try:
-            tbl = df.select(
-                *sel, F.col(_FID), F.col(_POS), flag.alias(MATCH)
-            ).toArrow()
-        except Exception:  # noqa: BLE001 — maxResultSize etc.
-            return None
-        if tbl.nbytes > 2 * _DRIVER_MERGE_MAX_BYTES:
-            return None  # decoded far larger than the footer gate
+        tbl = gate.collect(
+            df.select(*sel, F.col(_FID), F.col(_POS), flag.alias(MATCH))
+        )
+        if tbl is None:
+            return None  # over the hard bail, or refused by Spark
 
         nf = len(cands)
         fid = tbl.column(_FID).to_numpy(zero_copy_only=False)

@@ -32,10 +32,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from oups_spark.store.dataset import (
-    _DRIVER_MERGE_MAX_BYTES,
-    _DRIVER_MERGE_MAX_ROWS,
-)
+from oups_spark.store import driver_gate as gate
 
 _BUCKET = "__bucket"
 
@@ -47,59 +44,38 @@ def _probe_batch(b: DataFrame):
     and — when the touched state is also driver-sized — the keep-last
     merge itself. Returns None when the batch is oversized or carries
     nested/binary columns (classic distributed path)."""
-    if any(
-        t in f.dataType.simpleString()
-        for f in b.schema.fields
-        for t in ("binary", "array", "map", "struct")
-    ):
+    if not gate.arrow_safe(b.schema):
         return None
-    try:
-        tbl = b.limit(_DRIVER_MERGE_MAX_ROWS + 1).toArrow()
-    except Exception:  # noqa: BLE001 — maxResultSize etc.
-        return None
-    if (
-        tbl.num_rows > _DRIVER_MERGE_MAX_ROWS
-        or tbl.nbytes > _DRIVER_MERGE_MAX_BYTES
-    ):
-        return None
-    return tbl
+    return gate.collect(b, max_rows=gate.MAX_ROWS, max_bytes=gate.MAX_BYTES)
 
 
 def _read_buckets_arrow(path: str, touched: list[int], schema):
     """The touched bucket dirs as one Arrow table (``_BUCKET``
     reattached from the dir name), cast to the batch schema — or None
-    when the state is over the driver caps (distributed fallback) or
-    a file carries a column the cast cannot reconcile."""
+    when the state is over the driver gate's caps (distributed
+    fallback) or a file carries a column the cast cannot reconcile."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    files: list[tuple[str, int]] = []
-    total = 0
-    for bk in touched:
-        for f in glob.glob(os.path.join(path, f"{_BUCKET}={bk}", "*.parquet")):
-            files.append((f, bk))
-            total += os.path.getsize(f)
-    if total > _DRIVER_MERGE_MAX_BYTES:
+    files = [
+        (f, bk)
+        for bk in touched
+        for f in glob.glob(os.path.join(path, f"{_BUCKET}={bk}", "*.parquet"))
+    ]
+    paths = [f for f, _ in files]
+    if gate.decoded_bytes(paths) > gate.MAX_BYTES:
+        return None
+    tables = gate.decode(paths)
+    if tables is None or not gate.fits(sum(t.num_rows for t in tables)):
         return None
     data_names = [n for n in schema.names if n != _BUCKET]
     parts = []
-    n_rows = 0
-    for f, bk in files:
-        t = pq.read_table(f)
+    for t, (_, bk) in zip(tables, files):
         try:
-            t = t.select(data_names)
-        except KeyError:
-            return None
-        t = t.append_column(
-            _BUCKET, pa.array([bk] * t.num_rows, schema.field(_BUCKET).type)
-        )
-        try:
-            t = t.select(schema.names).cast(schema)
-        except (pa.ArrowInvalid, pa.ArrowNotImplementedError, ValueError):
-            return None
-        parts.append(t)
-        n_rows += t.num_rows
-        if n_rows > _DRIVER_MERGE_MAX_ROWS:
+            t = t.select(data_names).append_column(
+                _BUCKET, pa.array([bk] * t.num_rows, schema.field(_BUCKET).type)
+            )
+            parts.append(t.select(schema.names).cast(schema))
+        except (KeyError, pa.ArrowInvalid, pa.ArrowNotImplementedError, ValueError):
             return None
     if not parts:
         return pa.table(

@@ -580,6 +580,7 @@ def test_byte_gate_forces_distributed_for_wide_strings(spark, scratch, monkeypat
     count is tiny (100k multi-KB docs is multi-GB), and must also
     price in replaced files' on-disk bytes on a follow-up merge."""
     import oups_spark.store.dataset as dsmod
+    from oups_spark.store import driver_gate
 
     calls = []
     real = dsmod.OrderedDataset._merge_write_driver
@@ -591,7 +592,7 @@ def test_byte_gate_forces_distributed_for_wide_strings(spark, scratch, monkeypat
 
     monkeypatch.setattr(dsmod.OrderedDataset, "_merge_write_driver", spy)
     # shrink the budget so the test stays fast: 1 MB
-    monkeypatch.setattr(dsmod, "_DRIVER_MERGE_MAX_BYTES", 1 << 20)
+    monkeypatch.setattr(driver_gate, "MAX_BYTES", 1 << 20)
 
     wide = spark.range(200).selectExpr(
         "id AS ts", "repeat('x', 20000) AS doc"  # 200 x 20 KB = 4 MB
@@ -643,7 +644,7 @@ def test_compact_driver_and_distributed_paths_agree(spark, scratch, monkeypatch)
 
     import pandas as pd
 
-    from oups_spark.store import dataset as dsmod
+    from oups_spark.store import driver_gate
     from oups_spark.store.dataset import OrderedDataset
 
     def build(path):
@@ -667,7 +668,7 @@ def test_compact_driver_and_distributed_paths_agree(spark, scratch, monkeypatch)
     files_driver = [e.n_rows for e in d1._manifest.files]
 
     d2 = build(os.path.join(scratch, "cmp_dist"))
-    monkeypatch.setattr(dsmod, "_DRIVER_MERGE_MAX_ROWS", 0)
+    monkeypatch.setattr(driver_gate, "MAX_ROWS", 0)
     assert d2.compact(row_group_target_size=60) > 0
     out_dist = d2.read().toPandas().sort_values("ts", ignore_index=True)
     files_dist = [e.n_rows for e in d2._manifest.files]
@@ -2105,15 +2106,16 @@ def test_compact_zorder_driver_equals_distributed(spark, scratch, monkeypatch):
         ("v", ">=", 15.0), ("v", "<=", 40.0),
     ]
 
+    from oups_spark.store import driver_gate
+
     def run(path, force_distributed: bool):
-        if force_distributed:
-            monkeypatch.setenv("OUPS_ZORDER_DRIVER_MAX_ROWS", "0")
-        else:
-            monkeypatch.delenv("OUPS_ZORDER_DRIVER_MAX_ROWS", raising=False)
         ds = OrderedDataset(spark, os.path.join(scratch, path))
         ds.write(df=spark.createDataFrame(pdf), ordered_on="ts",
                  row_group_target_size=200)
-        ds.compact(zorder_by=["uid", "v"], row_group_target_size=200)
+        with monkeypatch.context() as m:
+            if force_distributed:
+                m.setattr(driver_gate, "MAX_ROWS", 0)
+            ds.compact(zorder_by=["uid", "v"], row_group_target_size=200)
         pruned = sum(
             dnf_file_can_match(e.cols, [box], blooms=e.blooms)
             for e in ds.manifest.files

@@ -35,10 +35,8 @@ def main() -> int:
 
     from oups_spark.queries._scratch import fresh
     from oups_spark.session import get_spark
-    from oups_spark.store.dataset import (
-        _DRIVER_MERGE_MAX_ROWS,
-        OrderedDataset,
-    )
+    from oups_spark.store import driver_gate
+    from oups_spark.store.dataset import OrderedDataset
     from oups_spark.streaming.cdc import commit_state, merge_latest
     from oups_spark.tables import load
 
@@ -69,7 +67,7 @@ def main() -> int:
         return out
 
     def path_for(mult, rows):
-        return "driver" if rows <= _DRIVER_MERGE_MAX_ROWS else "DISTRIBUTED"
+        return "driver" if rows <= driver_gate.MAX_ROWS else "DISTRIBUTED"
 
     results = []
 
