@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from oups_spark.store.dataset import OrderedDataset
@@ -837,6 +837,8 @@ def test_merge_into_matches_pandas_ground_truth_property(
     span=st.integers(min_value=1, max_value=15),
     target=st.sampled_from([3, 7, 100]),
 )
+# every row in scope and an empty snapshot: the sync deletes all rows
+@example(vals=[0.0] * 4, snap={}, lo=0, span=4, target=3)
 def test_merge_full_sync_matches_pandas_ground_truth_property(
     spark, tmp_path_factory, vals, snap, lo, span, target
 ):
@@ -894,7 +896,8 @@ def test_merge_full_sync_matches_pandas_ground_truth_property(
     ].map(snap)
     ins = src[~src["k"].isin(range(n))][["ts", "k", "val"]]
     truth = pd.concat([truth, ins], ignore_index=True).astype(
-        {"k": "int64", "val": "float64"}  # empty-concat dtype promotion
+        # empty-concat dtype promotion
+        {"ts": "datetime64[ns]", "k": "int64", "val": "float64"}
     )
 
     assert res == {
