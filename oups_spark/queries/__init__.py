@@ -46,76 +46,25 @@ def register(name: str, oracle: str | None = None):
 # other registered query follows in import order (rows 51+ are still
 # exposed, just not driver-checked this round).
 #
-# Round-15 window: the scheduled rotation — round 14's 50 slots all
-# earned fresh evidence (CORRECTNESS_r14: 50/50), so they slide to the
+# Round-16 window: the scheduled rotation — round 15's 50 slots all
+# earned fresh evidence (CORRECTNESS_r15: 50/50), so they slide to the
 # back and the 50 stalest-evidence queries take the window: the 4
-# deferred r11-greens round 14's schedule promised this round
-# (top_customers, order_priority_counts, shipping_priority,
-# promo_revenue_monthly) followed by 46 r12-greens. No new queries
-# this round (optimization round), so no never-checked names.
+# remaining r12-greens (cdc_incremental_minmax,
+# asof_click_before_purchase, asof_nearest_tolerance,
+# range_join_first_week) followed by 46 r13-greens. The last 4
+# r13-greens lead the rows below the boundary, so they head the
+# round-17 window. No new queries this round, so no never-checked
+# names.
 # tests/test_window_schedule.py COMPUTES this from the
 # CORRECTNESS_r*.json history: the window must be exactly the 50
 # stalest-evidence queries (never-checked stalest of all).
 _WINDOW_PRIORITY = [
-    # (1) the 4 deferred r11-greens — promised the round-15 head by
-    # round 14's schedule
-    "top_customers",
-    "order_priority_counts",
-    "shipping_priority",
-    "promo_revenue_monthly",
-    # (2) r12-greens (46 fill the window; the rest follow)
-    "store_merge_into",
-    "streaming_native_volume_bars",
-    "store_catalog_objectstore",
-    "store_merge_full_sync",
-    "streaming_native_rowcount_bins",
-    "interval_overlap_pairs",
-    "minhash_signatures",
-    "simhash_signatures",
-    "embedding_neardup_pairs",
-    "knn_graph_topk",
-    "json_props_extract",
-    "duplicated_windows",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "simhash_neardup_pairs",
-    "simhash_neardup_pairs_64",
-    "ffill_bfill_user_values",
-    "customers_without_orders",
-    "calendar_floor_ceil",
-    "moving_avg_per_user",
-    "value_percentiles_by_type",
-    "daily_type_pivot",
-    "trailing_24h_per_user",
-    "conversion_funnel",
-    "interpolate_resample_6h",
-    "doc_chunk_overlap",
-    "segment_bins_1h",
-    "row_count_bins_500",
-    "snapshot_1d_6h",
-    "store_merge_keep_last",
-    "store_append_range_read",
-    "dnf_filter_events",
-    "store_compact_roundtrip",
-    "store_time_travel",
-    "store_schema_evolution",
-    "store_stats_skipping",
-    "jsonl_ingest_roundtrip",
-    "incremental_hll_ingest",
-    "store_cmidx_roundtrip",
-    "aggstream_hourly_restart",
-    "aggstream_snapshots_restart",
-    "aggstream_edge_bins_restart",
-    "streaming_dedup_ingest",
-    "cdc_upsert_stream",
-    "cdc_incremental_agg",
-    "session_windows",
-    # ---- window boundary: rows below are 51+ this round ----
+    # (1) the 4 remaining r12-greens (the stalest evidence)
     "cdc_incremental_minmax",
     "asof_click_before_purchase",
     "asof_nearest_tolerance",
     "range_join_first_week",
-    # ... r13-greens
+    # (2) r13-greens (46 fill the window; the rest follow)
     "cdc_merge_stream",
     "streaming_native_snapshots_calendar",
     "zorder_compact_scan",
@@ -162,11 +111,12 @@ _WINDOW_PRIORITY = [
     "streaming_countmin_ingest",
     "streaming_hll_ingest",
     "volume_bars_10k",
+    # ---- window boundary: rows below are 51+ this round ----
     "aggstream_filter_fanout",
     "intersections_bucket_align",
     "rollup_pricing",
     "twap_hourly",
-    # ... r14-greens (freshest evidence — round 14's window)
+    # ... r14-greens
     "store_deltalog_roundtrip",
     "streaming_native_autocompact",
     "streaming_native_snapshots_right",
@@ -217,6 +167,57 @@ _WINDOW_PRIORITY = [
     "regional_supplier_volume",
     "bucketed_colocated_join",
     "salted_join_order_customer",
+    # ... r15-greens (freshest evidence — round 15's window)
+    "top_customers",
+    "order_priority_counts",
+    "shipping_priority",
+    "promo_revenue_monthly",
+    "store_merge_into",
+    "streaming_native_volume_bars",
+    "store_catalog_objectstore",
+    "store_merge_full_sync",
+    "streaming_native_rowcount_bins",
+    "interval_overlap_pairs",
+    "minhash_signatures",
+    "simhash_signatures",
+    "embedding_neardup_pairs",
+    "knn_graph_topk",
+    "json_props_extract",
+    "duplicated_windows",
+    "multimodal_features",
+    "multimodal_frame_sample",
+    "simhash_neardup_pairs",
+    "simhash_neardup_pairs_64",
+    "ffill_bfill_user_values",
+    "customers_without_orders",
+    "calendar_floor_ceil",
+    "moving_avg_per_user",
+    "value_percentiles_by_type",
+    "daily_type_pivot",
+    "trailing_24h_per_user",
+    "conversion_funnel",
+    "interpolate_resample_6h",
+    "doc_chunk_overlap",
+    "segment_bins_1h",
+    "row_count_bins_500",
+    "snapshot_1d_6h",
+    "store_merge_keep_last",
+    "store_append_range_read",
+    "dnf_filter_events",
+    "store_compact_roundtrip",
+    "store_time_travel",
+    "store_schema_evolution",
+    "store_stats_skipping",
+    "jsonl_ingest_roundtrip",
+    "incremental_hll_ingest",
+    "store_cmidx_roundtrip",
+    "aggstream_hourly_restart",
+    "aggstream_snapshots_restart",
+    "aggstream_edge_bins_restart",
+    "streaming_dedup_ingest",
+    "cdc_upsert_stream",
+    "cdc_incremental_agg",
+    "session_windows",
 ]
 
 

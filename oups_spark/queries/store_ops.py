@@ -804,21 +804,21 @@ class _EventTypeKey:
     """,
 )
 def store_catalog_objectstore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Store catalog on an OBJECT-STORE backend, end to end (S2/S3/S9
-    over ``InMemoryParquetObjectStore``): one dataset per event type
-    written through the parquet-sidecar conditional-put backend (no
-    posix manifest exists anywhere), DISCOVERY via bucket prefix
-    listing (``keys()``), membership via one object GET, and
-    ``del store[key]`` removing the dataset's manifest objects with
+    """Store catalog on an OBJECT-STORE transport, end to end
+    (S2/S3/S9 over ``DeltaLogManifest(InMemoryObjectStore())``): one
+    dataset per event type written through the delta-log encoding's
+    conditional puts (no posix manifest exists anywhere), DISCOVERY
+    via bucket prefix listing (``keys()``), membership via one object
+    GET, and ``del store[key]`` removing the dataset's manifest objects with
     its data. The result unions every dataset the catalog still
     discovers after deleting the 'error' key — so the oracle is the
     source table minus that type."""
-    from oups_spark.store.manifest import InMemoryParquetObjectStore
+    from oups_spark.store.manifest import DeltaLogManifest, InMemoryObjectStore
 
     base = _fresh("store_catalog_objectstore")
     st = _Store(
         spark, os.path.join(base, "catalog"), _EventTypeKey,
-        backend=InMemoryParquetObjectStore(),
+        backend=DeltaLogManifest(InMemoryObjectStore()),
     )
     events = load(spark, sf_dir, "events")
     types = sorted(
@@ -962,8 +962,9 @@ def store_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture of a shared lakehouse table."""
     from oups_spark.store.manifest import (
         ChainFileList,
-        DeltaLogParquetBackend,
+        DeltaLogManifest,
         Manifest,
+        PosixTransport,
     )
 
     base = _fresh("store_deltalog_roundtrip")
@@ -972,34 +973,34 @@ def store_deltalog_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     split = F.col("ts") < F.lit(T2).cast("timestamp")
 
     # (1) checkpoint commit: the bulk history
-    OrderedDataset(spark, path, backend=DeltaLogParquetBackend()).write(
+    OrderedDataset(spark, path, backend=DeltaLogManifest(PosixTransport())).write(
         df=events.filter(split), ordered_on="ts",
         row_group_target_size=2500,
     )
     # (2) delta commit: ordered append of the tail (fresh handle)
-    OrderedDataset(spark, path, backend=DeltaLogParquetBackend()).write(
+    OrderedDataset(spark, path, backend=DeltaLogManifest(PosixTransport())).write(
         df=events.filter(~split), ordered_on="ts",
         row_group_target_size=2500,
     )
     # (3) delta commit: row-level UPDATE (COW rewrite -> add + remove)
-    OrderedDataset(spark, path, backend=DeltaLogParquetBackend()).update_where(
+    OrderedDataset(spark, path, backend=DeltaLogManifest(PosixTransport())).update_where(
         [[("ts", ">=", pd.Timestamp(T1)), ("ts", "<", pd.Timestamp(T2))]],
         {"value": F.col("value") * 2},
     )
     # (4) delta commit: row-level DELETE
-    OrderedDataset(spark, path, backend=DeltaLogParquetBackend()).delete_where(
+    OrderedDataset(spark, path, backend=DeltaLogManifest(PosixTransport())).delete_where(
         [[("event_type", "==", "error")]]
     )
     # (5) delta commit: maintenance compact coalesces off-target runs
-    OrderedDataset(spark, path, backend=DeltaLogParquetBackend()).compact(
+    OrderedDataset(spark, path, backend=DeltaLogManifest(PosixTransport())).compact(
         row_group_target_size=10000
     )
 
     # the head must really be a CHAIN (checkpoint + >=2 deltas), and
     # the fresh read must really take the lazy reconstruction path
-    man = Manifest.load(path, DeltaLogParquetBackend())
+    man = Manifest.load(path, DeltaLogManifest(PosixTransport()))
     assert isinstance(man.files, ChainFileList), type(man.files)
-    ds = OrderedDataset(spark, path, backend=DeltaLogParquetBackend())
+    ds = OrderedDataset(spark, path, backend=DeltaLogManifest(PosixTransport()))
     return (
         ds.read()
         .groupBy("event_type")

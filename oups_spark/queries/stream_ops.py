@@ -909,19 +909,20 @@ def streaming_native_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_native_objectstore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native streaming sink on the OBJECT-STORE backend (round-13:
+    """Native streaming sink on the OBJECT-STORE transport (round-13:
     checkpoint-resume + conditional-put CAS compose): the hourly
     windowed aggregation streams in THREE micro-batches
     (maxFilesPerTrigger=1 over time-chunked copies), each batch's
-    manifest commit going through ``InMemoryParquetObjectStore``'s
-    put-if-match protocol — no POSIX manifest exists anywhere — then
-    a SECOND invocation resumes from the same checkpoint as a no-op
-    (nothing new to commit; redelivery would be absorbed by the
-    keep-last merge + CAS). Oracle = the batch hourly aggregation
-    minus the unclosed final bin, identical to the POSIX-backend
-    twin's (``streaming_native_hourly``) — the backend changes the
-    commit transport, never the result."""
-    from oups_spark.store.manifest import InMemoryParquetObjectStore
+    manifest commit going through ``InMemoryObjectStore``'s
+    put-if-match protocol as one delta-log commit — no POSIX manifest
+    exists anywhere — then a SECOND invocation resumes from the same
+    checkpoint as a no-op (nothing new to commit; redelivery would be
+    absorbed by the keep-last merge + CAS). Oracle = the batch hourly
+    aggregation minus the unclosed final bin, identical to the
+    POSIX-JSON twin's (``streaming_native_hourly``) — the manifest
+    encoding and transport change the commit path, never the
+    result."""
+    from oups_spark.store.manifest import DeltaLogManifest, InMemoryObjectStore
     from oups_spark.streaming.native import (
         streaming_segment_agg,
         write_stream_to_dataset,
@@ -935,7 +936,7 @@ def streaming_native_objectstore(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events").select("ts", "value")
     _write_replay_chunks(events, _replay_cuts(events), src_dir)
     schema = _chunk_schema(spark, src_dir)
-    backend = InMemoryParquetObjectStore()
+    backend = DeltaLogManifest(InMemoryObjectStore())
 
     def run():
         stream = (

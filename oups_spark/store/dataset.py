@@ -41,6 +41,7 @@ from pyspark.sql.types import StructType
 from oups_spark.functions.dates import floor_ts, floor_ts_scalar
 from oups_spark.store import driver_gate as gate
 from oups_spark.store.manifest import (
+    DEFAULT_BACKEND,
     FileEntry,
     Manifest,
     ManifestConflictError,
@@ -76,8 +77,10 @@ class OrderedDataset:
         retain_versions: bool = False,
         deletion_grace_s: float | None = None,
     ):
-        # backend: optional ManifestBackend routing manifest commits
-        # (e.g. ObjectStoreBackend conditional-put); None = POSIX rename
+        # backend: optional manifest encoding over a transport, e.g.
+        # DeltaLogManifest(PosixTransport()) for lakehouse file counts
+        # or an encoding over an object-store transport (conditional
+        # put); None = JsonManifest(PosixTransport())
         #
         # retain_versions: keep an immutable manifest snapshot per
         # commit and DEFER physical deletion of replaced data files,
@@ -3336,15 +3339,10 @@ class OrderedDataset:
     # ----------------------------------------------------------- delete
     def delete(self) -> None:
         """Drop the dataset directory (reference: ``base.py:405-438``);
-        on object-store backends also delete the dataset's manifest
-        objects (head + sidecars), so membership checks and discovery
-        stop seeing it."""
-        if self.backend is not None and hasattr(self.backend, "_list"):
-            try:
-                for k in self.backend._list(self.path + "/"):
-                    self.backend._delete(k)
-            except NotImplementedError:
-                pass  # lifecycle rules own reclamation on such stores
+        the transport also purges manifest objects stored elsewhere
+        (an object store's head + sidecars), so membership checks and
+        discovery stop seeing it."""
+        (self.backend or DEFAULT_BACKEND).transport.purge(self.path)
         shutil.rmtree(self.path, ignore_errors=True)
         self._manifest = None
 

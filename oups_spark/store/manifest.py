@@ -7,32 +7,35 @@ records ``ordered_on``, one entry per data file with
 ``(n_rows, min, max)`` of the ordering column, the dataset schema,
 and user/system key-value metadata (e.g. AggStream restart state).
 
-Stored as JSON with an atomic tmp-file + ``os.replace`` swap so a
-reader never observes a half-written manifest. At 100 TB (~100k
-files of ~1 GB) the file list is a few MB of JSON — still fine to
-load driver-side; beyond that the natural upgrade is a parquet
-manifest or a Delta transaction log, which this module isolates the
-rest of the engine from.
+Two layers, composed as ``Encoding(transport)``:
 
-FILESYSTEM CONTRACT: the commit protocol is pluggable via
-:class:`ManifestBackend`. The default :class:`PosixRenameBackend`
-relies on an atomic, overwriting rename — a guarantee POSIX
-filesystems and HDFS provide but object stores (S3) do NOT — plus a
-``flock``-guarded generation compare-and-swap so two local writers
-serialize instead of last-writer-wins. For
-object stores, :class:`ObjectStoreBackend` routes ``save`` through a
-CONDITIONAL PUT (put-if-match on the manifest object's generation /
-ETag, put-if-absent for creation) — a stale writer raises
+- A TRANSPORT owns storage: get and compare-and-swap of the one head
+  object, immutable put / get / delete of sidecar objects, the
+  listing behind catalog discovery, and the transport's single
+  sidecar GC policy. :class:`PosixTransport` swaps the head with an
+  atomic tmp-file + ``os.replace`` under a ``flock``-guarded
+  generation check — a guarantee POSIX filesystems and HDFS provide
+  but object stores (S3) do NOT. :class:`ObjectStoreTransport`
+  commits the head with CONDITIONAL PUTs (put-if-match on the
+  generation / ETag, put-if-absent for creation);
+  :class:`InMemoryObjectStore` is the in-tree mock (swap in an
+  S3/GCS client by implementing its five primitives).
+- An ENCODING owns layout. :class:`JsonManifest` inlines every entry
+  in the head (gzip past ``GZIP_MIN_BYTES``) — the default, fine up
+  to ~100k files. :class:`DeltaLogManifest` keeps entries in typed
+  parquet sidecars: a checkpoint plus a chain of per-commit deltas,
+  folded every ``checkpoint_interval`` commits, so commit I/O is
+  O(changed entries) at lakehouse file counts.
+
+``backend=`` on ``OrderedDataset``, ``Store`` and
+``write_stream_to_dataset`` takes an encoding; None means
+``JsonManifest(PosixTransport())``. Either way a stale writer raises
 :class:`ManifestConflictError` instead of silently clobbering a
-concurrent commit. Everything else in this module is
-backend-agnostic since readers only ever GET the one manifest
-object; :class:`InMemoryObjectStore` is the in-tree mock that
-exercises the conditional-put path (swap in an S3/GCS client by
-implementing the same three methods). The swap contract itself
-(reader sees old-or-new, never partial; crashed writers leave only
-ignorable ``.tmp`` debris) is pinned by
-``tests/test_store_catalog.py::test_manifest_swap_contract`` against
-BOTH backends.
+concurrent commit. The swap contract — a reader sees old-or-new,
+never partial; a losing writer leaves no staged object; a reader of
+the previous head still resolves after one more commit — is pinned
+for every encoding × transport pair by
+``tests/test_manifest_contract.py``.
 """
 
 from __future__ import annotations
@@ -45,6 +48,8 @@ from datetime import datetime
 from typing import Any
 
 MANIFEST_NAME = "_oups_manifest.json"
+# name prefix of every parquet sidecar object (checkpoints and deltas)
+_FILES_PREFIX = MANIFEST_NAME[: -len(".json")] + ".files.g"
 
 # Payloads above this size are gzip-compressed on commit (JSON file
 # lists compress ~10x, so a 100k-file dataset's manifest drops from
@@ -80,33 +85,16 @@ class ManifestConflictError(RuntimeError):
     re-apply its change on top, and retry."""
 
 
-class ManifestBackend:
-    """Storage backend for the single manifest object of a dataset.
-
-    ``read`` returns ``(payload_bytes, token)`` or ``None`` when the
-    manifest does not exist; ``commit`` atomically publishes new
-    bytes. ``token`` is backend-defined (an ETag / generation);
-    backends that support conditional writes MUST reject a commit
-    whose ``expect_token`` no longer matches the stored object.
-    """
-
-    def read(self, dirpath: str):  # -> tuple[bytes, Any] | None
-        raise NotImplementedError
-
-    def commit(self, dirpath: str, data: bytes, *, expect_token) -> Any:
-        raise NotImplementedError
-
-
-class PosixRenameBackend(ManifestBackend):
+class PosixTransport:
     """Atomic tmp-file + ``os.replace`` swap (POSIX / HDFS), with a
-    ``flock``-guarded compare-and-swap on commit.
+    ``flock``-guarded compare-and-swap on the head.
 
     Readers never take the lock — the atomic rename already gives
     them old-or-new visibility. Writers serialize through an
     advisory ``fcntl.flock`` on a sidecar lock file for the
-    read-check-swap window only: the commit re-reads the manifest
-    under the lock and requires its generation to equal the token
-    this writer read earlier (absence, for creation), raising
+    read-check-swap window only: the commit re-reads the head under
+    the lock and requires its generation to equal the token this
+    writer read earlier (absence, for creation), raising
     :class:`ManifestConflictError` otherwise. Two concurrent local
     writers therefore both land (one retries via
     ``conflict_retries``) instead of one silently clobbering the
@@ -117,14 +105,21 @@ class PosixRenameBackend(ManifestBackend):
     crash-safe (the kernel drops a dead writer's flock; a stale
     flufl lock must time out). Advisory-lock caveat: like all
     flock schemes this serializes only processes on one host/mount —
-    cross-host coordination belongs to :class:`ObjectStoreBackend`.
+    cross-host coordination belongs to :class:`ObjectStoreTransport`.
+
+    Sidecar GC: a listing sweep removes every sidecar outside the
+    encoding's ``keep`` set once it is older than ``gc_grace_s``. The
+    mtime grace also covers a concurrent writer's sidecar staged
+    before its head CAS, and a reader of an older head.
     """
+
+    gc_grace_s = 300.0
 
     @staticmethod
     def _gen_of(data: bytes) -> int:
         return json.loads(_plain(data)).get("generation", 0)
 
-    def read(self, dirpath: str):
+    def read_head(self, dirpath: str):  # -> tuple[bytes, token] | None
         path = os.path.join(dirpath, MANIFEST_NAME)
         if not os.path.exists(path):
             return None
@@ -132,7 +127,7 @@ class PosixRenameBackend(ManifestBackend):
             data = fh.read()
         return data, self._gen_of(data)
 
-    def commit(self, dirpath: str, data: bytes, *, expect_token) -> Any:
+    def cas_head(self, dirpath: str, data: bytes, expect_token) -> Any:
         import fcntl
 
         path = os.path.join(dirpath, MANIFEST_NAME)
@@ -157,8 +152,56 @@ class PosixRenameBackend(ManifestBackend):
             os.replace(tmp, path)
         return self._gen_of(data)
 
+    def put(self, dirpath: str, ref: str, data: bytes) -> None:
+        path = os.path.join(dirpath, ref)
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.replace(tmp, path)
 
-class ObjectStoreBackend(ManifestBackend):
+    def get(self, dirpath: str, ref: str) -> bytes:
+        with open(os.path.join(dirpath, ref), "rb") as fh:
+            return fh.read()
+
+    def delete(self, dirpath: str, ref: str) -> None:
+        p = os.path.join(dirpath, ref)
+        if os.path.exists(p):
+            os.remove(p)
+
+    def sweep(self, dirpath: str, *, keep: set, drop: set) -> None:
+        import time
+
+        now = time.time()
+        for n in os.listdir(dirpath):
+            if n in keep or not (
+                n.startswith(_FILES_PREFIX) and n.endswith(".parquet")
+            ):
+                continue
+            p = os.path.join(dirpath, n)
+            try:
+                if now - os.path.getmtime(p) >= self.gc_grace_s:
+                    os.remove(p)
+            except FileNotFoundError:
+                continue  # concurrent sweeper got it first
+
+    def has_head(self, dirpath: str) -> bool:
+        # an existence check: membership never reads the manifest
+        return os.path.exists(os.path.join(dirpath, MANIFEST_NAME))
+
+    def heads(self, basepath: str) -> list[str]:
+        """Every directory under ``basepath`` holding a head."""
+        return [
+            dirpath
+            for dirpath, _dirnames, filenames in os.walk(basepath)
+            if MANIFEST_NAME in filenames
+        ]
+
+    def purge(self, dirpath: str) -> None:
+        """Nothing to do: the head and sidecars live in the dataset
+        directory, which the caller removes with the data."""
+
+
+class ObjectStoreTransport:
     """Conditional-put commit protocol for object stores (S3 / GCS):
 
     - creation  = put-if-absent  (S3 ``If-None-Match: *``),
@@ -168,9 +211,16 @@ class ObjectStoreBackend(ManifestBackend):
     A stale writer — one whose read token no longer matches — gets
     :class:`ManifestConflictError` instead of clobbering a concurrent
     commit, which upgrades the store's concurrency posture from
-    last-writer-wins to optimistic CAS. Subclasses supply the three
+    last-writer-wins to optimistic CAS. Subclasses supply the
     primitive object operations; :class:`InMemoryObjectStore` is the
     reference implementation the contract tests run against.
+
+    Sidecar GC deletes only the refs the encoding says THIS writer
+    released (``drop``), never by listing: a listing sweep could
+    delete a concurrent writer's staged-but-not-yet-CASed sidecar,
+    and object stores carry no trustworthy local clock for a grace
+    window. Other writers' superseded objects fall to a bucket
+    lifecycle rule, as do all of them on stores without DELETE.
     """
 
     def _get(self, key: str):  # -> tuple[bytes, Any] | None
@@ -182,30 +232,66 @@ class ObjectStoreBackend(ManifestBackend):
     def _put_if_match(self, key: str, data: bytes, token) -> Any:
         raise NotImplementedError
 
-    # optional primitives (S3 LIST / DELETE) — only needed by the
-    # sidecar GC of :class:`ObjectStoreParquetBackend`; backends that
-    # don't implement them simply accumulate superseded sidecars
-    # until an external lifecycle rule reclaims them
+    # S3 LIST / DELETE: LIST backs catalog discovery and dataset
+    # deletion; without DELETE, reclamation is a lifecycle rule's job
     def _list(self, prefix: str) -> list[str]:
         raise NotImplementedError
 
     def _delete(self, key: str) -> None:
         raise NotImplementedError
 
-    @staticmethod
-    def _key(dirpath: str) -> str:
-        return os.path.join(dirpath, MANIFEST_NAME)
+    def read_head(self, dirpath: str):
+        return self._get(os.path.join(dirpath, MANIFEST_NAME))
 
-    def read(self, dirpath: str):
-        return self._get(self._key(dirpath))
-
-    def commit(self, dirpath: str, data: bytes, *, expect_token) -> Any:
+    def cas_head(self, dirpath: str, data: bytes, expect_token) -> Any:
+        key = os.path.join(dirpath, MANIFEST_NAME)
         if expect_token is None:
-            return self._put_if_absent(self._key(dirpath), data)
-        return self._put_if_match(self._key(dirpath), data, expect_token)
+            return self._put_if_absent(key, data)
+        return self._put_if_match(key, data, expect_token)
+
+    def put(self, dirpath: str, ref: str, data: bytes) -> None:
+        self._put_if_absent(os.path.join(dirpath, ref), data)
+
+    def get(self, dirpath: str, ref: str) -> bytes:
+        hit = self._get(os.path.join(dirpath, ref))
+        if hit is None:
+            raise FileNotFoundError(
+                f"manifest sidecar {ref} missing under {dirpath} "
+                "(reader stale past the sidecar GC window?)"
+            )
+        return hit[0]
+
+    def delete(self, dirpath: str, ref: str) -> None:
+        try:
+            self._delete(os.path.join(dirpath, ref))
+        except NotImplementedError:
+            pass
+
+    def sweep(self, dirpath: str, *, keep: set, drop: set) -> None:
+        for r in drop - keep:
+            self.delete(dirpath, r)
+
+    def has_head(self, dirpath: str) -> bool:
+        return self.read_head(dirpath) is not None  # one object GET
+
+    def heads(self, basepath: str) -> list[str]:
+        return [
+            os.path.dirname(k)
+            for k in self._list(basepath + "/")
+            if os.path.basename(k) == MANIFEST_NAME
+        ]
+
+    def purge(self, dirpath: str) -> None:
+        """Delete the dataset's head and sidecars, so membership and
+        discovery stop seeing it."""
+        try:
+            for k in self._list(dirpath + "/"):
+                self._delete(k)
+        except NotImplementedError:
+            pass  # lifecycle rules own reclamation on such stores
 
 
-class InMemoryObjectStore(ObjectStoreBackend):
+class InMemoryObjectStore(ObjectStoreTransport):
     """Dict-backed mock with monotone generation tokens — the
     conditional-put semantics of S3/GCS without a network."""
 
@@ -213,8 +299,7 @@ class InMemoryObjectStore(ObjectStoreBackend):
         self._objects: dict[str, tuple[bytes, int]] = {}
 
     def _get(self, key: str):
-        hit = self._objects.get(key)
-        return None if hit is None else hit
+        return self._objects.get(key)
 
     def _put_if_absent(self, key: str, data: bytes) -> Any:
         if key in self._objects:
@@ -240,16 +325,14 @@ class InMemoryObjectStore(ObjectStoreBackend):
     def _delete(self, key: str) -> None:
         self._objects.pop(key, None)
 
+
 class _ParquetFilesCodec:
     """Typed-parquet (de)serialization of ``FileEntry`` lists — the
-    sidecar layout shared by the posix and object-store
-    split-manifest backends: name, n_rows, the ordering-column
-    min/max in their natural type (timestamp[ns] at full nanosecond
-    fidelity), per-column skip stats as typed
+    delta log's sidecar layout on every transport: name, n_rows, the
+    ordering-column min/max in their natural type (timestamp[ns] at
+    full nanosecond fidelity), per-column skip stats as typed
     ``c_min:<col>``/``c_max:<col>`` pairs, blooms as a JSON-string
     column. No per-entry JSON encode/decode anywhere."""
-
-    _FILES_PREFIX = MANIFEST_NAME[: -len(".json")] + ".files.g"
 
     # -- typed columns for stats values --------------------------------
     @staticmethod
@@ -353,13 +436,6 @@ class _ParquetFilesCodec:
         return column.to_pylist()
 
     @classmethod
-    def _files_from_parquet_bytes(cls, data: bytes) -> list[FileEntry]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        return cls._files_from_table(pq.read_table(pa.BufferReader(data)))
-
-    @classmethod
     def _files_from_table(cls, table) -> list[FileEntry]:
         have = set(table.column_names)
         names = table.column("name").to_pylist()
@@ -427,7 +503,7 @@ class _ParquetFilesCodec:
 
 class ArrowFileList:
     """Lazy Arrow-backed sequence of :class:`FileEntry` — what the
-    parquet-sidecar backends hand to ``Manifest.files``.
+    delta-log encoding hands to ``Manifest.files``.
 
     At ~1M files the dominant load cost is materializing a million
     Python ``FileEntry`` objects (~10 s), not the parquet read
@@ -441,15 +517,14 @@ class ArrowFileList:
     unaffected.
     """
 
-    def __init__(self, table, codec: type):
+    def __init__(self, table):
         self._table = table
-        self._codec = codec
         self._materialized: list[FileEntry] | None = None
 
     # -- sequence protocol (materializes, cached) ----------------------
     def _all(self) -> list[FileEntry]:
         if self._materialized is None:
-            self._materialized = self._codec._files_from_table(self._table)
+            self._materialized = _ParquetFilesCodec._files_from_table(self._table)
         return self._materialized
 
     def __len__(self) -> int:
@@ -509,6 +584,7 @@ class ArrowFileList:
             self._materialized is not None
             or "min" not in t.column_names
             or "max" not in t.column_names
+            or not t.num_rows  # an empty table's stats columns are untyped
         ):
             return [
                 e for e in self._all()
@@ -527,7 +603,7 @@ class ArrowFileList:
                 pa.scalar(end_excl, type=t.column("min").type),
             )
             mask = m2 if mask is None else pc.and_(mask, m2)
-        return self._codec._files_from_table(t.filter(mask))
+        return _ParquetFilesCodec._files_from_table(t.filter(mask))
 
     def prune_key_range(self, bounds: dict, *, ordered_on: str | None = None) -> list[FileEntry]:
         """Vectorized pre-prune on PER-COLUMN skip stats: entries
@@ -586,7 +662,7 @@ class ArrowFileList:
         # DROPS null rows) must KEEP the entry, or a file whose
         # matched keys the merge then misses gets its rows silently
         # re-inserted as duplicates
-        return self._codec._files_from_table(
+        return _ParquetFilesCodec._files_from_table(
             t.filter(pc.fill_null(mask, True))
         )
 
@@ -616,11 +692,10 @@ class ChainFileList(ArrowFileList):
     """Delta-chain manifest view with DEFERRED reconstruction
     (round-14): a fresh reader handle pays only the head read —
     sidecar reads, the removed-name filter, concat and the (min, max)
-    sort all run on FIRST USE of the file list (then cache). Closes
-    the measured 1M-entry fresh-load gap vs the full-sidecar backend
-    (1.6 s eager → ~0 ms; first use ≈ the full backend's one-time
-    sidecar read). Delta's own lazy checkpoint-read path is the
-    model.
+    sort all run on FIRST USE of the file list (then cache). A fresh
+    1M-entry load drops from 1.6 s eager to ~0 ms; first use costs
+    about one checkpoint read. Delta's own lazy checkpoint-read path
+    is the model.
 
     Staleness posture unchanged, just moved to first use: a handle
     that waits past the chain's GC grace before first touching files
@@ -634,18 +709,17 @@ class ChainFileList(ArrowFileList):
     mixed-encoding fallback, which materializes Python entries
     instead of a table."""
 
-    def __init__(self, backend, dirpath: str, ref: str, deltas: list):
-        self._backend = backend
+    def __init__(self, encoding, dirpath: str, ref: str, deltas: list):
+        self._encoding = encoding
         self._dirpath = dirpath
         self._ref = ref
         self._deltas = [dict(d) for d in deltas]
-        self._codec = type(backend)
         self._table = None
         self._materialized: list[FileEntry] | None = None
 
     def _resolve(self) -> None:
         if self._table is None and self._materialized is None:
-            files = self._backend._resolve_chain(
+            files = self._encoding._resolve_chain(
                 self._dirpath, self._ref, self._deltas
             )
             if isinstance(files, ArrowFileList):
@@ -677,171 +751,69 @@ class ChainFileList(ArrowFileList):
         return super().prune_key_range(bounds, ordered_on=ordered_on)
 
 
-class ParquetManifestBackend(PosixRenameBackend, _ParquetFilesCodec):
-    """Manifest head as small JSON + file entries as a PARQUET
-    sidecar (``_ParquetFilesCodec`` layout) — the documented upgrade
-    path for lakehouse file counts (Delta/Iceberg store file stats
-    the same way).
 
-    Why: the JSON manifest inlines every file entry, so at 100k files
-    both the load and — worse — the generation check inside the
-    commit flock parse megabytes of JSON; at 1M files (10 PB at 10 GB
-    files) it is a wall. Here the head committed through the
-    inherited flock CAS holds only ``ordered_on`` / ``generation`` /
-    ``kv`` / schema / tombstones plus a ``files_ref`` pointer. The
-    CAS cost becomes independent of file count; the file list loads
-    as one vectorized parquet read (the split
-    ``read_split``/``commit_split`` fast path ``Manifest`` prefers
-    when a backend provides it).
+class JsonManifest:
+    """Inline-JSON encoding: the head carries every file entry, so a
+    commit is ONE head CAS and there are no sidecars to collect. The
+    default (``JsonManifest(PosixTransport())``) for datasets up to
+    ~100k files; past that the per-commit JSON encode and the CAS's
+    generation parse grow with the file count — use
+    :class:`DeltaLogManifest`."""
 
-    Commit protocol (same generation-CAS contract as the JSON
-    backend, pinned by the shared swap/CAS/hammer tests):
-    1. write the entries parquet under a UNIQUE name
-       (``_oups_manifest.files.g<generation>.<nonce>.parquet`` — the
-       nonce prevents two same-generation racers from clobbering
-       each other's object before the CAS decides),
-    2. flock-CAS the head pointing at it (inherited
-       :meth:`PosixRenameBackend.commit`); a loser removes its
-       orphan parquet and raises :class:`ManifestConflictError`,
-    3. sweep superseded entry objects older than ``gc_grace_s``
-       (kept briefly so a reader that loaded the PREVIOUS head can
-       still resolve its ``files_ref`` — same isolation posture as
-       the data-file tombstone grace window).
+    def __init__(self, transport):
+        self.transport = transport
 
-    Interop: reading a dataset last committed by the JSON backend
-    works as-is (inline ``files``, no ``files_ref``) and the next
-    commit upgrades it; a JSON-backend reader on a parquet-backend
-    dataset fails LOUDLY (missing ``files`` key), never silently
-    empty. Time-travel snapshots are unaffected — they are written
-    from the full inline payload before the backend splits it.
-    On object stores use :class:`ObjectStoreParquetBackend` — same
-    layout over conditional puts.
-    """
-
-    gc_grace_s = 300.0
-
-    def _files_to_parquet(self, files: list[FileEntry], path: str) -> None:
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(self._files_to_parquet_bytes(files))
-        os.replace(tmp, path)
-
-    @classmethod
-    def _files_from_parquet(cls, path: str) -> ArrowFileList:
-        import pyarrow.parquet as pq
-
-        return ArrowFileList(pq.read_table(path), cls)
-
-    # -- split contract (Manifest's fast path) -------------------------
-    def read_split(self, dirpath: str):
+    def read(self, dirpath: str):
         """-> (head_payload_dict, list[FileEntry], token) | None."""
-        hit = super().read(dirpath)
+        hit = self.transport.read_head(dirpath)
         if hit is None:
             return None
         data, token = hit
         payload = json.loads(_plain(data))
-        self._reject_delta_chain(dirpath, payload)
-        ref = payload.pop("files_ref", None)
-        if ref is None:  # legacy inline-JSON manifest
-            files = [FileEntry.from_json(d) for d in payload.pop("files")]
-            return payload, files, token
-        files = self._files_from_parquet(os.path.join(dirpath, ref))
+        if "files" not in payload:
+            raise ValueError(
+                f"manifest at {dirpath} keeps its entries in parquet "
+                "sidecars: open it with DeltaLogManifest"
+            )
+        files = [FileEntry.from_json(d) for d in payload.pop("files")]
         return payload, files, token
 
-    @staticmethod
-    def _reject_delta_chain(dirpath: str, payload: dict) -> None:
-        # reader-feature guard (Delta's reader-version idea): a head
-        # carrying an unfolded delta chain is unreadable here — the
-        # base checkpoint alone is a STALE view, and committing from
-        # it would silently drop every entry added since. Fail loudly
-        # instead of losing data.
-        if payload.get("deltas"):
-            raise ValueError(
-                f"manifest at {dirpath} carries a delta-log chain "
-                f"({len(payload['deltas'])} deltas); read it with "
-                "DeltaLogParquetBackend / DeltaLogObjectStoreBackend "
-                "(or fold the chain with a checkpoint commit) — a "
-                "base-checkpoint-only view would be stale"
-            )
-
-    def commit_split(
+    def commit(
         self, dirpath: str, head: dict, files: list[FileEntry],
         *, expect_token,
     ) -> Any:
-        import uuid
-
-        gen = head.get("generation", 0)
-        ref = f"{self._FILES_PREFIX}{gen:08d}.{uuid.uuid4().hex[:12]}.parquet"
-        ref_path = os.path.join(dirpath, ref)
-        self._files_to_parquet(files, ref_path)
-        head = {**head, "files_ref": ref}
-        data = _maybe_compress(json.dumps(head).encode())
-        try:
-            token = super().commit(dirpath, data, expect_token=expect_token)
-        except ManifestConflictError:
-            if os.path.exists(ref_path):  # never referenced by any head
-                os.remove(ref_path)
-            raise
-        self._sweep(dirpath, keep=ref)
-        return token
-
-    # -- bytes contract (interface parity; Manifest uses the split
-    #    path, so these only serve generic byte-level callers) --------
-    def read(self, dirpath: str):
-        hit = self.read_split(dirpath)
-        if hit is None:
-            return None
-        payload, files, token = hit
-        payload = dict(payload)
-        payload["files"] = [f.to_json() for f in files]
-        return json.dumps(payload).encode(), token
-
-    def commit(self, dirpath: str, data: bytes, *, expect_token) -> Any:
-        payload = json.loads(_plain(data))
-        files = [FileEntry.from_json(d) for d in payload.pop("files", [])]
-        return self.commit_split(
-            dirpath, payload, files, expect_token=expect_token
+        payload = {**head, "files": [f.to_json() for f in files]}
+        return self.transport.cas_head(
+            dirpath, _maybe_compress(json.dumps(payload).encode()),
+            expect_token,
         )
 
-    def _sweep(self, dirpath: str, *, keep: str) -> None:
-        import time
 
-        now = time.time()
-        for n in os.listdir(dirpath):
-            if n == keep or not (
-                n.startswith(self._FILES_PREFIX) and n.endswith(".parquet")
-            ):
-                continue
-            p = os.path.join(dirpath, n)
-            try:
-                if now - os.path.getmtime(p) >= self.gc_grace_s:
-                    os.remove(p)
-            except FileNotFoundError:
-                continue  # concurrent sweeper got it first
-
-
-class _DeltaLogMixin:
+class DeltaLogManifest(_ParquetFilesCodec):
     """DELTA-ENCODED manifest commits — O(changed entries) commit I/O
-    instead of a full sidecar rewrite per commit (the one remaining
-    manifest-width-proportional write cost, measured at ~5–6 s per
-    commit at 1M entries in SCALE.md's round-13 probe). The
-    Delta-Lake log architecture proper: actions per commit, periodic
-    checkpoints — here with the actions themselves typed parquet.
+    instead of a full entry rewrite per commit (a full typed sidecar
+    cost ~5–6 s per commit at 1M entries in SCALE.md's round-13
+    probe). The Delta-Lake log architecture proper: actions per
+    commit, periodic checkpoints — here with the actions themselves
+    typed parquet (``_ParquetFilesCodec`` layout).
 
-    Layout: the head (same CAS as the transport parent) points at a
-    BASE checkpoint sidecar (``files_ref``) plus an ordered chain
-    ``deltas: [{"ref": <adds sidecar|null>, "removed": [names]} ...]``
-    — each commit writes ONLY its added entries as a parquet object
-    and lists its removed names inline in the head (both bounded by
-    the commit's touched files, never table width). Readers
-    reconstruct vectorized: one global removed-name filter is EXACT
-    because data-file names are uuid-fresh and never reused (a name
-    can never be re-added after removal), then concat with schema
-    promotion and a typed sort on (min, max) restores the manifest
-    order invariant.
+    Layout: the head (committed through the transport's CAS) points
+    at a BASE checkpoint sidecar (``files_ref``) plus an ordered
+    chain ``deltas: [{"ref": <adds sidecar|null>, "removed": [names]}
+    ...]`` — each commit writes ONLY its added entries as a parquet
+    object and lists its removed names inline in the head (both
+    bounded by the commit's touched files, never table width).
+    Readers reconstruct vectorized: one global removed-name filter is
+    EXACT because data-file names are uuid-fresh and never reused (a
+    name can never be re-added after removal), then concat with
+    schema promotion and a typed sort on (min, max) restores the
+    manifest order invariant. A head without ``deltas`` — every
+    freshly folded chain, and every head the former full-sidecar
+    backends wrote — is a zero-delta chain: its checkpoint already is
+    in manifest order.
 
     The writer proves its delta against the true predecessor via the
-    CAS itself: the delta is computed vs the name-set this handle
+    CAS itself: the delta is computed vs the name-set this instance
     last read/committed (cached per dirpath), and the head commit
     carries ``expect_token`` from that same state — so the CAS
     succeeds only when that state IS the committed predecessor. Any
@@ -849,30 +821,35 @@ class _DeltaLogMixin:
     commits, the chain folds into a fresh full checkpoint;
     correctness never depends on the fast path.
 
-    Transport primitives supplied by the concrete class:
-    ``_head_read`` / ``_head_commit`` (the CAS), ``_sidecar_table``
-    / ``_sidecar_write`` / ``_sidecar_drop``, ``_chain_sweep``.
+    Sidecars are immutable nonce-named objects
+    (``_oups_manifest.files.g<generation>.<nonce>[.delta].parquet`` —
+    the nonce keeps two same-generation racers apart), staged before
+    the head CAS decides; a loser drops its staged object. Refs a
+    commit releases stay one extra commit, so a reader of the
+    previous head still resolves its chain; the transport's sweep
+    then reclaims them. Legacy inline-JSON heads read as-is and the
+    next commit upgrades them. Time-travel snapshots are unaffected —
+    they are written from the full inline payload.
     """
 
     checkpoint_interval = 20
 
-    def __init__(self):
+    def __init__(self, transport):
+        self.transport = transport
         # dirpath -> (token, frozenset(names), base_ref, deltas_payload)
         self._seen: dict[str, tuple] = {}
         # dirpath -> the PREVIOUS commit's reachable refs: kept for one
         # extra commit so a reader that loaded the previous head can
-        # still resolve its chain (the keep_generations=2 posture; the
-        # POSIX twin additionally has its mtime grace window)
+        # still resolve its chain
         self._prev_keep: dict[str, set] = {}
         # dirpath -> refs THIS instance released at its previous
-        # commit: the only objects the object-store sweep may delete
-        # (deleting by listing would race a concurrent writer's
-        # staged-but-not-yet-CASed sidecar)
+        # commit: the only objects a drop-list sweep may delete
         self._pending_drop: dict[str, set] = {}
 
     # -- read ----------------------------------------------------------
-    def read_split(self, dirpath: str):
-        hit = self._head_read(dirpath)
+    def read(self, dirpath: str):
+        """-> (head_payload_dict, list[FileEntry], token) | None."""
+        hit = self.transport.read_head(dirpath)
         if hit is None:
             return None
         data, token = hit
@@ -897,10 +874,20 @@ class _DeltaLogMixin:
         )
         return payload, files, token
 
+    def _sidecar_table(self, dirpath: str, ref: str, columns=None):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        return pq.read_table(
+            pa.BufferReader(self.transport.get(dirpath, ref)),
+            columns=columns,
+        )
+
     def _sidecar_names(self, dirpath: str, ref: str) -> list:
-        """Just the ``name`` column of one sidecar — overridable with
-        a column-pruned read where the transport supports it."""
-        return self._sidecar_table(dirpath, ref).column("name").to_pylist()
+        # column-pruned decode: the name-set resolver never needs stats
+        return self._sidecar_table(
+            dirpath, ref, columns=["name"]
+        ).column("name").to_pylist()
 
     def _chain_names(self, dirpath: str, ref: str, deltas: list) -> frozenset:
         """Name-set of a committed chain, resolved from the sidecars
@@ -919,6 +906,11 @@ class _DeltaLogMixin:
         import pyarrow as pa
         import pyarrow.compute as pc
 
+        if not deltas:
+            # a bare checkpoint is written from Manifest.save after
+            # sort_files(): it already is in manifest order, so there
+            # is nothing to filter, concat or re-sort
+            return ArrowFileList(self._sidecar_table(dirpath, ref))
         tables = [self._sidecar_table(dirpath, ref)]
         removed: set = set()
         for d in deltas:
@@ -972,7 +964,7 @@ class _DeltaLogMixin:
                     sort_keys=[("min", "ascending"), ("max", "ascending")],
                 )
             )
-            return ArrowFileList(table, type(self))
+            return ArrowFileList(table)
         # mixed-type (JSON-fallback) ordering stats: materialize and
         # sort in Python — rare, and the exact filter above still ran
         entries = self._files_from_table(table)
@@ -980,7 +972,7 @@ class _DeltaLogMixin:
         return entries
 
     # -- commit --------------------------------------------------------
-    def commit_split(
+    def commit(
         self, dirpath: str, head: dict, files: list[FileEntry],
         *, expect_token,
     ) -> Any:
@@ -1016,8 +1008,10 @@ class _DeltaLogMixin:
         ):
             # FULL CHECKPOINT: no provable predecessor, or the chain
             # is due for folding
-            ref = f"{self._FILES_PREFIX}{gen:08d}.{nonce}.parquet"
-            self._sidecar_write(dirpath, ref, files)
+            ref = f"{_FILES_PREFIX}{gen:08d}.{nonce}.parquet"
+            self.transport.put(
+                dirpath, ref, self._files_to_parquet_bytes(files)
+            )
             new_head = {**head, "files_ref": ref}
             keep = {ref}
             new_deltas: list = []
@@ -1052,8 +1046,10 @@ class _DeltaLogMixin:
             added = [f for f in files if f.name not in prev_names]
             removed = sorted(prev_names - cur_names)
             if added:
-                ref = f"{self._FILES_PREFIX}{gen:08d}.{nonce}.delta.parquet"
-                self._sidecar_write(dirpath, ref, added)
+                ref = f"{_FILES_PREFIX}{gen:08d}.{nonce}.delta.parquet"
+                self.transport.put(
+                    dirpath, ref, self._files_to_parquet_bytes(added)
+                )
                 staged = ref
             else:
                 ref = None  # removal-only / head-only commit
@@ -1072,262 +1068,26 @@ class _DeltaLogMixin:
             next_names = frozenset(cur_names)  # already computed here
         data = _maybe_compress(json.dumps(new_head).encode())
         try:
-            token = self._head_commit(dirpath, data, expect_token)
+            token = self.transport.cas_head(dirpath, data, expect_token)
         except ManifestConflictError:
             if staged is not None:  # never referenced by any head
-                self._sidecar_drop(dirpath, staged)
+                self.transport.delete(dirpath, staged)
             raise
         self._seen[dirpath] = (token, next_names, ref, new_deltas)
-        # two-phase reclamation: refs released by THIS commit are only
-        # deleted at the NEXT one (a reader on the just-replaced head
-        # can still resolve its chain), and only refs this instance
-        # itself released are ever dropped — never a listing sweep,
-        # which could delete a concurrent writer's staged sidecar
-        # between its put and its head CAS
+        # two-phase reclamation: refs released by THIS commit stay in
+        # `keep` until the NEXT one (a reader on the just-replaced head
+        # can still resolve its chain); `drop` names the refs this
+        # instance released one commit ago. The transport's policy
+        # decides what goes: posix sweeps everything outside `keep`
+        # past its mtime grace, object stores delete `drop` only
         released = (
             self._prev_keep.get(dirpath, set()) | replaced_chain
         ) - keep
         drop_now = self._pending_drop.get(dirpath, set()) - keep
-        self._chain_sweep(
-            dirpath,
-            keep=keep | released,
-            drop=drop_now,
-        )
+        self.transport.sweep(dirpath, keep=keep | released, drop=drop_now)
         self._pending_drop[dirpath] = released
         self._prev_keep[dirpath] = keep
         return token
-
-
-class DeltaLogParquetBackend(_DeltaLogMixin, ParquetManifestBackend):
-    """Delta-log manifest on POSIX (flock-CAS head, sidecars as local
-    parquet files) — see :class:`_DeltaLogMixin` for the protocol and
-    SCALE.md for the measured commit-cost table."""
-
-    # -- transport primitives -------------------------------------
-    def _head_read(self, dirpath: str):
-        return PosixRenameBackend.read(self, dirpath)
-
-    def _head_commit(self, dirpath: str, data: bytes, expect_token) -> Any:
-        return PosixRenameBackend.commit(
-            self, dirpath, data, expect_token=expect_token
-        )
-
-    def _sidecar_table(self, dirpath: str, ref: str):
-        import pyarrow.parquet as pq
-
-        return pq.read_table(os.path.join(dirpath, ref))
-
-    def _sidecar_names(self, dirpath: str, ref: str) -> list:
-        import pyarrow.parquet as pq
-
-        # column-pruned read: the name-set resolver never needs stats
-        return pq.read_table(
-            os.path.join(dirpath, ref), columns=["name"]
-        ).column("name").to_pylist()
-
-    def _sidecar_write(self, dirpath: str, ref: str, files) -> None:
-        self._files_to_parquet(files, os.path.join(dirpath, ref))
-
-    def _sidecar_drop(self, dirpath: str, ref: str) -> None:
-        p = os.path.join(dirpath, ref)
-        if os.path.exists(p):
-            os.remove(p)
-
-    def _chain_sweep(self, dirpath: str, *, keep: set, drop: set = frozenset()) -> None:
-        import time
-
-        now = time.time()
-        for n in os.listdir(dirpath):
-            if n in keep or not (
-                n.startswith(self._FILES_PREFIX) and n.endswith(".parquet")
-            ):
-                continue
-            p = os.path.join(dirpath, n)
-            try:
-                if now - os.path.getmtime(p) >= self.gc_grace_s:
-                    os.remove(p)
-            except FileNotFoundError:
-                continue  # concurrent sweeper got it first
-
-
-class ObjectStoreParquetBackend(ObjectStoreBackend, _ParquetFilesCodec):
-    """Split-layout manifest on an OBJECT STORE: the same typed
-    parquet sidecar as :class:`ParquetManifestBackend`, with the head
-    committed through :class:`ObjectStoreBackend`'s conditional-put
-    CAS. The sidecar is an immutable nonce-named object written with
-    put-if-absent BEFORE the head CAS decides; a loser deletes its
-    orphan (where the store implements ``_delete``).
-
-    Sidecar GC is by GENERATION — keep the newest
-    ``keep_generations`` — rather than mtime: object stores carry no
-    trustworthy local clock. A reader that loaded the previous head
-    can still resolve its ref; a reader ≥ ``keep_generations``
-    commits stale between its head GET and sidecar GET fails LOUDLY
-    (missing object), never silently empty. Stores without
-    LIST/DELETE primitives skip the sweep and leave reclamation to a
-    bucket lifecycle rule.
-    """
-
-    keep_generations = 2
-
-    def read_split(self, dirpath: str):
-        """-> (head_payload_dict, list[FileEntry], token) | None."""
-        hit = self._get(self._key(dirpath))
-        if hit is None:
-            return None
-        data, token = hit
-        payload = json.loads(_plain(data))
-        ParquetManifestBackend._reject_delta_chain(dirpath, payload)
-        ref = payload.pop("files_ref", None)
-        if ref is None:  # manifest committed by the inline-JSON backend
-            files = [FileEntry.from_json(d) for d in payload.pop("files")]
-            return payload, files, token
-        sidecar = self._get(os.path.join(dirpath, ref))
-        if sidecar is None:
-            raise FileNotFoundError(
-                f"manifest sidecar {ref} missing under {dirpath} "
-                "(reader stale past the sidecar GC window?)"
-            )
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        files = ArrowFileList(
-            pq.read_table(pa.BufferReader(sidecar[0])), type(self)
-        )
-        return payload, files, token
-
-    def commit_split(
-        self, dirpath: str, head: dict, files: list[FileEntry],
-        *, expect_token,
-    ) -> Any:
-        import uuid
-
-        gen = head.get("generation", 0)
-        ref = f"{self._FILES_PREFIX}{gen:08d}.{uuid.uuid4().hex[:12]}.parquet"
-        ref_key = os.path.join(dirpath, ref)
-        self._put_if_absent(ref_key, self._files_to_parquet_bytes(files))
-        head = {**head, "files_ref": ref}
-        data = _maybe_compress(json.dumps(head).encode())
-        try:
-            token = super().commit(dirpath, data, expect_token=expect_token)
-        except ManifestConflictError:
-            try:
-                self._delete(ref_key)  # never referenced by any head
-            except NotImplementedError:
-                pass
-            raise
-        self._sweep(dirpath, gen)
-        return token
-
-    # bytes contract (interface parity; Manifest uses the split path)
-    def read(self, dirpath: str):
-        hit = self.read_split(dirpath)
-        if hit is None:
-            return None
-        payload, files, token = hit
-        payload = dict(payload)
-        payload["files"] = [f.to_json() for f in files]
-        return json.dumps(payload).encode(), token
-
-    def commit(self, dirpath: str, data: bytes, *, expect_token) -> Any:
-        payload = json.loads(_plain(data))
-        files = [FileEntry.from_json(d) for d in payload.pop("files", [])]
-        return self.commit_split(
-            dirpath, payload, files, expect_token=expect_token
-        )
-
-    def _sweep(self, dirpath: str, current_gen: int) -> None:
-        prefix = os.path.join(dirpath, self._FILES_PREFIX)
-        try:
-            keys = self._list(prefix)
-        except NotImplementedError:
-            return
-        cutoff = current_gen - self.keep_generations
-        for k in keys:
-            try:
-                g = int(k[len(prefix):].split(".", 1)[0])
-            except ValueError:
-                continue
-            if g <= cutoff:
-                try:
-                    self._delete(k)
-                except NotImplementedError:
-                    return
-
-
-class DeltaLogObjectStoreBackend(_DeltaLogMixin, ObjectStoreParquetBackend):
-    """Delta-log manifest on an OBJECT STORE (conditional-put head,
-    sidecars as immutable put-if-absent objects) — same chain
-    protocol as the POSIX twin (:class:`_DeltaLogMixin`), composed
-    with S3/GCS CAS semantics. The sweep is reachability-based (keep
-    every ref in the current head's chain) rather than
-    generation-based: a chain's BASE checkpoint legitimately carries
-    an old generation and must survive any number of delta commits.
-    Stores without LIST/DELETE primitives skip the sweep and leave
-    reclamation to a bucket lifecycle rule."""
-
-    def __init__(self):
-        _DeltaLogMixin.__init__(self)
-
-    # -- transport primitives -------------------------------------
-    def _head_read(self, dirpath: str):
-        return self._get(self._key(dirpath))
-
-    def _head_commit(self, dirpath: str, data: bytes, expect_token) -> Any:
-        return ObjectStoreBackend.commit(
-            self, dirpath, data, expect_token=expect_token
-        )
-
-    def _sidecar_table(self, dirpath: str, ref: str):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        hit = self._get(os.path.join(dirpath, ref))
-        if hit is None:
-            raise FileNotFoundError(
-                f"manifest sidecar {ref} missing under {dirpath} "
-                "(reader stale past the sidecar GC window?)"
-            )
-        return pq.read_table(pa.BufferReader(hit[0]))
-
-    def _sidecar_write(self, dirpath: str, ref: str, files) -> None:
-        self._put_if_absent(
-            os.path.join(dirpath, ref), self._files_to_parquet_bytes(files)
-        )
-
-    def _sidecar_drop(self, dirpath: str, ref: str) -> None:
-        try:
-            self._delete(os.path.join(dirpath, ref))
-        except NotImplementedError:
-            pass
-
-    def _chain_sweep(self, dirpath: str, *, keep: set, drop: set = frozenset()) -> None:
-        # delete ONLY the refs this instance released two commits ago
-        # (see _DeltaLogMixin two-phase reclamation) — a listing sweep
-        # would race a concurrent writer's staged-but-uncommitted
-        # sidecar. Other writers' superseded objects fall to the
-        # bucket lifecycle rule, like stores without LIST/DELETE.
-        for r in drop:
-            if r in keep:
-                continue
-            try:
-                self._delete(os.path.join(dirpath, r))
-            except NotImplementedError:
-                return
-
-
-class InMemoryDeltaLogObjectStore(DeltaLogObjectStoreBackend, InMemoryObjectStore):
-    """Dict-backed mock of the delta-log object-store backend."""
-
-    def __init__(self):
-        DeltaLogObjectStoreBackend.__init__(self)
-        InMemoryObjectStore.__init__(self)
-
-
-class InMemoryParquetObjectStore(ObjectStoreParquetBackend, InMemoryObjectStore):
-    """Dict-backed mock of the split-layout object-store backend —
-    the contract tests' reference implementation (conditional-put
-    head + immutable parquet sidecars, no network)."""
 
 
 # Only explicitly tagged types round-trip through kv metadata — a
@@ -1448,7 +1208,7 @@ class FileEntry:
                    blooms=d.get("blooms"))
 
 
-_DEFAULT_BACKEND = PosixRenameBackend()
+DEFAULT_BACKEND = JsonManifest(PosixTransport())
 
 
 @dataclass
@@ -1473,12 +1233,12 @@ class Manifest:
     # Entries are ``{"name": <file>, "ts": <unix seconds>}``; the
     # write path sweeps entries older than its grace window.
     tombstones: list = field(default_factory=list)
-    # backend commit token of the version this instance was loaded
-    # from (None = freshly created / posix backend) — save() passes
-    # it as the conditional-put precondition, making read-modify-
-    # write optimistic CAS on backends that support it
+    # transport commit token of the version this instance was loaded
+    # from (None = freshly created) — save() passes it as the
+    # compare-and-swap precondition, making read-modify-write
+    # optimistic CAS on every transport
     token: Any = field(default=None, compare=False, repr=False)
-    # True iff the most recent save() got its backend CAS accepted —
+    # True iff the most recent save() got its head CAS accepted —
     # distinguishes post-commit failures (snapshot write, expired-file
     # deletion) from pre-commit ones in callers' cleanup handlers.
     # Reset to False at the top of every save().
@@ -1493,7 +1253,7 @@ class Manifest:
     def files_in_range(self, start=None, end_excl=None) -> list[FileEntry]:
         """Entries whose ``[min, max]`` span intersects
         ``[start, end_excl)`` — THE read-path file selection. On an
-        Arrow-backed lazy list (parquet-sidecar backends) the
+        Arrow-backed lazy list (the delta-log encoding) the
         selection runs vectorized and materializes only survivors, so
         a pruned read of a million-file dataset touches a handful of
         Python objects."""
@@ -1533,11 +1293,11 @@ class Manifest:
     def save(
         self,
         dirpath: str,
-        backend: ManifestBackend | None = None,
+        backend: JsonManifest | DeltaLogManifest | None = None,
         *,
         snapshot: bool = False,
     ) -> None:
-        backend = backend or _DEFAULT_BACKEND
+        backend = backend or DEFAULT_BACKEND
         # post-commit failure discrimination: a caller whose cleanup
         # handler deletes staged data files MUST NOT do so once the
         # CAS has landed (the committed manifest references them) —
@@ -1549,18 +1309,10 @@ class Manifest:
         self.sort_files()
         self.generation += 1
         try:
-            if hasattr(backend, "commit_split"):
-                # split fast path (parquet sidecar backends): entries
-                # go typed, never through per-entry JSON tagging
-                self.token = backend.commit_split(
-                    dirpath, self._head_payload(), self.files,
-                    expect_token=self.token,
-                )
-            else:
-                data = _maybe_compress(self._payload())
-                self.token = backend.commit(
-                    dirpath, data, expect_token=self.token
-                )
+            self.token = backend.commit(
+                dirpath, self._head_payload(), self.files,
+                expect_token=self.token,
+            )
         except ManifestConflictError:
             # a failed commit must not leave this instance claiming a
             # generation that never landed — callers retry with it
@@ -1569,8 +1321,8 @@ class Manifest:
         self.last_commit_landed = True
         if snapshot:
             # snapshots are always the full inline payload, whatever
-            # the backend's live layout — load_snapshot stays
-            # backend-free and old generations never dangle on a
+            # the encoding's live layout — load_snapshot stays
+            # encoding-free and old generations never dangle on a
             # swept sidecar
             write_snapshot(
                 dirpath, self.generation, _maybe_compress(self._payload())
@@ -1598,22 +1350,16 @@ class Manifest:
 
     @classmethod
     def load(
-        cls, dirpath: str, backend: ManifestBackend | None = None
+        cls, dirpath: str,
+        backend: JsonManifest | DeltaLogManifest | None = None,
     ) -> Manifest | None:
-        backend = backend or _DEFAULT_BACKEND
-        if hasattr(backend, "read_split"):
-            hit = backend.read_split(dirpath)
-            if hit is None:
-                return None
-            head, files, token = hit
-            man = cls._from_head(head, token)
-            man.files = files
-            return man
-        hit = backend.read(dirpath)
+        hit = (backend or DEFAULT_BACKEND).read(dirpath)
         if hit is None:
             return None
-        data, token = hit
-        return cls._from_payload(data, token)
+        head, files, token = hit
+        man = cls._from_head(head, token)
+        man.files = files
+        return man
 
 
 # ------------------------------------------------- time-travel snapshots

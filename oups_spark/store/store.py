@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 
 from oups_spark.store.dataset import OrderedDataset
 from oups_spark.store.indexer import is_toplevel
-from oups_spark.store.manifest import MANIFEST_NAME
+from oups_spark.store.manifest import DEFAULT_BACKEND
 
 
 class Store:
@@ -25,11 +25,13 @@ class Store:
         self, spark: SparkSession, basepath: str, indexer: type,
         *, backend=None,
     ):
-        """``backend``: optional :class:`ManifestBackend` handed to
-        every dataset this store opens — e.g.
-        :class:`ParquetManifestBackend` for lakehouse file counts, or
-        an :class:`ObjectStoreBackend` subclass on S3/GCS. None keeps
-        the default JSON/posix backend per dataset."""
+        """``backend``: optional manifest encoding handed to every
+        dataset this store opens — e.g.
+        ``DeltaLogManifest(PosixTransport())`` for lakehouse file
+        counts, or an encoding over an :class:`ObjectStoreTransport`
+        subclass on S3/GCS. None keeps the default
+        ``JsonManifest(PosixTransport())`` per dataset. Discovery,
+        membership and deletion go through its transport."""
         if not is_toplevel(indexer):
             raise TypeError(f"{indexer!r} is not an @toplevel indexer class")
         self.spark = spark
@@ -39,27 +41,17 @@ class Store:
         os.makedirs(self.basepath, exist_ok=True)
 
     # --------------------------------------------------------- discovery
+    @property
+    def _transport(self):
+        return (self.backend or DEFAULT_BACKEND).transport
+
     def _manifest_dirs(self) -> list[str]:
-        """Paths (relative to basepath) of every manifest object: a
-        bucket LIST on object-store backends, an ``os.walk`` on posix
-        (incl. posix-parquet backends, whose head lives on disk)."""
-        be = self.backend
-        if be is not None and hasattr(be, "_list"):
-            try:
-                keys = be._list(self.basepath + "/")
-            except NotImplementedError:
-                keys = None
-            if keys is not None:
-                return [
-                    os.path.relpath(os.path.dirname(k), self.basepath)
-                    for k in keys
-                    if os.path.basename(k) == MANIFEST_NAME
-                ]
-        out = []
-        for dirpath, _dirnames, filenames in os.walk(self.basepath):
-            if MANIFEST_NAME in filenames:
-                out.append(os.path.relpath(dirpath, self.basepath))
-        return out
+        """Paths (relative to basepath) of every manifest head: a
+        bucket LIST on object stores, an ``os.walk`` on posix."""
+        return [
+            os.path.relpath(d, self.basepath)
+            for d in self._transport.heads(self.basepath)
+        ]
 
     def keys(self) -> list:
         """Scan for dataset manifests at the indexer's depth
@@ -90,11 +82,7 @@ class Store:
         return self[key]
 
     def __contains__(self, key) -> bool:
-        path = os.path.join(self._path_of(key), MANIFEST_NAME)
-        be = self.backend
-        if be is not None and hasattr(be, "_get"):
-            return be._get(path) is not None  # one object GET, no load
-        return os.path.exists(path)
+        return self._transport.has_head(self._path_of(key))
 
     def __iter__(self) -> Iterator:
         return iter(self.keys())

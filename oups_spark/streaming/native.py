@@ -669,16 +669,19 @@ def write_stream_to_dataset(
     keep-last dedup on the bin label absorbs Spark's at-least-once
     redelivery after a checkpoint recovery).
 
-    ``backend``: optional ManifestBackend routing each micro-batch's
-    manifest commit — an :class:`ObjectStoreBackend` makes the sink's
+    ``backend``: optional manifest encoding routing each
+    micro-batch's manifest commit (None = inline JSON on posix). An
+    encoding over an object-store transport makes the sink's
     exactly-once story compose with conditional-put CAS on S3/GCS:
     Spark's checkpoint replays at-least-once, the keep-last merge
     absorbs redelivery, and the CAS (with ``conflict_retries`` for
     concurrent batch writers) serializes each batch commit against
-    any other writer of the same dataset. The sink runs on the
-    driver (``foreachBatch``), so the backend instance is shared
-    across batches and restarts within a process; on a real object
-    store the backend is stateless against the bucket anyway.
+    any other writer of the same dataset. With
+    ``DeltaLogManifest`` each batch is one delta commit, O(batch
+    files). The sink runs on the driver (``foreachBatch``), so the
+    encoding instance — and the delta log's writer cache — is shared
+    across batches and restarts within a process; the transport is
+    stateless against the bucket anyway.
 
     AUTO-MAINTENANCE (round-14; reference auto-coalesces off-target
     row groups on every write, ``write.py:204-217``): a long-running

@@ -1,13 +1,12 @@
-"""DeltaLogParquetBackend: delta-encoded manifest commits (round-13).
+"""DeltaLogManifest: delta-encoded manifest commits (round-13).
 
 Commit I/O must be O(changed entries) — each commit writes only its
 added entries (plus removed names inline in the head) — while readers
-reconstruct the exact same manifest the full-sidecar backend would
-hold: same entries, same (min, max) order, same typed stats, same CAS
-contract under the two-process hammer."""
+reconstruct the exact same manifest a full rewrite would hold: same
+entries, same (min, max) order, same typed stats, same CAS contract
+(the two-process hammer lives in tests/test_manifest_contract.py)."""
 
 import json
-import multiprocessing as mp
 import os
 
 import pandas as pd
@@ -15,12 +14,17 @@ import pytest
 
 from oups_spark.store.manifest import (
     MANIFEST_NAME,
-    DeltaLogParquetBackend,
+    DeltaLogManifest,
     FileEntry,
+    InMemoryObjectStore,
     Manifest,
     ManifestConflictError,
-    ParquetManifestBackend,
+    PosixTransport,
 )
+
+
+def _dl():
+    return DeltaLogManifest(PosixTransport())
 
 
 def _entry(i, name=None):
@@ -39,7 +43,7 @@ def _head(d):
 
 def test_delta_commits_and_exact_reconstruction(tmp_path):
     d = str(tmp_path)
-    be = DeltaLogParquetBackend()
+    be = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(i) for i in range(5)]
     m.save(d, be)  # gen 1: full checkpoint (no predecessor)
@@ -75,8 +79,8 @@ def test_delta_commits_and_exact_reconstruction(tmp_path):
     m.save(d, be)
     assert len(_head(d)["deltas"]) == 3
 
-    # FRESH reader reconstructs exactly what the full backend holds
-    back = Manifest.load(d, DeltaLogParquetBackend())
+    # FRESH reader reconstructs exactly the committed manifest
+    back = Manifest.load(d, _dl())
     names = [f.name for f in back.files]
     assert "f0001.parquet" not in names and "f0004.parquet" not in names
     assert "f0001_v2.parquet" in names and len(names) == 6
@@ -97,9 +101,9 @@ def test_delta_commits_and_exact_reconstruction(tmp_path):
 
 def test_chain_folds_into_checkpoint_and_sweep_keeps_chain(tmp_path):
     d = str(tmp_path)
-    be = DeltaLogParquetBackend()
+    be = _dl()
     be.checkpoint_interval = 3  # chain may hold at most 2 deltas
-    be.gc_grace_s = 0.0
+    be.transport.gc_grace_s = 0.0
     m = Manifest(ordered_on="ts")
     m.files = [_entry(0)]
     m.save(d, be)  # checkpoint
@@ -125,7 +129,7 @@ def test_chain_folds_into_checkpoint_and_sweep_keeps_chain(tmp_path):
     h = _head(d)
     expect = {h["files_ref"], h["deltas"][0]["ref"]}
     assert {n for n in os.listdir(d) if ".files.g" in n} == expect
-    back = Manifest.load(d, DeltaLogParquetBackend())
+    back = Manifest.load(d, _dl())
     assert len(back.files) == 5 and back.generation == 5
 
 
@@ -136,14 +140,14 @@ def test_cas_conflict_cleans_staged_objects_both_paths(tmp_path):
     cache) both remove their staged object on the CAS loss, and a
     reload-retry lands as a delta on the winner."""
     d = str(tmp_path)
-    be = DeltaLogParquetBackend()
+    be = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(0)]
     m.save(d, be)
 
-    be_f = DeltaLogParquetBackend()
+    be_f = _dl()
     stale_delta = Manifest.load(d, be_f)      # be_f cache at gen 1
-    stale_ckpt = Manifest.load(d, DeltaLogParquetBackend())  # cache lost
+    stale_ckpt = Manifest.load(d, _dl())  # cache lost
     winner = Manifest.load(d, be)
     winner.files.append(_entry(1))
     winner.save(d, be)                         # gen 2
@@ -158,86 +162,61 @@ def test_cas_conflict_cleans_staged_objects_both_paths(tmp_path):
     # checkpoint-attempt loser (fresh instance, no cache)
     stale_ckpt.files.append(_entry(3))
     with pytest.raises(ManifestConflictError):
-        stale_ckpt.save(d, DeltaLogParquetBackend())
+        stale_ckpt.save(d, _dl())
     assert n_objs() == before
     # reload-retry lands as a delta on the winner's state
     retry = Manifest.load(d, be_f)
     retry.files.append(_entry(2))
     retry.save(d, be_f)
     assert len(_head(d)["deltas"]) >= 1
-    final = Manifest.load(d, DeltaLogParquetBackend())
+    final = Manifest.load(d, _dl())
     assert {f.name for f in final.files} == {
         "f0000.parquet", "f0001.parquet", "f0002.parquet"
     }
 
 
 def test_reads_interop_with_full_parquet_backend(tmp_path):
-    """A dataset committed by the FULL parquet backend reads as-is,
-    and the next deltalog commit chains on top of its checkpoint;
-    the full backend can read a CHECKPOINT-state deltalog manifest
-    (chain folded), never silently-empty on a chained one."""
-    d = str(tmp_path)
-    full = ParquetManifestBackend()
-    m = Manifest(ordered_on="ts")
-    m.files = [_entry(0), _entry(1)]
-    m.save(d, full)
+    """A head in the layout the former full-sidecar backends wrote —
+    ``files_ref`` to a typed checkpoint, no ``deltas`` — reads as a
+    zero-delta chain on BOTH transports, and the next delta-log
+    commit chains on top of that checkpoint instead of rewriting
+    it. The inline JSON encoding refuses such a head loudly."""
+    from oups_spark.store.manifest import JsonManifest
 
-    dl = DeltaLogParquetBackend()
-    back = Manifest.load(d, dl)
-    assert len(back.files) == 2
-    back.files.append(_entry(2))
-    back.save(d, dl)
-    assert len(_head(d)["deltas"]) == 1
-    assert len(Manifest.load(d, DeltaLogParquetBackend()).files) == 3
+    for transport, d in (
+        (PosixTransport(), str(tmp_path)),
+        (InMemoryObjectStore(), "bucket/legacy"),
+    ):
+        # hand-built legacy head: checkpoint sidecar + pointer head
+        ref = "_oups_manifest.files.g00000001.0123456789ab.parquet"
+        transport.put(
+            d, ref, _dl()._files_to_parquet_bytes([_entry(0), _entry(1)])
+        )
+        head = {
+            "version": 1, "ordered_on": "ts", "generation": 1,
+            "kv": {"note": "legacy"}, "schema_json": None,
+            "files_ref": ref,
+        }
+        transport.cas_head(d, json.dumps(head).encode(), None)
+        with pytest.raises(ValueError, match="DeltaLogManifest"):
+            Manifest.load(d, JsonManifest(transport))
 
-
-def _dl_contender(dirpath: str, tag: str, n: int) -> None:
-    from oups_spark.store.manifest import (
-        DeltaLogParquetBackend,
-        FileEntry,
-        Manifest,
-        ManifestConflictError,
-    )
-
-    be = DeltaLogParquetBackend()
-    for i in range(n):
-        while True:
-            m = Manifest.load(dirpath, be) or Manifest(ordered_on="ts")
-            m.files.append(
-                FileEntry(
-                    name=f"{tag}_{i}.parquet", n_rows=1,
-                    min=i * 10, max=i * 10 + 9,
-                )
-            )
-            try:
-                m.save(dirpath, be)
-                break
-            except ManifestConflictError:
-                continue
-
-
-def test_deltalog_hammer_zero_lost_updates(tmp_path):
-    """The adversarial two-process hammer: every appended entry lands
-    exactly once through the delta chain, the generation is the
-    commit count, and the reconstruction equals the serial union —
-    the delta encoding changes commit I/O, not the CAS contract."""
-    d = str(tmp_path)
-    n = 15
-    ctx = mp.get_context("fork")
-    ps = [
-        ctx.Process(target=_dl_contender, args=(d, tag, n))
-        for tag in ("p1", "p2")
-    ]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join(timeout=120)
-        assert p.exitcode == 0
-    final = Manifest.load(d, DeltaLogParquetBackend())
-    names = [f.name for f in final.files]
-    expect = {f"{tag}_{i}.parquet" for tag in ("p1", "p2") for i in range(n)}
-    assert set(names) == expect and len(names) == 2 * n
-    assert final.generation == 2 * n
+        dl = DeltaLogManifest(transport)
+        back = Manifest.load(d, dl)
+        assert [f.name for f in back.files] == [
+            "f0000.parquet", "f0001.parquet"
+        ]
+        assert back.kv == {"note": "legacy"} and back.generation == 1
+        back.files.append(_entry(2))
+        back.save(d, dl)
+        new_head = json.loads(transport.read_head(d)[0])
+        assert new_head["files_ref"] == ref  # chained, not rewritten
+        assert len(new_head["deltas"]) == 1
+        again = Manifest.load(d, DeltaLogManifest(transport))
+        assert [f.name for f in again.files] == [
+            "f0000.parquet", "f0001.parquet", "f0002.parquet"
+        ]
+        assert again.generation == 2
 
 
 def test_ordered_dataset_end_to_end_on_deltalog(spark, scratch):
@@ -249,7 +228,7 @@ def test_ordered_dataset_end_to_end_on_deltalog(spark, scratch):
 
     from oups_spark.store.dataset import OrderedDataset
 
-    be = DeltaLogParquetBackend()
+    be = _dl()
     path = os.path.join(scratch, "dl_ds")
     pdf = pd.DataFrame(
         {
@@ -276,7 +255,7 @@ def test_ordered_dataset_end_to_end_on_deltalog(spark, scratch):
     assert res["updated"] == 1
     ds.compact(row_group_target_size=100)
 
-    fresh = OrderedDataset(spark, path, backend=DeltaLogParquetBackend())
+    fresh = OrderedDataset(spark, path, backend=_dl())
     got = fresh.read(ordered=True).toPandas()
     exp = pdf[pdf.uid != 3].copy().reset_index(drop=True)
     exp.loc[exp["ts"] == target_ts, "uid"] = 99
@@ -288,10 +267,8 @@ def test_objectstore_deltalog_chain_cas_and_reachability_sweep(tmp_path):
     puts — delta commits, exact reconstruction, stale-writer CAS loss
     with orphan delete, and the reachability sweep keeping the
     previous head's chain for one commit."""
-    from oups_spark.store.manifest import InMemoryDeltaLogObjectStore
-
     d = str(tmp_path / "bucket/ds")
-    be = InMemoryDeltaLogObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
     be.checkpoint_interval = 3
     m = Manifest(ordered_on="ts")
     m.files = [_entry(0)]
@@ -300,23 +277,21 @@ def test_objectstore_deltalog_chain_cas_and_reachability_sweep(tmp_path):
     m.save(d, be)  # delta 1
     m.files = [e for e in m.files if e.name != "f0000.parquet"]
     m.save(d, be)  # delta 2... interval 3 folds -> checkpoint
-    heads = [k for k in be._objects if k.endswith("_oups_manifest.json")]
-    head = json.loads(be._objects[heads[0]][0])
+    heads = [k for k in be.transport._objects if k.endswith("_oups_manifest.json")]
+    head = json.loads(be.transport._objects[heads[0]][0])
     sidecars = lambda: {  # noqa: E731
-        k for k in be._objects if ".files.g" in k
+        k for k in be.transport._objects if ".files.g" in k
     }
     # gen 2's delta chain survives gen 3's fold for one commit
     assert len(sidecars()) >= 2
 
-    be_reader = InMemoryDeltaLogObjectStore()
-    be_reader._objects = be._objects  # same "bucket", fresh reader
+    be_reader = DeltaLogManifest(be.transport)  # same bucket, fresh reader
     back = Manifest.load(d, be_reader)
     assert {f.name for f in back.files} == {"f0001.parquet", "f0002.parquet"}
     assert back.generation == 3
 
     # stale writer: CAS loss deletes the staged delta object
-    be2 = InMemoryDeltaLogObjectStore()
-    be2._objects = be._objects  # same "bucket"
+    be2 = DeltaLogManifest(be.transport)  # same bucket
     stale = Manifest.load(d, be2)
     winner = Manifest.load(d, be)
     winner.files.append(_entry(5))
@@ -330,7 +305,7 @@ def test_objectstore_deltalog_chain_cas_and_reachability_sweep(tmp_path):
     # the current chain + the previous head's
     winner.files.append(_entry(7))
     winner.save(d, be)
-    h = json.loads(be._objects[heads[0]][0])
+    h = json.loads(be.transport._objects[heads[0]][0])
     reachable = {h["files_ref"]} | {
         dd["ref"] for dd in h.get("deltas", []) if dd.get("ref")
     }
@@ -350,7 +325,6 @@ def test_streaming_sink_composes_with_objectstore_deltalog(spark, scratch):
     import pyspark.sql.functions as F
 
     from oups_spark.store.dataset import OrderedDataset
-    from oups_spark.store.manifest import InMemoryDeltaLogObjectStore
     from oups_spark.streaming.native import (
         streaming_segment_agg,
         write_stream_to_dataset,
@@ -370,7 +344,7 @@ def test_streaming_sink_composes_with_objectstore_deltalog(spark, scratch):
         spark.createDataFrame(sl, schema).coalesce(1).write.parquet(
             os.path.join(src, name)
         )
-    be = InMemoryDeltaLogObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
     path = os.path.join(scratch, "bins")
     stream = (
         spark.readStream.schema(schema)
@@ -399,29 +373,9 @@ def test_streaming_sink_composes_with_objectstore_deltalog(spark, scratch):
     )
     pd.testing.assert_frame_equal(got, exp)
     # the second batch landed as a DELTA on the first's checkpoint
-    heads = [k for k in be._objects if k.endswith("_oups_manifest.json")]
-    h = json.loads(be._objects[heads[0]][0])
+    heads = [k for k in be.transport._objects if k.endswith("_oups_manifest.json")]
+    h = json.loads(be.transport._objects[heads[0]][0])
     assert h.get("deltas"), "micro-batch commits should chain"
-
-
-def test_plain_backends_reject_unfolded_chain(tmp_path):
-    """Reader-feature guard: a head carrying an unfolded delta chain
-    is REJECTED by the non-delta parquet backends (the base
-    checkpoint alone is a stale view; committing from it would drop
-    every entry added since) — never a silent stale read."""
-    d = str(tmp_path)
-    be = DeltaLogParquetBackend()
-    m = Manifest(ordered_on="ts")
-    m.files = [_entry(0)]
-    m.save(d, be)
-    # folded state reads fine on the plain backend
-    assert len(Manifest.load(d, ParquetManifestBackend()).files) == 1
-    m.files.append(_entry(1))
-    m.save(d, be)  # chain now unfolded
-    with pytest.raises(ValueError, match="delta-log chain"):
-        Manifest.load(d, ParquetManifestBackend())
-    # delta reader still fine
-    assert len(Manifest.load(d, DeltaLogParquetBackend()).files) == 2
 
 
 def test_objectstore_sweep_never_touches_foreign_staged_objects(tmp_path):
@@ -429,27 +383,25 @@ def test_objectstore_sweep_never_touches_foreign_staged_objects(tmp_path):
     deletes refs THIS instance released, one commit later — a
     concurrent writer's staged-but-not-yet-CASed sidecar, and the
     chain a 1-commit-old head points at, both survive."""
-    from oups_spark.store.manifest import InMemoryDeltaLogObjectStore
-
     d = "bucket/ds"
-    be = InMemoryDeltaLogObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
     be.checkpoint_interval = 3
     m = Manifest(ordered_on="ts")
     m.files = [_entry(0)]
     m.save(d, be)
     m.files.append(_entry(1))
     m.save(d, be)  # delta 1
-    chain_before = {k for k in be._objects if ".files.g" in k}
+    chain_before = {k for k in be.transport._objects if ".files.g" in k}
 
     # a concurrent writer stages its sidecar but has NOT CASed yet
     foreign = os.path.join(d, "_oups_manifest.files.g00000003.feedfeedfeed.delta.parquet")
-    be._objects[foreign] = (b"staged", 1)
+    be.transport._objects[foreign] = (b"staged", 1)
 
     m.files.append(_entry(2))
     m.save(d, be)  # delta 2 (chain at interval-1)
     m.files.append(_entry(3))
     m.save(d, be)  # FOLDS -> releases the whole old chain
-    after_fold = {k for k in be._objects if ".files.g" in k}
+    after_fold = {k for k in be.transport._objects if ".files.g" in k}
     # foreign staged object untouched; the replaced chain still
     # resolvable (released, not yet dropped)
     assert foreign in after_fold
@@ -457,7 +409,7 @@ def test_objectstore_sweep_never_touches_foreign_staged_objects(tmp_path):
 
     m.files.append(_entry(4))
     m.save(d, be)  # next commit drops the released chain — only it
-    final = {k for k in be._objects if ".files.g" in k}
+    final = {k for k in be.transport._objects if ".files.g" in k}
     assert foreign in final  # never listed, never deleted
     assert not (chain_before & final)  # own released refs reclaimed
 
@@ -469,7 +421,7 @@ def test_prune_key_range_on_ordering_column(tmp_path):
     from oups_spark.store.manifest import ArrowFileList
 
     d = str(tmp_path)
-    be = ParquetManifestBackend()
+    be = _dl()
     m = Manifest(ordered_on="uid")
     m.files = [
         FileEntry(
@@ -479,7 +431,7 @@ def test_prune_key_range_on_ordering_column(tmp_path):
         for i in range(50)
     ]
     m.save(d, be)
-    fl = Manifest.load(d, ParquetManifestBackend()).files
+    fl = Manifest.load(d, _dl()).files
     assert isinstance(fl, ArrowFileList)
     hit = fl.prune_key_range({"uid": (250, 320)}, ordered_on="uid")
     assert [e.name for e in hit] == ["f002.parquet", "f003.parquet"]
@@ -490,7 +442,7 @@ def test_chain_mixed_stats_encodings_keep_skip_stats(tmp_path):
     """A chain mixing typed c_min:* sidecars with a cols_json-demoted
     one must not null out the demoted entries' skip stats."""
     d = str(tmp_path)
-    be = DeltaLogParquetBackend()
+    be = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(0)]  # typed float stats
     m.save(d, be)
@@ -502,7 +454,7 @@ def test_chain_mixed_stats_encodings_keep_skip_stats(tmp_path):
     )
     m.files.append(weird)
     m.save(d, be)
-    back = Manifest.load(d, DeltaLogParquetBackend())
+    back = Manifest.load(d, _dl())
     by = {f.name: f for f in back.files}
     assert by["weird.parquet"].cols is not None
     assert by["weird.parquet"].cols["v"] == (0.0, 1.0)
@@ -524,7 +476,7 @@ def test_store_catalog_over_deltalog_backend(spark, scratch):
 
     st = Store(
         spark, os.path.join(scratch, "cat"), Key,
-        backend=DeltaLogParquetBackend(),
+        backend=_dl(),
     )
     pdf = pd.DataFrame(
         {
@@ -559,7 +511,7 @@ def test_prune_key_range_half_populated_and_null_stats_keep(tmp_path):
     keys and re-insert them as duplicates)."""
     import pyarrow as pa
 
-    from oups_spark.store.manifest import ArrowFileList, _ParquetFilesCodec
+    from oups_spark.store.manifest import ArrowFileList
 
     t = pa.table(
         {
@@ -577,7 +529,7 @@ def test_prune_key_range_half_populated_and_null_stats_keep(tmp_path):
     # (1) no KeyError on the half-populated pair; unusable -> keeps
     # all (that call materializes via the mask-None fallback, so each
     # probe gets a fresh lazy view)
-    hit = ArrowFileList(t, _ParquetFilesCodec).prune_key_range(
+    hit = ArrowFileList(t).prune_key_range(
         {"w": (0.0, 0.5)}
     )
     assert [e.name for e in hit] == ["a.parquet", "b.parquet", "c.parquet"]
@@ -585,7 +537,7 @@ def test_prune_key_range_half_populated_and_null_stats_keep(tmp_path):
     # (2) probe (60, 70): a's span [0,40] is provably disjoint (drop);
     # b has cmin=50 <= 70 but cmax unknown -> MUST be kept; c's
     # cmin=900 > 70 is provably disjoint even with a known cmax
-    hit = ArrowFileList(t, _ParquetFilesCodec).prune_key_range(
+    hit = ArrowFileList(t).prune_key_range(
         {"u": (60, 70)}
     )
     assert [e.name for e in hit] == ["b.parquet"]
@@ -609,7 +561,7 @@ def test_foreign_chain_survives_checkpoint_fold_one_commit(tmp_path):
     d = str(tmp_path)
 
     # "foreign" writer builds a chain: base checkpoint + one delta
-    w1 = DeltaLogParquetBackend()
+    w1 = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(i) for i in range(3)]
     m.save(d, w1)
@@ -629,7 +581,7 @@ def test_foreign_chain_survives_checkpoint_fold_one_commit(tmp_path):
     # folds it with a full checkpoint (seen is from read only;
     # _prev_keep is empty -> the old code swept the foreign chain
     # immediately)
-    w2 = DeltaLogParquetBackend()
+    w2 = _dl()
     w2.checkpoint_interval = 1  # force the fold on the next commit
     m2 = Manifest.load(d, w2)
     m2.files = list(m2.files) + [_entry(20)]
@@ -662,7 +614,7 @@ def test_fresh_load_is_lazy_and_fails_loudly_when_stale(tmp_path):
     from oups_spark.store.manifest import ChainFileList
 
     d = str(tmp_path)
-    be = DeltaLogParquetBackend()
+    be = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(i) for i in range(4)]
     m.save(d, be)
@@ -675,7 +627,7 @@ def test_fresh_load_is_lazy_and_fails_loudly_when_stale(tmp_path):
     blob = {r: open(os.path.join(d, r), "rb").read() for r in refs}
     for r in refs:
         os.remove(os.path.join(d, r))
-    back = Manifest.load(d, DeltaLogParquetBackend())
+    back = Manifest.load(d, _dl())
     assert isinstance(back.files, ChainFileList)
     with pytest.raises(FileNotFoundError):
         len(back.files)  # first use resolves -> loud failure
@@ -684,7 +636,7 @@ def test_fresh_load_is_lazy_and_fails_loudly_when_stale(tmp_path):
     # fresh load, and reconstruction is exact
     for r, b in blob.items():
         open(os.path.join(d, r), "wb").write(b)
-    back = Manifest.load(d, DeltaLogParquetBackend())
+    back = Manifest.load(d, _dl())
     assert {f.name for f in back.files} == {
         f"f{i:04d}.parquet" for i in range(4)
     } | {"f0009.parquet"}
@@ -702,14 +654,14 @@ def test_lazy_seen_names_are_mutation_proof(tmp_path):
     save cannot corrupt the delta computation (an added entry must
     appear in the delta, not vanish into a wrong prev-names set)."""
     d = str(tmp_path)
-    be = DeltaLogParquetBackend()
+    be = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(i) for i in range(3)]
     m.save(d, be)
 
     # fresh handle: lazy seen; the caller mutates files IN PLACE
     # (materializes the ChainFileList) before saving
-    be2 = DeltaLogParquetBackend()
+    be2 = _dl()
     h = Manifest.load(d, be2)
     h.files.append(_entry(7))
     h.save(d, be2)  # delta commit: prev-names resolve AFTER mutation
@@ -717,14 +669,14 @@ def test_lazy_seen_names_are_mutation_proof(tmp_path):
     assert len(head["deltas"]) == 1
     assert head["deltas"][0]["ref"] is not None  # the add was seen
 
-    back = Manifest.load(d, DeltaLogParquetBackend())
+    back = Manifest.load(d, _dl())
     assert {f.name for f in back.files} == {
         "f0000.parquet", "f0001.parquet", "f0002.parquet", "f0007.parquet"
     }
 
     # and after a CHECKPOINT commit (lazy next-names bound to the new
     # ref), a follow-up mutation + delta commit is still exact
-    be3 = DeltaLogParquetBackend()
+    be3 = _dl()
     be3.checkpoint_interval = 1  # force fold
     h3 = Manifest.load(d, be3)
     h3.files.append(_entry(8))
@@ -732,7 +684,7 @@ def test_lazy_seen_names_are_mutation_proof(tmp_path):
     be3.checkpoint_interval = 20
     h3.files.append(_entry(9))
     h3.save(d, be3)  # delta on the fold; prev-names from ckpt sidecar
-    final = Manifest.load(d, DeltaLogParquetBackend())
+    final = Manifest.load(d, _dl())
     assert len(final.files) == 6
     assert "f0009.parquet" in {f.name for f in final.files}
 
@@ -745,7 +697,7 @@ def test_commit_with_swept_chain_raises_conflict_not_filenotfound(tmp_path):
     raise ManifestConflictError (the retry contract), never leak the
     resolver's FileNotFoundError."""
     d = str(tmp_path)
-    w1 = DeltaLogParquetBackend()
+    w1 = _dl()
     m = Manifest(ordered_on="ts")
     m.files = [_entry(0)]
     m.save(d, w1)
@@ -755,15 +707,15 @@ def test_commit_with_swept_chain_raises_conflict_not_filenotfound(tmp_path):
     # stale handle with a LAZY (unresolved) seen cache; its FILE LIST
     # is materialized now (before the sweep) — the commit-time
     # sidecar I/O under test is the _seen name-set resolution alone
-    w_stale = DeltaLogParquetBackend()
+    w_stale = _dl()
     stale = Manifest.load(d, w_stale)
     assert len(stale.files) == 2
 
     # foreign writer folds twice with zero grace: the first fold
     # keeps the replaced chain one commit (two-phase), the second
     # reclaims it — the stale handle's chain is gone from disk
-    wf = DeltaLogParquetBackend()
-    wf.gc_grace_s = 0.0
+    wf = _dl()
+    wf.transport.gc_grace_s = 0.0
     wf.checkpoint_interval = 1
     for i in (2, 3):
         mf = Manifest.load(d, wf)
@@ -782,7 +734,61 @@ def test_commit_with_swept_chain_raises_conflict_not_filenotfound(tmp_path):
     retry = Manifest.load(d, w_stale)
     retry.files.append(_entry(9))
     retry.save(d, w_stale)
-    final = Manifest.load(d, DeltaLogParquetBackend())
+    final = Manifest.load(d, _dl())
     assert {f.name for f in final.files} == {
         f"f{i:04d}.parquet" for i in (0, 1, 2, 3, 9)
     }
+
+
+def test_zero_delta_chain_keeps_json_order_without_resort(tmp_path, monkeypatch):
+    """A zero-delta chain (a bare checkpoint) is already in manifest
+    order — ``Manifest.save`` sorts before writing it — so resolving
+    it runs no Arrow sort, and its entry order equals the inline JSON
+    encoding's for entries inserted in non-monotone ``min`` order,
+    (min, max) ties included."""
+    import pyarrow.compute as pc
+
+    from oups_spark.store.manifest import JsonManifest
+
+    order = [7, 2, 9, 0, 4, 4, 1, 8, 3, 3]
+    entries = [
+        _entry(i, name=f"g{k:02d}_{i}.parquet") for k, i in enumerate(order)
+    ]
+    d_json, d_dl = str(tmp_path / "json"), str(tmp_path / "dl")
+    for d, be in ((d_json, JsonManifest(PosixTransport())), (d_dl, _dl())):
+        os.makedirs(d)
+        m = Manifest(ordered_on="ts")
+        m.files = list(entries)
+        m.save(d, be)
+    assert "deltas" not in _head(d_dl)
+
+    def no_sort(*a, **k):
+        raise AssertionError("zero-delta chain must not re-sort")
+
+    monkeypatch.setattr(pc, "sort_indices", no_sort)
+    got = [f.name for f in Manifest.load(d_dl, _dl()).files]
+    exp = [f.name for f in Manifest.load(d_json, JsonManifest(PosixTransport())).files]
+    assert got == exp
+    assert exp[:2] == ["g03_0.parquet", "g06_1.parquet"]
+    assert exp.index("g04_4.parquet") + 1 == exp.index("g05_4.parquet")
+
+
+def test_empty_checkpoint_prunes_to_nothing(tmp_path):
+    """A checkpoint of an emptied dataset has untyped (string) stats
+    columns: a typed range prune over it returns no entries instead
+    of raising ArrowTypeError on the bound's scalar cast."""
+    d = str(tmp_path)
+    m = Manifest(ordered_on="ts")
+    m.files = [_entry(0)]
+    m.save(d, _dl())
+    m.files = []
+    fold = _dl()
+    fold.checkpoint_interval = 1  # the emptying commit is a checkpoint
+    Manifest.load(d, fold)
+    m.save(d, fold)
+    assert "deltas" not in _head(d)
+    back = Manifest.load(d, _dl())
+    assert back.files_in_range(
+        pd.Timestamp("2024-01-01"), pd.Timestamp("2024-02-01")
+    ) == []
+    assert len(back.files) == 0 and back.n_rows == 0

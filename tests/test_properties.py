@@ -1020,13 +1020,14 @@ def test_deltalog_equals_full_backend_property(
 ):
     """ANY commit sequence (adds, removals, kv-only commits), ANY
     checkpoint interval, reloaded through fresh readers at arbitrary
-    points: the delta-log backend's reconstructed manifest equals the
-    full-sidecar backend's, entry for entry, order included."""
+    points: the delta-log encoding's reconstructed manifest equals the
+    inline JSON encoding's, entry for entry, order included."""
     from oups_spark.store.manifest import (
-        DeltaLogParquetBackend,
+        DeltaLogManifest,
         FileEntry,
+        JsonManifest,
         Manifest,
-        ParquetManifestBackend,
+        PosixTransport,
     )
 
     import os
@@ -1035,8 +1036,8 @@ def test_deltalog_equals_full_backend_property(
     d_full, d_delta = str(root / "full"), str(root / "delta")
     os.makedirs(d_full)
     os.makedirs(d_delta)
-    be_full = ParquetManifestBackend()
-    be_delta = DeltaLogParquetBackend()
+    be_full = JsonManifest(PosixTransport())
+    be_delta = DeltaLogManifest(PosixTransport())
     be_delta.checkpoint_interval = interval
 
     def entry(i):
@@ -1072,8 +1073,8 @@ def test_deltalog_equals_full_backend_property(
         m_full.save(d_full, be_full)
         m_delta.save(d_delta, be_delta)
         if step % fresh_reader_every == 0:
-            got = Manifest.load(d_delta, DeltaLogParquetBackend())
-            exp = Manifest.load(d_full, ParquetManifestBackend())
+            got = Manifest.load(d_delta, DeltaLogManifest(PosixTransport()))
+            exp = Manifest.load(d_full, JsonManifest(PosixTransport()))
             assert [
                 (e.name, e.n_rows, e.min, e.max, e.cols) for e in got.files
             ] == [

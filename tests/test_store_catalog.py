@@ -4,6 +4,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
@@ -11,6 +12,14 @@ import pytest
 
 from oups_spark.store.indexer import toplevel
 from oups_spark.store.store import Store
+
+
+def _chain(head_bytes: bytes) -> set:
+    """Sidecar refs a delta-log head reaches: checkpoint + deltas."""
+    h = json.loads(head_bytes)
+    return {h["files_ref"]} | {
+        x["ref"] for x in h.get("deltas", []) if x.get("ref")
+    }
 
 
 @toplevel
@@ -93,7 +102,8 @@ def test_manifest_swap_contract(tmp_path):
 
 
 def test_manifest_object_store_backend_roundtrip_and_cas(tmp_path):
-    """ObjectStoreBackend commit protocol: create = put-if-absent,
+    """Object-store transport commit protocol (inline JSON encoding):
+    create = put-if-absent,
     overwrite = put-if-match on the generation read — a stale writer
     conflicts instead of clobbering. Same swap contract as the posix
     backend (reader sees old-or-new, never partial)."""
@@ -102,12 +112,13 @@ def test_manifest_object_store_backend_roundtrip_and_cas(tmp_path):
     from oups_spark.store.manifest import (
         FileEntry,
         InMemoryObjectStore,
+        JsonManifest,
         Manifest,
         ManifestConflictError,
     )
 
     d = str(tmp_path)
-    be = InMemoryObjectStore()
+    be = JsonManifest(InMemoryObjectStore())
 
     # roundtrip
     m = Manifest(ordered_on="ts")
@@ -155,9 +166,9 @@ def test_ordered_dataset_write_through_object_store_backend(spark, tmp_path):
     import pandas as pd
 
     from oups_spark.store.dataset import OrderedDataset
-    from oups_spark.store.manifest import InMemoryObjectStore
+    from oups_spark.store.manifest import InMemoryObjectStore, JsonManifest
 
-    be = InMemoryObjectStore()
+    be = JsonManifest(InMemoryObjectStore())
     path = str(tmp_path / "ds")
     pdf = pd.DataFrame({"ts": range(10), "v": [float(i) for i in range(10)]})
     ds = OrderedDataset(spark, path, backend=be)
@@ -226,13 +237,13 @@ def test_retain_versions_rejects_object_store_backend(spark, scratch):
     import pytest
 
     from oups_spark.store.dataset import OrderedDataset
-    from oups_spark.store.manifest import InMemoryObjectStore
+    from oups_spark.store.manifest import InMemoryObjectStore, JsonManifest
 
     with pytest.raises(ValueError):
         OrderedDataset(
             spark,
             os.path.join(scratch, "x"),
-            backend=InMemoryObjectStore(),
+            backend=JsonManifest(InMemoryObjectStore()),
             retain_versions=True,
         )
 
@@ -278,11 +289,12 @@ def test_write_conflict_retry_merges_both_writers(spark, scratch):
     from oups_spark.store.dataset import OrderedDataset
     from oups_spark.store.manifest import (
         InMemoryObjectStore,
+        JsonManifest,
         ManifestConflictError,
     )
 
     path = os.path.join(scratch, "cas_retry")
-    be = InMemoryObjectStore()
+    be = JsonManifest(InMemoryObjectStore())
 
     def frame(h0, vals):
         pdf = pd.DataFrame(
@@ -381,61 +393,6 @@ def test_posix_backend_write_conflict_detected_and_retries(spark, scratch):
         .sort_values("ts", ignore_index=True)
     )
     assert got["v"].tolist() == [1.0, 2.0, 3.0, 8.0]
-
-
-def _flock_contender(dirpath: str, tag: str, n: int) -> None:
-    """Worker for the two-process flock test: n read-modify-write
-    commits with reload-and-retry on conflict."""
-    from oups_spark.store.manifest import (
-        FileEntry,
-        Manifest,
-        ManifestConflictError,
-    )
-
-    for i in range(n):
-        while True:
-            m = Manifest.load(dirpath) or Manifest(ordered_on="ts")
-            m.files.append(
-                FileEntry(
-                    name=f"{tag}_{i}.parquet", n_rows=1,
-                    min=i * 2, max=i * 2 + 1,
-                )
-            )
-            try:
-                m.save(dirpath)
-                break
-            except ManifestConflictError:
-                continue
-
-
-def test_two_process_writers_both_survive(tmp_path):
-    """TWO OS PROCESSES hammer the same dataset manifest with
-    read-modify-write commits (the reference serializes this with a
-    held flufl.lock, base.py:240-255): under the flock'd CAS every
-    commit from both writers must land — last-writer-wins would
-    silently drop entries."""
-    import multiprocessing as mp
-
-    from oups_spark.store.manifest import Manifest
-
-    d = str(tmp_path)
-    n = 25
-    ctx = mp.get_context("fork")
-    ps = [
-        ctx.Process(target=_flock_contender, args=(d, tag, n))
-        for tag in ("p1", "p2")
-    ]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join(timeout=120)
-        assert p.exitcode == 0
-    final = Manifest.load(d)
-    names = {f.name for f in final.files}
-    assert names == {
-        f"{tag}_{i}.parquet" for tag in ("p1", "p2") for i in range(n)
-    }
-    assert final.generation == 2 * n
 
 
 def test_tuple_ordered_on_cmidx_roundtrip(spark, scratch):
@@ -859,11 +816,11 @@ def test_conflict_rebase_on_disjoint_ranges(spark, scratch):
 
 
 def test_parquet_manifest_backend_roundtrip_cas_and_sweep(tmp_path):
-    """ParquetManifestBackend (VERDICT r10 ask #4): file entries live
-    in a TYPED parquet sidecar (timestamp[ns] stats at full
-    precision, per-column stats + blooms as JSON strings), the head
-    committed through the flock CAS holds only a pointer — so the
-    CAS cost is independent of file count. Round-trip is lossless
+    """Delta-log encoding on the posix transport (VERDICT r10 ask #4):
+    file entries live in a TYPED parquet sidecar (timestamp[ns] stats
+    at full precision, per-column stats + blooms as JSON strings), the
+    head committed through the flock CAS holds only a pointer — so
+    the CAS cost is independent of file count. Round-trip is lossless
     and type-faithful, the CAS contract is unchanged, a loser's
     orphan sidecar is removed, and superseded sidecars are swept
     after the grace window."""
@@ -875,14 +832,15 @@ def test_parquet_manifest_backend_roundtrip_cas_and_sweep(tmp_path):
 
     from oups_spark.store.manifest import (
         MANIFEST_NAME,
+        DeltaLogManifest,
         FileEntry,
         Manifest,
         ManifestConflictError,
-        ParquetManifestBackend,
+        PosixTransport,
     )
 
     d = str(tmp_path)
-    be = ParquetManifestBackend()
+    be = DeltaLogManifest(PosixTransport())
     m = Manifest(ordered_on="ts")
     t0 = pd.Timestamp("2024-01-01 00:00:00.123456789")  # ns precision
     m.files = [
@@ -928,8 +886,8 @@ def test_parquet_manifest_backend_roundtrip_cas_and_sweep(tmp_path):
     assert n_sidecars() == before  # loser's sidecar removed
 
     # sweep: with zero grace, only the current sidecar survives
-    be_fast = ParquetManifestBackend()
-    be_fast.gc_grace_s = 0.0
+    be_fast = DeltaLogManifest(PosixTransport())
+    be_fast.transport.gc_grace_s = 0.0
     cur = Manifest.load(d, be_fast)
     cur.kv["w"] = 3
     cur.save(d, be_fast)
@@ -946,25 +904,26 @@ def test_parquet_manifest_backend_roundtrip_cas_and_sweep(tmp_path):
 
 
 def test_parquet_manifest_backend_upgrades_legacy_json(tmp_path):
-    """A dataset last committed by the JSON backend reads as-is
-    through the parquet backend (inline files, no pointer) and the
-    next commit upgrades it to the sidecar layout."""
+    """A dataset last committed by the inline JSON encoding reads
+    as-is through the delta-log encoding (inline files, no pointer)
+    and the next commit upgrades it to the sidecar layout."""
     import json
     import os
 
     from oups_spark.store.manifest import (
         MANIFEST_NAME,
+        DeltaLogManifest,
         FileEntry,
         Manifest,
-        ParquetManifestBackend,
+        PosixTransport,
     )
 
     d = str(tmp_path)
     legacy = Manifest(ordered_on="ts")
     legacy.files = [FileEntry(name="a.parquet", n_rows=1, min=0, max=1)]
-    legacy.save(d)  # default JSON backend
+    legacy.save(d)  # default inline JSON encoding
 
-    be = ParquetManifestBackend()
+    be = DeltaLogManifest(PosixTransport())
     m = Manifest.load(d, be)
     assert m.files[0].name == "a.parquet"
     m.kv["upgraded"] = True
@@ -974,72 +933,17 @@ def test_parquet_manifest_backend_upgrades_legacy_json(tmp_path):
     assert Manifest.load(d, be).files[0].n_rows == 1
 
 
-def _pq_contender(dirpath: str, tag: str, n: int) -> None:
-    """Two-process hammer child for the parquet backend: n
-    read-modify-write commits with reload-and-retry on conflict."""
-    from oups_spark.store.manifest import (
-        FileEntry,
-        Manifest,
-        ManifestConflictError,
-        ParquetManifestBackend,
-    )
-
-    be = ParquetManifestBackend()
-    for i in range(n):
-        while True:
-            m = Manifest.load(dirpath, be) or Manifest(ordered_on="ts")
-            m.files.append(
-                FileEntry(
-                    name=f"{tag}_{i}.parquet", n_rows=1,
-                    min=i * 10, max=i * 10 + 9,
-                )
-            )
-            try:
-                m.save(dirpath, be)
-                break
-            except ManifestConflictError:
-                continue
-
-
-def test_parquet_manifest_backend_hammer_zero_lost_updates(tmp_path):
-    """Same adversarial two-process hammer as the JSON backend's:
-    every appended entry lands exactly once and the generation is
-    the commit count — the parquet sidecar changes the layout, not
-    the CAS contract."""
-    import multiprocessing as mp
-
-    from oups_spark.store.manifest import Manifest, ParquetManifestBackend
-
-    d = str(tmp_path)
-    n = 15
-    ctx = mp.get_context("fork")
-    ps = [
-        ctx.Process(target=_pq_contender, args=(d, tag, n))
-        for tag in ("p1", "p2")
-    ]
-    for p in ps:
-        p.start()
-    for p in ps:
-        p.join(timeout=120)
-        assert p.exitcode == 0
-    final = Manifest.load(d, ParquetManifestBackend())
-    names = [f.name for f in final.files]
-    expect = {f"{tag}_{i}.parquet" for tag in ("p1", "p2") for i in range(n)}
-    assert set(names) == expect and len(names) == 2 * n
-    assert final.generation == 2 * n
-
-
 def test_ordered_dataset_on_parquet_manifest_backend(spark, scratch):
-    """End-to-end store path on the parquet manifest backend: ordered
-    merge write, keep-last dedup, range read — switchable per
+    """End-to-end store path on the delta-log encoding over posix:
+    ordered merge write, keep-last dedup, range read — switchable per
     dataset via the existing ``backend=`` injection point."""
     import os
 
     from oups_spark.store.dataset import OrderedDataset
-    from oups_spark.store.manifest import ParquetManifestBackend
+    from oups_spark.store.manifest import DeltaLogManifest, PosixTransport
 
     path = os.path.join(scratch, "pq_backend_ds")
-    be = ParquetManifestBackend()
+    be = DeltaLogManifest(PosixTransport())
     ds = OrderedDataset(spark, path, backend=be)
     ds.write(
         df=_ts_frame(spark, range(6), [float(i) for i in range(6)]),
@@ -1055,35 +959,40 @@ def test_ordered_dataset_on_parquet_manifest_backend(spark, scratch):
 
 
 def test_object_store_parquet_backend_roundtrip_cas_sweep(tmp_path):
-    """ObjectStoreParquetBackend: the typed parquet sidecar layout
-    over conditional puts — lossless/typed round-trip, unchanged CAS
-    contract, loser's orphan sidecar deleted, generation-based sweep
-    keeps only the newest window, legacy inline-JSON manifests read
-    and upgrade, and a reader stale past the GC window fails LOUDLY."""
+    """Delta-log encoding over the object-store transport: the typed
+    parquet sidecar layout over conditional puts — lossless/typed
+    round-trip, unchanged CAS contract, loser's orphan sidecar
+    deleted, the two-phase sweep keeps exactly the current and the
+    previous head's chains, legacy inline-JSON manifests read and
+    upgrade, and a reader stale past the GC window fails LOUDLY."""
     import pandas as pd
     import pytest
 
     from oups_spark.store.manifest import (
+        DeltaLogManifest,
         FileEntry,
         InMemoryObjectStore,
-        InMemoryParquetObjectStore,
+        JsonManifest,
         Manifest,
         ManifestConflictError,
     )
 
-    be = InMemoryParquetObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
+    be.checkpoint_interval = 3
+    objects = be.transport._objects
     d = "/bucket/ds"
     t0 = pd.Timestamp("2024-01-01 00:00:00.123456789")
-    m = Manifest(ordered_on="ts")
-    m.files = [
-        FileEntry(
+
+    def entry(i):
+        return FileEntry(
             name=f"f{i}.parquet", n_rows=10 + i,
             min=t0 + pd.Timedelta(days=i),
             max=t0 + pd.Timedelta(days=i, hours=3),
             cols={"v": (float(i), float(i) + 1)},
         )
-        for i in range(3)
-    ]
+
+    m = Manifest(ordered_on="ts")
+    m.files = [entry(i) for i in range(3)]
     m.save(d, be)
     back = Manifest.load(d, be)
     assert back.files[0].min == t0 and back.files[0].min.nanosecond == 789
@@ -1094,63 +1003,64 @@ def test_object_store_parquet_backend_roundtrip_cas_sweep(tmp_path):
     fresh.kv["w"] = 1
     fresh.save(d, be)
     stale.kv["w"] = 2
-    n_side = lambda: sum(1 for k in be._objects if ".files.g" in k)  # noqa: E731
+    n_side = lambda: sum(1 for k in objects if ".files.g" in k)  # noqa: E731
     before = n_side()
     with pytest.raises(ManifestConflictError):
         stale.save(d, be)
     assert n_side() == before
 
-    # generation sweep: only keep_generations sidecars retained
-    for i in range(4):
+    # two-phase sweep across folds: exactly the current and the
+    # previous head's chains stay stored
+    head_key = [k for k in objects if k.endswith("_oups_manifest.json")][0]
+    for i in range(3, 9):
+        prev_head = objects[head_key][0]
         cur = Manifest.load(d, be)
-        cur.kv["i"] = i
+        cur.files = list(cur.files) + [entry(i)]
         cur.save(d, be)
-    assert n_side() <= be.keep_generations
+        stored = {k.rsplit("/", 1)[1] for k in objects if ".files.g" in k}
+        assert stored == _chain(objects[head_key][0]) | _chain(prev_head), i
+    assert len(Manifest.load(d, be).files) == 9
 
-    # a reader stale past the window errors loudly, never empty
-    head_key = [k for k in be._objects if k.endswith("_oups_manifest.json")][0]
+    # a reader stale past the window errors loudly at first use (the
+    # delta log resolves lazily), never empty
     import json as _json
 
-    head = _json.loads(be._objects[head_key][0])
-    head["files_ref"] = head["files_ref"].replace(
-        head["files_ref"].split("/")[-1],
-        "_oups_manifest.files.g00000001.deadbeef.parquet",
-    )
-    be._objects[head_key] = (
-        _json.dumps(head).encode(), be._objects[head_key][1],
-    )
+    head = _json.loads(objects[head_key][0])
+    head["files_ref"] = "_oups_manifest.files.g00000001.deadbeef.parquet"
+    objects[head_key] = (_json.dumps(head).encode(), objects[head_key][1])
     with pytest.raises(FileNotFoundError, match="sidecar"):
-        Manifest.load(d, be)
+        len(Manifest.load(d, be).files)
 
-    # legacy: a manifest committed by the inline-JSON object backend
-    # reads as-is through the parquet backend and upgrades on save
-    plain = InMemoryObjectStore()
+    # legacy: a manifest committed by the inline JSON encoding reads
+    # as-is through the delta log on the same bucket and upgrades on
+    # save
+    plain = JsonManifest(InMemoryObjectStore())
     legacy = Manifest(ordered_on="ts")
     legacy.files = [FileEntry(name="a.parquet", n_rows=1, min=0, max=1)]
     legacy.save("/b2/ds", plain)
-    be2 = InMemoryParquetObjectStore()
-    be2._objects = plain._objects  # same bucket, new backend
+    be2 = DeltaLogManifest(plain.transport)  # same bucket, new encoding
     got = Manifest.load("/b2/ds", be2)
     assert got.files[0].name == "a.parquet"
     got.kv["up"] = True
     got.save("/b2/ds", be2)
-    assert any(".files.g" in k for k in be2._objects)
+    assert any(".files.g" in k for k in be2.transport._objects)
     assert Manifest.load("/b2/ds", be2).files[0].n_rows == 1
 
 
 def test_ordered_dataset_on_object_store_parquet_backend(spark, scratch):
-    """End-to-end store path over the object-store split backend:
-    merge write + keep-last dedup + read back, no posix manifest file
+    """End-to-end store path over the delta-log encoding on the
+    object-store transport: merge write + keep-last dedup + read back, no posix manifest file
     on disk (everything went through the mock's conditional puts)."""
     import os
 
     from oups_spark.store.dataset import OrderedDataset
     from oups_spark.store.manifest import (
         MANIFEST_NAME,
-        InMemoryParquetObjectStore,
+        DeltaLogManifest,
+        InMemoryObjectStore,
     )
 
-    be = InMemoryParquetObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
     path = os.path.join(scratch, "ospq_ds")
     ds = OrderedDataset(spark, path, backend=be)
     ds.write(
@@ -1179,11 +1089,12 @@ def test_arrow_file_list_prunes_without_materializing(tmp_path):
         ArrowFileList,
         FileEntry,
         Manifest,
-        ParquetManifestBackend,
+        DeltaLogManifest,
+        PosixTransport,
     )
 
     d = str(tmp_path)
-    be = ParquetManifestBackend()
+    be = DeltaLogManifest(PosixTransport())
     t0 = pd.Timestamp("2024-01-01")
     m = Manifest(ordered_on="ts")
     m.files = [
@@ -1238,17 +1149,18 @@ def test_arrow_file_list_prunes_without_materializing(tmp_path):
 
 def test_store_catalog_over_object_store_backend(spark, scratch):
     """Store discovery / membership / delete on an object-store
-    backend: manifests live as bucket objects (no posix manifest
+    transport: manifests live as bucket objects (no posix manifest
     file), so keys() lists by prefix, __contains__ is one object GET,
     and __delitem__ removes the manifest objects with the data."""
     import os
 
     from oups_spark.store.manifest import (
         MANIFEST_NAME,
-        InMemoryParquetObjectStore,
+        DeltaLogManifest,
+        InMemoryObjectStore,
     )
 
-    be = InMemoryParquetObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
     st = Store(spark, os.path.join(scratch, "osstore"), WeatherKey, backend=be)
     berlin = WeatherKey("germany", "berlin")
     paris = WeatherKey("france", "paris")
@@ -1272,26 +1184,30 @@ def test_store_catalog_over_object_store_backend(spark, scratch):
     del st[berlin]
     assert berlin not in st and st.keys() == [paris]
     # the deleted dataset's manifest objects are gone from the bucket
-    assert not any("berlin" in k for k in be._objects)
+    assert not any("berlin" in k for k in be.transport._objects)
 
 
 def test_sidecar_gc_window_invariant_across_commits(tmp_path):
-    """GC WINDOW INVARIANT, asserted after EVERY commit of a 50-commit
-    run: the surviving sidecar generations are exactly the newest
-    ``keep_generations`` committed ones (orphan count bounded by the
-    window, never growing with commit count); a reader holding the
-    IMMEDIATELY-PREVIOUS head still resolves its sidecar; a reader
-    stale past the window fails loudly."""
+    """GC WINDOW INVARIANT of the delta log's two-phase sweep on an
+    object store, asserted after EVERY commit of a 50-commit run
+    (two chain folds at the default checkpoint interval): the stored
+    sidecars are exactly the chains of the current and the previous
+    head — at most ``checkpoint_interval + 1`` objects, never growing
+    with the commit count; a reader holding the IMMEDIATELY-PREVIOUS
+    head still resolves its chain; a reader stale past the window
+    fails loudly."""
     import pandas as pd
     import pytest
 
     from oups_spark.store.manifest import (
+        DeltaLogManifest,
         FileEntry,
-        InMemoryParquetObjectStore,
+        InMemoryObjectStore,
         Manifest,
     )
 
-    be = InMemoryParquetObjectStore()
+    be = DeltaLogManifest(InMemoryObjectStore())
+    objects = be.transport._objects
     d = "/bucket/gc_win"
     t0 = pd.Timestamp("2024-01-01")
     m = Manifest(ordered_on="ts")
@@ -1299,21 +1215,15 @@ def test_sidecar_gc_window_invariant_across_commits(tmp_path):
         FileEntry(name="f0.parquet", n_rows=1, min=t0, max=t0)
     ]
     m.save(d, be)
+    head_key = [k for k in objects if k.endswith("_oups_manifest.json")][0]
 
-    def side_gens():
-        out = []
-        for k in be._objects:
-            if ".files.g" in k:
-                out.append(int(k.split(".files.g")[1].split(".")[0]))
-        return sorted(out)
-
-    prev_head = None
-    stale_heads: list[int] = []  # generations we hold old readers at
+    folds = 0
     for i in range(50):
+        prev_head = objects[head_key][0]
+        # another process's reader on the head this commit replaces;
+        # its chain resolves lazily, i.e. after the commit below
+        reader = Manifest.load(d, DeltaLogManifest(be.transport))
         cur = Manifest.load(d, be)
-        if i == 25:
-            # park a reader's head 1 generation back for the check below
-            prev_head = cur
         cur.files = list(cur.files) + [
             FileEntry(
                 name=f"f{i + 1}.parquet", n_rows=1,
@@ -1322,36 +1232,24 @@ def test_sidecar_gc_window_invariant_across_commits(tmp_path):
             )
         ]
         cur.save(d, be)
-        gen = cur.generation
-        gens = side_gens()
-        # invariant: exactly the newest keep_generations sidecars
-        # survive — count bounded by the window, not the commit count
-        expect = [
-            g for g in range(gen - be.keep_generations + 1, gen + 1)
-            if g >= 1
-        ]
-        assert gens == expect, (i, gens, expect)
-        if prev_head is not None and prev_head.generation == gen - 1:
-            # one-generation-stale reader resolves inside the window
-            assert be.read_split(d) is not None
-            got = Manifest.load(d, be)
-            assert len(got.files) == len(cur.files)
+        stored = {k.rsplit("/", 1)[1] for k in objects if ".files.g" in k}
+        assert stored == _chain(objects[head_key][0]) | _chain(prev_head), i
+        assert len(stored) <= be.checkpoint_interval + 1, (i, len(stored))
+        folds += "deltas" not in json.loads(objects[head_key][0])
+        # the one-commit-stale reader resolves its whole chain
+        assert [f.name for f in reader.files] == [
+            f.name for f in cur.files
+        ][:-1]
+    assert folds == 2
     # a reader stale past the window fails LOUDLY (missing sidecar),
     # never silently empty: rewrite the head to reference a swept ref
-    import json as _json
-
-    head_key = [
-        k for k in be._objects if k.endswith("_oups_manifest.json")
-    ][0]
-    head = _json.loads(be._objects[head_key][0])
+    head = json.loads(objects[head_key][0])
     head["files_ref"] = (
         "_oups_manifest.files.g00000001.deadbeefdead.parquet"
     )
-    be._objects[head_key] = (
-        _json.dumps(head).encode(), be._objects[head_key][1],
-    )
+    objects[head_key] = (json.dumps(head).encode(), objects[head_key][1])
     with pytest.raises(FileNotFoundError, match="sidecar"):
-        Manifest.load(d, be)
+        len(Manifest.load(d, be).files)
 
 
 def test_merge_into_wide_manifest_prunes_synthetic_entries(spark, tmp_path):
@@ -1372,11 +1270,12 @@ def test_merge_into_wide_manifest_prunes_synthetic_entries(spark, tmp_path):
         ArrowFileList,
         FileEntry,
         Manifest,
-        ParquetManifestBackend,
+        DeltaLogManifest,
+        PosixTransport,
     )
 
     d = str(tmp_path / "wide")
-    be = ParquetManifestBackend()
+    be = DeltaLogManifest(PosixTransport())
     pdf = pd.DataFrame(
         {
             "ts": pd.date_range("2024-01-01", periods=400, freq="min"),

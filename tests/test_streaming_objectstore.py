@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from oups_spark.store.dataset import OrderedDataset
-from oups_spark.store.manifest import InMemoryParquetObjectStore
+from oups_spark.store.manifest import DeltaLogManifest, InMemoryObjectStore
 from oups_spark.streaming.native import (
     streaming_segment_agg,
     write_stream_to_dataset,
@@ -62,7 +62,7 @@ def test_crash_after_commit_redelivers_and_converges(
     src = os.path.join(scratch, "src")
     path = os.path.join(scratch, "ds")
     ckpt = os.path.join(scratch, "ckpt")
-    backend = InMemoryParquetObjectStore()
+    backend = DeltaLogManifest(InMemoryObjectStore())
     spark.createDataFrame(pdf[pdf["ts"] < cut], SCHEMA).coalesce(
         1
     ).write.parquet(os.path.join(src, "b1"))
@@ -132,7 +132,7 @@ def test_concurrent_batch_writer_serializes_via_cas(spark, scratch):
     src = os.path.join(scratch, "src")
     path = os.path.join(scratch, "ds")
     ckpt = os.path.join(scratch, "ckpt")
-    backend = InMemoryParquetObjectStore()
+    backend = DeltaLogManifest(InMemoryObjectStore())
     spark.createDataFrame(pdf[pdf["ts"] < cut], SCHEMA).coalesce(
         1
     ).write.parquet(os.path.join(src, "b1"))
@@ -187,7 +187,7 @@ def test_live_stream_absorbs_concurrent_compact_and_merge(
     src = os.path.join(scratch, "src")
     path = os.path.join(scratch, "ds")
     ckpt = os.path.join(scratch, "ckpt")
-    backend = InMemoryParquetObjectStore()
+    backend = DeltaLogManifest(InMemoryObjectStore())
     parts = [
         pdf[pdf["ts"] < cuts[0]],
         pdf[(pdf["ts"] >= cuts[0]) & (pdf["ts"] < cuts[1])],

@@ -1,15 +1,25 @@
 #!/usr/bin/env python
-"""Delta-log metadata probe (round 15, VERDICT r14 ask #8).
+"""Manifest-encoding metadata probe at lakehouse file counts.
 
-Re-measures the SCALE.md delta-log table against the lazy fresh-load
-that landed in round 14's inherited commits: 1M manifest entries,
-chain = checkpoint + 2 deltas, comparing the full parquet sidecar
-backend against the delta-log backend on
+Builds a manifest of n entries (default 1M) three ways on the posix
+transport and times one fresh reader/writer handle on each:
 
-- fresh ``Manifest.load`` (head read only when lazy),
-- load + FIRST pruned range selection (pays reconstruction),
-- a subsequent point-prune (cached),
-- an incremental commit on the fresh handle (+3/-1 entries).
+- ``inline json``: ``JsonManifest`` — every entry inline in the head,
+- ``zero-delta log``: ``DeltaLogManifest`` right after a checkpoint
+  (one commit) — also the shape every head written by the former
+  full-sidecar backend reads as,
+- ``2-delta log``: ``DeltaLogManifest``, checkpoint + 2 delta commits.
+
+Columns:
+
+- ``fresh_load``: ``Manifest.load`` on a new handle (head read only
+  for the delta log, which resolves lazily),
+- ``first_prune``: the first pruned range selection (pays the
+  delta log's checkpoint read / chain reconstruction),
+- ``point_prune``: a later point selection (cached),
+- ``incr_commit_fresh``: an incremental commit (+1/-1 entries) on the
+  fresh handle (the delta log resolves its lazy name-set here),
+- ``incr_commit_warm``: a second such commit on the now-warm handle.
 
 No Spark needed — manifest arithmetic is driver-side by design.
 Usage: python tools/deltalog_probe.py [n_entries]
@@ -28,15 +38,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     from oups_spark.store.manifest import (
-        DeltaLogParquetBackend,
+        DeltaLogManifest,
         FileEntry,
+        JsonManifest,
         Manifest,
-        ParquetManifestBackend,
+        PosixTransport,
     )
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 
-    def build(dirpath, backend):
+    def build(dirpath, backend, n_deltas):
         man = Manifest(ordered_on="ts")
         man.files = [
             FileEntry(name=f"file_{i:07d}.parquet", n_rows=100,
@@ -44,26 +55,21 @@ def main() -> int:
             for i in range(n)
         ]
         man.save(dirpath, backend)
-        # two incremental commits -> a 2-delta chain on the log backend
-        for j in range(2):
+        for j in range(n_deltas):
             man.files = man.files[1:] + [
                 FileEntry(name=f"extra_{j}.parquet", n_rows=100,
                           min=(n + j) * 100, max=(n + j) * 100 + 99)
             ]
             man.save(dirpath, backend)
-        return man
 
-    results = {}
-    for label, mk in (
-        ("full parquet sidecar", ParquetManifestBackend),
-        ("delta log", DeltaLogParquetBackend),
-    ):
-        d = tempfile.mkdtemp(prefix=f"dlp_{label.split()[0]}_")
+    def probe(label, mk, n_deltas):
+        # one function scope per encoding: the previous encoding's 1M
+        # entries are freed before this one's clock starts
+        d = tempfile.mkdtemp(prefix="dlp_")
         try:
-            w = mk()
-            build(d, w)
+            build(d, mk(PosixTransport()), n_deltas)
 
-            b2 = mk()  # fresh handle: another process's reader/writer
+            b2 = mk(PosixTransport())  # another process's reader/writer
             t0 = time.time()
             m2 = Manifest.load(d, b2)
             t_load = time.time() - t0
@@ -85,7 +91,6 @@ def main() -> int:
             m2.save(d, b2)
             t_commit = time.time() - t0
 
-            # steady state: a second commit on the now-warm handle
             m2.files = list(m2.files)[1:] + [
                 FileEntry(name="probe_commit2.parquet", n_rows=1,
                           min=10**12 + 1, max=10**12 + 1)
@@ -93,9 +98,8 @@ def main() -> int:
             t0 = time.time()
             m2.save(d, b2)
             t_commit2 = time.time() - t0
-            results[label] = (t_load, t_first, t_point, t_commit, t_commit2)
             print(
-                f"{label:<22} fresh_load={t_load:7.3f}s "
+                f"{label:<15} fresh_load={t_load:7.3f}s "
                 f"first_prune={t_first:7.3f}s point_prune={t_point * 1e3:6.1f}ms "
                 f"incr_commit_fresh={t_commit:7.3f}s "
                 f"incr_commit_warm={t_commit2:7.3f}s",
@@ -103,6 +107,10 @@ def main() -> int:
             )
         finally:
             shutil.rmtree(d, ignore_errors=True)
+
+    probe("inline json", JsonManifest, 0)
+    probe("zero-delta log", DeltaLogManifest, 0)
+    probe("2-delta log", DeltaLogManifest, 2)
     return 0
 
 

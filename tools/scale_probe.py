@@ -231,7 +231,7 @@ def write_probe() -> int:
 
 def merge_wide_probe() -> int:
     """Wide-manifest merge_into probe (VERDICT r12 ask #7): a keyed
-    CDC merge against a dataset whose PARQUET manifest carries 0 /
+    CDC merge against a dataset whose DELTA-LOG manifest carries 0 /
     10k / 100k extra synthetic entries (disjoint key + time spans,
     files never created on disk — any un-pruned candidate would
     FileNotFound). Asserts wall time and the candidate set are pinned
@@ -247,9 +247,10 @@ def merge_wide_probe() -> int:
     from oups_spark.session import get_spark
     from oups_spark.store.dataset import OrderedDataset
     from oups_spark.store.manifest import (
+        DeltaLogManifest,
         FileEntry,
         Manifest,
-        ParquetManifestBackend,
+        PosixTransport,
     )
     from oups_spark.tables import load as load_table
 
@@ -267,7 +268,7 @@ def merge_wide_probe() -> int:
     for rep in (0, 1):  # rep 0 absorbs plan compiles; report rep 1
         for extra in (0, 10_000, 100_000):
             path = os.path.join(root, f"ds_x{extra}_r{rep}")
-            be = ParquetManifestBackend()
+            be = DeltaLogManifest(PosixTransport())
             ds = OrderedDataset(spark, path, backend=be)
             ds.write(
                 df=ev.orderBy("ts"), ordered_on="ts",
