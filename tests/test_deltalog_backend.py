@@ -4,9 +4,10 @@ Commit I/O must be O(changed entries) — each commit writes only its
 added entries (plus removed names inline in the head) — while readers
 reconstruct the exact same manifest a full rewrite would hold: same
 entries, same (min, max) order, same typed stats, same CAS contract
-(the two-process hammer lives in tests/test_manifest_contract.py)."""
+under the two-process hammer."""
 
 import json
+import multiprocessing as mp
 import os
 
 import pandas as pd
@@ -217,6 +218,48 @@ def test_reads_interop_with_full_parquet_backend(tmp_path):
             "f0000.parquet", "f0001.parquet", "f0002.parquet"
         ]
         assert again.generation == 2
+
+
+def _dl_contender(dirpath: str, tag: str, n: int) -> None:
+    be = _dl()
+    for i in range(n):
+        while True:
+            m = Manifest.load(dirpath, be) or Manifest(ordered_on="ts")
+            m.files.append(
+                FileEntry(
+                    name=f"{tag}_{i}.parquet", n_rows=1,
+                    min=i * 10, max=i * 10 + 9,
+                )
+            )
+            try:
+                m.save(dirpath, be)
+                break
+            except ManifestConflictError:
+                continue
+
+
+def test_deltalog_hammer_zero_lost_updates(tmp_path):
+    """The adversarial two-process hammer: every appended entry lands
+    exactly once through the delta chain, the generation is the
+    commit count, and the reconstruction equals the serial union —
+    the delta encoding changes commit I/O, not the CAS contract."""
+    d = str(tmp_path)
+    n = 15
+    ctx = mp.get_context("fork")
+    ps = [
+        ctx.Process(target=_dl_contender, args=(d, tag, n))
+        for tag in ("p1", "p2")
+    ]
+    for p in ps:
+        p.start()
+    for p in ps:
+        p.join(timeout=120)
+        assert p.exitcode == 0
+    final = Manifest.load(d, _dl())
+    names = [f.name for f in final.files]
+    expect = {f"{tag}_{i}.parquet" for tag in ("p1", "p2") for i in range(n)}
+    assert set(names) == expect and len(names) == 2 * n
+    assert final.generation == 2 * n
 
 
 def test_ordered_dataset_end_to_end_on_deltalog(spark, scratch):

@@ -933,6 +933,72 @@ def test_parquet_manifest_backend_upgrades_legacy_json(tmp_path):
     assert Manifest.load(d, be).files[0].n_rows == 1
 
 
+def _pq_contender(dirpath: str, tag: str, n: int) -> None:
+    """Two-process hammer child for the full-checkpoint sidecar
+    layout: n read-modify-write commits with reload-and-retry on
+    conflict."""
+    from oups_spark.store.manifest import (
+        DeltaLogManifest,
+        FileEntry,
+        Manifest,
+        ManifestConflictError,
+        PosixTransport,
+    )
+
+    be = DeltaLogManifest(PosixTransport())
+    be.checkpoint_interval = 1  # every commit rewrites the full sidecar
+    for i in range(n):
+        while True:
+            m = Manifest.load(dirpath, be) or Manifest(ordered_on="ts")
+            m.files.append(
+                FileEntry(
+                    name=f"{tag}_{i}.parquet", n_rows=1,
+                    min=i * 10, max=i * 10 + 9,
+                )
+            )
+            try:
+                m.save(dirpath, be)
+                break
+            except ManifestConflictError:
+                continue
+
+
+def test_parquet_manifest_backend_hammer_zero_lost_updates(tmp_path):
+    """Same adversarial two-process hammer as the JSON encoding's, with
+    every commit writing a full parquet checkpoint sidecar (no delta
+    chain): every appended entry lands exactly once and the
+    generation is the commit count — the parquet sidecar changes the
+    layout, not the CAS contract."""
+    import multiprocessing as mp
+
+    from oups_spark.store.manifest import (
+        MANIFEST_NAME,
+        DeltaLogManifest,
+        Manifest,
+        PosixTransport,
+    )
+
+    d = str(tmp_path)
+    n = 15
+    ctx = mp.get_context("fork")
+    ps = [
+        ctx.Process(target=_pq_contender, args=(d, tag, n))
+        for tag in ("p1", "p2")
+    ]
+    for p in ps:
+        p.start()
+    for p in ps:
+        p.join(timeout=120)
+        assert p.exitcode == 0
+    head = json.loads(open(os.path.join(d, MANIFEST_NAME), "rb").read())
+    assert head["files_ref"].endswith(".parquet") and not head.get("deltas")
+    final = Manifest.load(d, DeltaLogManifest(PosixTransport()))
+    names = [f.name for f in final.files]
+    expect = {f"{tag}_{i}.parquet" for tag in ("p1", "p2") for i in range(n)}
+    assert set(names) == expect and len(names) == 2 * n
+    assert final.generation == 2 * n
+
+
 def test_ordered_dataset_on_parquet_manifest_backend(spark, scratch):
     """End-to-end store path on the delta-log encoding over posix:
     ordered merge write, keep-last dedup, range read — switchable per
