@@ -27,6 +27,7 @@ manifest prunes before any Spark job is launched, so an append to a
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import shutil
@@ -34,6 +35,10 @@ import urllib.parse
 import uuid
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StructType
@@ -67,6 +72,12 @@ _PERIOD = "__oups_period"
 # DML rewrite: source-file id carrying each surviving row back to its
 # (single) replacement file
 _FID = "__oups_fid"
+# row-action flags of the copy-on-write projections (_merge_rows,
+# _dml_rows): matched, matched-delete, by-source delete/update
+_M, _DM, _ND, _NU = "__oups_m", "__oups_dm", "__oups_nd", "__oups_nu"
+# z-order rewrite input cache budget: the in-scope files are persisted
+# for the sketch, range-sample and write passes when they fit
+_COMPACT_CACHE_MAX_BYTES = 4 << 30
 
 
 class OrderedDataset:
@@ -174,8 +185,6 @@ class OrderedDataset:
         gate's caps (``driver_gate``), stores flattened cmidx columns,
         or carries files whose schemas cannot be unified under the
         manifest schema — a ``None`` is never wrong, only slower."""
-        import pyarrow as pa
-
         if not self.exists:
             return None
         man = self._manifest
@@ -315,7 +324,6 @@ class OrderedDataset:
         known_stats: tuple | None = None,
         evolve_schema: bool = False,
         conflict_retries: int = 0,
-        use_driver_merge: bool | None = None,
         bloom_cols: list[str] | None = None,
     ) -> None:
         """Ordered merge write with optimistic-concurrency retry.
@@ -329,12 +337,6 @@ class OrderedDataset:
         appends, DML rewrites and ``compact`` (plain or z-order)
         re-index their new files; files written before the setting
         degrade to "cannot skip".
-
-        ``use_driver_merge``: None (default) = automatic — small
-        row-count-target writes take the driver-side pyarrow merge
-        path; False = force the distributed path (used by tests that
-        must exercise it, and by callers whose batches are wide
-        enough that the row cap is not a byte cap).
 
         ``conflict_retries``: on a manifest CAS conflict (another
         writer committed between this writer's manifest read and its
@@ -371,8 +373,8 @@ class OrderedDataset:
         if df is not None and not isinstance(df, DataFrame):
             batch_tbl = df
             df = self.spark.createDataFrame(batch_tbl)
-        attempt = 0
-        while True:
+
+        def attempt():
             # conform INSIDE the retry loop: a conflict reloads the
             # manifest, and the cmidx merge must re-run against the
             # winning writer's mapping or this commit would overwrite
@@ -384,34 +386,41 @@ class OrderedDataset:
             # manifest kv, and later writes that omit it keep indexing
             # their new files (a silently-unindexed append would make
             # reads stop pruning without anyone noticing). Pass [] to
-            # clear. Resolved inside the retry loop — a conflict
-            # reload may carry another writer's setting.
+            # clear. _commit resolves an omitted setting against this
+            # attempt's manifest — a conflict reload may carry another
+            # writer's setting.
             kv = key_value_metadata
-            eff_bloom = bloom_cols
             if bloom_cols is not None:
                 kv = {**(kv or {}), _BLOOM_COLS_KV: list(bloom_cols)}
-            elif self._manifest is not None:
-                eff_bloom = self._manifest.kv.get(_BLOOM_COLS_KV)
+            return self._write_attempt(
+                cdf,
+                ordered_on=c_on,
+                duplicates_on=c_dup,
+                cmidx=cmidx,
+                row_group_target_size=row_group_target_size,
+                max_n_off_target_rgs=max_n_off_target_rgs,
+                key_value_metadata=kv,
+                validate_monotonic=validate_monotonic,
+                known_stats=known_stats,
+                evolve_schema=evolve_schema,
+                bloom_cols=bloom_cols,
+                batch_tbl=batch_tbl if cdf is df else None,
+            )
+
+        return self._retrying(attempt, conflict_retries)
+
+    def _retrying(self, attempt, conflict_retries: int):
+        """Run ``attempt()``; on a lost manifest CAS that no rebase
+        absorbed, reload the manifest and re-run it, up to
+        ``conflict_retries`` times (counted in ``conflict_reruns``)."""
+        n = 0
+        while True:
             try:
-                return self._write_attempt(
-                    cdf,
-                    ordered_on=c_on,
-                    duplicates_on=c_dup,
-                    cmidx=cmidx,
-                    row_group_target_size=row_group_target_size,
-                    max_n_off_target_rgs=max_n_off_target_rgs,
-                    key_value_metadata=kv,
-                    validate_monotonic=validate_monotonic,
-                    known_stats=known_stats,
-                    evolve_schema=evolve_schema,
-                    use_driver_merge=use_driver_merge,
-                    bloom_cols=eff_bloom,
-                    batch_tbl=batch_tbl if cdf is df else None,
-                )
+                return attempt()
             except ManifestConflictError:
-                if attempt >= conflict_retries:
+                if n >= conflict_retries:
                     raise
-                attempt += 1
+                n += 1
                 self.conflict_reruns += 1
                 self._manifest = Manifest.load(self.path, self.backend)
 
@@ -472,7 +481,6 @@ class OrderedDataset:
         validate_monotonic: bool = True,
         known_stats: tuple | None = None,
         evolve_schema: bool = False,
-        use_driver_merge: bool | None = None,
         bloom_cols: list[str] | None = None,
         batch_tbl=None,
     ) -> None:
@@ -563,7 +571,6 @@ class OrderedDataset:
         if (
             validate_monotonic is False
             and known_stats is None
-            and use_driver_merge is not False
             and isinstance(row_group_target_size, int)
             and target_schema is None
             and gate.arrow_safe(df.schema)
@@ -586,8 +593,6 @@ class OrderedDataset:
         ]
         str_bytes: int | None = None
         if probe_tbl is not None:
-            import pyarrow.compute as pc
-
             n_new = probe_tbl.num_rows
             if n_new == 0:
                 if self._manifest is None and not key_value_metadata:
@@ -611,8 +616,6 @@ class OrderedDataset:
         elif batch_tbl is not None and not validate_monotonic:
             # oversized driver-built batch: exact stats straight from
             # the table — no Spark stats job on the local relation
-            import pyarrow.compute as pc
-
             n_new = batch_tbl.num_rows
             if n_new == 0:
                 self._update_kv_only(ordered_on, key_value_metadata)
@@ -653,7 +656,6 @@ class OrderedDataset:
             old_entries, df_min, df_max, row_group_target_size, max_n_off_target_rgs
         )
         replaced_names = {e.name for e in replaced}
-        kept = [e for e in old_entries if e.name not in replaced_names]
 
         # SMALL-BATCH DRIVER FAST PATH: batch + overlapping files are
         # small (row count known by now from known_stats, the
@@ -670,39 +672,48 @@ class OrderedDataset:
         # string columns are measured, not excluded.
         n_old = sum(e.n_rows for e in replaced)
         old_paths = self._paths(replaced)
-        if use_driver_merge is None:
-            if probe_tbl is not None:
-                # the batch is already collected: gate on its ACTUAL
-                # Arrow bytes (better than the schema estimate)
-                use_driver_merge = gate.fits(
-                    n_new + n_old, probe_tbl.nbytes, old_paths
+        if not isinstance(row_group_target_size, int):
+            use_driver = False
+        elif probe_tbl is not None:
+            # the batch is already collected: gate on its ACTUAL
+            # Arrow bytes (better than the schema estimate)
+            use_driver = gate.fits(n_new + n_old, probe_tbl.nbytes, old_paths)
+        else:
+            use_driver = (
+                target_schema is None
+                # rows first: the byte estimate may cost a job
+                and n_new + n_old <= gate.MAX_ROWS
+                and gate.arrow_safe(df.schema)
+                and gate.fits(
+                    n_new + n_old,
+                    self._estimate_new_bytes(df, n_new, str_bytes),
+                    old_paths,
                 )
-            else:
-                use_driver_merge = (
-                    isinstance(row_group_target_size, int)
-                    and target_schema is None
-                    # rows first: the byte estimate may cost a job
-                    and n_new + n_old <= gate.MAX_ROWS
-                    and gate.arrow_safe(df.schema)
-                    and gate.fits(
-                        n_new + n_old,
-                        self._estimate_new_bytes(df, n_new, str_bytes),
-                        old_paths,
-                    )
-                )
-        if use_driver_merge and isinstance(row_group_target_size, int):
-            new_entries = self._merge_write_driver(
-                df, replaced, ordered_on, duplicates_on, row_group_target_size,
-                new_tbl=probe_tbl,
             )
-            if new_entries is not None:
-                self._attach_blooms(new_entries, bloom_cols, target_schema or df.schema)
-                self._commit(
-                    ordered_on, df, target_schema, kept, replaced_names,
-                    new_entries, key_value_metadata, cmidx,
+        with self._committing(
+            replaced_names, target_schema or df.schema, ordered_on=ordered_on,
+            key_value_metadata=key_value_metadata, cmidx=cmidx,
+            bloom_cols=bloom_cols,
+        ) as staged:
+            new_entries = None
+            if use_driver:
+                new_entries = self._merge_write_driver(
+                    df, replaced, ordered_on, duplicates_on,
+                    row_group_target_size, new_tbl=probe_tbl,
                 )
-                return
+            if new_entries is None:
+                new_entries = self._merge_write_distributed(
+                    new, replaced, ordered_on, duplicates_on,
+                    row_group_target_size, n_old + n_new,
+                )
+            staged += new_entries
 
+    def _merge_write_distributed(
+        self, new, replaced, ordered_on, duplicates_on, target, n_rows
+    ) -> list[FileEntry]:
+        """The Spark merge write: old overlapping files and the new
+        batch under the (src, file rank, position) keep-last order,
+        deduped and written as size-controlled files."""
         merged = new
         if replaced:
             # Dataset order for the old side comes from the MANIFEST
@@ -714,16 +725,10 @@ class OrderedDataset:
             # files can mix pre- and post-evolution schemas, and a
             # bare parquet read takes ONE file's footer schema —
             # silently nulling evolved columns out of the rewrite.
-            old_reader = self.spark.read
-            if self._manifest is not None and self._manifest.schema_json:
-                old_reader = old_reader.schema(
-                    StructType.fromJson(
-                        __import__("json").loads(self._manifest.schema_json)
-                    )
-                )
             old = _with_file_rank(
                 self.spark,
-                old_reader.parquet(*self._paths(replaced))
+                self._reader()
+                .parquet(*self._paths(replaced))
                 .withColumn(_POS, F.monotonically_increasing_id())
                 .withColumn(_SRC, F.lit(0)),
                 replaced,
@@ -731,26 +736,25 @@ class OrderedDataset:
             # allowMissingColumns: under schema evolution either side
             # may lack columns the other has — absent values are NULL
             merged = old.unionByName(new, allowMissingColumns=True)
-
         if duplicates_on is not None:
             merged = self._dedup_keep_last(merged, ordered_on, duplicates_on)
-
-        new_entries = self._write_files(
+        return self._write_files(
             merged,
             ordered_on,
-            row_group_target_size,
-            n_old + n_new,
+            target,
+            n_rows,
             # the range partitioner's sample pass re-executes its child;
             # cache iff that child contains the dedup window (re-scanning
             # raw parquet twice is cheaper than materializing it)
             cache=duplicates_on is not None,
         )
 
-        self._attach_blooms(new_entries, bloom_cols, target_schema or df.schema)
-        self._commit(
-            ordered_on, df, target_schema, kept, replaced_names,
-            new_entries, key_value_metadata, cmidx,
-        )
+    def _reader(self):
+        """``spark.read`` under the manifest schema (when recorded):
+        files written before a schema evolution read back NULL for
+        later columns, and the scan infers no footer schema."""
+        schema = self.schema()
+        return self.spark.read.schema(schema) if schema else self.spark.read
 
     def _attach_blooms(self, new_entries, bloom_cols, schema) -> None:
         """Index the just-written files' ``bloom_cols`` values (one
@@ -774,65 +778,95 @@ class OrderedDataset:
             if e.name in by_file:
                 e.blooms = by_file[e.name]
 
+    @contextlib.contextmanager
+    def _committing(self, replaced_names, schema, **commit_kw):
+        """THE guarded commit of every data change. The body stages
+        the change's new files and appends their (finalized) entries
+        to the yielded list; on a clean exit they replace
+        ``replaced_names`` in ONE ``_commit`` (blooms, tombstones,
+        CAS, rebase), skipped when the change is empty. Staged files
+        are moved into the dataset dir before any manifest references
+        them, so ANY failure before the CAS lands — in the body, in
+        ``_attach_blooms``, a lost CAS that no rebase absorbed, a
+        failed save — removes them here, the one cleanup point. A
+        failure after the CAS landed (e.g. the time-travel snapshot
+        write) keeps them: the committed manifest references them."""
+        staged: list[FileEntry] = []
+        self._commit_landed = False
+        try:
+            yield staged
+            if staged or replaced_names:
+                self._commit(staged, replaced_names, schema, **commit_kw)
+        except BaseException:
+            if not self._commit_landed:
+                self._remove_files([e.name for e in staged])
+            raise
+
     def _commit(
-        self, ordered_on, df, target_schema, kept, replaced_names,
-        new_entries, key_value_metadata, cmidx=None,
+        self, new_entries, replaced_names, schema, *, ordered_on=None,
+        key_value_metadata=None, cmidx=None, bloom_cols=None, rebase=True,
     ) -> None:
+        """Index ``new_entries`` (``bloom_cols``, default the sticky
+        manifest setting) and swap them in for ``replaced_names`` in
+        one manifest CAS, with the rebase fast path on conflict unless
+        ``rebase=False``. ``schema``: the dataset schema to record
+        (None keeps the current one)."""
+        base = self._manifest
+        ordered_on = ordered_on or base.ordered_on
+        if bloom_cols is None and base is not None:
+            bloom_cols = base.kv.get(_BLOOM_COLS_KV)
+        if schema is not None:
+            self._attach_blooms(new_entries, bloom_cols, schema)
         # build the CANDIDATE manifest as a copy: a failed commit
         # (e.g. CAS conflict) must not leave this handle's in-memory
         # manifest referencing files that were cleaned up — the
         # handle state changes only on successful commit
-        if self._manifest is None:
+        if base is None:
             man = Manifest(ordered_on=ordered_on)
         else:
-            b = self._manifest
             man = Manifest(
                 ordered_on=ordered_on,
-                files=list(b.files),
-                kv=dict(b.kv),
-                schema_json=b.schema_json,
-                generation=b.generation,
-                cmidx=b.cmidx,
-                tombstones=list(b.tombstones),
-                token=b.token,
+                files=list(base.files),
+                kv=dict(base.kv),
+                schema_json=base.schema_json,
+                generation=base.generation,
+                cmidx=base.cmidx,
+                tombstones=list(base.tombstones),
+                token=base.token,
             )
-        man.ordered_on = ordered_on
         if cmidx:
             man.cmidx = cmidx
-        man.files = kept + new_entries
-        man.schema_json = (target_schema or df.schema).json()
+        replaced = set(replaced_names)
+        man.files = [e for e in man.files if e.name not in replaced] + list(
+            new_entries
+        )
+        if schema is not None:
+            man.schema_json = schema.json()
         _merge_kv(man.kv, key_value_metadata)
         expired = self._stage_tombstones(man, replaced_names)
-        self._commit_landed = False
         try:
             man.save(self.path, self.backend, snapshot=self.retain_versions)
         except ManifestConflictError:
             # REBASE fast path (Delta-style conflict resolution): when
             # the winning commit's file changes are range-disjoint
-            # from everything this write read or wrote, our merge
-            # result is still valid — re-apply it onto the winner's
-            # manifest instead of recomputing the whole merge
-            if self._try_rebase(
-                ordered_on, df, target_schema,
-                replaced_names, new_entries, key_value_metadata, cmidx,
+            # from everything this write read or wrote, our result is
+            # still valid — re-apply it onto the winner's manifest
+            # instead of recomputing it. The caller's _committing
+            # removes the staged files when this re-raises.
+            if rebase and self._try_rebase(
+                ordered_on, man.schema_json, replaced_names, new_entries,
+                key_value_metadata, cmidx,
             ):
                 return
-            # the staged files of THIS attempt were moved in but never
-            # referenced by any committed manifest — remove them so a
-            # retry (or abandonment) leaves no orphans
-            for e in new_entries:
-                p = os.path.join(self.path, e.name)
-                if os.path.exists(p):
-                    os.remove(p)
             raise
         except BaseException:
             if man.last_commit_landed:
                 # POST-commit failure (e.g. the time-travel snapshot
                 # write): the CAS accepted this manifest, so the new
                 # files are referenced — adopt the committed state and
-                # propagate WITHOUT deleting data files. Outer cleanup
-                # handlers key off self._commit_landed for the same
-                # reason (a delete here would be permanent data loss).
+                # propagate; _committing keys off self._commit_landed
+                # and keeps the files (a delete here would be
+                # permanent data loss).
                 self._commit_landed = True
                 self._manifest = man
             raise
@@ -841,8 +875,8 @@ class OrderedDataset:
         self._remove_files(expired)
 
     def _try_rebase(
-        self, ordered_on, df, target_schema,
-        replaced_names, new_entries, key_value_metadata, cmidx,
+        self, ordered_on, schema_json, replaced_names, new_entries,
+        key_value_metadata, cmidx,
     ) -> bool:
         """Attempt a commit rebase after a lost manifest CAS.
 
@@ -903,7 +937,7 @@ class OrderedDataset:
             files=[f for f in latest.files if f.name not in replaced]
             + list(new_entries),
             kv=dict(latest.kv),
-            schema_json=(target_schema or df.schema).json(),
+            schema_json=schema_json,
             generation=latest.generation,
             cmidx=cmidx or latest.cmidx,
             tombstones=list(latest.tombstones),
@@ -1184,9 +1218,6 @@ class OrderedDataset:
         unified under the batch's Arrow schema (caller falls back to
         the distributed path) or when the batch and the decoded files
         pass the driver gate's hard bail (``driver_gate``)."""
-        import numpy as np
-        import pyarrow as pa
-
         if new_tbl is None:
             new_tbl = gate.collect(df)
             if new_tbl is None:
@@ -1236,70 +1267,7 @@ class OrderedDataset:
             np.argsort(keys[ordered_on].take(idx).to_numpy(), kind="stable")
         ]
         merged = merged.take(pa.array(order))
-        return self._stage_arrow_chunks(merged, ordered_on, target)
-
-    def _stage_arrow_chunks(
-        self, merged, ordered_on: str, target: int
-    ) -> list[FileEntry]:
-        """Write an already-ordered Arrow table into balanced
-        size-capped dataset files and return their manifest entries
-        (same ``_footer_stats`` reader as the distributed path, so the
-        entries are indistinguishable). Shared tail of the driver-side
-        merge and compact fast paths."""
-        import pyarrow.parquet as pq
-
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:12]}")
-        os.makedirs(staging, exist_ok=True)
-        try:
-            n = merged.num_rows
-            # BALANCED chunk sizes, mirroring the distributed path's
-            # repartitionByRange(ceil(n/target)): fixed target-row
-            # slices would leave a 1-row tail file on target*k+1 rows,
-            # and repeated small flushes accumulate off-target
-            # fragments that later force coalescing rewrites.
-            n_files = max(1, -(-n // target))
-            base_rows, extra = divmod(n, n_files)
-            slices, off = [], 0
-            for j in range(n_files):
-                ln = base_rows + (1 if j < extra else 0)
-                slices.append((j, off, ln))
-                off += ln
-            for j, off, ln in slices:
-                pq.write_table(
-                    merged.slice(off, ln),
-                    os.path.join(staging, f"part-{j:05d}.parquet"),
-                    compression="snappy",
-                )
-            stats = _footer_stats(staging, ordered_on)
-            if stats is None:
-                # untrusted footer stats (e.g. string ordering column):
-                # compute exact bounds from the in-memory chunks
-                import pyarrow.compute as pc
-
-                from datetime import timezone
-
-                def _norm(v):
-                    # align with _footer_stats: naive UTC timestamps
-                    if hasattr(v, "tzinfo") and v.tzinfo is not None:
-                        return v.astimezone(timezone.utc).replace(tzinfo=None)
-                    return v
-
-                stats = []
-                for j, off, ln in slices:
-                    chunk = merged.slice(off, ln)
-                    col = chunk.column(ordered_on)
-                    stats.append(
-                        (
-                            os.path.join(staging, f"part-{j:05d}.parquet"),
-                            chunk.num_rows,
-                            _norm(pc.min(col).as_py()),
-                            _norm(pc.max(col).as_py()),
-                            None,
-                        )
-                    )
-            return self._finalize_staged(stats)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+        return self._stage_arrow(merged, ordered_on, _balanced(len(order), target))
 
     def _compact_run_driver(
         self, run: list[FileEntry], ordered_on: str, target: int
@@ -1316,8 +1284,6 @@ class OrderedDataset:
         distributed path, which projects through the manifest schema);
         bails to the distributed path past the driver gate's hard
         bail."""
-        import pyarrow as pa
-
         try:
             tables = gate.decode(self._paths(run))
         except (pa.ArrowInvalid, pa.ArrowNotImplementedError, OSError):
@@ -1326,21 +1292,146 @@ class OrderedDataset:
             not t.schema.equals(tables[0].schema) for t in tables
         ):
             return None  # too big, or mixed pre/post-evolution schemas
-        return self._stage_arrow_chunks(
-            pa.concat_tables(tables), ordered_on, target
-        )
+        tbl = pa.concat_tables(tables)
+        return self._stage_arrow(tbl, ordered_on, _balanced(tbl.num_rows, target))
 
-    def _finalize_staged(self, stats) -> list[FileEntry]:
-        """Move staged files into the dataset under fresh opaque names
-        (manifest order = ascending bounds) and build their entries."""
-        entries = []
-        for src, n, mn, mx, cols in sorted(stats, key=lambda t: (t[2], t[3])):
-            name = f"file_{uuid.uuid4().hex}.parquet"
-            os.replace(src, os.path.join(self.path, name))
-            entries.append(
-                FileEntry(name=name, n_rows=n, min=mn, max=mx, cols=cols)
+    def _stage(self, ordered_on: str, write, exact_stats) -> list[FileEntry]:
+        """Stage one write: ``write(dir)`` fills a fresh hidden staging
+        dir with parquet files; their per-file stats come from the
+        footers (``_footer_stats``), or from ``exact_stats(dir)`` when
+        those are untrusted for the ordering column (binary/string
+        truncation). The files then move into the dataset under fresh
+        opaque names (manifest order = ascending bounds) and their
+        entries are returned — unreferenced until a ``_commit``, which
+        is why every caller runs inside ``_committing``."""
+        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:12]}")
+        os.makedirs(staging, exist_ok=True)
+        try:
+            write(staging)
+            stats = _footer_stats(staging, ordered_on)
+            if stats is None:
+                stats = exact_stats(staging)
+            entries = []
+            for src, n, mn, mx, cols in sorted(stats, key=lambda t: (t[2], t[3])):
+                name = f"file_{uuid.uuid4().hex}.parquet"
+                os.replace(src, os.path.join(self.path, name))
+                entries.append(
+                    FileEntry(name=name, n_rows=n, min=mn, max=mx, cols=cols)
+                )
+            return entries
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _stage_arrow(self, tbl, ordered_on: str, slices) -> list[FileEntry]:
+        """The Arrow stager of every driver path: each non-empty
+        ``(offset, length)`` slice of the already-ordered table
+        ``tbl`` becomes one file (same footer-stats entries as the
+        Spark writes, so the two are indistinguishable)."""
+        chunks = [tbl.slice(off, ln) for off, ln in slices if ln]
+
+        def part(d, j):
+            return os.path.join(d, f"part-{j:05d}.parquet")
+
+        def write(d):
+            for j, c in enumerate(chunks):
+                pq.write_table(c, part(d, j), compression="snappy")
+
+        def exact_stats(d):
+            # bounds straight from the in-memory chunks
+            out = []
+            for j, c in enumerate(chunks):
+                mm = pc.min_max(c.column(ordered_on))
+                out.append((
+                    part(d, j), c.num_rows, _norm_tz(mm["min"].as_py()),
+                    _norm_tz(mm["max"].as_py()), None,
+                ))
+            return out
+
+        return self._stage(ordered_on, write, exact_stats)
+
+    def _stage_spark(self, writer, ordered_on: str) -> list[FileEntry]:
+        """The Spark stager: run ``writer`` (a configured
+        DataFrameWriter) into staging with µs timestamps (INT96
+        carries no footer min/max stats; the session's own setting is
+        restored after), stats from the footers or, when untrusted,
+        one Spark scan of the staged files."""
+        ts_conf = "spark.sql.parquet.outputTimestampType"
+        prev_ts_conf = ts_set = None
+        try:
+            prev_ts_conf = self.spark.conf.get(ts_conf, None)
+            self.spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
+            ts_set = True
+        except Exception:  # noqa: BLE001 - conf locked by a custom session
+            pass
+
+        def exact_stats(d):
+            rows = (
+                self.spark.read.parquet(d)
+                .groupBy(F.input_file_name().alias("f"))
+                .agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.min(ordered_on).alias("mn"),
+                    F.max(ordered_on).alias("mx"),
+                )
+                .collect()
             )
-        return entries
+            # input_file_name() yields a URI: strip scheme and
+            # percent-decoding (Spark also escapes ':' etc. in
+            # partition dir names on disk — one decode recovers the
+            # on-disk path)
+            return [
+                (
+                    urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path),
+                    r["n"], r["mn"], r["mx"], None,
+                )
+                for r in rows
+            ]
+
+        try:
+            return self._stage(
+                ordered_on,
+                lambda d: writer.mode("overwrite").parquet(d),
+                exact_stats,
+            )
+        finally:
+            try:
+                if ts_set and prev_ts_conf is not None:
+                    self.spark.conf.set(ts_conf, prev_ts_conf)
+                elif ts_set:
+                    self.spark.conf.unset(ts_conf)
+            except Exception:  # noqa: BLE001
+                pass
+
+    def _stage_cow(self, rows, touched, o: str) -> list[FileEntry]:
+        """Stage a copy-on-write rewrite: ``rows`` (a Spark frame over
+        the ``touched`` files, or a collected Arrow table) holds the
+        data columns plus ``_FID`` (the row's source file name) and
+        ``_POS`` (stable order among equal ordering values). Each
+        source file's rows become exactly ONE replacement file sorted
+        ``(o, pos)`` — entries stay range-disjoint with untouched
+        neighbors — and a file whose every row was dropped writes
+        nothing."""
+        if isinstance(rows, DataFrame):
+            # the fid hash-repartition puts each file's rows in one
+            # partition, partitionBy splits collisions back apart
+            return self._stage_spark(
+                rows.repartition(len(touched), F.col(_FID))
+                .sortWithinPartitions(_FID, o, _POS)
+                .drop(_POS)
+                .write.partitionBy(_FID),
+                o,
+            )
+        fid = pc.index_in(rows[_FID], value_set=pa.array([e.name for e in touched]))
+        rows = rows.drop_columns([_FID]).append_column(_FID, fid).sort_by(
+            [(_FID, "ascending"), (o, "ascending"), (_POS, "ascending")]
+        )
+        bounds = np.searchsorted(
+            rows[_FID].to_numpy(zero_copy_only=False), np.arange(len(touched) + 1)
+        )
+        return self._stage_arrow(
+            rows.drop_columns([_FID, _POS]), o,
+            zip(bounds[:-1].tolist(), np.diff(bounds).tolist()),
+        )
 
     def _write_files(
         self,
@@ -1375,23 +1466,11 @@ class OrderedDataset:
         the fallback for ordering columns whose footer stats are
         unreliable (binary/string truncation).
         """
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:12]}")
-        os.makedirs(staging, exist_ok=True)
-        # µs timestamps for THIS write (INT96 carries no footer
-        # min/max stats); the session's own setting is restored after
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts_conf = ts_set = None
-        try:
-            prev_ts_conf = self.spark.conf.get(ts_conf, None)
-            self.spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            ts_set = True
-        except Exception:  # noqa: BLE001 - conf locked by a custom session
-            pass
-        try:
-            if cache:
-                from pyspark import StorageLevel
+        if cache:
+            from pyspark import StorageLevel
 
-                merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
             if isinstance(target, int):
                 n_out = max(1, -(-approx_rows // target))
                 layout_key = cluster_col or ordered_on
@@ -1409,62 +1488,19 @@ class OrderedDataset:
                 ).drop(_SRC, _FIDX, _POS)
                 if cluster_col:
                     out = out.drop(cluster_col)
-                (
-                    out.write.option("maxRecordsPerFile", target)
-                    .mode("overwrite")
-                    .parquet(staging)
-                )
+                writer = out.write.option("maxRecordsPerFile", target)
             else:
-                out = (
+                writer = (
                     merged.withColumn(_PERIOD, floor_ts(F.col(ordered_on), target))
                     .repartition(F.col(_PERIOD))
                     .sortWithinPartitions(_PERIOD, ordered_on, _SRC, _FIDX, _POS)
                     .drop(_SRC, _FIDX, _POS)
+                    .write.partitionBy(_PERIOD)
                 )
-                out.write.partitionBy(_PERIOD).mode("overwrite").parquet(staging)
-
-            # Per-file stats from the parquet footers (driver-side
-            # metadata reads over the files of THIS write only); the
-            # Spark scan is the fallback when footer stats are
-            # unreliable for the ordering column.
-            stats = _footer_stats(staging, ordered_on)
-            if stats is None:
-                rows = (
-                    self.spark.read.parquet(staging)
-                    .groupBy(F.input_file_name().alias("f"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.min(ordered_on).alias("mn"),
-                        F.max(ordered_on).alias("mx"),
-                    )
-                    .collect()
-                )
-                # input_file_name() yields a URI: strip scheme and
-                # percent-decoding (Spark also escapes ':' etc. in
-                # partition dir names on disk — one decode recovers
-                # the on-disk path).
-                stats = [
-                    (
-                        urllib.parse.unquote(urllib.parse.urlparse(r["f"]).path),
-                        r["n"],
-                        r["mn"],
-                        r["mx"],
-                        None,
-                    )
-                    for r in rows
-                ]
-            return self._finalize_staged(stats)
+            return self._stage_spark(writer, ordered_on)
         finally:
             if cache:
                 merged.unpersist()
-            shutil.rmtree(staging, ignore_errors=True)
-            try:
-                if ts_set and prev_ts_conf is not None:
-                    self.spark.conf.set(ts_conf, prev_ts_conf)
-                elif ts_set:
-                    self.spark.conf.unset(ts_conf)
-            except Exception:  # noqa: BLE001
-                pass
 
     # ---------------------------------------------------------- compact
     def compact(
@@ -1478,7 +1514,10 @@ class OrderedDataset:
         """Coalesce runs of off-target files without new data — the
         reference's off-target coalescing as a standalone maintenance
         op (Delta's OPTIMIZE equivalent). Returns the number of files
-        rewritten; on-target files are never rewritten.
+        rewritten; on-target files are never rewritten. Commits like
+        ``write``: a concurrent commit range-disjoint from the
+        rewritten runs is absorbed by a rebase, otherwise the compact
+        re-runs up to ``conflict_retries`` times.
 
         Row-count target: off-target = undersized (< 80% of target);
         only contiguous runs of 2+ such files are touched.
@@ -1493,12 +1532,12 @@ class OrderedDataset:
         file along the Morton curve over the named columns
         (equi-depth rank buckets, bit-interleaved, range-partitioned
         into row-count-targeted files), through the same
-        tombstone/CAS/rebase commit as every other write: readers see
-        either the old layout or the new one, ``as_of`` time travel
-        keeps resolving the pre-compact generation, and a concurrent
-        writer's commit triggers reload-and-re-run (bounded by
-        ``conflict_retries``; the re-run re-clusters the winner's
-        files too, so no rows are lost). At 100 TB this is the weekly
+        tombstone/CAS commit as every other write: readers see either
+        the old layout or the new one, ``as_of`` time travel keeps
+        resolving the pre-compact generation, and a concurrent
+        writer's commit triggers reload-and-re-run, never a rebase
+        (bounded by ``conflict_retries``; the re-run re-clusters the
+        winner's files too, so no rows are lost). At 100 TB this is the weekly
         maintenance pass: clustering degrades under ordered appends
         and DML, and the per-file [min, max] the manifest records on
         every column is only as tight as the layout. File ranges on
@@ -1522,18 +1561,20 @@ class OrderedDataset:
         curve's buckets from the in-scope rows only.
         """
         if zorder_by is not None:
-            attempt = 0
-            while True:
-                try:
-                    return self._compact_zorder_attempt(
-                        zorder_by, row_group_target_size, scope
-                    )
-                except ManifestConflictError:
-                    if attempt >= conflict_retries:
-                        raise
-                    attempt += 1
-                    self.conflict_reruns += 1
-                    self._manifest = Manifest.load(self.path, self.backend)
+            return self._retrying(
+                lambda: self._compact_zorder_attempt(
+                    zorder_by, row_group_target_size, scope
+                ),
+                conflict_retries,
+            )
+        return self._retrying(
+            lambda: self._compact_attempt(row_group_target_size),
+            conflict_retries,
+        )
+
+    def _compact_attempt(self, row_group_target_size) -> int:
+        """One optimistic attempt of plain ``compact`` — see
+        :meth:`compact`."""
         if not self.exists or not self._manifest.files:
             return 0
         files = self._manifest.files
@@ -1564,82 +1605,44 @@ class OrderedDataset:
         if not runs:
             return 0
         ordered_on = self._manifest.ordered_on
-        # read runs through the MANIFEST schema, exactly like read():
-        # a run can mix pre- and post-evolution files, and a bare
-        # parquet read would take ONE file's footer schema — silently
-        # dropping (nulling) evolved columns from the rewrite. The
-        # explicit schema projects every file through the union,
-        # missing columns as NULL, so compact never changes what a
-        # read returns.
-        reader = self.spark.read
-        if self._manifest.schema_json:
-            reader = reader.schema(
-                StructType.fromJson(
-                    __import__("json").loads(self._manifest.schema_json)
+        # sticky bloom_cols re-index the coalesced files (one bounded
+        # pass over the new files only, inside _commit)
+        with self._committing(
+            [e.name for run in runs for e in run], self.schema()
+        ) as staged:
+            for run in runs:
+                # DRIVER FAST PATH: a small homogeneous-schema run
+                # coalesces driver-side with pyarrow — zero Spark jobs
+                # for the exact workload compact exists for (many tiny
+                # flush files). Gated on the row cap and the hard bail
+                # (driver_gate); mixed-schema or big runs fall through
+                # to the distributed rewrite below.
+                new_entries = (
+                    self._compact_run_driver(run, ordered_on, row_group_target_size)
+                    if isinstance(row_group_target_size, int)
+                    and gate.fits(sum(e.n_rows for e in run))
+                    else None
                 )
-            )
-        rewritten = 0
-        all_new: list = []
-        for run in runs:
-            # DRIVER FAST PATH: a small homogeneous-schema run
-            # coalesces driver-side with pyarrow — zero Spark jobs for
-            # the exact workload compact exists for (many tiny flush
-            # files). Gated on the row cap and the hard bail
-            # (driver_gate); mixed-schema or big runs fall through to
-            # the distributed rewrite below.
-            new_entries = (
-                self._compact_run_driver(run, ordered_on, row_group_target_size)
-                if isinstance(row_group_target_size, int)
-                and gate.fits(sum(e.n_rows for e in run))
-                else None
-            )
-            if new_entries is None:
-                merged = _with_file_rank(
-                    self.spark,
-                    reader.parquet(*self._paths(run))
-                    .withColumn(_POS, F.monotonically_increasing_id())
-                    .withColumn(_SRC, F.lit(0)),
-                    run,
-                )
-                new_entries = self._write_files(
-                    merged, ordered_on, row_group_target_size,
-                    sum(e.n_rows for e in run),
-                )
-            names = {e.name for e in run}
-            self._manifest.files = [
-                e for e in self._manifest.files if e.name not in names
-            ] + new_entries
-            all_new.extend(new_entries)
-            rewritten += len(run)
-        if self._manifest.schema_json:
-            # sticky bloom_cols re-index the coalesced files (one
-            # bounded pass over the new files only)
-            self._attach_blooms(
-                all_new,
-                self._manifest.kv.get(_BLOOM_COLS_KV),
-                StructType.fromJson(
-                    __import__("json").loads(self._manifest.schema_json)
-                ),
-            )
-        expired = self._stage_tombstones(
-            self._manifest, [e.name for run in runs for e in run]
-        )
-        try:
-            self._manifest.save(
-                self.path, self.backend, snapshot=self.retain_versions
-            )
-        except ManifestConflictError:
-            # same contract as _commit: staged rewrites were never
-            # referenced — remove them and restore the handle to the
-            # committed state so the caller can reload-and-retry
-            for e in all_new:
-                p = os.path.join(self.path, e.name)
-                if os.path.exists(p):
-                    os.remove(p)
-            self._manifest = Manifest.load(self.path, self.backend)
-            raise
-        self._remove_files(expired)
-        return rewritten
+                if new_entries is None:
+                    # read runs through the MANIFEST schema, exactly
+                    # like read(): a run can mix pre- and
+                    # post-evolution files, and a bare parquet read
+                    # would take ONE file's footer schema — silently
+                    # nulling evolved columns out of the rewrite
+                    merged = _with_file_rank(
+                        self.spark,
+                        self._reader()
+                        .parquet(*self._paths(run))
+                        .withColumn(_POS, F.monotonically_increasing_id())
+                        .withColumn(_SRC, F.lit(0)),
+                        run,
+                    )
+                    new_entries = self._write_files(
+                        merged, ordered_on, row_group_target_size,
+                        sum(e.n_rows for e in run),
+                    )
+                staged += new_entries
+        return sum(len(run) for run in runs)
 
     def _compact_zorder_attempt(
         self, zorder_by: list[str], target, scope=None
@@ -1651,7 +1654,6 @@ class OrderedDataset:
         map-side bucket fold + interleave, all JVM expressions), and
         swaps that file subset in one manifest commit."""
         from oups_spark.functions.filters import dnf_file_can_match
-        from oups_spark.store.zorder import zorder_column
 
         if not isinstance(target, int):
             raise ValueError(
@@ -1694,98 +1696,56 @@ class OrderedDataset:
         # so readers see identical data either way. Gated by
         # driver_gate, with the distributed rewrite below as the
         # 100 TB path.
-        new_entries = None
-        old_paths = self._paths(old)
-        if gate.fits(sum(e.n_rows for e in old), paths=old_paths):
-            new_entries = self._zorder_rewrite_driver(
-                old, ordered_on, target, zorder_by
-            )
-        if new_entries is None:
-            reader = self.spark.read
-            if man.schema_json:
-                reader = reader.schema(
-                    StructType.fromJson(
-                        __import__("json").loads(man.schema_json)
-                    )
+        #
+        # A conflict re-runs rather than rebases: the rewrite's input
+        # set is every in-scope file, not an ordering-column range, so
+        # the rebase's range-disjointness proof does not cover a
+        # winner's new in-scope file — the re-run re-clusters it too.
+        with self._committing(
+            [e.name for e in old], schema, rebase=False
+        ) as staged:
+            new_entries = None
+            if gate.fits(sum(e.n_rows for e in old), paths=self._paths(old)):
+                new_entries = self._zorder_rewrite_driver(
+                    old, ordered_on, target, zorder_by
                 )
-            df = reader.parquet(*old_paths)
-            # the rewrite input is consumed THREE times (percentile
-            # sketch, range-partitioner sample, write) — persist it when
-            # it fits a bounded budget so the file set is scanned once
-            # (guide §5: reuse justifies the cache; MEMORY_AND_DISK spills
-            # rather than OOMs). Oversized scopes stay uncached — at
-            # 100 TB an incremental OPTIMIZE bounds `old` via `scope=`.
-            cache_cap = int(
-                os.environ.get("OUPS_COMPACT_CACHE_MAX_BYTES", str(4 << 30))
-            )
-            cached = None
-            if gate.decoded_bytes(old_paths) <= cache_cap:
-                from pyspark import StorageLevel
-
-                cached = df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                z = zorder_column(df, zorder_by)
-                merged = _with_file_rank(
-                    self.spark,
-                    df.withColumn(_POS, F.monotonically_increasing_id())
-                    .withColumn(_SRC, F.lit(0))
-                    .withColumn(_ZCOL, z),
-                    old,
+            if new_entries is None:
+                new_entries = self._zorder_rewrite_distributed(
+                    old, ordered_on, target, zorder_by
                 )
-                total = sum(e.n_rows for e in old)
-                new_entries = self._write_files(
-                    merged, ordered_on, target, total, cluster_col=_ZCOL
-                )
-            finally:
-                if cached is not None:
-                    cached.unpersist()
-        # sticky bloom_cols re-index the replacements (one bounded
-        # pass over the new files) — re-clustering must not silently
-        # degrade equality skipping
-        self._attach_blooms(
-            new_entries, man.kv.get(_BLOOM_COLS_KV), schema
-        )
-        # explicit reset: self._manifest may carry last_commit_landed
-        # = True from an earlier successful save on the same instance;
-        # the handler below must not mistake a pre-save failure here
-        # for a post-commit one
-        self._manifest.last_commit_landed = False
-        try:
-            names = {e.name for e in old}
-            self._manifest.files = [
-                e for e in self._manifest.files if e.name not in names
-            ] + new_entries
-            expired = self._stage_tombstones(
-                self._manifest, [e.name for e in old]
-            )
-            self._manifest.save(
-                self.path, self.backend, snapshot=self.retain_versions
-            )
-        except BaseException:
-            if self._manifest.last_commit_landed:
-                # POST-commit failure (the CAS accepted this rewrite,
-                # then e.g. the snapshot write raised): the committed
-                # manifest references the replacement files — deleting
-                # them would destroy the whole re-clustered table.
-                # The in-memory manifest already matches the committed
-                # state (save assigns token/generation before the
-                # snapshot write), so just propagate.
-                raise
-            # PRE-commit failure: finalized rewrites were never
-            # referenced by a committed manifest — remove them on ANY
-            # failure (a conflict, but also disk-full / transient I/O:
-            # this path rewrites the WHOLE table, so a leak here is
-            # table-sized) and reload so the handle's in-memory
-            # manifest matches the committed one; compact()'s retry
-            # loop re-runs on conflicts
-            for e in new_entries:
-                p = os.path.join(self.path, e.name)
-                if os.path.exists(p):
-                    os.remove(p)
-            self._manifest = Manifest.load(self.path, self.backend)
-            raise
-        self._remove_files(expired)
+            staged += new_entries
         return len(old)
+
+    def _zorder_rewrite_distributed(self, old, ordered_on, target, zorder_by):
+        df = self._reader().parquet(*self._paths(old))
+        # the rewrite input is consumed THREE times (percentile
+        # sketch, range-partitioner sample, write) — persist it when
+        # it fits a bounded budget so the file set is scanned once
+        # (guide §5: reuse justifies the cache; MEMORY_AND_DISK spills
+        # rather than OOMs). Oversized scopes stay uncached — at
+        # 100 TB an incremental OPTIMIZE bounds `old` via `scope=`.
+        cached = None
+        if gate.decoded_bytes(self._paths(old)) <= _COMPACT_CACHE_MAX_BYTES:
+            from pyspark import StorageLevel
+
+            cached = df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            from oups_spark.store.zorder import zorder_column
+
+            merged = _with_file_rank(
+                self.spark,
+                df.withColumn(_POS, F.monotonically_increasing_id())
+                .withColumn(_SRC, F.lit(0))
+                .withColumn(_ZCOL, zorder_column(df, zorder_by)),
+                old,
+            )
+            return self._write_files(
+                merged, ordered_on, target, sum(e.n_rows for e in old),
+                cluster_col=_ZCOL,
+            )
+        finally:
+            if cached is not None:
+                cached.unpersist()
 
     def _zorder_rewrite_driver(
         self, old: list[FileEntry], ordered_on: str, target: int,
@@ -1801,13 +1761,9 @@ class OrderedDataset:
         position) — the distributed path's
         ``repartitionByRange(__z) + sortWithinPartitions(__z,
         ordered_on, ...)`` total order — and stage size-balanced
-        files through the same ``_stage_arrow_chunks``/footer-stats
-        tail as the driver compact path. Returns None on any schema
-        surprise (caller runs the distributed rewrite)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+        files through the same ``_stage_arrow`` as the driver compact
+        path. Returns None on any schema surprise (caller runs the
+        distributed rewrite)."""
         from oups_spark.store.zorder import _ZBITS
 
         try:
@@ -1872,7 +1828,7 @@ class OrderedDataset:
             ],
             null_placement="at_start",
         )
-        return self._stage_arrow_chunks(tbl.take(order), ordered_on, target)
+        return self._stage_arrow(tbl.take(order), ordered_on, _balanced(n_rows, target))
 
     # ------------------------------------------------------------- DML
     def delete_where(
@@ -1900,7 +1856,9 @@ class OrderedDataset:
 
         Returns the number of rows deleted.
         """
-        return self._dml(filters, None, conflict_retries)
+        return self._retrying(
+            lambda: self._rewrite_where(filters, None), conflict_retries
+        )
 
     def update_where(
         self, filters, assignments: dict, *, conflict_retries: int = 0
@@ -1917,7 +1875,9 @@ class OrderedDataset:
         """
         if not assignments:
             raise ValueError("update_where needs at least one assignment")
-        return self._dml(filters, assignments, conflict_retries)
+        return self._retrying(
+            lambda: self._rewrite_where(filters, assignments), conflict_retries
+        )
 
     _MERGE_IN_KEYS_CAP = 2048
 
@@ -2013,26 +1973,20 @@ class OrderedDataset:
 
         Returns ``{"updated": n, "deleted": n, "inserted": n}``.
         """
-        attempt = 0
-        while True:
-            try:
-                return self._merge_into_attempt(
-                    source, on,
-                    when_matched_update=when_matched_update,
-                    when_matched_delete=when_matched_delete,
-                    when_not_matched_insert=when_not_matched_insert,
-                    nbs_update=when_not_matched_by_source_update,
-                    nbs_delete=when_not_matched_by_source_delete,
-                    by_source_scope=by_source_scope,
-                    evolve_schema=evolve_schema,
-                    row_group_target_size=row_group_target_size,
-                )
-            except ManifestConflictError:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
-                self.conflict_reruns += 1
-                self._manifest = Manifest.load(self.path, self.backend)
+        return self._retrying(
+            lambda: self._merge_into_attempt(
+                source, on,
+                when_matched_update=when_matched_update,
+                when_matched_delete=when_matched_delete,
+                when_not_matched_insert=when_not_matched_insert,
+                nbs_update=when_not_matched_by_source_update,
+                nbs_delete=when_not_matched_by_source_delete,
+                by_source_scope=by_source_scope,
+                evolve_schema=evolve_schema,
+                row_group_target_size=row_group_target_size,
+            ),
+            conflict_retries,
+        )
 
     def _merge_into_attempt(
         self,
@@ -2107,13 +2061,30 @@ class OrderedDataset:
                 schema = StructType(list(schema.fields) + new_fields)
                 tcols = {f.name: f for f in schema.fields}
 
-        # normalize the matched clauses
+        # normalize the clauses
         def _cond(v):
             if v is None or v is False:
                 return None
             if v is True:
                 return F.lit(True)
             return F.expr(v) if isinstance(v, str) else v
+
+        def _assign(clause, name):
+            if clause is None:
+                return None
+            if o in clause:
+                raise ValueError(
+                    f"merge_into cannot assign the ordering column {o!r}"
+                )
+            unknown = set(clause) - set(tcols)
+            if unknown:
+                raise ValueError(f"unknown columns in {name}: {sorted(unknown)}")
+            # non-Column values are LITERALS (update_where's rule);
+            # expressions over s./t. come in as Columns (F.col/F.expr)
+            return {
+                c: (v if isinstance(v, Column) else F.lit(v))
+                for c, v in clause.items()
+            }
 
         delcond = _cond(when_matched_delete)
         if when_matched_update == "source":
@@ -2127,61 +2098,34 @@ class OrderedDataset:
                     "when_matched_update='source': no common non-key "
                     "columns to set"
                 )
-        upd = None
-        if when_matched_update is not None:
-            if o in when_matched_update:
-                raise ValueError(
-                    f"merge_into cannot assign the ordering column {o!r}"
+        clauses = dict(
+            upd=_assign(when_matched_update, "when_matched_update"),
+            delcond=delcond,
+            nbs_upd=_assign(nbs_update, "when_not_matched_by_source_update"),
+            nbs_delcond=_cond(nbs_delete),
+            # the scope gates the by-source clauses ROW-level (so
+            # semantics never depend on file layout) and prunes the
+            # scanned files below; columns are t.-prefixed — on the
+            # joined frame a bare name shared with the source would
+            # be ambiguous
+            scope_cond=(
+                dnf_condition(
+                    [
+                        [(f"t.{c}", op, v) for c, op, v in grp]
+                        for grp in (
+                            by_source_scope
+                            if isinstance(by_source_scope[0], list)
+                            else [by_source_scope]
+                        )
+                    ]
                 )
-            unknown = set(when_matched_update) - set(tcols)
-            if unknown:
-                raise ValueError(
-                    f"unknown columns in when_matched_update: {sorted(unknown)}"
-                )
-            # non-Column values are LITERALS (update_where's rule);
-            # expressions over s./t. come in as Columns (F.col/F.expr)
-            upd = {
-                c: (v if isinstance(v, Column) else F.lit(v))
-                for c, v in when_matched_update.items()
-            }
-
-        # normalize the not-matched-by-source clauses
-        nbs_delcond = _cond(nbs_delete)
-        nbs_upd = None
-        if nbs_update is not None:
-            if o in nbs_update:
-                raise ValueError(
-                    f"merge_into cannot assign the ordering column {o!r}"
-                )
-            unknown = set(nbs_update) - set(tcols)
-            if unknown:
-                raise ValueError(
-                    "unknown columns in when_not_matched_by_source_update: "
-                    f"{sorted(unknown)}"
-                )
-            nbs_upd = {
-                c: (v if isinstance(v, Column) else F.lit(v))
-                for c, v in nbs_update.items()
-            }
-        want_nbs = nbs_delcond is not None or nbs_upd is not None
-        # the scope gates the clauses ROW-level (so semantics never
-        # depend on file layout) and prunes the scanned files below;
-        # columns are t.-prefixed — on the joined frame a bare name
-        # shared with the source would be ambiguous
-        scope_cond = (
-            dnf_condition(
-                [
-                    [(f"t.{c}", op, v) for c, op, v in grp]
-                    for grp in (
-                        by_source_scope
-                        if by_source_scope
-                        and isinstance(by_source_scope[0], list)
-                        else [by_source_scope]
-                    )
-                ]
-            )
-            if by_source_scope
-            else F.lit(True)
+                if by_source_scope
+                else F.lit(True)
+            ),
+        )
+        want_matched = delcond is not None or clauses["upd"] is not None
+        want_nbs = (
+            clauses["nbs_delcond"] is not None or clauses["nbs_upd"] is not None
         )
 
         # (1) one source pass: count, key uniqueness, per-key bounds.
@@ -2202,8 +2146,6 @@ class OrderedDataset:
             else None
         )
         if probe_tbl is not None:
-            import pyarrow.compute as pc
-
             n_src = probe_tbl.num_rows
             kcols = {c: probe_tbl.column(c) for c in on}
             n_null = sum(col.null_count for col in kcols.values())
@@ -2242,15 +2184,11 @@ class OrderedDataset:
             nd = int(sstats["nd"])
             smn = {c: sstats[f"__mn_{c}"] for c in on}
             smx = {c: sstats[f"__mx_{c}"] for c in on}
-        zeros = {"updated": 0, "deleted": 0, "inserted": 0}
-        want_nbs_early = (
-            nbs_delete is not None and nbs_delete is not False
-        ) or nbs_update is not None
-        if n_src == 0 and not want_nbs_early:
+        if n_src == 0 and not want_nbs:
             # an EMPTY source still drives the not-matched-by-source
             # clauses (a full-snapshot sync of an emptied scope), so
             # only short-circuit without them
-            return zeros
+            return {"updated": 0, "deleted": 0, "inserted": 0}
         if n_null:
             raise ValueError("merge source has NULL values in the merge keys")
         if nd < n_src:
@@ -2276,8 +2214,6 @@ class OrderedDataset:
             ]
             if len(on) == 1 and nd <= self._MERGE_IN_KEYS_CAP:
                 if probe_tbl is not None:
-                    import pyarrow.compute as pc
-
                     keys = [
                         _norm_tz(v)
                         for v in pc.unique(
@@ -2310,33 +2246,18 @@ class OrderedDataset:
                     blooms=e.blooms,
                 )
             ]
-        reader = self.spark.read.schema(schema)
-        basename = F.substring_index(F.input_file_name(), "/", -1)
-        key_cond = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(f"t.{c}") == F.col(f"s.{c}") for c in on],
-        )
-        cand_paths = self._paths(cands)
         # a CDC-sized source joins broadcast on every pass (hit scan,
         # rewrite, anti-join) — declared explicitly so the plan never
         # depends on AQE's runtime size estimate of a computed source.
         # A probed source becomes a LOCAL relation: the broadcast then
         # materializes driver-side with no job and no re-execution of
         # the source plan per consuming pass (guide §2.1).
-        local_src = None
         if probe_tbl is not None:
-            local_src = self.spark.createDataFrame(
-                probe_tbl, schema=source.schema
+            src_hinted = F.broadcast(
+                self.spark.createDataFrame(probe_tbl, schema=source.schema)
             )
-        src_hinted = (
-            F.broadcast(local_src)
-            if local_src is not None
-            else (
-                F.broadcast(source)
-                if gate.fits(n_src)
-                else source
-            )
-        )
+        else:
+            src_hinted = F.broadcast(source) if gate.fits(n_src) else source
 
         # files the not-matched-by-source clauses must consider:
         # scope-pruned driver-side (every file when no scope is given —
@@ -2358,154 +2279,42 @@ class OrderedDataset:
         # distributed path below, which still reuses the local source
         if probe_tbl is not None:
             res = self._merge_into_driver(
-                probe_tbl, local_src, on, schema, reader, key_cond,
-                basename, o=o, man=man,
-                cands=cands, nbs_cands=nbs_cands,
-                upd=upd, delcond=delcond,
-                nbs_upd=nbs_upd, nbs_delcond=nbs_delcond,
-                scope_cond=scope_cond,
-                when_not_matched_insert=when_not_matched_insert,
-                row_group_target_size=row_group_target_size,
+                probe_tbl, src_hinted, on, schema, cands, nbs_cands,
+                clauses, when_not_matched_insert, row_group_target_size,
             )
             if res is not None:
                 return res
 
         # (3) which candidates REALLY hold affected rows, and the
-        # per-clause split — ONE scan over the union of both
+        # per-clause split — ONE aggregate over the union of both
         # candidate sets (a matching row can only live in `cands`:
         # the key pruning is conservative)
-        n_del = n_upd = n_nbs_del = n_nbs_upd = 0
-        touched: list[FileEntry] = []
-        want_matched = delcond is not None or upd is not None
-        scan_by_name = {e.name: e for e in (cands if want_matched else [])}
-        for e in nbs_cands:
-            scan_by_name.setdefault(e.name, e)
-        if scan_by_name:
-            matched = F.col(f"s.{on[0]}").isNotNull()
-            dflag = matched & (
-                F.coalesce(delcond, F.lit(False))
-                if delcond is not None
-                else F.lit(False)
-            )
-            in_scope = ~matched & scope_cond
-            nbs_dflag = in_scope & (
-                F.coalesce(nbs_delcond, F.lit(False))
-                if nbs_delcond is not None
-                else F.lit(False)
-            )
-            nbs_uflag = (
-                in_scope & ~nbs_dflag
-                if nbs_upd is not None
-                else F.lit(False)
-            )
-            cnt = lambda c: F.sum(F.when(c, 1).otherwise(0))  # noqa: E731
-            hits = {
-                r["__f"]: r
-                for r in (
-                    reader.parquet(
-                        *[
-                            os.path.join(self.path, n)
-                            for n in scan_by_name
-                        ]
-                    )
-                    .withColumn("__f", basename)
-                    .alias("t")
-                    .join(src_hinted.alias("s"), key_cond, "left")
-                    .groupBy("__f")
-                    .agg(
-                        cnt(matched).alias("n_m"),
-                        cnt(dflag).alias("n_dm"),
-                        cnt(nbs_dflag).alias("n_nd"),
-                        cnt(nbs_uflag).alias("n_nu"),
-                    )
-                    .collect()
+        scan = _union(cands if want_matched else [], nbs_cands)
+        touched, result = _merge_tally(
+            self._merge_rows(scan, src_hinted, on, schema, **clauses)
+            if scan
+            else None,
+            scan, want_matched, clauses["upd"] is not None,
+        )
+        with self._committing([e.name for e in touched], schema) as staged:
+            # (4) copy-on-write rewrite of the truly-affected files
+            if touched:
+                rows = self._merge_rows(touched, src_hinted, on, schema, **clauses)
+                staged += self._stage_cow(
+                    _kept_rows(rows, touched, [_DM, _ND], schema), touched, o
                 )
-            }
-
-            def _hit(r) -> bool:
-                return bool(
-                    (want_matched and r["n_m"])
-                    or r["n_nd"]
-                    or r["n_nu"]
-                )
-
-            touched = [
-                e
-                for e in scan_by_name.values()
-                if e.name in hits and _hit(hits[e.name])
-            ]
-            hit_rows = [hits[e.name] for e in touched]
-            n_matched = sum(int(r["n_m"]) for r in hit_rows)
-            n_del = sum(int(r["n_dm"]) for r in hit_rows)
-            n_upd = (n_matched - n_del) if upd is not None else 0
-            n_nbs_del = sum(int(r["n_nd"]) for r in hit_rows)
-            n_nbs_upd = sum(int(r["n_nu"]) for r in hit_rows)
-
-        # (4) copy-on-write rewrite of the truly-affected files
-        rewritten: list[FileEntry] = []
-        if touched:
-            fid_map = F.create_map(
-                *[
-                    lit
-                    for i, e in enumerate(touched)
-                    for lit in (F.lit(e.name), F.lit(i))
-                ]
-            )
-            tgt = (
-                reader.parquet(*self._paths(touched))
-                .withColumn(_FID, fid_map[basename])
-                .withColumn(_POS, F.monotonically_increasing_id())
-            )
-            j = tgt.alias("t").join(src_hinted.alias("s"), key_cond, "left")
-            # source keys are non-null (validated), so a non-null key
-            # on the s side IS the match indicator
-            matched = F.col(f"s.{on[0]}").isNotNull()
-            in_scope = ~matched & scope_cond
-            drop = F.lit(False)
-            if delcond is not None:
-                drop = drop | (matched & F.coalesce(delcond, F.lit(False)))
-            if nbs_delcond is not None:
-                drop = drop | (
-                    in_scope & F.coalesce(nbs_delcond, F.lit(False))
-                )
-            sel = []
-            for fld in schema.fields:
-                tcol = F.col(f"t.{fld.name}")
-                expr = tcol
-                if nbs_upd is not None and fld.name in nbs_upd:
-                    expr = F.when(
-                        in_scope, nbs_upd[fld.name].cast(fld.dataType)
-                    ).otherwise(expr)
-                if upd is not None and fld.name in upd:
-                    expr = F.when(
-                        matched, upd[fld.name].cast(fld.dataType)
-                    ).otherwise(expr)
-                sel.append(expr.alias(fld.name))
-            out = j.filter(~drop).select(*sel, F.col(_FID), F.col(_POS))
-            rewritten = self._stage_cow_rewrite(out, len(touched), o)
-
-        # (5) not-matched source rows -> NEW files (anti-join against
-        # the candidates only: pruning is conservative, no other file
-        # can hold a matching key). Steps 5-6 run under a cleanup
-        # guard: the step-4 replacement files are already FINALIZED
-        # into the dataset dir but referenced by no manifest until the
-        # commit lands, so any failure here (the null-ordered_on
-        # raise, an insert-write error) must delete them — and any
-        # finalized inserts — or every failed/retried merge leaks
-        # orphan data files (no read impact, reads are
-        # manifest-driven; disk only). A CAS conflict inside _commit
-        # already cleans its new entries (idempotent: exists-guarded),
-        # and a successful rebase returns normally, keeping its files.
-        inserts: list[FileEntry] = []
-        n_ins = 0
-        self._commit_landed = False
-        try:
+            # (5) not-matched source rows -> NEW files (anti-join
+            # against the candidates only: pruning is conservative, no
+            # other file can hold a matching key)
             if when_not_matched_insert:
                 ins = source.alias("s")
                 if cands:
                     ins = ins.join(
-                        reader.parquet(*cand_paths).select(*on).alias("t"),
-                        key_cond,
+                        self.spark.read.schema(schema)
+                        .parquet(*self._paths(cands))
+                        .select(*on)
+                        .alias("t"),
+                        _key_cond(on),
                         "left_anti",
                     )
                 istats = ins.agg(
@@ -2514,7 +2323,7 @@ class OrderedDataset:
                         F.when(F.col(o).isNull(), 1).otherwise(0)
                     ).alias("nnull"),
                 ).collect()[0]
-                n_ins = int(istats["n"])
+                n_ins = result["inserted"] = int(istats["n"])
                 if n_ins and int(istats["nnull"] or 0):
                     raise ValueError(
                         "null values in ordered_on are not allowed"
@@ -2536,272 +2345,92 @@ class OrderedDataset:
                             _FIDX: F.lit(0),
                         }
                     )
-                    inserts = self._write_files(
+                    staged += self._write_files(
                         proj, o, row_group_target_size, n_ins
                     )
-
-            # counts fold the by-source clauses into the totals (Delta's
-            # top-level metrics convention)
-            result = {
-                "updated": n_upd + n_nbs_upd,
-                "deleted": n_del + n_nbs_del,
-                "inserted": n_ins,
-            }
-            if not touched and not inserts:
-                return result
-
-            # (6) ONE commit: replacements + inserts in a single
-            # tombstone/CAS/rebase manifest swap
-            new_entries = rewritten + inserts
-            self._attach_blooms(
-                new_entries, man.kv.get(_BLOOM_COLS_KV), schema
-            )
-            replaced = {e.name for e in touched}
-            self._commit(
-                o,
-                df=None,
-                target_schema=schema,
-                kept=[e for e in man.files if e.name not in replaced],
-                replaced_names=sorted(replaced),
-                new_entries=new_entries,
-                key_value_metadata=None,
-                cmidx=man.cmidx,
-            )
-        except BaseException:
-            if self._commit_landed:
-                # the manifest CAS landed before the failure (e.g. a
-                # post-commit snapshot write or expired-file deletion
-                # raised): the committed manifest references the
-                # rewrites + inserts — deleting them would be
-                # PERMANENT DATA LOSS, so propagate untouched
-                raise
-            for e in rewritten + inserts:
-                p = os.path.join(self.path, e.name)
-                if os.path.exists(p):
-                    os.remove(p)
-            raise
+        # (6) _committing: replacements + inserts in ONE
+        # tombstone/CAS/rebase manifest swap
         return result
 
     def _merge_into_driver(
-        self, probe_tbl, local_src, on, schema, reader, key_cond,
-        basename, *, o, man, cands, nbs_cands, upd, delcond,
-        nbs_upd, nbs_delcond, scope_cond, when_not_matched_insert,
-        row_group_target_size,
+        self, probe_tbl, local_src, on, schema, cands, nbs_cands, clauses,
+        when_not_matched_insert, row_group_target_size,
     ) -> dict | None:
         """Driver-side MERGE fast path (round-14, guide §1.2/§2.1):
         with the deduped source already collected by the Arrow probe
-        and the candidate files small (``driver_gate``), the whole merge
-        runs off ONE more Spark job: the candidates are scanned once,
-        left-joined to the local-relation source with the SAME
-        matched/scope/drop flags and update projections as the
-        distributed path (all Column expressions evaluate in Spark —
-        nothing is re-implemented), and the flagged result comes back
-        as Arrow. Touched-file detection, counts, the per-file
-        copy-on-write replacements, the anti-join inserts (probe rows
-        whose key matched nothing in the scan) and the manifest
-        commit are then driver-side pyarrow/fs work. A steady-state
-        CDC micro-batch costs 2 jobs (probe + scan) instead of the
-        stats/keys/hit-scan/rewrite/istats/insert train whose every
-        broadcast re-executed the computed source. Returns None to
-        fall back to the distributed path (period row-group targets,
-        nested target columns, oversized candidate set): at 100 TB
-        the big merges keep the classic plan, exactly like the write
-        path's driver merge."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
+        (``local_src``: its broadcast local relation) and the
+        candidate files small (``driver_gate``), the whole merge runs
+        off ONE more Spark job: the candidates' row-action projection
+        (``_merge_rows``, the same one the distributed path
+        aggregates) comes back as Arrow. Touched-file detection,
+        counts, the per-file copy-on-write replacements, the
+        anti-join inserts (probe rows whose key matched nothing in the
+        scan) and the manifest commit are then driver-side
+        pyarrow/fs work. A steady-state CDC micro-batch costs 2 jobs
+        (probe + scan) instead of the stats/keys/hit-scan/rewrite/
+        istats/insert train whose every broadcast re-executed the
+        computed source. Returns None to fall back to the distributed
+        path (period row-group targets, nested target columns,
+        oversized candidate set): at 100 TB the big merges keep the
+        classic plan, exactly like the write path's driver merge."""
         if not isinstance(row_group_target_size, int) or not gate.arrow_safe(
             schema
         ):
             return None
-        want_matched = delcond is not None or upd is not None
-        scan: dict[str, FileEntry] = {
-            e.name: e
-            for e in (
-                cands if (want_matched or when_not_matched_insert) else []
-            )
-        }
-        for e in nbs_cands:
-            scan.setdefault(e.name, e)
-        entries = list(scan.values())
-        if entries and not gate.fits(
-            sum(e.n_rows for e in entries) + probe_tbl.num_rows,
+        o = self._manifest.ordered_on
+        want_matched = clauses["delcond"] is not None or clauses["upd"] is not None
+        scan = _union(
+            cands if want_matched or when_not_matched_insert else [], nbs_cands
+        )
+        if scan and not gate.fits(
+            sum(e.n_rows for e in scan) + probe_tbl.num_rows,
             probe_tbl.nbytes,
-            self._paths(entries),
+            self._paths(scan),
         ):
             return None
-
-        F_M, F_DM, F_ND, F_NU = (
-            "__oups_m", "__oups_dm", "__oups_nd", "__oups_nu"
-        )
-        key_echo = [f"__oups_k{i}" for i in range(len(on))]
-        res_tbl = None
-        if entries:
-            matched = F.col(f"s.{on[0]}").isNotNull()
-            in_scope = ~matched & scope_cond
-            dflag = matched & (
-                F.coalesce(delcond, F.lit(False))
-                if delcond is not None
-                else F.lit(False)
+        rows = None
+        if scan:
+            rows = gate.collect(
+                self._merge_rows(scan, local_src, on, schema, **clauses)
             )
-            nbs_dflag = in_scope & (
-                F.coalesce(nbs_delcond, F.lit(False))
-                if nbs_delcond is not None
-                else F.lit(False)
-            )
-            nbs_uflag = (
-                in_scope & ~nbs_dflag
-                if nbs_upd is not None
-                else F.lit(False)
-            )
-            fid_map = F.create_map(
-                *[
-                    lit
-                    for i, e in enumerate(entries)
-                    for lit in (F.lit(e.name), F.lit(i))
-                ]
-            )
-            tgt = (
-                reader.parquet(*self._paths(entries))
-                .withColumn(_FID, fid_map[basename])
-                .withColumn(_POS, F.monotonically_increasing_id())
-            )
-            j = tgt.alias("t").join(
-                F.broadcast(local_src).alias("s"), key_cond, "left"
-            )
-            sel = []
-            for fld in schema.fields:
-                expr = F.col(f"t.{fld.name}")
-                if nbs_upd is not None and fld.name in nbs_upd:
-                    expr = F.when(
-                        in_scope, nbs_upd[fld.name].cast(fld.dataType)
-                    ).otherwise(expr)
-                if upd is not None and fld.name in upd:
-                    expr = F.when(
-                        matched, upd[fld.name].cast(fld.dataType)
-                    ).otherwise(expr)
-                sel.append(expr.alias(fld.name))
-            out = j.select(
-                *sel,
-                F.col(_FID),
-                F.col(_POS),
-                matched.alias(F_M),
-                dflag.alias(F_DM),
-                nbs_dflag.alias(F_ND),
-                nbs_uflag.alias(F_NU),
-                *[
-                    F.when(matched, F.col(f"s.{c}")).alias(k)
-                    for c, k in zip(on, key_echo)
-                ],
-            )
-            res_tbl = gate.collect(out)
-            if res_tbl is None:
+            if rows is None:
                 return None  # over the hard bail, or refused by Spark
-
-        # touched files + per-clause counts (the distributed path's
-        # hit-scan aggregate, replayed on the collected flags)
-        n_del = n_upd = n_nbs_del = n_nbs_upd = 0
-        touched: list[FileEntry] = []
-        keep_tbl = None
-        if res_tbl is not None and res_tbl.num_rows:
-            nf = len(entries)
-            fid = res_tbl.column(_FID).to_numpy(zero_copy_only=False)
-            bm = (
-                res_tbl.column(F_M)
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            bdm = (
-                res_tbl.column(F_DM)
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            bnd = (
-                res_tbl.column(F_ND)
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            bnu = (
-                res_tbl.column(F_NU)
-                .to_numpy(zero_copy_only=False)
-                .astype(bool)
-            )
-            n_m_f = np.bincount(fid[bm], minlength=nf)
-            n_dm_f = np.bincount(fid[bdm], minlength=nf)
-            n_nd_f = np.bincount(fid[bnd], minlength=nf)
-            n_nu_f = np.bincount(fid[bnu], minlength=nf)
-            hit = (
-                ((n_m_f > 0) if want_matched else np.zeros(nf, bool))
-                | (n_nd_f > 0)
-                | (n_nu_f > 0)
-            )
-            touched = [entries[i] for i in np.flatnonzero(hit)]
-            n_matched = int(n_m_f[hit].sum())
-            n_del = int(n_dm_f[hit].sum())
-            n_upd = (n_matched - n_del) if upd is not None else 0
-            n_nbs_del = int(n_nd_f[hit].sum())
-            n_nbs_upd = int(n_nu_f[hit].sum())
-            if touched:
-                keep = ~(bdm | bnd) & hit[fid]
-                keep_tbl = res_tbl.filter(pa.array(keep)).sort_by(
-                    [
-                        (_FID, "ascending"),
-                        (o, "ascending"),
-                        (_POS, "ascending"),
-                    ]
-                )
+        touched, result = _merge_tally(
+            rows, scan, want_matched, clauses["upd"] is not None
+        )
 
         # inserts: probe rows whose key matched nothing in the scan
         # (pruning is conservative — no unscanned candidate can hold
         # a matching key), projected onto the target schema
         ins_tbl = None
-        n_ins = 0
         if when_not_matched_insert:
             ins_src = probe_tbl
-            if res_tbl is not None and cands and probe_tbl.num_rows:
+            if rows is not None and cands and probe_tbl.num_rows:
+                hits = rows.filter(rows[_M])
                 if len(on) == 1:
-                    mk = res_tbl.column(key_echo[0]).drop_null()
                     mask = pc.invert(
-                        pc.is_in(probe_tbl.column(on[0]), value_set=mk)
+                        pc.is_in(probe_tbl[on[0]], value_set=hits["__oups_k0"])
                     )
-                    ins_src = probe_tbl.filter(mask)
                 else:
-                    mset = set()
-                    klists = [
-                        res_tbl.column(k).to_pylist() for k in key_echo
-                    ]
-                    mflags = res_tbl.column(F_M).to_pylist()
-                    for vals in zip(*klists, mflags):
-                        if vals[-1]:
-                            mset.add(vals[:-1])
-                    plists = [
-                        probe_tbl.column(c).to_pylist() for c in on
-                    ]
-                    mask = pa.array(
-                        [t not in mset for t in zip(*plists)]
+                    mset = set(
+                        zip(*[hits[f"__oups_k{i}"].to_pylist() for i in range(len(on))])
                     )
-                    ins_src = probe_tbl.filter(mask)
-            n_ins = ins_src.num_rows
+                    mask = pa.array(
+                        [t not in mset for t in zip(*[probe_tbl[c].to_pylist() for c in on])]
+                    )
+                ins_src = probe_tbl.filter(mask)
+            n_ins = result["inserted"] = ins_src.num_rows
             if n_ins:
                 # target-schema arrow types come from Spark itself:
                 # the scan result when there was one, the converted
                 # schema otherwise
-                if res_tbl is not None:
-                    tmap = {
-                        f.name: f.type for f in res_tbl.schema
-                    }
+                if rows is not None:
+                    tmap = {f.name: f.type for f in rows.schema}
                 else:
                     try:
-                        from pyspark.sql.pandas.types import (
-                            to_arrow_schema,
-                        )
+                        from pyspark.sql.pandas.types import to_arrow_schema
 
-                        tmap = {
-                            f.name: f.type
-                            for f in to_arrow_schema(schema)
-                        }
+                        tmap = {f.name: f.type for f in to_arrow_schema(schema)}
                     except Exception:  # noqa: BLE001
                         return None
                 arrays, fields = [], []
@@ -2820,118 +2449,115 @@ class OrderedDataset:
                     schema=pa.schema(fields),
                 ).sort_by([(o, "ascending")])
 
-        # stage the copy-on-write replacements (one file per touched
-        # source file; a file whose every row dropped writes nothing)
-        rewritten: list[FileEntry] = []
-        if keep_tbl is not None and touched:
-            staging = os.path.join(
-                self.path, f".staging-{uuid.uuid4().hex[:12]}"
-            )
-            os.makedirs(staging, exist_ok=True)
-            try:
-                data_names = [f.name for f in schema.fields]
-                kfid = keep_tbl.column(_FID).to_numpy(
-                    zero_copy_only=False
+        with self._committing([e.name for e in touched], schema) as staged:
+            if touched:
+                staged += self._stage_cow(
+                    _kept_rows(rows, touched, [_DM, _ND], schema), touched, o
                 )
-                bounds = np.searchsorted(
-                    kfid,
-                    np.arange(len(entries) + 1),
-                    side="left",
-                )
-                for i in range(len(entries)):
-                    lo, hi = int(bounds[i]), int(bounds[i + 1])
-                    if hi <= lo:
-                        continue
-                    pq.write_table(
-                        keep_tbl.slice(lo, hi - lo).select(data_names),
-                        os.path.join(staging, f"part-{i:05d}.parquet"),
-                        compression="snappy",
-                    )
-                stats = _footer_stats(staging, o)
-                if stats is None:
-                    stats = []
-                    for i in range(len(entries)):
-                        lo, hi = int(bounds[i]), int(bounds[i + 1])
-                        if hi <= lo:
-                            continue
-                        chunk = keep_tbl.slice(lo, hi - lo)
-                        col = chunk.column(o)
-                        stats.append(
-                            (
-                                os.path.join(
-                                    staging, f"part-{i:05d}.parquet"
-                                ),
-                                chunk.num_rows,
-                                _norm_tz(pc.min(col).as_py()),
-                                _norm_tz(pc.max(col).as_py()),
-                                None,
-                            )
-                        )
-                rewritten = self._finalize_staged(stats)
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-
-        # (5)+(6) of the distributed path: inserts, then ONE commit —
-        # same cleanup guard (files are finalized but unreferenced
-        # until the commit lands)
-        inserts: list[FileEntry] = []
-        self._commit_landed = False
-        try:
             if ins_tbl is not None:
                 if ins_tbl.column(o).null_count:
                     raise ValueError(
                         "null values in ordered_on are not allowed"
                     )
-                inserts = self._stage_arrow_chunks(
-                    ins_tbl, o, row_group_target_size
+                staged += self._stage_arrow(
+                    ins_tbl, o, _balanced(n_ins, row_group_target_size)
                 )
-            result = {
-                "updated": n_upd + n_nbs_upd,
-                "deleted": n_del + n_nbs_del,
-                "inserted": n_ins,
-            }
-            if not touched and not inserts:
-                return result
-            new_entries = rewritten + inserts
-            self._attach_blooms(
-                new_entries, man.kv.get(_BLOOM_COLS_KV), schema
-            )
-            replaced = {e.name for e in touched}
-            self._commit(
-                o,
-                df=None,
-                target_schema=schema,
-                kept=[e for e in man.files if e.name not in replaced],
-                replaced_names=sorted(replaced),
-                new_entries=new_entries,
-                key_value_metadata=None,
-                cmidx=man.cmidx,
-            )
-        except BaseException:
-            if self._commit_landed:
-                raise
-            for e in rewritten + inserts:
-                p = os.path.join(self.path, e.name)
-                if os.path.exists(p):
-                    os.remove(p)
-            raise
         return result
 
-    def _dml(self, filters, assignments, conflict_retries: int) -> int:
-        attempt = 0
-        while True:
-            try:
-                return self._rewrite_where(filters, assignments)
-            except ManifestConflictError:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
-                self.conflict_reruns += 1
-                self._manifest = Manifest.load(self.path, self.backend)
+    def _scan_rows(self, entries, schema, where=None) -> DataFrame:
+        """``entries`` scanned under ``schema`` (only the rows where
+        ``where`` holds, when given — a filter on the raw scan, so it
+        reaches the parquet reader), each row tagged with its source
+        file's name (``_FID`` — taken at the scan: ``input_file_name``
+        is empty past a join, and being nondeterministic it stops any
+        later filter from being pushed into the scan) and its in-scan
+        position (``_POS``)."""
+        df = self.spark.read.schema(schema).parquet(*self._paths(entries))
+        if where is not None:
+            df = df.filter(where)
+        return df.withColumn(
+            _FID, F.substring_index(F.input_file_name(), "/", -1)
+        ).withColumn(_POS, F.monotonically_increasing_id())
 
-    def _rewrite_where(self, filters, assignments) -> int:
+    def _merge_rows(
+        self, entries, src, on, schema, *, upd, delcond, nbs_upd,
+        nbs_delcond, scope_cond,
+    ) -> DataFrame:
+        """THE row-action projection of ``merge_into``, shared by both
+        paths (the driver collects it, the distributed path aggregates
+        it per file and then rewrites from it): every row of the
+        target files ``entries`` left-joined to ``src`` on the keys,
+        with its post-update value of each ``schema`` column, ``_FID``
+        and ``_POS``, the matched source keys (``__oups_k<i>``), and
+        the clause flags, each coalesced to a non-NULL boolean —
+        ``_M`` matched; ``_DM`` matched and deleted; ``_ND`` / ``_NU``
+        not matched, in scope, and deleted / updated by the by-source
+        clauses. A NULL condition is false, so a row whose scope
+        column is NULL is out of scope (SQL semantics) on both paths.
+        Delete is evaluated before update on each side."""
+
+        def flag(c):
+            return F.lit(False) if c is None else F.coalesce(c, F.lit(False))
+
+        # source keys are non-null (validated), so a non-null key on
+        # the s side IS the match indicator
+        matched = F.col(f"s.{on[0]}").isNotNull()
+        in_scope = flag(~matched & scope_cond)
+        nd = in_scope & flag(nbs_delcond)
+        nu = in_scope & ~nd if nbs_upd is not None else F.lit(False)
+        sel = []
+        for fld in schema.fields:
+            expr = F.col(f"t.{fld.name}")
+            if nbs_upd is not None and fld.name in nbs_upd:
+                expr = F.when(
+                    in_scope, nbs_upd[fld.name].cast(fld.dataType)
+                ).otherwise(expr)
+            if upd is not None and fld.name in upd:
+                expr = F.when(
+                    matched, upd[fld.name].cast(fld.dataType)
+                ).otherwise(expr)
+            sel.append(expr.alias(fld.name))
+        return (
+            self._scan_rows(entries, schema)
+            .alias("t")
+            .join(src.alias("s"), _key_cond(on), "left")
+            .select(
+                *sel,
+                F.col(_FID),
+                F.col(_POS),
+                matched.alias(_M),
+                (matched & flag(delcond)).alias(_DM),
+                nd.alias(_ND),
+                nu.alias(_NU),
+                *[F.col(f"s.{c}").alias(f"__oups_k{i}") for i, c in enumerate(on)],
+            )
+        )
+
+    def _dml_rows(self, entries, schema, pred, assignments, where=None) -> DataFrame:
+        """THE row-action projection of ``delete_where`` /
+        ``update_where``, shared by both paths: every row of
+        ``entries`` with its post-update values (one select: every
+        assignment and the predicate see the PRE-update row),
+        ``_FID``/``_POS``, and ``_M`` = the predicate holds, coalesced
+        — a NULL predicate (null values, or pre-schema-evolution rows
+        reading an evolved column as NULL) is NOT a match (SQL DML
+        semantics)."""
         from pyspark.sql import Column
 
+        match = F.coalesce(pred, F.lit(False))
+        sel = []
+        for fld in schema.fields:
+            expr = F.col(fld.name)
+            if assignments and fld.name in assignments:
+                v = assignments[fld.name]
+                vcol = v if isinstance(v, Column) else F.lit(v)
+                expr = F.when(match, vcol.cast(fld.dataType)).otherwise(expr)
+            sel.append(expr.alias(fld.name))
+        return self._scan_rows(entries, schema, where).select(
+            *sel, F.col(_FID), F.col(_POS), match.alias(_M)
+        )
+
+    def _rewrite_where(self, filters, assignments) -> int:
         from oups_spark.functions.filters import (
             dnf_condition,
             dnf_file_can_match,
@@ -2968,327 +2594,52 @@ class OrderedDataset:
         ]
         if not cands:
             return 0
-        reader = self.spark.read.schema(schema)
         pred = dnf_condition(filters)
-        basename = F.substring_index(F.input_file_name(), "/", -1)
-
-        # DRIVER-SIDE DML FAST PATH (round-14, guide §1.2): small
-        # candidate sets run the whole DELETE/UPDATE off ONE Spark job
-        # — the hit-count scan and the copy-on-write rewrite fuse into
-        # a single scan that returns the post-update rows plus a match
-        # flag as Arrow; touched-file detection, counts and the
-        # per-file replacements are then driver-side pyarrow work.
-        # Oversized candidate sets fall through to the classic
-        # two-job plan (the 100-TB shape).
-        res = self._rewrite_where_driver(
-            cands, schema, man, o, reader, pred, basename, assignments
-        )
-        if res is not None:
-            return res
-
         # (2) which candidates REALLY match (stats/bloom pruning is
-        # conservative): one agg over the candidate files only
-        hits = {
-            r["__f"]: r["n"]
-            for r in (
-                reader.parquet(*self._paths(cands))
-                .filter(pred)
-                .groupBy(basename.alias("__f"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-        }
-        if not hits:
+        # conservative): the driver path's collected projection, or
+        # one aggregate of its matching rows over the candidate files
+        rows = self._rewrite_where_driver(cands, schema, pred, assignments)
+        n_m = _per_file(
+            self._dml_rows(cands, schema, pred, assignments, where=pred)
+            if rows is None
+            else rows,
+            cands, [_M],
+        )[_M]
+        hit = np.flatnonzero(n_m)
+        if not len(hit):
             return 0
-        touched = [e for e in cands if e.name in hits]
-        n_affected = int(sum(hits.values()))
-        if assignments is None and all(
-            hits.get(e.name) == e.n_rows for e in touched
-        ):
-            # every row of every touched file is deleted: no rewrite
-            # job at all, the files just leave the manifest
-            replaced = {e.name for e in touched}
-            self._commit(
-                o, df=None, target_schema=schema,
-                kept=[e for e in man.files if e.name not in replaced],
-                replaced_names=sorted(replaced), new_entries=[],
-                key_value_metadata=None, cmidx=man.cmidx,
-            )
-            return n_affected
-        # (3) rewrite the touched files, one replacement per source
-        # file: the fid hash-repartition puts each file's rows in one
-        # partition, partitionBy splits collisions back apart, and
-        # (fid, ordered_on, pos) sorting preserves the original stable
-        # order for rows with equal ordering values
-        fid_map = F.create_map(
-            *[
-                lit
-                for i, e in enumerate(touched)
-                for lit in (F.lit(e.name), F.lit(i))
-            ]
-        )
-        df = (
-            reader.parquet(*self._paths(touched))
-            .withColumn(_FID, fid_map[basename])
-            .withColumn(_POS, F.monotonically_increasing_id())
-        )
-        if assignments is None:
-            # SQL DELETE semantics: remove only pred=TRUE rows. A NULL
-            # predicate (null column values, or pre-schema-evolution
-            # rows reading an evolved column as NULL) is NOT a match —
-            # keep the row, consistent with the hit-count scan above
-            # and with update_where's when(pred, ...).otherwise(...).
-            out = df.filter(~F.coalesce(pred, F.lit(False)))
-        else:
-            sel = []
-            for fld in schema.fields:
-                if fld.name in assignments:
-                    v = assignments[fld.name]
-                    vcol = v if isinstance(v, Column) else F.lit(v)
-                    sel.append(
-                        F.when(pred, vcol.cast(fld.dataType))
-                        .otherwise(F.col(fld.name))
-                        .alias(fld.name)
-                    )
-                else:
-                    sel.append(F.col(fld.name))
-            # one select: every assignment and the predicate see the
-            # PRE-update values, whatever columns they share
-            out = df.select(*sel, F.col(_FID), F.col(_POS))
-        new_entries = self._stage_cow_rewrite(out, len(touched), o)
-        self._attach_blooms(
-            new_entries, man.kv.get(_BLOOM_COLS_KV), schema
-        )
-        replaced = {e.name for e in touched}
-        self._commit(
-            o,
-            df=None,
-            target_schema=schema,
-            kept=[e for e in man.files if e.name not in replaced],
-            replaced_names=sorted(replaced),
-            new_entries=new_entries,
-            key_value_metadata=None,
-            cmidx=man.cmidx,
-        )
-        return n_affected
+        touched = [cands[i] for i in hit]
+        delete = assignments is None
+        with self._committing([e.name for e in touched], schema) as staged:
+            # a DELETE of every row of every touched file writes
+            # nothing: the files just leave the manifest
+            if not delete or any(n_m[i] < cands[i].n_rows for i in hit):
+                # (3) one replacement per touched file: DELETE drops
+                # the matches, UPDATE keeps every row with the
+                # post-update values
+                if rows is None:
+                    rows = self._dml_rows(touched, schema, pred, assignments)
+                staged += self._stage_cow(
+                    _kept_rows(rows, touched, [_M] if delete else [], schema),
+                    touched, o,
+                )
+        return int(n_m.sum())
 
-    def _rewrite_where_driver(
-        self, cands, schema, man, o, reader, pred, basename, assignments
-    ) -> int | None:
+    def _rewrite_where_driver(self, cands, schema, pred, assignments):
         """Driver-side DELETE/UPDATE fast path (round-14, guide
-        §1.2): when the candidate files fit the driver-merge gates,
-        ONE scan job evaluates the predicate and the assignment
-        projections in Spark (nothing re-implemented) and returns the
-        flagged post-update rows as Arrow; per-file hit counts, the
-        full-file-delete shortcut, the copy-on-write replacements and
-        the commit are then driver-side pyarrow/fs work. Replaces the
-        hit-count agg + distributed rewrite (2 jobs + shuffle) per
-        DML statement. Returns None to fall back (complex column
-        types, oversized candidates, a result too big for the driver)."""
-        from pyspark.sql import Column
-
+        §1.2): when the candidate files fit the driver gate, ONE scan
+        job collects their row-action projection (``_dml_rows``) as
+        Arrow; per-file hit counts, the full-file-delete shortcut and
+        the copy-on-write replacements are then driver-side pyarrow
+        work, replacing the hit-count aggregate + distributed rewrite
+        (2 jobs + shuffle) per DML statement. Returns None to fall
+        back (complex column types, oversized candidates, a result
+        too big for the driver)."""
         if not gate.arrow_safe(schema) or not gate.fits(
             sum(e.n_rows for e in cands), paths=self._paths(cands)
         ):
             return None
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        MATCH = "__oups_match"
-        fid_map = F.create_map(
-            *[
-                lit
-                for i, e in enumerate(cands)
-                for lit in (F.lit(e.name), F.lit(i))
-            ]
-        )
-        df = (
-            reader.parquet(*self._paths(cands))
-            .withColumn(_FID, fid_map[basename])
-            .withColumn(_POS, F.monotonically_increasing_id())
-        )
-        # NULL predicate is NOT a match (SQL DML semantics), same
-        # coalesce the distributed paths apply
-        flag = F.coalesce(pred, F.lit(False))
-        if assignments is None:
-            sel = [F.col(f.name) for f in schema.fields]
-        else:
-            sel = []
-            for fld in schema.fields:
-                if fld.name in assignments:
-                    v = assignments[fld.name]
-                    vcol = v if isinstance(v, Column) else F.lit(v)
-                    sel.append(
-                        F.when(pred, vcol.cast(fld.dataType))
-                        .otherwise(F.col(fld.name))
-                        .alias(fld.name)
-                    )
-                else:
-                    sel.append(F.col(fld.name))
-        tbl = gate.collect(
-            df.select(*sel, F.col(_FID), F.col(_POS), flag.alias(MATCH))
-        )
-        if tbl is None:
-            return None  # over the hard bail, or refused by Spark
-
-        nf = len(cands)
-        fid = tbl.column(_FID).to_numpy(zero_copy_only=False)
-        bm = tbl.column(MATCH).to_numpy(zero_copy_only=False).astype(bool)
-        n_m_f = np.bincount(fid[bm], minlength=nf)
-        hit = n_m_f > 0
-        n_affected = int(n_m_f.sum())
-        if not n_affected:
-            return 0
-        touched = [cands[i] for i in np.flatnonzero(hit)]
-        replaced = {e.name for e in touched}
-        if assignments is None and all(
-            int(n_m_f[i]) == cands[i].n_rows for i in np.flatnonzero(hit)
-        ):
-            # every row of every touched file is deleted: no rewrite,
-            # the files just leave the manifest
-            self._commit(
-                o, df=None, target_schema=schema,
-                kept=[e for e in man.files if e.name not in replaced],
-                replaced_names=sorted(replaced), new_entries=[],
-                key_value_metadata=None, cmidx=man.cmidx,
-            )
-            return n_affected
-
-        # keep = rows of touched files only (others stay on disk
-        # untouched); DELETE drops matches, UPDATE keeps every row
-        # with the post-update values already projected by the scan
-        keep = hit[fid] & (~bm if assignments is None else True)
-        keep_tbl = tbl.filter(pa.array(keep)).sort_by(
-            [(_FID, "ascending"), (o, "ascending"), (_POS, "ascending")]
-        )
-        data_names = [f.name for f in schema.fields]
-        rewritten: list[FileEntry] = []
-        staging = os.path.join(
-            self.path, f".staging-{uuid.uuid4().hex[:12]}"
-        )
-        os.makedirs(staging, exist_ok=True)
-        try:
-            kfid = keep_tbl.column(_FID).to_numpy(zero_copy_only=False)
-            bounds = np.searchsorted(
-                kfid, np.arange(nf + 1), side="left"
-            )
-            for i in range(nf):
-                lo, hi = int(bounds[i]), int(bounds[i + 1])
-                if hi <= lo:
-                    continue
-                pq.write_table(
-                    keep_tbl.slice(lo, hi - lo).select(data_names),
-                    os.path.join(staging, f"part-{i:05d}.parquet"),
-                    compression="snappy",
-                )
-            stats = _footer_stats(staging, o)
-            if stats is None:
-                stats = []
-                for i in range(nf):
-                    lo, hi = int(bounds[i]), int(bounds[i + 1])
-                    if hi <= lo:
-                        continue
-                    chunk = keep_tbl.slice(lo, hi - lo)
-                    col = chunk.column(o)
-                    stats.append(
-                        (
-                            os.path.join(staging, f"part-{i:05d}.parquet"),
-                            chunk.num_rows,
-                            _norm_tz(pc.min(col).as_py()),
-                            _norm_tz(pc.max(col).as_py()),
-                            None,
-                        )
-                    )
-            rewritten = self._finalize_staged(stats)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-        self._commit_landed = False
-        try:
-            self._attach_blooms(
-                rewritten, man.kv.get(_BLOOM_COLS_KV), schema
-            )
-            self._commit(
-                o,
-                df=None,
-                target_schema=schema,
-                kept=[e for e in man.files if e.name not in replaced],
-                replaced_names=sorted(replaced),
-                new_entries=rewritten,
-                key_value_metadata=None,
-                cmidx=man.cmidx,
-            )
-        except BaseException:
-            if self._commit_landed:
-                raise
-            for e in rewritten:
-                p = os.path.join(self.path, e.name)
-                if os.path.exists(p):
-                    os.remove(p)
-            raise
-        return n_affected
-
-    def _stage_cow_rewrite(self, out, n_files: int, o: str) -> list[FileEntry]:
-        """Stage a copy-on-write rewrite: ``out`` carries ``_FID``
-        (0..n_files-1, one replacement file per source file) and
-        ``_POS`` (stable order among equal ordering values); each fid
-        lands in exactly one partition, is sorted ``(ordered_on,
-        pos)``, and becomes one staged file — a fid whose every row
-        was dropped simply writes nothing. Returns the finalized
-        manifest entries (files already moved into the dataset under
-        fresh opaque names; an aborted commit removes them)."""
-        staging = os.path.join(self.path, f".staging-{uuid.uuid4().hex[:12]}")
-        os.makedirs(staging, exist_ok=True)
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts_conf = ts_set = None
-        try:
-            prev_ts_conf = self.spark.conf.get(ts_conf, None)
-            self.spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            ts_set = True
-        except Exception:  # noqa: BLE001 - conf locked by a custom session
-            pass
-        try:
-            (
-                out.repartition(n_files, F.col(_FID))
-                .sortWithinPartitions(_FID, o, _POS)
-                .drop(_POS)
-                .write.partitionBy(_FID)
-                .mode("overwrite")
-                .parquet(staging)
-            )
-            stats = _footer_stats(staging, o)
-            if stats is None:
-                rows = (
-                    self.spark.read.parquet(staging)
-                    .groupBy(F.input_file_name().alias("f"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.min(o).alias("mn"),
-                        F.max(o).alias("mx"),
-                    )
-                    .collect()
-                )
-                stats = [
-                    (
-                        urllib.parse.unquote(
-                            urllib.parse.urlparse(r["f"]).path
-                        ),
-                        r["n"], r["mn"], r["mx"], None,
-                    )
-                    for r in rows
-                ]
-            return self._finalize_staged(stats)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-            try:
-                if ts_set and prev_ts_conf is not None:
-                    self.spark.conf.set(ts_conf, prev_ts_conf)
-                elif ts_set:
-                    self.spark.conf.unset(ts_conf)
-            except Exception:  # noqa: BLE001
-                pass
+        return gate.collect(self._dml_rows(cands, schema, pred, assignments))
 
     # ------------------------------------------------------ time travel
     def versions(self) -> list[int]:
@@ -3369,16 +2720,6 @@ def _footer_stats(
     scan) when stats can't be trusted: binary/string physical types
     (parquet min/max may be truncated), INT96 (no stats at all), or
     any row group missing stats."""
-    import pyarrow.parquet as pq
-    from datetime import timezone
-
-    def norm(v):
-        # pyarrow returns tz-aware UTC for isAdjustedToUTC timestamps;
-        # Spark collect (session TZ = UTC) returns naive — align.
-        if hasattr(v, "tzinfo") and v.tzinfo is not None:
-            return v.astimezone(timezone.utc).replace(tzinfo=None)
-        return v
-
     out: list[tuple[str, int, Any, Any, dict | None]] = []
     for root, _dirs, names in os.walk(staging):
         for nm in names:
@@ -3410,8 +2751,8 @@ def _footer_stats(
                 st = md.row_group(rg).column(idx).statistics
                 if st is None or not st.has_min_max:
                     return None
-                mins.append(norm(st.min))
-                maxs.append(norm(st.max))
+                mins.append(_norm_tz(st.min))
+                maxs.append(_norm_tz(st.max))
             # Per-column [min, max] BOUNDS for the data-skipping index
             # (every other flat column with trustworthy stats).
             # Strings are included: parquet statistics are bounds by
@@ -3429,12 +2770,104 @@ def _footer_stats(
                     if st is None or not st.has_min_max:
                         cmins = []
                         break
-                    cmins.append(norm(st.min))
-                    cmaxs.append(norm(st.max))
+                    cmins.append(_norm_tz(st.min))
+                    cmaxs.append(_norm_tz(st.max))
                 if cmins:
                     cols[c.path] = (min(cmins), max(cmaxs))
             out.append((p, md.num_rows, min(mins), max(maxs), cols or None))
     return out
+
+
+def _balanced(n: int, target: int) -> list[tuple[int, int]]:
+    """``(offset, length)`` slices of ``n`` ordered rows into
+    ``ceil(n/target)`` BALANCED files, mirroring the distributed
+    path's ``repartitionByRange(ceil(n/target))``: fixed target-row
+    slices would leave a 1-row tail file on ``target*k+1`` rows, and
+    repeated small flushes accumulate off-target fragments that later
+    force coalescing rewrites."""
+    n_files = max(1, -(-n // target))
+    base, extra = divmod(n, n_files)
+    out, off = [], 0
+    for j in range(n_files):
+        ln = base + (1 if j < extra else 0)
+        out.append((off, ln))
+        off += ln
+    return out
+
+
+def _union(a: list[FileEntry], b: list[FileEntry]) -> list[FileEntry]:
+    return list({e.name: e for e in [*a, *b]}.values())
+
+
+def _key_cond(on: list[str]):
+    return functools.reduce(
+        lambda x, y: x & y, [F.col(f"t.{c}") == F.col(f"s.{c}") for c in on]
+    )
+
+
+def _per_file(rows, entries: list[FileEntry], flags: list[str]) -> dict:
+    """Per-file counts of the boolean ``flags`` columns of a row-action
+    projection (``_merge_rows`` / ``_dml_rows``), as arrays indexed
+    like ``entries``: bincounts over a collected Arrow table, or ONE
+    grouped aggregate over the flagged rows of a Spark frame."""
+    n = len(entries)
+    if isinstance(rows, DataFrame):
+        pos = {e.name: i for i, e in enumerate(entries)}
+        out = {f: np.zeros(n, dtype=np.int64) for f in flags}
+        agg = (
+            rows.select(_FID, *flags)
+            .filter(functools.reduce(lambda x, y: x | y, [F.col(f) for f in flags]))
+            .groupBy(_FID)
+            .agg(*[F.sum(F.col(f).cast("long")).alias(f) for f in flags])
+            .collect()
+        )
+        for r in agg:
+            for f in flags:
+                out[f][pos[r[_FID]]] = r[f]
+        return out
+    names = pa.array([e.name for e in entries], type=rows.schema.field(_FID).type)
+    fid = pc.index_in(rows[_FID], value_set=names).to_numpy(zero_copy_only=False)
+    return {
+        f: np.bincount(fid[rows[f].to_numpy(zero_copy_only=False)], minlength=n)
+        for f in flags
+    }
+
+
+def _merge_tally(rows, scan, want_matched: bool, has_update: bool):
+    """The files of ``scan`` a merge truly touches (a matched row when
+    a matched clause is set, or a by-source delete/update) and its
+    result counts over those files, the by-source clauses folded into
+    the totals (Delta's top-level metrics convention)."""
+    if rows is None:
+        return [], {"updated": 0, "deleted": 0, "inserted": 0}
+    c = _per_file(rows, scan, [_M, _DM, _ND, _NU])
+    hit = ((c[_M] > 0) & want_matched) | (c[_ND] > 0) | (c[_NU] > 0)
+    n_dm = int(c[_DM][hit].sum())
+    n_upd = int(c[_M][hit].sum()) - n_dm if has_update else 0
+    return [scan[i] for i in np.flatnonzero(hit)], {
+        "updated": n_upd + int(c[_NU][hit].sum()),
+        "deleted": n_dm + int(c[_ND][hit].sum()),
+        "inserted": 0,
+    }
+
+
+def _kept_rows(rows, touched: list[FileEntry], drop: list[str], schema):
+    """The rows a copy-on-write rewrite writes back — those of the
+    ``touched`` files with none of the ``drop`` flags set — as the
+    data columns plus ``_FID``/``_POS``. A Spark frame is already a
+    scan of ``touched`` only."""
+    cols = [f.name for f in schema.fields] + [_FID, _POS]
+    if isinstance(rows, DataFrame):
+        if drop:
+            rows = rows.filter(
+                ~functools.reduce(lambda x, y: x | y, [F.col(f) for f in drop])
+            )
+        return rows.select(*cols)
+    names = pa.array([e.name for e in touched], type=rows.schema.field(_FID).type)
+    keep = pc.is_in(rows[_FID], value_set=names)
+    for f in drop:
+        keep = pc.and_(keep, pc.invert(rows[f]))
+    return rows.filter(keep).select(cols)
 
 
 def _with_file_rank(
@@ -3503,8 +2936,6 @@ def pandas_to_spark_arrow(pdf, session_tz: str):
     naive→tz cast assumes UTC — the two agree exactly when the
     session zone is UTC (which ``ensure_session_confs`` guarantees
     for every query session)."""
-    import pyarrow as pa
-
     if session_tz not in ("UTC", "Etc/UTC"):
         return None
     try:

@@ -1025,19 +1025,31 @@ class DeltaLogManifest(_ParquetFilesCodec):
             next_names = _LazyNames(
                 lambda: frozenset(self._sidecar_names(dirpath, ckpt_ref))
             )
-            # the REPLACED head's chain (known from this instance's
-            # last read/commit of this dirpath) must survive this
-            # commit's sweep one extra commit: a reader that loaded
-            # that head just before our CAS may still be mid-chain-
-            # resolve, and when the chain is a FOREIGN writer's (not
-            # in our _prev_keep) its BASE checkpoint is typically far
-            # older than gc_grace_s — without this it is deleted
+            # the REPLACED head's chain must survive this commit's
+            # sweep one extra commit: a reader that loaded that head
+            # just before our CAS may still be mid-chain-resolve, and
+            # when the chain is a FOREIGN writer's (not in our
+            # _prev_keep) its BASE checkpoint is typically far older
+            # than gc_grace_s — without this it is deleted
             # immediately, failing that reader systematically
             # (ADVICE r13). Mirrors the two-phase posture used for
-            # this instance's own released refs.
+            # this instance's own released refs. The chain is this
+            # instance's cached read of that head when it has one,
+            # else the head itself (a fresh instance, or one whose
+            # cache is of an older head); a head that moved past
+            # expect_token fails the CAS below, sweeping nothing.
+            if seen is not None and seen[0] == expect_token:
+                replaced = (seen[2], seen[3])
+            else:
+                hit = self.transport.read_head(dirpath)
+                if hit is not None and hit[1] == expect_token:
+                    cur = json.loads(_plain(hit[0]))
+                    replaced = (cur.get("files_ref"), cur.get("deltas", []))
+                else:
+                    replaced = (None, [])
             replaced_chain = (
-                {seen[2]} | {d["ref"] for d in seen[3] if d.get("ref")}
-                if seen is not None and seen[2]
+                {replaced[0]} | {d["ref"] for d in replaced[1] if d.get("ref")}
+                if replaced[0]
                 else set()
             )
         else:

@@ -57,6 +57,20 @@ def _base(spark, path):
     return ds
 
 
+def _base_null_scope(spark, path):
+    """Two 30-row flushes in 10-row files whose scope column ``g`` is
+    NULL on every third row."""
+    ds = OrderedDataset(spark, path)
+    for lo in (0, 30):
+        rows = [
+            (i, i % 4, float(i), None if i % 3 == 0 else i % 2)
+            for i in range(lo, lo + 30)
+        ]
+        ds.write(df=spark.createDataFrame(rows, "ts long, k long, v double, g long"),
+                 ordered_on="ts", row_group_target_size=10)
+    return ds
+
+
 def _changelog(spark, lo):
     rows = [(f"u{i % 30}", lo + i, float(i), i % 11 == 0) for i in range(60)]
     return spark.createDataFrame(rows, "user_id string, ts long, v double, d boolean")
@@ -118,6 +132,16 @@ _SITES = {
         lambda sp, p: _ds(sp, p).merge_into(
             _source(sp), on="ts", when_matched_update={"v": F.col("s.v")},
             when_not_matched_insert=True,
+        ),
+        _ds_rows, OrderedDataset, "_merge_into_driver",
+    ),
+    # a NULL scope value is out of scope on both paths: those rows
+    # survive the by-source delete
+    "merge_into_by_source": (
+        _base_null_scope,
+        lambda sp, p: _ds(sp, p).merge_into(
+            _source(sp), on="ts", when_not_matched_by_source_delete=True,
+            by_source_scope=[("g", "==", 1)],
         ),
         _ds_rows, OrderedDataset, "_merge_into_driver",
     ),

@@ -132,6 +132,30 @@ def test_manifest_contract(tmp_path, encoding, transport_kind):
     assert final.generation == 1 + 2 * len(steps)
 
 
+@pytest.mark.parametrize("transport_kind", ["posix", "memory"])
+def test_fresh_instance_fold_keeps_replaced_chain(tmp_path, transport_kind):
+    """A delta-log commit through an encoding instance that never read
+    the head it replaces (no cached chain: it folds a full
+    checkpoint) keeps that head's chain for one more commit, so a
+    reader that loaded the head lazily still resolves it — even when
+    the posix sweep reclaims everything else at once."""
+    transport, d = _storage(transport_kind, tmp_path)
+    w = DeltaLogManifest(transport)
+    m = Manifest(ordered_on="ts")
+    m.files = [_entry(0)]
+    m.save(d, w)
+    m.files = list(m.files) + [_entry(1)]
+    m.save(d, w)  # a delta commit: the head is a base + one delta
+    reader = Manifest.load(d, DeltaLogManifest(transport))
+    loaded = Manifest.load(d, DeltaLogManifest(transport))
+    loaded.files = list(loaded.files) + [_entry(2)]
+    loaded.save(d, DeltaLogManifest(transport))
+    assert _names(reader) == ["f0000.parquet", "f0001.parquet"]
+    assert _names(Manifest.load(d, DeltaLogManifest(transport))) == [
+        "f0000.parquet", "f0001.parquet", "f0002.parquet"
+    ]
+
+
 def _contender(encoding: str, dirpath: str, tag: str, n: int) -> None:
     """Two-process hammer child: n read-modify-write commits with
     reload-and-retry on conflict."""

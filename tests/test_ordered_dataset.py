@@ -10,6 +10,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from oups_spark.store import driver_gate
 from oups_spark.store.dataset import OrderedDataset
 
 
@@ -445,13 +446,14 @@ def test_driver_merge_fast_path_equals_spark_path(spark, scratch):
             validate_monotonic=False,
             known_stats=(b["ts"].min(), b["ts"].max(), len(b)),
         )
-        slow.write(
-            df=spark.createDataFrame(b),
-            ordered_on="ts",
-            duplicates_on=["sym"],
-            row_group_target_size=16,
-            use_driver_merge=False,  # force the distributed path
-        )
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(driver_gate, "MAX_ROWS", 0)  # the distributed path
+            slow.write(
+                df=spark.createDataFrame(b),
+                ordered_on="ts",
+                duplicates_on=["sym"],
+                row_group_target_size=16,
+            )
     got = fast.read().toPandas().sort_values(["ts", "sym"], ignore_index=True)
     want = slow.read().toPandas().sort_values(["ts", "sym"], ignore_index=True)
     pd.testing.assert_frame_equal(got, want)
@@ -470,13 +472,14 @@ def test_driver_merge_fast_path_equals_spark_path(spark, scratch):
         duplicates_on=["sym"],
         row_group_target_size=16,
     )
-    slow.write(
-        df=spark.createDataFrame(extra),
-        ordered_on="ts",
-        duplicates_on=["sym"],
-        row_group_target_size=16,
-        use_driver_merge=False,
-    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(driver_gate, "MAX_ROWS", 0)
+        slow.write(
+            df=spark.createDataFrame(extra),
+            ordered_on="ts",
+            duplicates_on=["sym"],
+            row_group_target_size=16,
+        )
     pd.testing.assert_frame_equal(
         fast.read().toPandas().sort_values(["ts", "sym"], ignore_index=True),
         slow.read().toPandas().sort_values(["ts", "sym"], ignore_index=True),
@@ -700,11 +703,12 @@ def test_bloom_skipping_prunes_point_lookups(spark, scratch):
         .alias("tag"),
     )
     ds = OrderedDataset(spark, path)
-    ds.write(
-        df=df, ordered_on="seq", row_group_target_size=2_000,
-        validate_monotonic=False, use_driver_merge=False,
-        bloom_cols=["session", "tag"],
-    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(driver_gate, "MAX_ROWS", 0)  # the distributed path
+        ds.write(
+            df=df, ordered_on="seq", row_group_target_size=2_000,
+            validate_monotonic=False, bloom_cols=["session", "tag"],
+        )
     man = Manifest.load(path)
     assert all(e.blooms and set(e.blooms) == {"session", "tag"}
                for e in man.files)
@@ -905,11 +909,12 @@ def test_bloom_probe_type_coercion_no_false_negative(spark, scratch):
         .alias("code"),
     )
     ds = OrderedDataset(spark, path)
-    ds.write(
-        df=df, ordered_on="seq", row_group_target_size=1_000,
-        validate_monotonic=False, use_driver_merge=False,
-        bloom_cols=["session", "code"],
-    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(driver_gate, "MAX_ROWS", 0)  # the distributed path
+        ds.write(
+            df=df, ordered_on="seq", row_group_target_size=1_000,
+            validate_monotonic=False, bloom_cols=["session", "code"],
+        )
     ds = OrderedDataset(spark, path)
     # float probe of a long column: SQL says session == 2.0 matches
     # session 2 rows; the bloom must not prune them
@@ -1845,6 +1850,38 @@ def test_compact_zorder_conflict_hammer(spark, scratch):
     assert (got["uid"] == 99).sum() == 4
 
 
+def test_compact_rebases_over_disjoint_concurrent_append(spark, scratch):
+    """Plain compact commits through the same CAS/rebase path as every
+    write: a concurrent append range-disjoint from the coalesced run
+    is absorbed by a rebase (no re-run, no conflict surfaced), and
+    the final state holds both the coalesced file and the append."""
+    import os
+
+    import pandas as pd
+
+    path = os.path.join(scratch, "compact_rebase")
+    df, pdf = _dml_frame(spark)
+    ds = OrderedDataset(spark, path, deletion_grace_s=0)
+    ds.write(df=df, ordered_on="ts", row_group_target_size=10)
+    later = pd.DataFrame(
+        {
+            "ts": pd.date_range("2024-03-01", periods=4, freq="h"),
+            "uid": [99] * 4,
+            "v": [500.0] * 4,
+        }
+    )
+    OrderedDataset(spark, path, deletion_grace_s=0).write(
+        df=spark.createDataFrame(later), ordered_on="ts"
+    )
+    assert ds.compact(row_group_target_size=40) == 4
+    assert ds.conflict_rebases == 1 and ds.conflict_reruns == 0
+    fresh = OrderedDataset(spark, path)
+    assert [e.n_rows for e in fresh.manifest.files] == [40, 4]
+    got = fresh.read().toPandas().sort_values("ts", ignore_index=True)
+    want = pd.concat([pdf, later], ignore_index=True)
+    pd.testing.assert_frame_equal(got[["ts", "uid", "v"]], want)
+
+
 def test_merge_into_failure_leaves_no_orphan_files(spark, scratch):
     """A merge that fails AFTER the copy-on-write replacements are
     finalized (here: the step-5 null-ordered_on insert raise) must
@@ -1895,6 +1932,76 @@ def test_merge_into_failure_leaves_no_orphan_files(spark, scratch):
         f for f in on_disk - referenced if not f.startswith("manifest")
     }
     assert orphans == set(), f"leaked files: {orphans}"
+
+
+def _run_failing_op(spark, ds, op, pdf):
+    import pandas as pd
+
+    if op == "write":
+        # overlaps the two middle files: a keep-last rewrite of both
+        batch = pdf.iloc[12:28].assign(v=-1.0)
+        ds.write(df=spark.createDataFrame(batch), ordered_on="ts",
+                 duplicates_on=["uid"], row_group_target_size=10)
+    elif op == "merge_into":
+        src = pd.DataFrame(
+            {
+                "ts": [pdf["ts"][3], pdf["ts"][39] + pd.Timedelta(hours=1)],
+                "uid": [3, 777],
+                "v": [99.0, 2.5],
+            }
+        )
+        ds.merge_into(spark.createDataFrame(src), on="ts",
+                      when_matched_update={"v": 99.0})
+    elif op == "delete_where":
+        ds.delete_where([("uid", "=", 3)])
+    else:
+        ds.compact(row_group_target_size=40)
+
+
+@pytest.mark.parametrize("cap", [None, 0])
+@pytest.mark.parametrize("op", ["write", "merge_into", "delete_where", "compact"])
+def test_failure_before_cas_removes_staged_files(
+    spark, scratch, monkeypatch, op, cap
+):
+    """Every data change stages its files into the dataset dir before
+    the manifest CAS references them. A failure between the two —
+    here ``_attach_blooms`` raising, or for ``compact`` the manifest
+    save itself — must remove them, on the driver path (default
+    caps) and the distributed one (row cap 0): afterwards the dataset
+    dir holds exactly the manifest's files and the rows are
+    unchanged."""
+    import os
+
+    import pandas as pd
+
+    from oups_spark.store.manifest import Manifest
+
+    df, pdf = _dml_frame(spark)
+    path = os.path.join(scratch, f"fail_{op}_{cap}")
+    ds = OrderedDataset(spark, path, deletion_grace_s=0)
+    ds.write(df=df, ordered_on="ts", row_group_target_size=10)
+    gen0 = ds.manifest.generation
+
+    def boom(*a, **k):
+        raise OSError("simulated failure before the CAS")
+
+    with monkeypatch.context() as m:
+        if cap is not None:
+            m.setattr(driver_gate, "MAX_ROWS", cap)
+        if op == "compact":
+            m.setattr(Manifest, "save", boom)
+        else:
+            m.setattr(OrderedDataset, "_attach_blooms", boom)
+        with pytest.raises(OSError, match="before the CAS"):
+            _run_failing_op(spark, ds, op, pdf)
+
+    assert ds.manifest.generation == gen0  # the handle never moved
+    fresh = OrderedDataset(spark, path)
+    assert fresh.manifest.generation == gen0
+    on_disk = {n for n in os.listdir(path) if n.endswith(".parquet")}
+    assert on_disk == {e.name for e in fresh.manifest.files}
+    got = fresh.read().toPandas().sort_values("ts", ignore_index=True)
+    pd.testing.assert_frame_equal(got[["ts", "uid", "v"]], pdf)
 
 
 def test_compact_zorder_scoped_rewrites_only_in_scope_files(spark, scratch):

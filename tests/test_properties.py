@@ -6,11 +6,14 @@ any chunking of a seed equals the one-shot aggregation. Plus
 
 from __future__ import annotations
 
+import contextlib
+
 import pandas as pd
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from oups_spark.store import driver_gate
 from oups_spark.store.dataset import OrderedDataset
 from oups_spark.streaming.aggstream import AggStream, KeyConfig
 
@@ -24,6 +27,16 @@ def _mk_batch(draw_rows: list[tuple[int, int, float]]) -> pd.DataFrame:
             "val": [v for _, _, v in rows],
         }
     )
+
+
+@contextlib.contextmanager
+def _gate_cap(cap):
+    """Run the block with ``driver_gate.MAX_ROWS`` at ``cap`` (0 sends
+    every store op distributed); None keeps the default."""
+    with pytest.MonkeyPatch.context() as m:
+        if cap is not None:
+            m.setattr(driver_gate, "MAX_ROWS", cap)
+        yield
 
 
 batch_strategy = st.lists(
@@ -46,25 +59,25 @@ batch_strategy = st.lists(
     batches=st.lists(batch_strategy, min_size=1, max_size=4),
     target=st.sampled_from([3, 5, 100]),
     # cover BOTH writers: the driver-side pyarrow fast path (auto for
-    # these small batches) and the distributed merge path (forced)
-    driver_merge=st.sampled_from([None, False]),
+    # these small batches) and the distributed merge path (row cap 0)
+    cap=st.sampled_from([None, 0]),
 )
 def test_merge_equivalence_property(
-    spark, tmp_path_factory, batches, target, driver_merge
+    spark, tmp_path_factory, batches, target, cap
 ):
     """N successive merge writes == pandas emulation (concat in write
     order, stable sort, keep-last dedup on (sym, ts))."""
     root = tmp_path_factory.mktemp("prop")
     ds = OrderedDataset(spark, str(root / "ds"))
     frames = [_mk_batch(b) for b in batches]
-    for f in frames:
-        ds.write(
-            df=spark.createDataFrame(f),
-            ordered_on="ts",
-            duplicates_on=["sym"],
-            row_group_target_size=target,
-            use_driver_merge=driver_merge,
-        )
+    with _gate_cap(cap):
+        for f in frames:
+            ds.write(
+                df=spark.createDataFrame(f),
+                ordered_on="ts",
+                duplicates_on=["sym"],
+                row_group_target_size=target,
+            )
     got = (
         ds.read().toPandas().sort_values(["ts", "sym"], ignore_index=True)
     )
@@ -687,9 +700,11 @@ def _dml_engine_pred(conj):
     del_conj=_dml_conj,
     upd_conj=_dml_conj,
     target=st.sampled_from([3, 6, 100]),
+    # the driver fast path (default) or the distributed path (cap 0)
+    cap=st.sampled_from([None, 0]),
 )
 def test_dml_matches_pandas_ground_truth_property(
-    spark, tmp_path_factory, rows, del_conj, upd_conj, target
+    spark, tmp_path_factory, rows, del_conj, upd_conj, target, cap
 ):
     """PROPERTY: for any dataset layout (1..many files) and any DNF
     conjunction over the three column types, `delete_where` then
@@ -707,11 +722,12 @@ def test_dml_matches_pandas_ground_truth_property(
         row_group_target_size=target, validate_monotonic=False,
     )
 
-    n_del = ds.delete_where(_dml_engine_pred(del_conj))
+    with _gate_cap(cap):
+        n_del = ds.delete_where(_dml_engine_pred(del_conj))
+        n_upd = ds.update_where(_dml_engine_pred(upd_conj), {"val": -999.0})
     truth = pdf[~_dml_mask(pdf, del_conj)].reset_index(drop=True)
     assert n_del == len(pdf) - len(truth)
 
-    n_upd = ds.update_where(_dml_engine_pred(upd_conj), {"val": -999.0})
     m = _dml_mask(truth, upd_conj)
     assert n_upd == int(m.sum())
     truth = truth.copy()
@@ -836,11 +852,14 @@ def test_merge_into_matches_pandas_ground_truth_property(
     lo=st.integers(min_value=0, max_value=10),
     span=st.integers(min_value=1, max_value=15),
     target=st.sampled_from([3, 7, 100]),
+    # the driver fast path (default) or the distributed path (cap 0)
+    cap=st.sampled_from([None, 0]),
 )
 # every row in scope and an empty snapshot: the sync deletes all rows
-@example(vals=[0.0] * 4, snap={}, lo=0, span=4, target=3)
+@example(vals=[0.0] * 4, snap={}, lo=0, span=4, target=3, cap=None)
+@example(vals=[0.0] * 4, snap={}, lo=0, span=4, target=3, cap=0)
 def test_merge_full_sync_matches_pandas_ground_truth_property(
-    spark, tmp_path_factory, vals, snap, lo, span, target
+    spark, tmp_path_factory, vals, snap, lo, span, target, cap
 ):
     """PROPERTY: full-snapshot sync (WHEN NOT MATCHED BY SOURCE
     DELETE + matched update + insert, scoped) reads back exactly the
@@ -876,16 +895,17 @@ def test_merge_full_sync_matches_pandas_ground_truth_property(
             "val": list(snap.values()),
         }
     )
-    res = ds.merge_into(
-        spark.createDataFrame(
-            src, "ts timestamp, k long, val double"
-        ),
-        on="k",
-        when_matched_update={"val": SF.col("s.val")},
-        when_not_matched_insert=True,
-        when_not_matched_by_source_delete=True,
-        by_source_scope=[("ts", ">=", t_lo), ("ts", "<", t_hi)],
-    )
+    with _gate_cap(cap):
+        res = ds.merge_into(
+            spark.createDataFrame(
+                src, "ts timestamp, k long, val double"
+            ),
+            on="k",
+            when_matched_update={"val": SF.col("s.val")},
+            when_not_matched_insert=True,
+            when_not_matched_by_source_delete=True,
+            by_source_scope=[("ts", ">=", t_lo), ("ts", "<", t_hi)],
+        )
 
     in_scope = (pdf["ts"] >= t_lo) & (pdf["ts"] < t_hi)
     matched = pdf["k"].isin(snap)

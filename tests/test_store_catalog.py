@@ -10,6 +10,7 @@ import os
 import pandas as pd
 import pytest
 
+from oups_spark.store import driver_gate
 from oups_spark.store.indexer import toplevel
 from oups_spark.store.store import Store
 
@@ -1350,10 +1351,12 @@ def test_merge_into_wide_manifest_prunes_synthetic_entries(spark, tmp_path):
         }
     )
     ds = OrderedDataset(spark, d, backend=be)
-    ds.write(
-        df=spark.createDataFrame(pdf), ordered_on="ts",
-        row_group_target_size=100, use_driver_merge=False,
-    )
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(driver_gate, "MAX_ROWS", 0)  # the distributed path
+        ds.write(
+            df=spark.createDataFrame(pdf), ordered_on="ts",
+            row_group_target_size=100,
+        )
     n_real = ds.n_files
     man = ds.manifest
     t_far = pd.Timestamp("2030-01-01")

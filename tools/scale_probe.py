@@ -16,6 +16,7 @@ Writes nothing outside .scratch/; prints one line per query.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import sys
@@ -27,6 +28,20 @@ BASE = "/root/testdata/sf0.1"
 SMALL_TABLES = (
     "region nation customer supplier part orders lineitem".split()
 )
+
+@contextlib.contextmanager
+def _distributed():
+    """Store writes inside the block take their distributed path: the
+    driver gate's row cap is 0 (restored afterwards)."""
+    from oups_spark.store import driver_gate
+
+    cap = driver_gate.MAX_ROWS
+    driver_gate.MAX_ROWS = 0
+    try:
+        yield
+    finally:
+        driver_gate.MAX_ROWS = cap
+
 
 DEFAULT_QUERIES = [
     "dedup_exact",
@@ -126,7 +141,7 @@ def write_probe() -> int:
     - MERGE cost ∝ OVERLAP, not table size: a batch spanning exactly
       2 interior files (5,000 stored rows at either sf by
       construction) costs the same against 4 files as against 40.
-    Both run the DISTRIBUTED write path (use_driver_merge=False) —
+    Both run the DISTRIBUTED write path (driver gate row cap 0) —
     the driver fast path would flatten everything at this scale and
     hide a regression in the path a cluster actually exercises.
     """
@@ -166,10 +181,11 @@ def write_probe() -> int:
             return round(time.time() - t0, 3)
 
         base = ev.orderBy("ts")
-        OrderedDataset(spark, path).write(
-            df=base, ordered_on="ts", row_group_target_size=2_500,
-            validate_monotonic=False, use_driver_merge=False,
-        )
+        with _distributed():
+            OrderedDataset(spark, path).write(
+                df=base, ordered_on="ts", row_group_target_size=2_500,
+                validate_monotonic=False,
+            )
         ds = OrderedDataset(spark, path)
         nf = ds.n_files
         entries = ds.manifest.files
@@ -182,10 +198,11 @@ def write_probe() -> int:
             (F.col("id") + 10_000_000).alias("event_id"),
             F.rand(7).alias("value"),
         )
-        t_append = timed(lambda: OrderedDataset(spark, path).write(
-            df=app, validate_monotonic=False, use_driver_merge=False,
-            row_group_target_size=2_500,
-        ))
+        with _distributed():
+            t_append = timed(lambda: OrderedDataset(spark, path).write(
+                df=app, validate_monotonic=False,
+                row_group_target_size=2_500,
+            ))
 
         # MERGE: 1,000 rows spanning exactly 2 interior files
         # (files 1-2: 5,000 stored rows at EITHER sf — fixed overlap)
@@ -199,10 +216,11 @@ def write_probe() -> int:
             F.rand(11).alias("value"),
         ).orderBy("ts")
         before_rows = OrderedDataset(spark, path).n_rows
-        t_merge = timed(lambda: OrderedDataset(spark, path).write(
-            df=mrg, validate_monotonic=False, use_driver_merge=False,
-            row_group_target_size=2_500,
-        ))
+        with _distributed():
+            t_merge = timed(lambda: OrderedDataset(spark, path).write(
+                df=mrg, validate_monotonic=False,
+                row_group_target_size=2_500,
+            ))
         after = OrderedDataset(spark, path)
         assert after.n_rows == before_rows + 1_000
         prev = results.get(sf)
@@ -270,11 +288,11 @@ def merge_wide_probe() -> int:
             path = os.path.join(root, f"ds_x{extra}_r{rep}")
             be = DeltaLogManifest(PosixTransport())
             ds = OrderedDataset(spark, path, backend=be)
-            ds.write(
-                df=ev.orderBy("ts"), ordered_on="ts",
-                row_group_target_size=2_500, validate_monotonic=False,
-                use_driver_merge=False,
-            )
+            with _distributed():
+                ds.write(
+                    df=ev.orderBy("ts"), ordered_on="ts",
+                    row_group_target_size=2_500, validate_monotonic=False,
+                )
             if extra:
                 man = ds.manifest
                 files = list(man.files)
