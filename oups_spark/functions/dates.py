@@ -88,38 +88,54 @@ def anchor_us(origin=None, offset=None) -> int:
 
 
 def floor_ts_scalar(ts, freq: str, *, origin=None, offset=None):
-    """Driver-side (pandas) twin of :func:`floor_ts` for manifest
-    arithmetic — same epoch anchoring for fixed freqs, same calendar
-    anchoring for D/W/MS/YS."""
+    """Driver-side twin of :func:`floor_ts` — same epoch anchoring for
+    fixed freqs, same calendar anchoring for D/W/MS/YS. ``ts`` is one
+    timestamp (returns a ``pd.Timestamp``) or an array of naive UTC
+    timestamps (returns ``datetime64[us]``)."""
+    import numpy as np
     import pandas as pd
 
     n, unit = _parse(freq)
-    t = pd.Timestamp(ts)
     anchored = origin is not None or offset is not None
     if anchored and not is_fixed_freq(freq):
         raise ValueError("origin/offset anchoring requires a fixed frequency")
-    if unit in _FIXED_SECONDS or (anchored and unit in ("D", "W")):
-        step = n * (
-            _FIXED_SECONDS.get(unit) or 86400 * (7 if unit == "W" else 1)
-        )
-        a = anchor_us(origin, offset)
-        rel = t.value // 1000 - a
-        return pd.Timestamp((rel - rel % (step * 1_000_000) + a) * 1000)
-    if unit == "D":
-        return t.floor(f"{n}D")
-    if unit == "W":
-        if n == 1:
-            # ISO week starting Monday, matching date_trunc('week')
-            return (t - pd.Timedelta(days=int(t.weekday()))).normalize()
-        rel = t.value // 1000 - _MONDAY_EPOCH_US
-        step = n * 7 * 86400 * 1_000_000
-        return pd.Timestamp((rel - rel % step + _MONDAY_EPOCH_US) * 1000)
+    scalar = np.ndim(ts) == 0
+    us = (
+        np.array([pd.Timestamp(ts).value // 1000])
+        if scalar
+        else np.asarray(ts, dtype="datetime64[us]").view("int64")
+    )
     if unit in ("MS", "M", "YS", "Y"):
         mper = months_per(freq)
-        m = (t.year - 1970) * 12 + t.month - 1
-        fm = m - m % mper
-        return pd.Timestamp(year=1970 + fm // 12, month=fm % 12 + 1, day=1)
-    raise ValueError(f"unsupported period unit: {unit!r}")
+        m = us.view("datetime64[us]").astype("datetime64[M]").view("int64")
+        out = (m - m % mper).view("datetime64[M]").astype("datetime64[us]")
+    elif unit in _FIXED_SECONDS or unit in ("D", "W"):
+        # D is epoch-anchored like the fixed units (date_trunc('day')
+        # in UTC at n=1); W is anchored at the epoch Monday
+        # (date_trunc('week') at n=1); origin/offset move either anchor
+        step = int(period_duration(freq) * 1_000_000)  # exact: fixed units
+        if anchored:
+            a = anchor_us(origin, offset)
+        else:
+            a = _MONDAY_EPOCH_US if unit == "W" else 0
+        rel = us - a
+        out = (rel - rel % step + a).view("datetime64[us]")
+    else:
+        raise ValueError(f"unsupported period unit: {unit!r}")
+    return pd.Timestamp(out[0]) if scalar else out
+
+
+def next_edge_us(us, freq: str, k=1):
+    """Driver-side twin of :func:`next_edge` over epoch microseconds:
+    the grid point ``k`` periods after each on-grid value (``k`` may be
+    an array) — calendar-exact for month/year units."""
+    import numpy as np
+
+    mper = months_per(freq)
+    if mper is None:
+        return us + k * int(period_duration(freq) * 1_000_000)
+    m = np.asarray(us).view("datetime64[us]").astype("datetime64[M]").view("int64")
+    return (m + k * mper).view("datetime64[M]").astype("datetime64[us]").view("int64")
 
 
 def is_fixed_freq(freq: str) -> bool:

@@ -37,6 +37,14 @@ def dnf_term(col: str, op: str, value) -> Column:
     return _OPS[op](F.col(col), value)
 
 
+def _dnf(filters, term):
+    """OR of AND-groups of ``term(*t)`` (a flat list of tuples is one
+    AND-group)."""
+    if filters and isinstance(filters[0], tuple):
+        filters = [filters]
+    return reduce(or_, [reduce(and_, [term(*t) for t in group]) for group in filters])
+
+
 def dnf_condition(filters: list[list[tuple]] | list[tuple]) -> Column:
     """Build a Column from DNF filters.
 
@@ -44,12 +52,31 @@ def dnf_condition(filters: list[list[tuple]] | list[tuple]) -> Column:
     means ``(a > 1 AND b = 'x') OR c IN (1, 2)``. A flat list of
     tuples is treated as one AND-group.
     """
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    groups = [
-        reduce(and_, [dnf_term(*term) for term in group]) for group in filters
-    ]
-    return reduce(or_, groups)
+    return _dnf(filters, dnf_term)
+
+
+def dnf_expression(filters: list[list[tuple]] | list[tuple], schema):
+    """The pyarrow twin of :func:`dnf_condition` for a table of Arrow
+    ``schema``: the op table over ``pc.field``. As in SQL, a term on a
+    NULL drops the row and a ``not-in`` list holding None keeps none;
+    timestamp values are read as naive UTC."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def term(col: str, op: str, value):
+        if op not in _OPS:
+            raise ValueError(f"unknown filter op {op!r}; valid: {sorted(_OPS)}")
+        if op == "not-in" and None in list(value):
+            return pc.scalar(False)
+        typ = schema.field(col).type
+        if pa.types.is_timestamp(typ) and op != "~":
+            many = op in ("in", "not-in")
+            vals = pa.array(list(value) if many else [value]).cast(typ)
+            value = vals if many else vals[0]
+        c = pc.field(col)
+        return _OPS[op](c, value) & c.is_valid()
+
+    return _dnf(filters, term)
 
 
 def dnf_filter(df: DataFrame, filters: list[list[tuple]] | list[tuple] | None) -> DataFrame:

@@ -133,18 +133,8 @@ def assign_edge_bin(
 
     if closed not in ("left", "right"):
         raise ValueError(f"closed must be left|right, got {closed!r}")
-    ends = list(ends)
-    is_ts = isinstance(ends[0], (pd.Timestamp,)) or "datetime" in str(
-        getattr(ends[0], "dtype", "")
-    )
-    if is_ts:
-        ends_us = [int(pd.Timestamp(e).value // 1000) for e in ends]
-        t = unix_us(col)
-    else:
-        ends_us = ends
-        t = col
-    if sorted(ends_us) != ends_us:
-        raise ValueError("bin edges must be sorted ascending")
+    is_ts, ends_us = edge_values(ends)
+    t = unix_us(col) if is_ts else col
     if len(ends_us) <= max_codegen_edges:
         arr = F.array(*[F.lit(v) for v in ends_us])
         if closed == "left":
@@ -164,6 +154,36 @@ def assign_edge_bin(
         return pd.Series(np.searchsorted(grid, vals, side=side))
 
     return F.pandas_udf(_bucket, "long")(t)
+
+
+def edge_values(ends) -> tuple[bool, list]:
+    """``(is_ts, values)`` of a sorted edge grid: epoch microseconds
+    for timestamp edges, the edges themselves otherwise."""
+    import pandas as pd
+
+    ends = list(ends)
+    is_ts = isinstance(ends[0], (pd.Timestamp,)) or "datetime" in str(
+        getattr(ends[0], "dtype", "")
+    )
+    vals = [int(pd.Timestamp(e).value // 1000) for e in ends] if is_ts else ends
+    if sorted(vals) != vals:
+        raise ValueError("bin edges must be sorted ascending")
+    return is_ts, vals
+
+
+def edge_labels(bin_by) -> tuple[list, list]:
+    """``(labels, ends)`` of an explicit edge ``bin_by``: a sequence of
+    ends (each end labels its own chunk) or a ``(labels, ends)``
+    tuple."""
+    if isinstance(bin_by, tuple) and len(bin_by) == 2:
+        labels, ends = list(bin_by[0]), list(bin_by[1])
+    else:
+        labels = ends = list(bin_by)
+    if len(labels) != len(ends):
+        raise ValueError(
+            "number of chunk labels has to be equal to number of chunk ends"
+        )
+    return labels, ends
 
 
 def segment_agg_edges(
@@ -191,12 +211,9 @@ def segment_agg_edges(
     """
     import pandas as pd
 
-    ends = list(ends)
-    labels = list(labels) if labels is not None else ends
-    if len(labels) != len(ends):
-        raise ValueError(
-            "number of chunk labels has to be equal to number of chunk ends"
-        )
+    labels, ends = edge_labels(
+        (labels, ends) if labels is not None else ends
+    )
     order_key = F.struct(ordered_on, *(tiebreak or []))
     idx = assign_edge_bin(F.col(ordered_on), ends, closed=closed)
     binned = df.withColumn("__edge_idx", idx).filter(
@@ -247,10 +264,7 @@ def segment_agg(
     semantics: null, not zero).
     """
     if not isinstance(bin_by, str):
-        if isinstance(bin_by, tuple) and len(bin_by) == 2:
-            labels, ends = bin_by
-        else:
-            labels, ends = None, bin_by
+        labels, ends = edge_labels(bin_by)
         return segment_agg_edges(
             df, ordered_on, agg, ends=ends, labels=labels, closed=closed,
             tiebreak=tiebreak, bin_col=bin_col,
@@ -315,8 +329,9 @@ def bucketize(
 
 def _offset_lookup(offsets: dict[int, float | int]) -> Column:
     """O(1) per-row offset lookup: literal array indexed by bucket id
-    (a WHEN-chain re-evaluates every branch condition)."""
-    size = max(offsets) + 1
+    (a WHEN-chain re-evaluates every branch condition). An input with
+    no rows has no buckets."""
+    size = max(offsets, default=0) + 1
     arr = [float(offsets.get(i, 0)) for i in range(size)]
     return F.element_at(
         F.array(*[F.lit(v) for v in arr]), (F.col("__bucket") + 1).cast("int")
@@ -390,6 +405,58 @@ def row_count_bin_agg(
     )
 
 
+def snap_grid(bin_by: str, snap_by, *, snap_closed="left", origin=None, offset=None):
+    """Validate a snapshot grid against its bins (the compatibility
+    rules of :func:`snapshot_agg`); returns the explicit ``snap_by``
+    instants (``pd.Timestamp``), or None for a frequency grid."""
+    import pandas as pd
+
+    anchored = origin is not None or offset is not None
+    snap_edges = None
+    if not isinstance(snap_by, str):
+        snap_edges = [pd.Timestamp(e) for e in list(snap_by)]
+        if not snap_edges:
+            raise ValueError("snap_by edge sequence must be non-empty")
+        if any(a >= b for a, b in zip(snap_edges, snap_edges[1:])):
+            raise ValueError(
+                "snap_by edge sequence must be strictly ascending"
+            )
+        if anchored:
+            raise ValueError(
+                "origin/offset anchoring applies to frequency grids, "
+                "not explicit snap_by edges"
+            )
+    elif anchored and not (is_fixed_freq(bin_by) and is_fixed_freq(snap_by)):
+        raise ValueError(
+            "origin/offset anchoring requires fixed bin_by AND snap_by"
+        )
+    if snap_edges is not None:
+        pass  # no divisibility constraint for explicit instants
+    elif is_fixed_freq(snap_by):
+        snap_us = int(period_duration(snap_by) * 1_000_000)
+        if is_fixed_freq(bin_by):
+            bin_us = int(period_duration(bin_by) * 1_000_000)
+            if bin_us % snap_us:
+                raise ValueError("snap_by must evenly divide bin_by")
+        else:
+            # calendar bins hold a whole number of days, so any snap
+            # period dividing a day divides every bin
+            if (86400 * 1_000_000) % snap_us:
+                raise ValueError(
+                    "snap_by must evenly divide a day for calendar bin_by"
+                )
+    else:
+        bm, sm = months_per(bin_by), months_per(snap_by)
+        if bm is None or sm is None or bm % sm:
+            raise ValueError(
+                "calendar snap_by requires a calendar bin_by it evenly "
+                f"divides, got bin_by={bin_by!r}, snap_by={snap_by!r}"
+            )
+    if snap_closed not in ("left", "right"):
+        raise ValueError(f"snap_closed must be left|right, got {snap_closed!r}")
+    return snap_edges
+
+
 def snapshot_agg(
     df: DataFrame,
     ordered_on: str,
@@ -452,50 +519,9 @@ def snapshot_agg(
     import pandas as pd
 
     tiebreak = tiebreak or []
-    anchored = origin is not None or offset is not None
-    snap_edges = None
-    if not isinstance(snap_by, str):
-        snap_edges = [pd.Timestamp(e) for e in list(snap_by)]
-        if not snap_edges:
-            raise ValueError("snap_by edge sequence must be non-empty")
-        if any(a >= b for a, b in zip(snap_edges, snap_edges[1:])):
-            raise ValueError(
-                "snap_by edge sequence must be strictly ascending"
-            )
-        if anchored:
-            raise ValueError(
-                "origin/offset anchoring applies to frequency grids, "
-                "not explicit snap_by edges"
-            )
-    elif anchored and not (is_fixed_freq(bin_by) and is_fixed_freq(snap_by)):
-        raise ValueError(
-            "origin/offset anchoring requires fixed bin_by AND snap_by"
-        )
-    if snap_edges is not None:
-        pass  # no divisibility constraint for explicit instants
-    elif is_fixed_freq(snap_by):
-        snap_us = int(period_duration(snap_by) * 1_000_000)
-        if is_fixed_freq(bin_by):
-            bin_us = int(period_duration(bin_by) * 1_000_000)
-            if bin_us % snap_us:
-                raise ValueError("snap_by must evenly divide bin_by")
-        else:
-            # calendar bins hold a whole number of days, so any snap
-            # period dividing a day divides every bin
-            if (86400 * 1_000_000) % snap_us:
-                raise ValueError(
-                    "snap_by must evenly divide a day for calendar bin_by"
-                )
-    else:
-        bm, sm = months_per(bin_by), months_per(snap_by)
-        if bm is None or sm is None or bm % sm:
-            raise ValueError(
-                "calendar snap_by requires a calendar bin_by it evenly "
-                f"divides, got bin_by={bin_by!r}, snap_by={snap_by!r}"
-            )
-
-    if snap_closed not in ("left", "right"):
-        raise ValueError(f"snap_closed must be left|right, got {snap_closed!r}")
+    snap_edges = snap_grid(
+        bin_by, snap_by, snap_closed=snap_closed, origin=origin, offset=offset
+    )
     o = F.col(ordered_on)
     bin_start = floor_ts(o, bin_by, origin=origin, offset=offset)
     bin_end = next_edge(bin_start, bin_by)

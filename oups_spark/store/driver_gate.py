@@ -1,6 +1,9 @@
-"""Driver gate: the one policy deciding when a store, CDC or sketch
-step runs driver-side with pyarrow instead of as a distributed Spark
-plan.
+"""Driver gate: the one policy deciding when a store, CDC, sketch or
+AggStream step runs driver-side with pyarrow instead of as a
+distributed Spark plan. The sites: the store's merge write, merge_into,
+delete/update_where, compact and zorder rewrites; the CDC sink's batch
+probe; sketch register folds; and each AggStream chunk, aggregated
+from one collected Arrow table.
 
 Three bounds, each defined here once and read at call time (patch
 ``MAX_ROWS`` or ``MAX_BYTES`` on this module and every site follows):

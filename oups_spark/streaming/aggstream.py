@@ -8,8 +8,8 @@ Spark plans:
   Streaming ``foreachBatch`` adapter lives in
   ``oups_spark.streaming.bridge``);
 - per chunk and per key: DNF filter fan-out
-  (``aggstream.py:571-591``), distributed ``segment_agg`` /
-  ``snapshot_agg`` over the chunk, then driver-side stitching of the
+  (``aggstream.py:571-591``), ``segment_agg`` / ``snapshot_agg``
+  over the chunk (or their driver twins), then stitching of the
   (small, aggregated) bin results across chunk boundaries — the
   reference's accumulator carry (``jcumsegagg`` ``initial/use_init``
   machinery, ``cumsegagg.py:437-442,516-517``) reduced to a
@@ -24,10 +24,16 @@ Spark plans:
   kept the old data+state or the new data+state
   (reference persists the same way, ``aggstream.py:799-806``).
 
-Scale posture: Spark does the heavy per-chunk aggregation (hash agg
-over the chunk); only *aggregated bins* (thousands, not billions of
-rows) cross the driver for stitching — the same asymmetry the
-reference exploits, with Spark replacing the numba kernel.
+Scale posture: a chunk within the driver gate (``driver_gate.MAX_ROWS``
+rows, Arrow-safe columns) is collected once and every key aggregates
+it on the driver from that one Arrow table
+(``operators.segment_table``), as the reference runs each chunk on its
+driver (``aggstream.py:928-994``): one Spark job per chunk instead of
+~27 jobs and ~60 codegen compiles of per-chunk plans. A bigger chunk
+is persisted and Spark does the heavy aggregation (hash agg over the
+chunk); only *aggregated bins* (thousands, not billions of rows) cross
+the driver for stitching. Both paths hand the same frames to one
+stitching, restart-state and flush core.
 """
 
 from __future__ import annotations
@@ -38,15 +44,31 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    IntegralType,
+    TimestampNTZType,
+    TimestampType,
+)
 
-from oups_spark.functions.filters import dnf_filter
-from oups_spark.operators.segment import segment_agg, snapshot_agg
-from oups_spark.store.dataset import OrderedDataset
+from oups_spark.functions.filters import dnf_expression, dnf_filter
+from oups_spark.operators import segment_table as seg
+from oups_spark.operators.segment import (
+    edge_labels,
+    edge_values,
+    segment_agg,
+    snapshot_agg,
+)
+from oups_spark.store import driver_gate
+from oups_spark.store.dataset import OrderedDataset, pandas_to_spark_arrow
 
 _META_KEY = "aggstream"
-_PANDAS_AGG = {"first": "first", "last": "last", "min": "min", "max": "max"}
+_EDGE_TYPES = (list, tuple, np.ndarray, pd.Series, pd.Index)
 
 
 class SeedPreException(RuntimeError):
@@ -138,19 +160,19 @@ def _combine_bins(frames: list[pd.DataFrame], agg: dict, bin_col: str) -> pd.Dat
     if not frames:
         return pd.DataFrame()
     both = pd.concat(frames, ignore_index=True)
-    spec: dict[str, Any] = {}
-    for out, (_c, func) in agg.items():
-        if func in _PANDAS_AGG:
-            spec[out] = (out, _PANDAS_AGG[func])
-        else:  # sum
-            spec[out] = (out, lambda s: s.sum(min_count=1))
+    g = both.groupby(bin_col, sort=True)
     # extra columns (e.g. the row-count bin's first-ts label) carry
     # the first non-null value — a continued bin keeps its original
     # label from the earlier chunk
-    for c in both.columns:
-        if c != bin_col and c not in spec:
-            spec[c] = (c, "first")
-    combined = both.groupby(bin_col, sort=True).agg(**spec).reset_index()
+    funcs = {out: func for out, (_c, func) in agg.items()}
+    cols = [*agg, *(c for c in both.columns if c != bin_col and c not in agg)]
+    parts = {
+        c: g[c].sum(min_count=1)
+        if funcs.get(c) == "sum"
+        else getattr(g[c], funcs.get(c, "first"))()
+        for c in cols
+    }
+    combined = pd.DataFrame(parts).reset_index()
     # restore integer dtypes as nullable Int64 (reference nullable-int
     # rule, cumsegagg.py:521-530)
     for c in combined.columns:
@@ -242,6 +264,7 @@ class AggStream:
         self.max_buffered_bins = max_buffered_bins
         self.state: dict[str, _KeyState] = {}
         self.seed_remainder: pd.DataFrame | None = None
+        self._pool = None
         # two keys writing the same dataset would interleave
         # incompatible accumulators (reference refuses shared keys,
         # test_aggstream_init.py "not possible to have key")
@@ -305,24 +328,39 @@ class AggStream:
         """
         if isinstance(seed, DataFrame):
             seed = [seed]
-        for chunk in seed:
-            try:
-                self._process_chunk(
-                    chunk, trim_start=trim_start, discard_last=discard_last
+        try:
+            for chunk in seed:
+                try:
+                    self._process_chunk(
+                        chunk, trim_start=trim_start, discard_last=discard_last
+                    )
+                except SeedPreException:
+                    # flush the completed prefix + restart state before
+                    # propagating (see SeedPreException docstring)
+                    self._flush()
+                    raise
+                n_buf = max(
+                    (sum(len(f) for f in st.bin_buffer) for st in self.state.values()),
+                    default=0,
                 )
-            except SeedPreException:
-                # flush the completed prefix + restart state before
-                # propagating (see SeedPreException docstring)
+                if n_buf >= self.max_buffered_bins:
+                    self._flush()
+            if final_write:
                 self._flush()
-                raise
-            n_buf = max(
-                (sum(len(f) for f in st.bin_buffer) for st in self.state.values()),
-                default=0,
-            )
-            if n_buf >= self.max_buffered_bins:
-                self._flush()
-        if final_write:
-            self._flush()
+        finally:
+            if self._pool is not None:
+                self._pool.shutdown()
+                self._pool = None
+
+    def _executor(self):
+        """The stream's one thread pool for concurrent Spark actions: the
+        remainder pull plus up to four per-key plans. It lives for one
+        ``agg`` call."""
+        if self._pool is None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            self._pool = ThreadPoolExecutor(max_workers=5)
+        return self._pool
 
     # ------------------------------------------------------------------
     def _process_chunk(self, chunk: DataFrame, *, trim_start: bool, discard_last: bool):
@@ -339,13 +377,12 @@ class AggStream:
         if self.seed_remainder is not None and len(self.seed_remainder):
             rem = self.spark.createDataFrame(self.seed_remainder)
             chunk = rem.unionByName(chunk)
-            self.seed_remainder = None
 
         # Global trim is only safe at the min watermark when EVERY key
         # has one: a key with no restart index (new key, or its kv
         # write lagged a crash) still needs the early rows — keys that
         # are ahead skip them via the per-key trim in
-        # _agg_chunk_all_keys instead.
+        # _plan_chunk_all_keys instead.
         indexes = [st.restart_index for st in self.state.values()]
         restart = (
             None
@@ -355,53 +392,96 @@ class AggStream:
         if trim_start and restart is not None:
             chunk = chunk.filter(o > F.lit(restart))
 
+        # The held-back rows replace the consumed remainder only once
+        # every key took the chunk: a chunk that raises leaves the
+        # stream as it was, so a rerun replays it whole.
+        kw = dict(trim_start=trim_start, discard_last=discard_last)
+        small = self._driver_chunk(chunk)
+        if small is not None:
+            self.seed_remainder = self._run_chunk(small, restart, **kw)
+            return
         # persist BEFORE the driver probes: the bounds agg, the
         # discard_last remainder pull and every key's filter+agg all
         # consume this same chunk — caching here collapses what was
         # one source re-scan per probe into a single materialization
-        base = chunk = chunk.persist()
+        base = chunk.persist()
         try:
-            self._process_cached_chunk(
-                chunk, o, restart, trim_start=trim_start, discard_last=discard_last
+            self.seed_remainder = self._run_chunk(
+                _SparkChunk(self, base), restart, **kw
             )
         finally:
             base.unpersist()
 
-    def _process_cached_chunk(
-        self, chunk, o, restart, *, trim_start: bool, discard_last: bool
-    ):
-        bounds = chunk.agg(
-            F.min(self.ordered_on).alias("mn"), F.max(self.ordered_on).alias("mx")
-        ).collect()[0]
-        if bounds["mn"] is None:
-            return  # chunk fully trimmed (FIXTURES F2 tail-chunk case)
-        if restart is not None and bounds["mn"] < restart:
+    def _driver_chunk(self, chunk: DataFrame) -> "_TableChunk | None":
+        """The chunk collected for the driver path, or None (the
+        persisted Spark path runs): it needs a UTC session, a timestamp
+        (or timestamp_ntz) ``ordered_on``, Arrow-safe columns every key can read, and at
+        most ``driver_gate.MAX_ROWS`` rows with no NULL ``ordered_on``
+        and no float NaN (Spark orders NaN above every value; Arrow's
+        kernels skip it)."""
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        schema = chunk.schema
+        types = {f.name: f.dataType for f in schema.fields}
+        if not (
+            tz in ("UTC", "Etc/UTC")
+            and driver_gate.arrow_safe(schema)
+            and isinstance(types.get(self.ordered_on), (TimestampType, TimestampNTZType))
+            and all(self._driver_key_ok(cfg, types, tz) for cfg in self.keys.values())
+        ):
+            return None
+        tbl = driver_gate.collect(chunk, max_rows=driver_gate.MAX_ROWS)
+        if tbl is None or tbl[self.ordered_on].null_count or any(
+            pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
+            for c in tbl.columns
+        ):
+            return None
+        return _TableChunk(self, tbl, tz)
+
+    @staticmethod
+    def _driver_key_ok(cfg: KeyConfig, types: dict, tz: str) -> bool:
+        """The key's columns exist, it sums only integer or float
+        columns, and explicit edges are timestamps whose labels Arrow
+        can stage."""
+        flt = cfg.filter or []
+        groups = [flt] if flt and isinstance(flt[0], tuple) else flt
+        cols = [c for c, _f in cfg.agg.values()] + list(cfg.tiebreak or [])
+        cols += [t[0] for g in groups for t in g]
+        if not all(c in types for c in cols) or any(
+            f == "sum" and not isinstance(types[c], (IntegralType, FloatType, DoubleType))
+            for c, f in cfg.agg.values()
+        ):
+            return False
+        if isinstance(cfg.bin_by, _EDGE_TYPES):
+            labels, ends = edge_labels(cfg.bin_by)
+            lab = pd.DataFrame({cfg.bin_col: labels})
+            return edge_values(ends)[0] and pandas_to_spark_arrow(lab, tz) is not None
+        return True
+
+    def _run_chunk(self, src, restart, *, trim_start: bool, discard_last: bool):
+        """Bounds, ``discard_last`` holdback and every key's aggregation
+        of one chunk; returns the held-back rows."""
+        mn, chunk_max = src.bounds()
+        if mn is None:
+            return None  # chunk fully trimmed (FIXTURES F2 tail-chunk case)
+        if restart is not None and mn < restart:
             raise ValueError(
-                f"seed chunk starts at {bounds['mn']} before restart index "
+                f"seed chunk starts at {mn} before restart index "
                 f"{restart}: seed is not ordered across chunks"
             )
-        chunk_max = bounds["mx"]
 
-        rem_fut = None
+        held = None
         if discard_last:
             # hold back trailing rows sharing the max ordered_on —
             # a possibly-incomplete group (reference rationale,
-            # aggstream.py:1429-1448); they re-enter next chunk. The
-            # pull is submitted as a CONCURRENT action (guide §2.6):
+            # aggstream.py:1429-1448); they re-enter next chunk. On the
+            # Spark path the pull is a CONCURRENT action (guide §2.6):
             # it reads the same persisted chunk as the per-key agg
             # jobs below and nothing depends on its result until the
             # next chunk, so it overlaps them instead of serializing
             # one more job floor ahead of them.
-            rem_df = chunk.filter(o == F.lit(chunk_max))
-            chunk = chunk.filter(o < F.lit(chunk_max))
-            if bounds["mn"] == chunk_max:
-                self.seed_remainder = rem_df.toPandas()
-                return  # whole chunk held back
-            from concurrent.futures import ThreadPoolExecutor
-
-            _rem_pool = ThreadPoolExecutor(max_workers=1)
-            rem_fut = _rem_pool.submit(rem_df.toPandas)
-            _rem_pool.shutdown(wait=False)
+            held = src.hold_back(chunk_max)
+            if mn == chunk_max:
+                return held()  # whole chunk held back
             # Watermark: any value w with processed_max <= w < chunk_max
             # is equivalent to the exact processed max — no row exists in
             # (processed_max, chunk_max), every future row is >= chunk_max,
@@ -418,76 +498,57 @@ class AggStream:
             elif isinstance(chunk_max, (int, np.integer)):
                 processed_max = chunk_max - 1
             else:
-                processed_max = chunk.agg(
-                    F.max(self.ordered_on).alias("mx")
-                ).collect()[0]["mx"]
+                processed_max = src.max()
         else:
             processed_max = chunk_max
 
-        # one cached chunk feeds every key's pipeline (reference
-        # fan-out, aggstream.py:1486-1499) — the discard_last filter
-        # above is a narrow view over the persisted base, so the N
-        # filter+agg jobs still read the cache, not the source
         try:
             self._agg_chunk_all_keys(
-                chunk,
+                src,
                 processed_max,
                 trim_start=trim_start,
                 global_restart=restart if trim_start else None,
             )
         finally:
             # resolve the concurrent remainder pull even when a key's
-            # agg failed mid-chunk: the completed prefix + restart
-            # state flush (SeedPreException contract) must not leave a
-            # dangling Spark action on the unpersisted chunk
-            if rem_fut is not None:
-                self.seed_remainder = rem_fut.result()
+            # agg failed mid-chunk: it must not leave a dangling Spark
+            # action on the unpersisted chunk
+            rows = held() if held is not None else None
+        return rows
 
     def _agg_chunk_all_keys(
-        self, chunk: DataFrame, processed_max, *, trim_start=True, global_restart=None
+        self, src, processed_max, *, trim_start=True, global_restart=None
     ) -> None:
-        """Per-key filter+agg fan-out over the cached chunk.
+        """Per-key filter+agg fan-out over the chunk.
 
-        Structured as three phases so the independent per-key Spark
+        Three phases, so no key's state moves unless every key's
+        frames were produced, and the Spark path's independent per-key
         ACTIONS overlap (guide §2.6 — the scheduler happily runs them
-        together; they were only sequential because this loop called
-        ``toPandas`` one key at a time, paying one scheduler floor per
-        key per chunk):
+        together):
 
-        1. per key, BUILD the aggregation plan(s) and a ``finish``
-           closure holding exactly the state updates the old
-           sequential body did;
-        2. execute every collected plan concurrently;
+        1. per key, BUILD the aggregation plan(s) or driver tables and
+           a ``finish`` closure holding the key's state updates;
+        2. turn them into frames — every Spark plan concurrently, or
+           the driver tables converted the way ``toPandas`` does;
         3. apply the ``finish`` closures in key order (state updates
            stay deterministic and single-threaded).
         """
-        actions: list[tuple] = []  # (dataframes, finish(results))
+        actions: list[tuple] = []  # (plans, finish(frames))
         self._plan_chunk_all_keys(
-            chunk, processed_max, actions,
+            src, processed_max, actions,
             trim_start=trim_start, global_restart=global_restart,
         )
-        if not actions:
-            return
-        plans = [df for dfs, _fin in actions for df in dfs]
-        if len(plans) == 1:
-            results = [plans[0].toPandas()]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(4, len(plans))) as pool:
-                results = list(pool.map(lambda d: d.toPandas(), plans))
+        frames = src.frames([p for plans, _fin in actions for p in plans])
         i = 0
-        for dfs, fin in actions:
-            fin(*results[i : i + len(dfs)])
-            i += len(dfs)
+        for plans, fin in actions:
+            fin(*frames[i : i + len(plans)])
+            i += len(plans)
 
     def _plan_chunk_all_keys(
-        self, chunk, processed_max, actions, *, trim_start, global_restart
+        self, src, processed_max, actions, *, trim_start, global_restart
     ) -> None:
-        o = F.col(self.ordered_on)
         for name, cfg in self.keys.items():
             st = self.state[name]
-            filtered = dnf_filter(chunk, cfg.filter)
             # Per-key trim: the chunk is only trimmed to the GLOBAL
             # watermark (min across keys, or nothing when a key has no
             # restart index yet), so a key whose kv write lagged (e.g.
@@ -499,36 +560,20 @@ class AggStream:
             # raises on mismatched restart indexes, aggstream.py:360;
             # per-key trim preserves its no-double-count invariant
             # while letting the lagged key catch up).
+            after = None
             if (
                 trim_start
                 and st.restart_index is not None
                 and (global_restart is None or st.restart_index > global_restart)
             ):
-                filtered = filtered.filter(o > F.lit(st.restart_index))
+                after = st.restart_index
+            rows = src.rows(cfg.filter, after)
             if isinstance(cfg.bin_by, int):
                 # row-count bins (reference by_x_rows): global bin id
                 # continues across chunks via the persisted row count
-                from oups_spark.operators.segment import add_row_count_bins
-
                 if cfg.snap_by is not None:
                     raise ValueError("snapshots require a time-grid bin_by")
-                binned = add_row_count_bins(
-                    filtered, self.ordered_on, cfg.bin_by,
-                    tiebreak=cfg.tiebreak, bin_col=cfg.bin_col,
-                    rank_offset=st.rows_so_far,
-                )
-                order_key = F.struct(self.ordered_on, *(cfg.tiebreak or []))
-                from oups_spark.operators.segment import _agg_exprs
-
-                plan = (
-                    binned.groupBy(cfg.bin_col)
-                    .agg(
-                        F.min(self.ordered_on).alias("bin_label"),
-                        F.count(F.lit(1)).alias("__n"),
-                        *_agg_exprs(cfg.agg, order_key),
-                    )
-                    .orderBy(cfg.bin_col)
-                )
+                plan = src.row_bins(rows, cfg, st.rows_so_far)
 
                 def fin_rows(agged, st=st):
                     st.rows_so_far += int(agged["__n"].sum())
@@ -539,9 +584,7 @@ class AggStream:
 
                 actions.append(([plan], fin_rows))
                 continue
-            if isinstance(
-                cfg.bin_by, (list, tuple, np.ndarray, pd.Series, pd.Index)
-            ):
+            if isinstance(cfg.bin_by, _EDGE_TYPES):
                 # explicit edge grid (reference by_scale Series in the
                 # streamed engine, segmentby.py:225-236): the grid is
                 # a plan constant, so no carried binner state is
@@ -551,19 +594,8 @@ class AggStream:
                 # combines exactly like a time bin would)
                 if cfg.snap_by is not None:
                     raise ValueError("snapshots require a time-grid bin_by")
-                if isinstance(cfg.bin_by, tuple):
-                    edge_spec, ends = cfg.bin_by, list(cfg.bin_by[1])
-                else:
-                    edge_spec = list(cfg.bin_by)
-                    ends = edge_spec
-                plan = segment_agg(
-                    filtered,
-                    self.ordered_on,
-                    cfg.agg,
-                    bin_by=edge_spec,
-                    tiebreak=cfg.tiebreak,
-                    bin_col=cfg.bin_col,
-                )
+                _labels, ends = edge_labels(cfg.bin_by)
+                plan = src.edge_bins(rows, cfg)
 
                 def fin_edges(agged, st=st, cfg=cfg, ends=ends):
                     # segment_agg_edges materializes EVERY chunk as a
@@ -591,33 +623,16 @@ class AggStream:
                 continue
             if not isinstance(cfg.bin_by, str):
                 # custom BinBy object (reference bin_by callable,
-                # segmentby.py:735-800): distributed assignment with
-                # the carried state persisted in kv like rows_so_far
-                from oups_spark.operators.binby import assign_custom_bins
-
+                # segmentby.py:735-800): the carried state is
+                # persisted in kv like rows_so_far
                 if cfg.snap_by is not None:
                     raise ValueError("snapshots require a time-grid bin_by")
-                order_key = F.struct(self.ordered_on, *(cfg.tiebreak or []))
-                from oups_spark.operators.segment import _agg_exprs
-
                 initial = (
                     st.binner_state
                     if st.binner_state is not None
                     else cfg.bin_by.initial_state()
                 )
-                binned, new_state = assign_custom_bins(
-                    filtered, self.ordered_on, cfg.bin_by,
-                    tiebreak=cfg.tiebreak, bin_col=cfg.bin_col,
-                    initial_state=initial,
-                )
-                plan = (
-                    binned.groupBy(cfg.bin_col)
-                    .agg(
-                        F.min(self.ordered_on).alias("bin_label"),
-                        *_agg_exprs(cfg.agg, order_key),
-                    )
-                    .orderBy(cfg.bin_col)
-                )
+                plan, new_state = src.custom_bins(rows, cfg, initial)
 
                 def fin_custom(agged, st=st, new_state=new_state):
                     st.binner_state = new_state
@@ -628,33 +643,9 @@ class AggStream:
 
                 actions.append(([plan], fin_custom))
                 continue
-            plans = [
-                segment_agg(
-                    filtered,
-                    self.ordered_on,
-                    cfg.agg,
-                    bin_by=cfg.bin_by,
-                    tiebreak=cfg.tiebreak,
-                    bin_col=cfg.bin_col,
-                    origin=cfg.origin,
-                    offset=cfg.offset,
-                )
-            ]
+            plans = [src.time_bins(rows, cfg)]
             if cfg.snap_by is not None:
-                plans.append(
-                    snapshot_agg(
-                        filtered,
-                        self.ordered_on,
-                        cfg.agg,
-                        bin_by=cfg.bin_by,
-                        snap_by=cfg.snap_by,
-                        tiebreak=cfg.tiebreak,
-                        origin=cfg.origin,
-                        offset=cfg.offset,
-                        bin_col=cfg.bin_col,
-                        snap_col=cfg.snap_col,
-                    )
-                )
+                plans.append(src.snapshots(rows, cfg))
 
             def fin_time(agged, snaps=None, st=st, cfg=cfg):
                 st.bin_buffer.append(agged)
@@ -777,3 +768,150 @@ class AggStream:
             st.bin_acc = combined.iloc[[-1]]
             st.bin_buffer = []
             st.snap_buffer = []
+
+
+class _SparkChunk:
+    """A persisted chunk: every key's frames are its Spark plans'
+    ``toPandas()``, run concurrently on the stream's executor."""
+
+    def __init__(self, stream: AggStream, df: DataFrame):
+        self.stream, self.df = stream, df
+        self.on = stream.ordered_on
+        self.o = F.col(self.on)
+
+    def bounds(self):
+        b = self.df.agg(F.min(self.on).alias("mn"), F.max(self.on).alias("mx"))
+        b = b.collect()[0]
+        return b["mn"], b["mx"]
+
+    def hold_back(self, mx):
+        rem = self.df.filter(self.o == F.lit(mx))
+        self.df = self.df.filter(self.o < F.lit(mx))
+        return self.stream._executor().submit(rem.toPandas).result
+
+    def max(self):
+        return self.df.agg(F.max(self.on).alias("mx")).collect()[0]["mx"]
+
+    def rows(self, filters, after):
+        rows = dnf_filter(self.df, filters)
+        return rows if after is None else rows.filter(self.o > F.lit(after))
+
+    def _order_key(self, cfg):
+        return F.struct(self.on, *(cfg.tiebreak or []))
+
+    def row_bins(self, rows, cfg, rank_offset):
+        from oups_spark.operators.segment import _agg_exprs, add_row_count_bins
+
+        binned = add_row_count_bins(
+            rows, self.on, cfg.bin_by, tiebreak=cfg.tiebreak,
+            bin_col=cfg.bin_col, rank_offset=rank_offset,
+        )
+        return (
+            binned.groupBy(cfg.bin_col)
+            .agg(
+                F.min(self.on).alias("bin_label"),
+                F.count(F.lit(1)).alias("__n"),
+                *_agg_exprs(cfg.agg, self._order_key(cfg)),
+            )
+            .orderBy(cfg.bin_col)
+        )
+
+    def edge_bins(self, rows, cfg):
+        return segment_agg(
+            rows, self.on, cfg.agg, bin_by=edge_labels(cfg.bin_by),
+            tiebreak=cfg.tiebreak, bin_col=cfg.bin_col,
+        )
+
+    def custom_bins(self, rows, cfg, state):
+        from oups_spark.operators.binby import assign_custom_bins
+        from oups_spark.operators.segment import _agg_exprs
+
+        binned, new_state = assign_custom_bins(
+            rows, self.on, cfg.bin_by, tiebreak=cfg.tiebreak,
+            bin_col=cfg.bin_col, initial_state=state,
+        )
+        plan = (
+            binned.groupBy(cfg.bin_col)
+            .agg(
+                F.min(self.on).alias("bin_label"),
+                *_agg_exprs(cfg.agg, self._order_key(cfg)),
+            )
+            .orderBy(cfg.bin_col)
+        )
+        return plan, new_state
+
+    def time_bins(self, rows, cfg):
+        return segment_agg(
+            rows, self.on, cfg.agg, bin_by=cfg.bin_by, tiebreak=cfg.tiebreak,
+            bin_col=cfg.bin_col, origin=cfg.origin, offset=cfg.offset,
+        )
+
+    def snapshots(self, rows, cfg):
+        return snapshot_agg(
+            rows, self.on, cfg.agg, bin_by=cfg.bin_by, snap_by=cfg.snap_by,
+            tiebreak=cfg.tiebreak, origin=cfg.origin, offset=cfg.offset,
+            bin_col=cfg.bin_col, snap_col=cfg.snap_col,
+        )
+
+    def frames(self, plans):
+        if len(plans) == 1:
+            return [plans[0].toPandas()]
+        return list(self.stream._executor().map(lambda d: d.toPandas(), plans))
+
+
+class _TableChunk:
+    """A chunk collected under the driver gate: every key's frames come
+    from the one Arrow table through ``operators.segment_table``, with
+    no Spark job. Bounds and trims go through Spark's own timestamp
+    conversions, so watermarks match the Spark path's."""
+
+    def __init__(self, stream: AggStream, tbl: pa.Table, tz: str):
+        self.tbl, self.tz = tbl, tz
+        self.on = stream.ordered_on
+        ntz = tbl.schema.field(self.on).type.tz is None
+        self.ts = TimestampNTZType() if ntz else TimestampType()
+
+    def _us(self, tbl):
+        return pc.cast(tbl[self.on], pa.int64())
+
+    def bounds(self):
+        if not self.tbl.num_rows:
+            return None, None
+        mm = pc.min_max(self._us(self.tbl))
+        return self.ts.fromInternal(mm["min"].as_py()), self.ts.fromInternal(mm["max"].as_py())
+
+    def hold_back(self, mx):
+        held = pc.equal(self._us(self.tbl), self.ts.toInternal(mx))
+        rem = seg.to_spark_pandas(self.tbl.filter(held), self.tz)
+        self.tbl = self.tbl.filter(pc.invert(held))
+        return lambda: rem
+
+    def rows(self, filters, after):
+        rows = self.tbl
+        if filters:
+            rows = rows.filter(dnf_expression(filters, rows.schema))
+        if after is not None:
+            # F.lit of a datetime is a session-zone timestamp
+            after_us = TimestampType().toInternal(after)
+            rows = rows.filter(pc.greater(self._us(rows), after_us))
+        return rows
+
+    def row_bins(self, rows, cfg, rank_offset):
+        return seg.row_count_bins(rows, self.on, cfg, rank_offset)
+
+    def edge_bins(self, rows, cfg):
+        labels = pd.DataFrame({cfg.bin_col: edge_labels(cfg.bin_by)[0]})
+        labels = pandas_to_spark_arrow(labels, self.tz).column(0).combine_chunks()
+        return seg.edge_bins(rows, self.on, cfg, labels)
+
+    def custom_bins(self, rows, cfg, state):
+        return seg.custom_bins(rows, self.on, cfg, state, self.tz)
+
+    def time_bins(self, rows, cfg):
+        return seg.time_bins(rows, self.on, cfg)
+
+    def snapshots(self, rows, cfg):
+        return seg.snapshots(rows, self.on, cfg)
+
+    def frames(self, tables):
+        return [seg.to_spark_pandas(t, self.tz) for t in tables]

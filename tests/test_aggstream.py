@@ -9,6 +9,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from oups_spark.store import driver_gate
 from oups_spark.streaming.aggstream import AggStream, KeyConfig
 
 AGG = {
@@ -94,6 +95,85 @@ def test_restart_from_metadata_equals_one_shot(spark, scratch):
     pd.testing.assert_frame_equal(
         read_bins(spark, f"{scratch}/one"), read_bins(spark, f"{scratch}/re")
     )
+
+
+@pytest.mark.parametrize("split_points", [[40], [33, 66], [1, 2, 3, 50]])
+def test_chunked_equals_one_shot_spark_path(spark, scratch, monkeypatch, split_points):
+    """The same gate with every chunk over the driver cap: the persisted
+    Spark path."""
+    monkeypatch.setattr(driver_gate, "MAX_ROWS", 0)
+    test_chunked_equals_one_shot(spark, scratch, split_points)
+
+
+def test_restart_from_metadata_equals_one_shot_spark_path(spark, scratch, monkeypatch):
+    monkeypatch.setattr(driver_gate, "MAX_ROWS", 0)
+    test_restart_from_metadata_equals_one_shot(spark, scratch)
+
+
+@pytest.mark.parametrize("max_rows", [None, 0], ids=["driver", "spark"])
+def test_mid_chunk_key_failure_replays_whole_chunk(spark, scratch, monkeypatch, max_rows):
+    """Key 2's frame producer raising on chunk 2 moves no key's restart
+    state, buffers or the held-back remainder; rerunning chunk 2 on the
+    same stream replays it whole and converges to the one-shot result."""
+    import pyspark.sql.functions as F
+
+    from oups_spark.streaming.aggstream import _SparkChunk, _TableChunk
+
+    if max_rows is not None:
+        monkeypatch.setattr(driver_gate, "MAX_ROWS", max_rows)
+    pdf = make_ticks()
+    chunks = np.split(pdf, [40, 70])
+
+    def keys(tag):
+        return {
+            "a": KeyConfig(path=f"{scratch}/{tag}_a", agg=AGG, bin_by="1h",
+                           snap_by="15min", snap_path=f"{scratch}/{tag}_as",
+                           tiebreak=["id"]),
+            "b": KeyConfig(path=f"{scratch}/{tag}_b", agg={"s": ("val", "sum")},
+                           bin_by=7, tiebreak=["id"], bin_col="bin_id"),
+            "c": KeyConfig(path=f"{scratch}/{tag}_c", agg=AGG, bin_by="1D",
+                           tiebreak=["id"]),
+        }
+
+    def frozen(stream):
+        def frames(fs):
+            return [f.to_json(date_unit="us") for f in fs]
+
+        return (
+            {
+                k: (st.restart_index, st.rows_so_far, frames(st.bin_buffer),
+                    frames(st.snap_buffer))
+                for k, st in stream.state.items()
+            },
+            stream.seed_remainder.to_json(date_unit="us"),
+        )
+
+    def key2_fails_spark(self, rows, cfg, rank_offset):
+        return rows.select(F.raise_error(F.lit("key 2 failed")))
+
+    def key2_fails_driver(self, rows, cfg, rank_offset):
+        raise RuntimeError("key 2 failed")
+
+    AggStream(spark, ordered_on="ts", keys=keys("one")).agg(spark.createDataFrame(pdf))
+    stream = AggStream(spark, ordered_on="ts", keys=keys("re"))
+    stream.agg(spark.createDataFrame(chunks[0]), final_write=False)
+    before = frozen(stream)
+    with monkeypatch.context() as m:
+        m.setattr(_SparkChunk, "row_bins", key2_fails_spark)
+        m.setattr(_TableChunk, "row_bins", key2_fails_driver)
+        with pytest.raises(Exception, match="key 2 failed"):
+            stream.agg(spark.createDataFrame(chunks[1]), final_write=False)
+    assert frozen(stream) == before
+    stream.agg([spark.createDataFrame(c) for c in chunks[1:]])
+    from oups_spark.store.dataset import OrderedDataset
+
+    for k, sort in (("a", "bin"), ("as", ["bin", "snap"]), ("b", "bin_id"), ("c", "bin")):
+        got, exp = (
+            OrderedDataset(spark, f"{scratch}/{tag}_{k}").read().toPandas()
+            .sort_values(sort, ignore_index=True)
+            for tag in ("re", "one")
+        )
+        pd.testing.assert_frame_equal(got, exp)
 
 
 def test_discard_last_holdback_reenters(spark, scratch):

@@ -15,6 +15,7 @@ import oups_spark.streaming.cdc as cdc
 from oups_spark.operators.sketch import fold_register_write, hll_register_table
 from oups_spark.store import driver_gate
 from oups_spark.store.dataset import OrderedDataset
+from oups_spark.streaming.aggstream import AggStream, KeyConfig
 
 
 def _sorted_rows(df):
@@ -116,6 +117,28 @@ def _ds(spark, p):
     return OrderedDataset(spark, p)
 
 
+def _ticks(spark, lo, n):
+    rows = [(lo + i, i % 4, float(i % 7) - 2.0) for i in range(n)]
+    return spark.createDataFrame(rows, "t long, k long, v double").selectExpr(
+        "timestamp_seconds(t * 600) AS ts", "k", "v"
+    )
+
+
+def _agg_stream(sp, p):
+    keys = {
+        "h": KeyConfig(path=f"{p}/h", agg={"s": ("v", "sum"), "f": ("v", "first")},
+                       bin_by="1h", snap_by="20min", snap_path=f"{p}/hs",
+                       tiebreak=["k"]),
+        "r": KeyConfig(path=f"{p}/r", agg={"s": ("v", "sum")}, bin_by=5,
+                       bin_col="bin_id", filter=[("k", "!=", 2)]),
+    }
+    return AggStream(sp, ordered_on="ts", keys=keys)
+
+
+def _agg_rows(spark, p):
+    return [_ds_rows(spark, f"{p}/{k}") for k in ("h", "hs", "r")]
+
+
 # op -> (set-up, the op, its output, and the driver helper whose
 # non-None return marks the driver path)
 _SITES = {
@@ -173,6 +196,11 @@ _SITES = {
         lambda sp, p: cdc.cdc_merge_batch(sp, _changelog(sp, 0), p, **_CDC),
         lambda sp, p: cdc.cdc_merge_batch(sp, _changelog(sp, 30), p, **_CDC),
         _cdc_rows, cdc, "_probe_batch",
+    ),
+    "aggstream": (
+        lambda sp, p: _agg_stream(sp, p).agg(_ticks(sp, 0, 30)),
+        lambda sp, p: _agg_stream(sp, p).agg(_ticks(sp, 29, 40)),
+        _agg_rows, AggStream, "_driver_chunk",
     ),
     "fold_register_write": (
         lambda sp, p: fold_register_write(sp, _ds(sp, p), _regs(sp, 0), **_FOLD),
@@ -314,3 +342,24 @@ def test_fold_register_write_cap_boundary(spark, scratch, monkeypatch):
             )
         assert isinstance(written[0], pa.Table) == driver, (cap, n)
         assert _sorted_rows(ds.read()) == want
+
+
+def test_range_read_bounds_same_rows_both_forms(spark, scratch, monkeypatch):
+    """A read within the row cap compares against struct-wrapped bounds
+    (passed by reference, no codegen compile per bound); over the cap
+    the plain pushable predicate runs. Both return the same rows,
+    half-open at the bounds."""
+    ds = _base(spark, os.path.join(scratch, "ds"))
+    got = {}
+    for cap in (None, 0):
+        with monkeypatch.context() as m:
+            if cap is not None:
+                m.setattr(driver_gate, "MAX_ROWS", cap)
+            got[cap] = [
+                _sorted_rows(ds.read(lo, hi)) for lo, hi in
+                ((13, 57), (None, 40), (41, None), (200, 300))
+            ]
+    assert got[None] == got[0]
+    assert [len(r) for r in got[None]] == [44, 40, 79, 0]
+    assert min(r[0] for r in got[None][0]) == 13
+    assert max(r[0] for r in got[None][0]) == 56

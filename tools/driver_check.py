@@ -7,6 +7,9 @@ Runs: (1) smoke — ``entry(spark)`` at sf0.001 must yield >=0 rows;
 row count, sorted column names, and an order-insensitive value hash
 (doubles rounded to 9 significant-ish decimals before hashing).
 
+Each result line also reports ``jobs=N``: the Spark jobs the query
+started, including its staging writes and reads.
+
 Usage: python tools/driver_check.py [--sf /root/testdata/sf0.01] [query ...]
 """
 
@@ -50,6 +53,13 @@ def value_hash(df) -> str:
     return h.hexdigest()[:16]
 
 
+def last_job(spark) -> int:
+    """The highest Spark job id started so far: ids are one global
+    sequence, so the difference across a query counts its jobs."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -83,15 +93,17 @@ def main() -> int:
     failures = []
     for name in names:
         t0 = time.time()
+        job0 = last_job(spark)
         try:
             got = qs[name](spark, args.sf).toPandas()
         except Exception as exc:  # noqa: BLE001
             print(f"[FAIL] {name}: spark side raised {type(exc).__name__}: {exc}")
             failures.append(name)
             continue
+        jobs = last_job(spark) - job0
         if name not in oracles:
             print(f"[rows-only] {name}: {len(got)} rows, {len(got.columns)} cols "
-                  f"({time.time() - t0:.1f}s)")
+                  f"jobs={jobs} ({time.time() - t0:.1f}s)")
             continue
         try:
             exp = con.sql(oracles[name]).df()
@@ -105,7 +117,7 @@ def main() -> int:
         status = "OK" if (ok_rows and ok_cols and ok_hash) else "FAIL"
         print(
             f"[{status}] {name}: rows {len(got)}/{len(exp)} cols_match={ok_cols} "
-            f"hash_match={ok_hash} ({time.time() - t0:.1f}s)"
+            f"hash_match={ok_hash} jobs={jobs} ({time.time() - t0:.1f}s)"
         )
         if status == "FAIL":
             failures.append(name)

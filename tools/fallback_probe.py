@@ -37,6 +37,7 @@ def main() -> int:
     from oups_spark.session import get_spark
     from oups_spark.store import driver_gate
     from oups_spark.store.dataset import OrderedDataset
+    from oups_spark.streaming.aggstream import AggStream, KeyConfig
     from oups_spark.streaming.cdc import commit_state, merge_latest
     from oups_spark.tables import load
 
@@ -153,6 +154,21 @@ def main() -> int:
                 commit_state(cdc_path, touched)
 
         probe("cdc merge_latest (1 batch)", mult, run_cdc, n)
+
+        # ---- AggStream: one chunk into hourly bins and daily bins
+        # with 6h snapshots (over the cap: the limit(cap+1) probe, then
+        # the persisted Spark path)
+        keys = {
+            "h": KeyConfig(path=os.path.join(d, "agg_h"), bin_by="1h",
+                           agg={"s": ("value", "sum"), "f": ("value", "first")}),
+            "d": KeyConfig(path=os.path.join(d, "agg_d"), bin_by="1D",
+                           snap_by="6h", snap_path=os.path.join(d, "agg_ds"),
+                           agg={"s": ("value", "sum"), "hi": ("value", "max")}),
+        }
+        probe("aggstream chunk (2 keys)", mult,
+              lambda: AggStream(spark, ordered_on="ts", keys=keys).agg(
+                  ev, discard_last=False),
+              n)
 
         # ---- OPTIMIZE ZORDER over the whole dataset
         ds_z = OrderedDataset(spark, os.path.join(d, "z"))
