@@ -44,8 +44,6 @@ def to_spark_pandas(tbl: pa.Table, tz: str) -> pd.DataFrame:
         _create_converter_to_pandas(from_arrow_type(f.type), timezone=tz)
         for f in tbl.schema
     ]
-    if not names:
-        return pdf
     return pd.concat([c(pdf.iloc[:, i]) for i, c in enumerate(convert)], axis="columns")
 
 

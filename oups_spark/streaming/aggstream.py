@@ -59,6 +59,8 @@ from pyspark.sql.types import (
 from oups_spark.functions.filters import dnf_expression, dnf_filter
 from oups_spark.operators import segment_table as seg
 from oups_spark.operators.segment import (
+    AGG_FUNCS,
+    _agg_exprs,
     edge_labels,
     edge_values,
     segment_agg,
@@ -415,10 +417,10 @@ class AggStream:
     def _driver_chunk(self, chunk: DataFrame) -> "_TableChunk | None":
         """The chunk collected for the driver path, or None (the
         persisted Spark path runs): it needs a UTC session, a timestamp
-        (or timestamp_ntz) ``ordered_on``, Arrow-safe columns every key can read, and at
-        most ``driver_gate.MAX_ROWS`` rows with no NULL ``ordered_on``
-        and no float NaN (Spark orders NaN above every value; Arrow's
-        kernels skip it)."""
+        (or timestamp_ntz) ``ordered_on``, Arrow-safe columns every key
+        can read, and at most ``driver_gate.MAX_ROWS`` rows with no NULL
+        ``ordered_on`` and no float NaN (Spark orders NaN above every
+        value; Arrow's kernels skip it)."""
         tz = self.spark.conf.get("spark.sql.session.timeZone")
         schema = chunk.schema
         types = {f.name: f.dataType for f in schema.fields}
@@ -439,7 +441,8 @@ class AggStream:
 
     @staticmethod
     def _driver_key_ok(cfg: KeyConfig, types: dict, tz: str) -> bool:
-        """The key's columns exist, it sums only integer or float
+        """The key's columns exist, its aggregates are known (the Spark
+        plan raises on any other), it sums only integer or float
         columns, and explicit edges are timestamps whose labels Arrow
         can stage."""
         flt = cfg.filter or []
@@ -447,7 +450,8 @@ class AggStream:
         cols = [c for c, _f in cfg.agg.values()] + list(cfg.tiebreak or [])
         cols += [t[0] for g in groups for t in g]
         if not all(c in types for c in cols) or any(
-            f == "sum" and not isinstance(types[c], (IntegralType, FloatType, DoubleType))
+            f not in AGG_FUNCS
+            or f == "sum" and not isinstance(types[c], (IntegralType, FloatType, DoubleType))
             for c, f in cfg.agg.values()
         ):
             return False
@@ -686,8 +690,6 @@ class AggStream:
         (e.g. a ``post`` hook emitting exotic columns) fall back to
         the classic ``createDataFrame`` path — identical semantics,
         one job."""
-        from oups_spark.store.dataset import pandas_to_spark_arrow
-
         tz = self.spark.conf.get("spark.sql.session.timeZone", "UTC")
         tbl = pandas_to_spark_arrow(pdf, tz)
         return tbl if tbl is not None else self.spark.createDataFrame(pdf)
@@ -796,25 +798,27 @@ class _SparkChunk:
         rows = dnf_filter(self.df, filters)
         return rows if after is None else rows.filter(self.o > F.lit(after))
 
-    def _order_key(self, cfg):
-        return F.struct(self.on, *(cfg.tiebreak or []))
+    def _bin_plan(self, binned, cfg, *extra):
+        """Aggregates per ``bin_col`` of rows a binner labelled, after
+        the bin's first ``ordered_on`` and the ``extra`` columns."""
+        order_key = F.struct(self.on, *(cfg.tiebreak or []))
+        return (
+            binned.groupBy(cfg.bin_col)
+            .agg(
+                F.min(self.on).alias("bin_label"), *extra,
+                *_agg_exprs(cfg.agg, order_key),
+            )
+            .orderBy(cfg.bin_col)
+        )
 
     def row_bins(self, rows, cfg, rank_offset):
-        from oups_spark.operators.segment import _agg_exprs, add_row_count_bins
+        from oups_spark.operators.segment import add_row_count_bins
 
         binned = add_row_count_bins(
             rows, self.on, cfg.bin_by, tiebreak=cfg.tiebreak,
             bin_col=cfg.bin_col, rank_offset=rank_offset,
         )
-        return (
-            binned.groupBy(cfg.bin_col)
-            .agg(
-                F.min(self.on).alias("bin_label"),
-                F.count(F.lit(1)).alias("__n"),
-                *_agg_exprs(cfg.agg, self._order_key(cfg)),
-            )
-            .orderBy(cfg.bin_col)
-        )
+        return self._bin_plan(binned, cfg, F.count(F.lit(1)).alias("__n"))
 
     def edge_bins(self, rows, cfg):
         return segment_agg(
@@ -824,21 +828,12 @@ class _SparkChunk:
 
     def custom_bins(self, rows, cfg, state):
         from oups_spark.operators.binby import assign_custom_bins
-        from oups_spark.operators.segment import _agg_exprs
 
         binned, new_state = assign_custom_bins(
             rows, self.on, cfg.bin_by, tiebreak=cfg.tiebreak,
             bin_col=cfg.bin_col, initial_state=state,
         )
-        plan = (
-            binned.groupBy(cfg.bin_col)
-            .agg(
-                F.min(self.on).alias("bin_label"),
-                *_agg_exprs(cfg.agg, self._order_key(cfg)),
-            )
-            .orderBy(cfg.bin_col)
-        )
-        return plan, new_state
+        return self._bin_plan(binned, cfg), new_state
 
     def time_bins(self, rows, cfg):
         return segment_agg(

@@ -164,6 +164,7 @@ def test_mid_chunk_key_failure_replays_whole_chunk(spark, scratch, monkeypatch, 
         with pytest.raises(Exception, match="key 2 failed"):
             stream.agg(spark.createDataFrame(chunks[1]), final_write=False)
     assert frozen(stream) == before
+    assert stream._pool is None  # the stream's executor is shut down
     stream.agg([spark.createDataFrame(c) for c in chunks[1:]])
     from oups_spark.store.dataset import OrderedDataset
 

@@ -80,7 +80,7 @@ KEYS = {
 
 def _stream(spark, scratch, kind, **extra):
     cfg = KeyConfig(path=f"{scratch}/{kind}", snap_path=f"{scratch}/{kind}_snap",
-                    agg=AGG, tiebreak=["id"], **{**KEYS[kind], **extra})
+                    tiebreak=["id"], **{"agg": AGG, **KEYS[kind], **extra})
     if cfg.snap_by is None:
         cfg.snap_path = None
     return AggStream(spark, ordered_on="ts", keys={"k": cfg})
@@ -186,3 +186,13 @@ def test_timestamp_ntz_ordering(spark, scratch, chunk, kind):
     """A timestamp_ntz ``ordered_on`` (how the events table reads)
     takes the driver path too, with the same frames."""
     _assert_same(spark, scratch, kind, chunk.withColumn("ts", chunk["ts"].cast("timestamp_ntz")))
+
+
+def test_unknown_agg_func_raises_as_on_spark(spark, scratch, chunk):
+    """An aggregate the Spark plan does not know is not computed by
+    Arrow's kernel of the same name: the chunk takes the Spark path,
+    which raises."""
+    stream = _stream(spark, scratch, "1h", agg={"m": ("val", "mean")})
+    assert stream._driver_chunk(chunk) is None
+    with pytest.raises(ValueError, match="unknown agg func 'mean'"):
+        stream.agg(chunk)
