@@ -59,9 +59,16 @@ def dnf_expression(filters: list[list[tuple]] | list[tuple], schema):
     """The pyarrow twin of :func:`dnf_condition` for a table of Arrow
     ``schema``: the op table over ``pc.field``. As in SQL, a term on a
     NULL drops the row and a ``not-in`` list holding None keeps none;
-    timestamp values are read as naive UTC."""
+    a datetime value is the instant ``F.lit`` makes of it (a naive one
+    in the process's local zone, ``TimestampType.toInternal``)."""
+    import datetime
+
     import pyarrow as pa
     import pyarrow.compute as pc
+    from pyspark.sql.types import TimestampType
+
+    def instant(v):
+        return TimestampType().toInternal(v) if isinstance(v, datetime.datetime) else v
 
     def term(col: str, op: str, value):
         if op not in _OPS:
@@ -71,7 +78,7 @@ def dnf_expression(filters: list[list[tuple]] | list[tuple], schema):
         typ = schema.field(col).type
         if pa.types.is_timestamp(typ) and op != "~":
             many = op in ("in", "not-in")
-            vals = pa.array(list(value) if many else [value]).cast(typ)
+            vals = pa.array([instant(v) for v in (value if many else [value])]).cast(typ)
             value = vals if many else vals[0]
         c = pc.field(col)
         return _OPS[op](c, value) & c.is_valid()

@@ -411,9 +411,11 @@ def snap_grid(bin_by: str, snap_by, *, snap_closed="left", origin=None, offset=N
     instants (``pd.Timestamp``), or None for a frequency grid."""
     import pandas as pd
 
+    if snap_closed not in ("left", "right"):
+        raise ValueError(f"snap_closed must be left|right, got {snap_closed!r}")
     anchored = origin is not None or offset is not None
-    snap_edges = None
     if not isinstance(snap_by, str):
+        # explicit instants: no divisibility constraint
         snap_edges = [pd.Timestamp(e) for e in list(snap_by)]
         if not snap_edges:
             raise ValueError("snap_by edge sequence must be non-empty")
@@ -426,13 +428,12 @@ def snap_grid(bin_by: str, snap_by, *, snap_closed="left", origin=None, offset=N
                 "origin/offset anchoring applies to frequency grids, "
                 "not explicit snap_by edges"
             )
-    elif anchored and not (is_fixed_freq(bin_by) and is_fixed_freq(snap_by)):
+        return snap_edges
+    if anchored and not (is_fixed_freq(bin_by) and is_fixed_freq(snap_by)):
         raise ValueError(
             "origin/offset anchoring requires fixed bin_by AND snap_by"
         )
-    if snap_edges is not None:
-        pass  # no divisibility constraint for explicit instants
-    elif is_fixed_freq(snap_by):
+    if is_fixed_freq(snap_by):
         snap_us = int(period_duration(snap_by) * 1_000_000)
         if is_fixed_freq(bin_by):
             bin_us = int(period_duration(bin_by) * 1_000_000)
@@ -452,9 +453,7 @@ def snap_grid(bin_by: str, snap_by, *, snap_closed="left", origin=None, offset=N
                 "calendar snap_by requires a calendar bin_by it evenly "
                 f"divides, got bin_by={bin_by!r}, snap_by={snap_by!r}"
             )
-    if snap_closed not in ("left", "right"):
-        raise ValueError(f"snap_closed must be left|right, got {snap_closed!r}")
-    return snap_edges
+    return None
 
 
 def snapshot_agg(

@@ -22,6 +22,7 @@ import pyarrow.compute as pc
 
 from oups_spark.functions.dates import floor_ts_scalar, months_per, next_edge_us
 from oups_spark.operators.segment import edge_labels, edge_values, snap_grid
+from oups_spark.store.dataset import pandas_to_spark_arrow
 
 _KEEP_NULLS = pc.ScalarAggregateOptions(skip_nulls=False)
 
@@ -29,7 +30,9 @@ _KEEP_NULLS = pc.ScalarAggregateOptions(skip_nulls=False)
 def to_spark_pandas(tbl: pa.Table, tz: str) -> pd.DataFrame:
     """``tbl`` as Spark's Arrow ``toPandas()`` converts a result of the
     same schema: an empty result is a bare frame of the column names,
-    then every column goes through Spark's per-type converter."""
+    then every column goes through Spark's per-type converter. That
+    converter is PySpark-private (checked against PySpark 4.1): after
+    a PySpark upgrade, rerun ``tests/test_aggstream_driver.py``."""
     from pyspark.sql.pandas.types import _create_converter_to_pandas, from_arrow_type
 
     names = tbl.column_names
@@ -83,14 +86,14 @@ def _group(rows: pa.Table, on: str, cfg, keys: dict, extra=()) -> pa.Table:
     )
 
 
-def time_bins(rows, on, cfg) -> pa.Table:
+def time_bins(on, rows, cfg) -> pa.Table:
     """``segment_agg`` with a period ``bin_by`` (closed, labelled left)."""
     return _group(rows, on, cfg, {cfg.bin_col: lambda r: pa.array(
         _floor(_us(r[on]), cfg.bin_by, cfg.origin, cfg.offset), r[on].type
     )})
 
 
-def edge_bins(rows, on, cfg, labels: pa.Array) -> pa.Table:
+def edge_bins(on, rows, cfg, labels: pa.Array) -> pa.Table:
     """``segment_agg_edges`` (closed left): one row per label (the label
     column as Spark reads it), NULL aggregates for an empty chunk, rows
     past the last end dropped."""
@@ -106,7 +109,7 @@ def edge_bins(rows, on, cfg, labels: pa.Array) -> pa.Table:
     )
 
 
-def row_count_bins(rows, on, cfg, rank_offset: int) -> pa.Table:
+def row_count_bins(on, rows, cfg, rank_offset: int) -> pa.Table:
     """The row-count plan: bin ``(rank_offset + rank) // n``, its label
     (first ``on``) and its row count ``__n``."""
     return _group(
@@ -116,7 +119,7 @@ def row_count_bins(rows, on, cfg, rank_offset: int) -> pa.Table:
     )
 
 
-def custom_bins(rows, on, cfg, state, tz: str):
+def custom_bins(on, rows, cfg, state, tz: str):
     """The custom ``BinBy`` plan: the binner's own ``summarize`` /
     ``combine`` / ``assign`` over the whole sorted chunk as one bucket.
     Returns the bins and the state after the chunk."""
@@ -172,7 +175,7 @@ def _running(p: pa.Array, grp: pd.Series, func: str) -> pa.Array:
     return p.take(pa.array(idx, mask=(idx < 0) | (idx >= n)))
 
 
-def snapshots(rows, on, cfg) -> pa.Table:
+def snapshots(on, rows, cfg) -> pa.Table:
     """``snapshot_agg`` with ``snap_closed='left'``."""
     bin_col, snap_col, ts = cfg.bin_col, cfg.snap_col, rows[on].type
     edges = snap_grid(cfg.bin_by, cfg.snap_by, origin=cfg.origin, offset=cfg.offset)
@@ -221,3 +224,14 @@ def snapshots(rows, on, cfg) -> pa.Table:
         + [_running(joined[o].combine_chunks(), grp, f) for o, (_c, f) in cfg.agg.items()],
         names=[bin_col, snap_col, *cfg.agg],
     )
+
+
+def edge_label_array(bin_by, tz: str) -> pa.Array | None:
+    """An explicit edge grid's labels as Spark reads them back, or None
+    when the driver producers cannot take the grid: its ends are not
+    timestamps, or Arrow cannot stage its labels."""
+    labels, ends = edge_labels(bin_by)
+    if not edge_values(ends)[0]:
+        return None
+    tbl = pandas_to_spark_arrow(pd.DataFrame({"label": labels}), tz)
+    return None if tbl is None else tbl.column(0).combine_chunks()

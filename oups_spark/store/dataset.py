@@ -231,8 +231,7 @@ class OrderedDataset:
 
         File pruning happens driver-side from manifest stats (the
         reference's row-group slicing, ``base.py:297-330``); the range
-        predicate is also applied so parquet footer pruning and
-        row-level filtering finish the job.
+        predicate then filters the rows of the boundary files.
 
         ``as_of``: TIME TRAVEL — read the dataset exactly as of an
         earlier commit generation (``versions()`` lists them;
@@ -270,47 +269,44 @@ class OrderedDataset:
                 e for e in entries
                 if dnf_file_can_match(e.cols, filters, blooms=e.blooms)
             ]
-        schema = (
-            StructType.fromJson(__import__("json").loads(man.schema_json))
-            if man.schema_json
-            else None
-        )
         if not entries:
-            if schema is None:
+            schema_json = man.schema_json
+            if schema_json is None:
                 raise ValueError("empty dataset with no recorded schema")
+            schema = StructType.fromJson(__import__("json").loads(schema_json))
             df = self.spark.createDataFrame([], schema)
         else:
             reader = self.spark.read
-            if schema is not None:
+            if man.schema_json:
                 # explicit manifest schema: (a) files written before a
                 # schema evolution read back NULL for later columns,
                 # (b) no footer schema-inference job on the scan
-                reader = reader.schema(schema)
+                reader = reader.schema(
+                    StructType.fromJson(
+                        __import__("json").loads(man.schema_json)
+                    )
+                )
             df = reader.parquet(*self._paths(entries))
         o = F.col(man.ordered_on)
-        ranged = start is not None or end_excl is not None
-        rng, bound = [], F.lit
-        if ranged and sum(e.n_rows for e in entries) <= gate.MAX_ROWS:
-            # A read within the driver gate's row cap compares against
-            # bounds wrapped in structs. Spark inlines a timestamp
-            # literal into its generated code, so each new bound costs
-            # a fresh codegen compile (~35 ms on a cold JVM); a struct
-            # literal is passed by reference and the compiled class is
-            # reused. Bigger reads keep the plain predicate, which
-            # parquet pushdown uses to skip row groups inside the
-            # boundary files.
-            o_type = (schema or df.schema)[man.ordered_on].dataType.simpleString()
-            rng, o = [o.isNotNull()], F.struct(o)
+        if start is not None or end_excl is not None:
+            # The bounds are compared wrapped in structs: Spark inlines
+            # a timestamp literal into its generated code, so each new
+            # bound would compile a fresh whole-stage class (~35 ms on
+            # a cold JVM), while a struct literal is passed by
+            # reference and the compiled class is reused. Parquet
+            # pushdown gets only the not-null test; the manifest
+            # already pruned the files.
+            typ = df.schema[man.ordered_on].dataType.simpleString()
 
             def bound(v):
-                return F.struct(F.lit(v).cast(o_type).alias(man.ordered_on))
+                return F.struct(F.lit(v).cast(typ).alias(man.ordered_on))
 
-        if start is not None:
-            rng.append(o >= bound(start))
-        if end_excl is not None:
-            rng.append(o < bound(end_excl))
-        if ranged:
-            df = df.filter(functools.reduce(lambda a, b: a & b, rng))
+            keep = o.isNotNull()
+            if start is not None:
+                keep &= F.struct(o) >= bound(start)
+            if end_excl is not None:
+                keep &= F.struct(o) < bound(end_excl)
+            df = df.filter(keep)
         if filters:
             from oups_spark.functions.filters import dnf_filter
 

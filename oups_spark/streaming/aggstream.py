@@ -38,6 +38,7 @@ stitching, restart-state and flush core.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from typing import Any
@@ -62,7 +63,6 @@ from oups_spark.operators.segment import (
     AGG_FUNCS,
     _agg_exprs,
     edge_labels,
-    edge_values,
     segment_agg,
     snapshot_agg,
 )
@@ -418,17 +418,23 @@ class AggStream:
         """The chunk collected for the driver path, or None (the
         persisted Spark path runs): it needs a UTC session, a timestamp
         (or timestamp_ntz) ``ordered_on``, Arrow-safe columns every key
-        can read, and at most ``driver_gate.MAX_ROWS`` rows with no NULL
-        ``ordered_on`` and no float NaN (Spark orders NaN above every
-        value; Arrow's kernels skip it)."""
+        can read, explicit edges the driver producers take, and at most
+        ``driver_gate.MAX_ROWS`` rows with no NULL ``ordered_on`` and no
+        float NaN (Spark orders NaN above every value; Arrow's kernels
+        skip it)."""
         tz = self.spark.conf.get("spark.sql.session.timeZone")
         schema = chunk.schema
         types = {f.name: f.dataType for f in schema.fields}
+        labels = {
+            cfg.path: seg.edge_label_array(cfg.bin_by, tz)
+            for cfg in self.keys.values() if isinstance(cfg.bin_by, _EDGE_TYPES)
+        }
         if not (
             tz in ("UTC", "Etc/UTC")
             and driver_gate.arrow_safe(schema)
             and isinstance(types.get(self.ordered_on), (TimestampType, TimestampNTZType))
-            and all(self._driver_key_ok(cfg, types, tz) for cfg in self.keys.values())
+            and all(self._driver_key_ok(cfg, types) for cfg in self.keys.values())
+            and all(a is not None for a in labels.values())
         ):
             return None
         tbl = driver_gate.collect(chunk, max_rows=driver_gate.MAX_ROWS)
@@ -437,29 +443,22 @@ class AggStream:
             for c in tbl.columns
         ):
             return None
-        return _TableChunk(self, tbl, tz)
+        return _TableChunk(self, tbl, tz, labels)
 
     @staticmethod
-    def _driver_key_ok(cfg: KeyConfig, types: dict, tz: str) -> bool:
+    def _driver_key_ok(cfg: KeyConfig, types: dict) -> bool:
         """The key's columns exist, its aggregates are known (the Spark
-        plan raises on any other), it sums only integer or float
-        columns, and explicit edges are timestamps whose labels Arrow
-        can stage."""
+        plan raises on any other) and it sums only integer or float
+        columns."""
         flt = cfg.filter or []
         groups = [flt] if flt and isinstance(flt[0], tuple) else flt
         cols = [c for c, _f in cfg.agg.values()] + list(cfg.tiebreak or [])
         cols += [t[0] for g in groups for t in g]
-        if not all(c in types for c in cols) or any(
+        return all(c in types for c in cols) and not any(
             f not in AGG_FUNCS
             or f == "sum" and not isinstance(types[c], (IntegralType, FloatType, DoubleType))
             for c, f in cfg.agg.values()
-        ):
-            return False
-        if isinstance(cfg.bin_by, _EDGE_TYPES):
-            labels, ends = edge_labels(cfg.bin_by)
-            lab = pd.DataFrame({cfg.bin_col: labels})
-            return edge_values(ends)[0] and pandas_to_spark_arrow(lab, tz) is not None
-        return True
+        )
 
     def _run_chunk(self, src, restart, *, trim_start: bool, discard_last: bool):
         """Bounds, ``discard_last`` holdback and every key's aggregation
@@ -860,11 +859,16 @@ class _TableChunk:
     no Spark job. Bounds and trims go through Spark's own timestamp
     conversions, so watermarks match the Spark path's."""
 
-    def __init__(self, stream: AggStream, tbl: pa.Table, tz: str):
-        self.tbl, self.tz = tbl, tz
-        self.on = stream.ordered_on
-        ntz = tbl.schema.field(self.on).type.tz is None
+    def __init__(self, stream: AggStream, tbl: pa.Table, tz: str, labels: dict):
+        # labels: each explicit-edge key's staged labels, by its path
+        self.tbl, self.tz, self.labels = tbl, tz, labels
+        self.on = on = stream.ordered_on
+        ntz = tbl.schema.field(on).type.tz is None
         self.ts = TimestampNTZType() if ntz else TimestampType()
+        self.row_bins = functools.partial(seg.row_count_bins, on)
+        self.custom_bins = functools.partial(seg.custom_bins, on, tz=tz)
+        self.time_bins = functools.partial(seg.time_bins, on)
+        self.snapshots = functools.partial(seg.snapshots, on)
 
     def _us(self, tbl):
         return pc.cast(tbl[self.on], pa.int64())
@@ -886,27 +890,14 @@ class _TableChunk:
         if filters:
             rows = rows.filter(dnf_expression(filters, rows.schema))
         if after is not None:
-            # F.lit of a datetime is a session-zone timestamp
+            # the instant F.lit makes of a datetime (a naive one is
+            # read in the process's local zone)
             after_us = TimestampType().toInternal(after)
             rows = rows.filter(pc.greater(self._us(rows), after_us))
         return rows
 
-    def row_bins(self, rows, cfg, rank_offset):
-        return seg.row_count_bins(rows, self.on, cfg, rank_offset)
-
     def edge_bins(self, rows, cfg):
-        labels = pd.DataFrame({cfg.bin_col: edge_labels(cfg.bin_by)[0]})
-        labels = pandas_to_spark_arrow(labels, self.tz).column(0).combine_chunks()
-        return seg.edge_bins(rows, self.on, cfg, labels)
-
-    def custom_bins(self, rows, cfg, state):
-        return seg.custom_bins(rows, self.on, cfg, state, self.tz)
-
-    def time_bins(self, rows, cfg):
-        return seg.time_bins(rows, self.on, cfg)
-
-    def snapshots(self, rows, cfg):
-        return seg.snapshots(rows, self.on, cfg)
+        return seg.edge_bins(self.on, rows, cfg, self.labels[cfg.path])
 
     def frames(self, tables):
         return [seg.to_spark_pandas(t, self.tz) for t in tables]

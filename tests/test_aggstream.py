@@ -117,7 +117,8 @@ def test_mid_chunk_key_failure_replays_whole_chunk(spark, scratch, monkeypatch, 
     same stream replays it whole and converges to the one-shot result."""
     import pyspark.sql.functions as F
 
-    from oups_spark.streaming.aggstream import _SparkChunk, _TableChunk
+    from oups_spark.operators import segment_table
+    from oups_spark.streaming.aggstream import _SparkChunk
 
     if max_rows is not None:
         monkeypatch.setattr(driver_gate, "MAX_ROWS", max_rows)
@@ -151,7 +152,7 @@ def test_mid_chunk_key_failure_replays_whole_chunk(spark, scratch, monkeypatch, 
     def key2_fails_spark(self, rows, cfg, rank_offset):
         return rows.select(F.raise_error(F.lit("key 2 failed")))
 
-    def key2_fails_driver(self, rows, cfg, rank_offset):
+    def key2_fails_driver(on, rows, cfg, rank_offset):
         raise RuntimeError("key 2 failed")
 
     AggStream(spark, ordered_on="ts", keys=keys("one")).agg(spark.createDataFrame(pdf))
@@ -160,7 +161,7 @@ def test_mid_chunk_key_failure_replays_whole_chunk(spark, scratch, monkeypatch, 
     before = frozen(stream)
     with monkeypatch.context() as m:
         m.setattr(_SparkChunk, "row_bins", key2_fails_spark)
-        m.setattr(_TableChunk, "row_bins", key2_fails_driver)
+        m.setattr(segment_table, "row_count_bins", key2_fails_driver)
         with pytest.raises(Exception, match="key 2 failed"):
             stream.agg(spark.createDataFrame(chunks[1]), final_write=False)
     assert frozen(stream) == before

@@ -6,6 +6,7 @@ dtypes included, to the same per-key finish step."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import numpy as np
 import pandas as pd
@@ -142,12 +143,24 @@ def test_filter_emptying_the_chunk(spark, scratch, chunk, kind):
     _assert_same(spark, scratch, kind, chunk, filter=[("val", ">", 1e9)])
 
 
-def test_filter_and_trim_select_the_same_rows(spark, scratch, chunk):
+@pytest.fixture(params=["UTC", "America/New_York"])
+def process_zone(request, monkeypatch):
+    """The Python process's local zone, in which ``F.lit`` reads a naive
+    datetime (the Spark session zone stays UTC)."""
+    monkeypatch.setenv("TZ", request.param)
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_filter_and_trim_select_the_same_rows(spark, scratch, chunk, process_zone):
     """OR-of-AND filters with NULL inputs, an IN list and a timestamp
-    bound, plus the per-key trim past a carried restart index."""
+    bound inside the chunk, plus the per-key trim past a carried
+    restart index, under a UTC and a non-UTC process zone."""
     flt = [
         [("qty", "in", [1, 2, 3]), ("tag", "!=", "t05")],
-        [("ts", ">=", dt.datetime(2024, 2, 4)), ("val", "<", 0.0)],
+        [("ts", ">=", dt.datetime(2024, 2, 1, 2)), ("val", ">", 0.0)],
     ]
     carry = {"restart_index": pd.Timestamp("2024-01-31 10:00")}
     _assert_same(spark, scratch, "1h", chunk, carry, filter=flt)

@@ -344,22 +344,17 @@ def test_fold_register_write_cap_boundary(spark, scratch, monkeypatch):
         assert _sorted_rows(ds.read()) == want
 
 
-def test_range_read_bounds_same_rows_both_forms(spark, scratch, monkeypatch):
-    """A read within the row cap compares against struct-wrapped bounds
-    (passed by reference, no codegen compile per bound); over the cap
-    the plain pushable predicate runs. Both return the same rows,
-    half-open at the bounds."""
+def test_range_read_bounds_are_half_open(spark, scratch):
+    """A range read compares against struct-wrapped bounds (passed by
+    reference, no codegen compile per bound): the rows are those of
+    the full read in ``[start, end_excl)``."""
     ds = _base(spark, os.path.join(scratch, "ds"))
-    got = {}
-    for cap in (None, 0):
-        with monkeypatch.context() as m:
-            if cap is not None:
-                m.setattr(driver_gate, "MAX_ROWS", cap)
-            got[cap] = [
-                _sorted_rows(ds.read(lo, hi)) for lo, hi in
-                ((13, 57), (None, 40), (41, None), (200, 300))
-            ]
-    assert got[None] == got[0]
-    assert [len(r) for r in got[None]] == [44, 40, 79, 0]
-    assert min(r[0] for r in got[None][0]) == 13
-    assert max(r[0] for r in got[None][0]) == 56
+    every = _sorted_rows(ds.read())
+    for lo, hi in ((13, 57), (None, 40), (41, None), (200, 300)):
+        want = [
+            r for r in every
+            if (lo is None or r[0] >= lo) and (hi is None or r[0] < hi)
+        ]
+        assert _sorted_rows(ds.read(lo, hi)) == want, (lo, hi)
+    rows = _sorted_rows(ds.read(13, 57))
+    assert (len(rows), rows[0][0], rows[-1][0]) == (44, 13, 56)
