@@ -39,6 +39,7 @@ stitching, restart-state and flush core.
 from __future__ import annotations
 
 import functools
+import time
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 from typing import Any
@@ -416,12 +417,14 @@ class AggStream:
 
     def _driver_chunk(self, chunk: DataFrame) -> "_TableChunk | None":
         """The chunk collected for the driver path, or None (the
-        persisted Spark path runs): it needs a UTC session, a timestamp
-        (or timestamp_ntz) ``ordered_on``, Arrow-safe columns every key
-        can read, explicit edges the driver producers take, and at most
-        ``driver_gate.MAX_ROWS`` rows with no NULL ``ordered_on`` and no
-        float NaN (Spark orders NaN above every value; Arrow's kernels
-        skip it)."""
+        persisted Spark path runs): it needs a UTC session and a UTC
+        Python process zone (PySpark reads naive datetimes, such as
+        snapshot edges and restart indexes, in the process's zone), a
+        timestamp (or timestamp_ntz) ``ordered_on``, Arrow-safe columns
+        every key can read, explicit edges the driver producers take,
+        and at most ``driver_gate.MAX_ROWS`` rows with no NULL
+        ``ordered_on`` and no float NaN (Spark orders NaN above every
+        value; Arrow's kernels skip it)."""
         tz = self.spark.conf.get("spark.sql.session.timeZone")
         schema = chunk.schema
         types = {f.name: f.dataType for f in schema.fields}
@@ -431,6 +434,7 @@ class AggStream:
         }
         if not (
             tz in ("UTC", "Etc/UTC")
+            and time.timezone == time.altzone == 0
             and driver_gate.arrow_safe(schema)
             and isinstance(types.get(self.ordered_on), (TimestampType, TimestampNTZType))
             and all(self._driver_key_ok(cfg, types) for cfg in self.keys.values())

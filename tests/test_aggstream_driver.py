@@ -149,21 +149,38 @@ def process_zone(request, monkeypatch):
     datetime (the Spark session zone stays UTC)."""
     monkeypatch.setenv("TZ", request.param)
     time.tzset()
-    yield
+    yield request.param
     monkeypatch.undo()
     time.tzset()
 
 
-def test_filter_and_trim_select_the_same_rows(spark, scratch, chunk, process_zone):
+def test_filter_and_trim_select_the_same_rows(spark, scratch, chunk):
     """OR-of-AND filters with NULL inputs, an IN list and a timestamp
     bound inside the chunk, plus the per-key trim past a carried
-    restart index, under a UTC and a non-UTC process zone."""
+    restart index."""
     flt = [
         [("qty", "in", [1, 2, 3]), ("tag", "!=", "t05")],
         [("ts", ">=", dt.datetime(2024, 2, 1, 2)), ("val", ">", 0.0)],
     ]
     carry = {"restart_index": pd.Timestamp("2024-01-31 10:00")}
     _assert_same(spark, scratch, "1h", chunk, carry, filter=flt)
+
+
+def test_dnf_expression_reads_datetimes_as_spark(spark, scratch, chunk, process_zone):
+    """The Arrow DNF filter reads a naive datetime as ``F.lit`` does, in
+    the process's zone; the driver path itself runs only when that zone
+    is UTC."""
+    from oups_spark.functions.filters import dnf_expression, dnf_filter
+    from oups_spark.store import driver_gate
+
+    flt = [[("ts", ">=", dt.datetime(2024, 2, 1, 2)), ("val", ">", 0.0)],
+           [("ts", "in", [T0, pd.Timestamp("2024-02-01 06:30")])]]
+    tbl = driver_gate.collect(chunk)
+    got = tbl.filter(dnf_expression(flt, tbl.schema))["id"].to_pylist()
+    want = [r["id"] for r in dnf_filter(chunk, flt).collect()]
+    assert sorted(got) == sorted(want) and want
+    utc = process_zone == "UTC"
+    assert isinstance(_stream(spark, scratch, "1h")._driver_chunk(chunk), _TableChunk) == utc
 
 
 def test_fully_held_back_chunk(spark, scratch):
