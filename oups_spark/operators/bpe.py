@@ -25,13 +25,15 @@ integer sums, and ties break lexicographically on (left, right).
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 END_MARK = "</w>"
 TOKEN_PATTERN = "[a-z0-9]+"
+# distinct words up to which bpe_train runs its merge rounds on the
+# driver; a bigger vocabulary takes the distributed loop (read at call
+# time: patch it on this module to force either path)
+DRIVER_VOCAB_CAP = 200_000
 
 
 def word_count_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -118,10 +120,9 @@ def bpe_train(
     # integer sums and ties break on the same ASCII-lexicographic
     # (left, right) order, so the trajectory is bit-identical; a
     # vocabulary over the cap falls back to the distributed loop.
-    cap = int(os.environ.get("OUPS_BPE_DRIVER_VOCAB_CAP", "200000"))
     wc = word_count_table(docs, text_col)
-    head = wc.limit(cap + 1).collect()
-    if len(head) <= cap:
+    head = wc.limit(DRIVER_VOCAB_CAP + 1).collect()
+    if len(head) <= DRIVER_VOCAB_CAP:
         return _bpe_train_driver(
             spark, head, n_merges=n_merges, return_vocab=return_vocab
         )

@@ -28,6 +28,7 @@ manifest prunes before any Spark job is launched, so an append to a
 from __future__ import annotations
 
 import contextlib
+import dataclasses
 import functools
 import os
 import shutil
@@ -137,7 +138,7 @@ class OrderedDataset:
         self.conflict_reruns = 0
         # True once the most recent commit attempt's CAS landed —
         # cleanup handlers that delete staged data files on failure
-        # must skip the deletion when this is set (see _commit)
+        # must skip the deletion when this is set (see _land)
         self._commit_landed = False
 
     # ------------------------------------------------------------- state
@@ -335,7 +336,6 @@ class OrderedDataset:
         max_n_off_target_rgs: int | None = None,
         key_value_metadata: dict | None = None,
         validate_monotonic: bool = True,
-        known_stats: tuple | None = None,
         evolve_schema: bool = False,
         conflict_retries: int = 0,
         bloom_cols: list[str] | None = None,
@@ -415,7 +415,6 @@ class OrderedDataset:
                 max_n_off_target_rgs=max_n_off_target_rgs,
                 key_value_metadata=kv,
                 validate_monotonic=validate_monotonic,
-                known_stats=known_stats,
                 evolve_schema=evolve_schema,
                 bloom_cols=bloom_cols,
                 batch_tbl=batch_tbl if cdf is df else None,
@@ -493,7 +492,6 @@ class OrderedDataset:
         max_n_off_target_rgs: int | None = None,
         key_value_metadata: dict | None = None,
         validate_monotonic: bool = True,
-        known_stats: tuple | None = None,
         evolve_schema: bool = False,
         bloom_cols: list[str] | None = None,
         batch_tbl=None,
@@ -501,17 +499,13 @@ class OrderedDataset:
         """Ordered merge write (see module docstring for the plan).
 
         ``batch_tbl``: optional pyarrow.Table that IS the batch's
-        collected data (``df`` is its local-relation twin) — the
-        bounds/collect probe jobs are skipped entirely.
+        collected data (``df`` is its local-relation twin); with
+        ``validate_monotonic=False`` it is the batch summary, and no
+        bounds or probe job runs.
 
         ``key_value_metadata``: dict merged into the manifest kv;
         a ``None`` value removes the key (reference semantics,
         ``base.py:600-649``).
-
-        ``known_stats``: optional ``(min, max, n_rows)`` of the new
-        batch's ordering column, when the producer already knows them
-        (e.g. a driver-built frame) — skips the bounds job. Only
-        honored with ``validate_monotonic=False``.
 
         ``evolve_schema``: SCHEMA EVOLUTION (beyond reference — the
         reference is fixed-schema-on-first-write, SURVEY §1.3). When
@@ -571,91 +565,60 @@ class OrderedDataset:
             .withColumn(_SRC, F.lit(1))
             .withColumn(_FIDX, F.lit(0))
         )
-        # SINGLE-JOB SMALL-BATCH PATH (round-14, guide §1.2: fewer
-        # passes / fewer jobs): when the caller skips the monotonic
-        # check and supplies no stats, the bounds agg and the
-        # driver-merge collect are FUSED — one Arrow collect (row-limit
-        # guarded, so an oversized batch just falls back) yields the
-        # data AND its exact stats/bytes, replacing the bounds job +
-        # the collect job with a single job. This is the latency shape
-        # per-micro-batch flushes pay 3x per sink; at 100 TB the seed
-        # stays distributed (big batches blow the row cap and take the
-        # classic path, at the cost of one bounded CollectLimit probe).
-        probe_tbl = None
-        if (
-            validate_monotonic is False
-            and known_stats is None
-            and isinstance(row_group_target_size, int)
+        # whether the merge may run driver-side at all; the size gate
+        # below decides the rest
+        driver_ok = (
+            isinstance(row_group_target_size, int)
             and target_schema is None
             and gate.arrow_safe(df.schema)
-        ):
-            # a batch already on the driver needs no probe job
-            probe_tbl = (
-                batch_tbl
-                if batch_tbl is not None
-                else gate.collect(df, max_rows=gate.MAX_ROWS)
-            )
-            if probe_tbl is not None and not gate.fits(probe_tbl.num_rows):
-                probe_tbl = None  # oversized: classic path (stats agg)
-        # string-payload bytes of the new batch ride along in the SAME
-        # job as the bounds/monotonic pass (zero extra jobs) — the
-        # driver-merge byte gate needs them and a separate agg would
-        # re-scan the batch. None = not measured (known_stats path).
-        str_cols = [
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString() == "string"
-        ]
-        str_bytes: int | None = None
-        if probe_tbl is not None:
-            n_new = probe_tbl.num_rows
-            if n_new == 0:
-                if self._manifest is None and not key_value_metadata:
-                    # nothing to create: an empty batch must not leave
-                    # a schema-less dataset behind (sinks relied on
-                    # their former isEmpty guard for exactly this)
-                    return
-                self._update_kv_only(ordered_on, key_value_metadata)
-                return
-            col = probe_tbl.column(ordered_on)
+        )
+        # THE batch summary (min, max, n_rows, Arrow bytes), from
+        # exactly one source, each a single pass over the batch:
+        # - an Arrow table already on the driver, when the caller skips
+        #   the order check: the caller's pyarrow batch (no job), or
+        #   one capped collect of a driver-sized batch, which is also
+        #   the data the driver merge then uses (an oversized batch
+        #   falls through to the stats agg);
+        # - the monotonic check, which stitches per-batch summaries;
+        # - one stats agg.
+        # The last two measure string bytes in the same job, so the
+        # driver-merge byte gate never re-scans the batch.
+        tbl = None
+        if not validate_monotonic:
+            tbl = batch_tbl
+            if tbl is None and driver_ok:
+                tbl = gate.collect(df, max_rows=gate.MAX_ROWS)
+        if tbl is not None:
+            col = tbl.column(ordered_on)
             df_min = _norm_tz(pc.min(col).as_py())
             df_max = _norm_tz(pc.max(col).as_py())
-        elif validate_monotonic:
-            # one distributed pass yields the order check AND the
-            # batch bounds — no second scan of the new data
-            df_min, df_max, n_new, str_bytes = self._check_monotonic(
-                new, ordered_on, str_cols
-            )
-        elif known_stats is not None:
-            df_min, df_max, n_new = known_stats
-        elif batch_tbl is not None and not validate_monotonic:
-            # oversized driver-built batch: exact stats straight from
-            # the table — no Spark stats job on the local relation
-            n_new = batch_tbl.num_rows
-            if n_new == 0:
-                self._update_kv_only(ordered_on, key_value_metadata)
-                return
-            col = batch_tbl.column(ordered_on)
-            df_min = _norm_tz(pc.min(col).as_py())
-            df_max = _norm_tz(pc.max(col).as_py())
-            str_bytes = sum(
-                batch_tbl.column(c).nbytes for c in str_cols
-            )
+            n_new, new_bytes = tbl.num_rows, tbl.nbytes
         else:
-            stats = new.agg(
-                F.min(ordered_on).alias("mn"),
-                F.max(ordered_on).alias("mx"),
-                F.count(F.lit(1)).alias("n"),
-                *[
-                    F.sum(
-                        F.octet_length(F.coalesce(F.col(c), F.lit("")))
-                    ).alias(f"__sb{i}")
-                    for i, c in enumerate(str_cols)
-                ],
-            ).collect()[0]
-            df_min, df_max, n_new = stats["mn"], stats["mx"], stats["n"]
-            str_bytes = sum(
-                int(stats[f"__sb{i}"] or 0) for i in range(len(str_cols))
-            )
+            str_cols = [
+                f.name for f in df.schema.fields
+                if f.dataType.simpleString() == "string"
+            ]
+            if validate_monotonic:
+                df_min, df_max, n_new, str_bytes = self._check_monotonic(
+                    new, ordered_on, str_cols
+                )
+            else:
+                stats = new.agg(
+                    F.min(ordered_on).alias("mn"),
+                    F.max(ordered_on).alias("mx"),
+                    F.count(F.lit(1)).alias("n"),
+                    *[
+                        F.sum(
+                            F.octet_length(F.coalesce(F.col(c), F.lit("")))
+                        ).alias(f"__sb{i}")
+                        for i, c in enumerate(str_cols)
+                    ],
+                ).collect()[0]
+                df_min, df_max, n_new = stats["mn"], stats["mx"], stats["n"]
+                str_bytes = sum(
+                    int(stats[f"__sb{i}"] or 0) for i in range(len(str_cols))
+                )
+            new_bytes = self._estimate_new_bytes(df, n_new, str_bytes)
         if n_new == 0:
             self._update_kv_only(ordered_on, key_value_metadata)
             return
@@ -672,38 +635,21 @@ class OrderedDataset:
         replaced_names = {e.name for e in replaced}
 
         # SMALL-BATCH DRIVER FAST PATH: batch + overlapping files are
-        # small (row count known by now from known_stats, the
-        # monotonic check, or the bounds job), so the whole merge runs
-        # driver-side with pyarrow — ONE Spark job (the arrow collect)
-        # instead of the merge/sample/write/cache job train. This is
-        # the latency shape frequent incremental flushes need even at
-        # 100 TB: the SEED processing stays distributed; only the
-        # small flush avoids the ~0.5 s-per-job floor. Semantics are
-        # identical (same overlap selection upstream, same keep-last
-        # tiebreak, same footer-stats manifest entries via
-        # _footer_stats); any arrow incompatibility falls back to the
-        # Spark path below. Caps and column-type policy: driver_gate;
-        # string columns are measured, not excluded.
+        # small, so the whole merge runs driver-side with pyarrow — at
+        # most ONE Spark job (the arrow collect, none when ``tbl`` is
+        # already here) instead of the merge/sample/write/cache job
+        # train. This is the latency shape frequent incremental
+        # flushes need even at 100 TB: the SEED processing stays
+        # distributed; only the small flush avoids the ~0.5 s-per-job
+        # floor. Semantics are identical (same overlap selection
+        # upstream, same keep-last tiebreak, same footer-stats
+        # manifest entries via _footer_stats); any arrow
+        # incompatibility falls back to the Spark path below. Caps and
+        # column-type policy: driver_gate.
         n_old = sum(e.n_rows for e in replaced)
-        old_paths = self._paths(replaced)
-        if not isinstance(row_group_target_size, int):
-            use_driver = False
-        elif probe_tbl is not None:
-            # the batch is already collected: gate on its ACTUAL
-            # Arrow bytes (better than the schema estimate)
-            use_driver = gate.fits(n_new + n_old, probe_tbl.nbytes, old_paths)
-        else:
-            use_driver = (
-                target_schema is None
-                # rows first: the byte estimate may cost a job
-                and n_new + n_old <= gate.MAX_ROWS
-                and gate.arrow_safe(df.schema)
-                and gate.fits(
-                    n_new + n_old,
-                    self._estimate_new_bytes(df, n_new, str_bytes),
-                    old_paths,
-                )
-            )
+        use_driver = driver_ok and gate.fits(
+            n_new + n_old, new_bytes, self._paths(replaced)
+        )
         with self._committing(
             replaced_names, target_schema or df.schema, ordered_on=ordered_on,
             key_value_metadata=key_value_metadata, cmidx=cmidx,
@@ -713,7 +659,7 @@ class OrderedDataset:
             if use_driver:
                 new_entries = self._merge_write_driver(
                     df, replaced, ordered_on, duplicates_on,
-                    row_group_target_size, new_tbl=probe_tbl,
+                    row_group_target_size, new_tbl=tbl,
                 )
             if new_entries is None:
                 new_entries = self._merge_write_distributed(
@@ -820,79 +766,71 @@ class OrderedDataset:
         self, new_entries, replaced_names, schema, *, ordered_on=None,
         key_value_metadata=None, cmidx=None, bloom_cols=None, rebase=True,
     ) -> None:
-        """Index ``new_entries`` (``bloom_cols``, default the sticky
-        manifest setting) and swap them in for ``replaced_names`` in
-        one manifest CAS, with the rebase fast path on conflict unless
-        ``rebase=False``. ``schema``: the dataset schema to record
-        (None keeps the current one)."""
+        """THE commit of every manifest change, data or kv-only: index
+        ``new_entries`` (``bloom_cols``, default the sticky manifest
+        setting) and swap them in for ``replaced_names`` in one
+        manifest CAS. ``schema``: the dataset schema to record (None
+        keeps the current one). On a lost CAS the change is re-applied
+        onto the winner's manifest when ``_try_rebase`` allows it and
+        ``rebase`` is set; otherwise ``ManifestConflictError``
+        propagates (the caller's ``_committing`` removes the staged
+        files, and ``_retrying`` may re-run the whole write)."""
         base = self._manifest
-        ordered_on = ordered_on or base.ordered_on
         if bloom_cols is None and base is not None:
             bloom_cols = base.kv.get(_BLOOM_COLS_KV)
         if schema is not None:
             self._attach_blooms(new_entries, bloom_cols, schema)
-        # build the CANDIDATE manifest as a copy: a failed commit
-        # (e.g. CAS conflict) must not leave this handle's in-memory
-        # manifest referencing files that were cleaned up — the
-        # handle state changes only on successful commit
-        if base is None:
-            man = Manifest(ordered_on=ordered_on)
-        else:
-            man = Manifest(
-                ordered_on=ordered_on,
-                files=list(base.files),
-                kv=dict(base.kv),
-                schema_json=base.schema_json,
-                generation=base.generation,
-                cmidx=base.cmidx,
-                tombstones=list(base.tombstones),
-                token=base.token,
-            )
-        if cmidx:
-            man.cmidx = cmidx
-        replaced = set(replaced_names)
-        man.files = [e for e in man.files if e.name not in replaced] + list(
-            new_entries
+        land = functools.partial(
+            self._land, new_entries=new_entries,
+            replaced_names=replaced_names,
+            schema_json=schema.json() if schema is not None else None,
+            key_value_metadata=key_value_metadata, cmidx=cmidx,
         )
-        if schema is not None:
-            man.schema_json = schema.json()
-        _merge_kv(man.kv, key_value_metadata)
+        try:
+            return land(base or Manifest(ordered_on=ordered_on))
+        except ManifestConflictError:
+            latest = rebase and self._try_rebase(replaced_names, new_entries)
+            if not latest:
+                raise
+        # a third writer racing this CAS raises ManifestConflictError
+        land(latest)
+        self.conflict_rebases += 1
+
+    def _land(
+        self, base, *, new_entries, replaced_names, schema_json,
+        key_value_metadata, cmidx,
+    ) -> None:
+        """The one manifest save: CAS a copy of ``base`` with the
+        change applied. ``base`` is never mutated, so a save that
+        raised before its CAS landed leaves the handle as stored. Once
+        the CAS has landed the handle adopts the copy, even when a
+        later step (the time-travel snapshot write) raises: the stored
+        manifest references the staged files, and ``_committing``
+        keeps them when ``_commit_landed`` is set (a delete there
+        would be permanent data loss). Expired tombstones are deleted
+        after a clean save only."""
+        replaced = set(replaced_names)
+        man = dataclasses.replace(
+            base,
+            files=[e for e in base.files if e.name not in replaced]
+            + list(new_entries),
+            kv=_merged_kv(base.kv, key_value_metadata),
+            schema_json=schema_json or base.schema_json,
+            cmidx=cmidx or base.cmidx,
+        )
         expired = self._stage_tombstones(man, replaced_names)
         try:
             man.save(self.path, self.backend, snapshot=self.retain_versions)
-        except ManifestConflictError:
-            # REBASE fast path (Delta-style conflict resolution): when
-            # the winning commit's file changes are range-disjoint
-            # from everything this write read or wrote, our result is
-            # still valid — re-apply it onto the winner's manifest
-            # instead of recomputing it. The caller's _committing
-            # removes the staged files when this re-raises.
-            if rebase and self._try_rebase(
-                ordered_on, man.schema_json, replaced_names, new_entries,
-                key_value_metadata, cmidx,
-            ):
-                return
-            raise
-        except BaseException:
+        finally:
             if man.last_commit_landed:
-                # POST-commit failure (e.g. the time-travel snapshot
-                # write): the CAS accepted this manifest, so the new
-                # files are referenced — adopt the committed state and
-                # propagate; _committing keys off self._commit_landed
-                # and keeps the files (a delete here would be
-                # permanent data loss).
                 self._commit_landed = True
                 self._manifest = man
-            raise
-        self._commit_landed = True
-        self._manifest = man
         self._remove_files(expired)
 
-    def _try_rebase(
-        self, ordered_on, schema_json, replaced_names, new_entries,
-        key_value_metadata, cmidx,
-    ) -> bool:
-        """Attempt a commit rebase after a lost manifest CAS.
+    def _try_rebase(self, replaced_names, new_entries) -> Manifest | None:
+        """After a lost manifest CAS: the winner's manifest when this
+        handle's change may be re-applied onto it (a commit REBASE,
+        Delta-style conflict resolution), else None.
 
         Correctness argument: the failed write's overlap analysis,
         keep-last dedup and file split were computed against the base
@@ -913,26 +851,25 @@ class OrderedDataset:
         minus ours replaced plus ours added, with our kv merged on
         top — exactly what re-running the merge against the winner's
         manifest would produce, at zero Spark-job cost. Any doubt
-        returns False and the caller falls back to the full re-run
-        (``conflict_retries``). A third writer racing the rebase's
-        own CAS also falls back.
+        returns None and the caller falls back to the full re-run
+        (``conflict_retries``).
         """
         base = self._manifest
         if base is None:
-            return False  # concurrent creation: nothing safe to rebase onto
+            return None  # concurrent creation: nothing safe to rebase onto
         latest = Manifest.load(self.path, self.backend)
         if (
             latest is None
-            or latest.ordered_on != ordered_on
+            or latest.ordered_on != base.ordered_on
             or latest.schema_json != base.schema_json
             or latest.cmidx != base.cmidx
             or latest.kv.get(_BLOOM_COLS_KV) != base.kv.get(_BLOOM_COLS_KV)
         ):
-            return False
+            return None
         replaced = set(replaced_names)
         latest_names = {f.name for f in latest.files}
         if not replaced <= latest_names:
-            return False  # the winner rewrote files our merge consumed
+            return None  # the winner rewrote files our merge consumed
         base_by_name = {f.name: f for f in base.files}
         touched = [f for f in latest.files if f.name not in base_by_name]
         touched += [
@@ -945,37 +882,8 @@ class OrderedDataset:
             lo = min(e.min for e in ours)
             hi = max(e.max for e in ours)
             if any(not (f.max < lo or f.min > hi) for f in touched):
-                return False
-        rebased = Manifest(
-            ordered_on=ordered_on,
-            files=[f for f in latest.files if f.name not in replaced]
-            + list(new_entries),
-            kv=dict(latest.kv),
-            schema_json=schema_json,
-            generation=latest.generation,
-            cmidx=cmidx or latest.cmidx,
-            tombstones=list(latest.tombstones),
-            token=latest.token,
-        )
-        _merge_kv(rebased.kv, key_value_metadata)
-        expired = self._stage_tombstones(rebased, replaced_names)
-        try:
-            rebased.save(self.path, self.backend, snapshot=self.retain_versions)
-        except ManifestConflictError:
-            return False
-        except BaseException:
-            if rebased.last_commit_landed:
-                # same post-commit contract as _commit: the rebase CAS
-                # landed, so the staged files are referenced — adopt
-                # and propagate, never delete
-                self._commit_landed = True
-                self._manifest = rebased
-            raise
-        self._commit_landed = True
-        self._manifest = rebased
-        self._remove_files(expired)
-        self.conflict_rebases += 1
-        return True
+                return None
+        return latest
 
     def _stage_tombstones(self, man, replaced_names) -> list[str]:
         """Move ``replaced_names`` onto the candidate manifest's
@@ -1007,29 +915,17 @@ class OrderedDataset:
 
     # ----------------------------------------------------------- helpers
     def _update_kv_only(self, ordered_on, key_value_metadata) -> None:
-        if not key_value_metadata:
-            if self._manifest is not None:
-                # nothing to change on an existing dataset: skip the
-                # redundant manifest rewrite (an empty micro-batch
-                # would otherwise pay a full commit per batch)
-                return
-            # nothing to create either: an empty batch with no kv must
-            # not leave a schema-less dataset behind (the probe path
-            # has always guarded this; the stats/monotonic paths now
-            # match, so sinks need no isEmpty pre-probe)
-            return
-        man = self._manifest or Manifest(ordered_on=ordered_on or "")
-        _merge_kv(man.kv, key_value_metadata)
-        os.makedirs(self.path, exist_ok=True)
-        try:
-            man.save(self.path, self.backend)
-        except ManifestConflictError:
-            # restore committed state (the in-place kv merge above is
-            # now stale); write()'s retry loop re-applies it on top of
-            # the winning writer's manifest
-            self._manifest = Manifest.load(self.path, self.backend)
-            raise
-        self._manifest = man
+        """Commit a kv change that carries no data, without rebase.
+        Without kv there is nothing to commit: an existing dataset
+        skips the manifest rewrite (an empty micro-batch would
+        otherwise pay a commit per batch), and a new one must not be
+        created schema-less."""
+        if key_value_metadata:
+            os.makedirs(self.path, exist_ok=True)
+            self._commit(
+                [], (), None, ordered_on=ordered_on or "",
+                key_value_metadata=key_value_metadata, rebase=False,
+            )
 
     _FIXED_WIDTHS = {
         "boolean": 1, "byte": 1, "short": 2, "int": 4, "date": 4,
@@ -1038,39 +934,20 @@ class OrderedDataset:
     }
 
     def _estimate_new_bytes(
-        self, df: DataFrame, n_new: int, str_bytes: int | None
+        self, df: DataFrame, n_new: int, str_bytes: int
     ) -> int:
         """Estimated in-memory Arrow bytes of the new batch for the
-        driver-merge gate: fixed-width columns priced from the schema;
-        string columns use ``str_bytes`` — measured for free inside the
-        bounds/monotonic pass (``_check_monotonic`` / the stats agg),
-        never with an extra job. When strings are present but were NOT
-        measured (``known_stats`` writes, where the producer skipped
-        the bounds job entirely), one bounded agg job measures them
-        here — the only path that pays an extra job, and only for
-        string-bearing known-stats batches. The overlapped files are
-        priced by ``driver_gate.decoded_bytes``.
+        driver-merge gate: fixed-width columns priced from the schema,
+        string columns at ``str_bytes``, measured in the same pass as
+        the batch bounds (``_check_monotonic`` or the stats agg). The
+        overlapped files are priced by ``driver_gate.decoded_bytes``.
         """
-        fixed = 0
-        str_cols = []
-        for f in df.schema.fields:
-            s = f.dataType.simpleString()
-            if s == "string":
-                str_cols.append(f.name)
-            else:
-                fixed += self._FIXED_WIDTHS.get(s.split("(")[0], 16)
-        new_bytes = fixed * n_new
-        if str_cols:
-            if str_bytes is None:
-                row = df.agg(
-                    *[
-                        F.sum(F.octet_length(F.coalesce(F.col(c), F.lit("")))).alias(c)
-                        for c in str_cols
-                    ]
-                ).collect()[0]
-                str_bytes = sum(int(v or 0) for v in row)
-            new_bytes += str_bytes
-        return new_bytes
+        fixed = sum(
+            self._FIXED_WIDTHS.get(s.split("(")[0], 16)
+            for f in df.schema.fields
+            if (s := f.dataType.simpleString()) != "string"
+        )
+        return fixed * n_new + str_bytes
 
     def _check_monotonic(self, new: DataFrame, ordered_on: str, str_cols=()):
         """Reject unsorted input (reference: ``write.py:182-185``) and
@@ -2983,13 +2860,14 @@ def pandas_to_spark_arrow(pdf, session_tz: str):
         return None
 
 
-def _merge_kv(kv: dict, update: dict | None) -> None:
-    """Add/update keys; a None value removes the key (reference
-    ``base.py:600-649`` semantics)."""
-    if not update:
-        return
-    for k, v in update.items():
+def _merged_kv(kv: dict, update: dict | None) -> dict:
+    """A copy of ``kv`` with ``update``'s keys added or updated; a
+    None value removes the key (reference ``base.py:600-649``
+    semantics)."""
+    out = dict(kv)
+    for k, v in (update or {}).items():
         if v is None:
-            kv.pop(k, None)
+            out.pop(k, None)
         else:
-            kv[k] = v
+            out[k] = v
+    return out

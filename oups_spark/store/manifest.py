@@ -1253,8 +1253,11 @@ class Manifest:
     # True iff the most recent save() got its head CAS accepted —
     # distinguishes post-commit failures (snapshot write, expired-file
     # deletion) from pre-commit ones in callers' cleanup handlers.
-    # Reset to False at the top of every save().
-    last_commit_landed: bool = field(default=False, compare=False, repr=False)
+    # Reset to False at the top of every save(); a copy
+    # (``dataclasses.replace``) starts False.
+    last_commit_landed: bool = field(
+        default=False, init=False, compare=False, repr=False
+    )
 
     @property
     def n_rows(self) -> int:

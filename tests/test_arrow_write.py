@@ -16,6 +16,7 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
+from oups_spark.store import driver_gate
 from oups_spark.store.dataset import OrderedDataset, pandas_to_spark_arrow
 
 
@@ -76,11 +77,20 @@ def test_rejects_types_outside_the_audited_mapping(spark):
     )
 
 
-def test_write_arrow_table_equals_write_dataframe(spark, tmp_path):
+@pytest.mark.parametrize(
+    "max_rows", [driver_gate.MAX_ROWS, 0], ids=["driver", "distributed"]
+)
+def test_write_arrow_table_equals_write_dataframe(
+    spark, tmp_path, monkeypatch, max_rows
+):
     """A pyarrow.Table batch and its createDataFrame twin must leave
     IDENTICAL datasets behind: same read-back rows, same parquet
-    schema, same manifest stats."""
+    schema, same manifest stats — on the driver merge and, with the
+    row cap at 0 (the table then only summarizes the batch), on the
+    distributed merge."""
     import pyarrow.parquet as pq
+
+    monkeypatch.setattr(driver_gate, "MAX_ROWS", max_rows)
 
     pdf = pd.DataFrame(
         {

@@ -598,7 +598,8 @@ def test_bpe_train_matches_pure_python_reference(spark):
 def test_bpe_train_driver_equals_distributed(spark, monkeypatch):
     """The round-14 driver fast path (vocabulary under the cap) and
     the distributed fallback loop must emit the IDENTICAL merge table
-    and final vocabulary — forcing the fallback via the cap env."""
+    and final vocabulary — forcing the fallback via the cap."""
+    from oups_spark.operators import bpe
     from oups_spark.operators.bpe import bpe_train
 
     texts = [
@@ -622,7 +623,7 @@ def test_bpe_train_driver_equals_distributed(spark, monkeypatch):
         return m, v
 
     fast = snap(bpe_train(df, "text", n_merges=8, return_vocab=True))
-    monkeypatch.setenv("OUPS_BPE_DRIVER_VOCAB_CAP", "0")
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_CAP", 0)
     slow = snap(bpe_train(df, "text", n_merges=8, return_vocab=True))
     assert fast == slow
 

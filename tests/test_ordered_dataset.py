@@ -413,8 +413,7 @@ def test_column_stats_file_skipping(spark, scratch):
 
 
 def test_driver_merge_fast_path_equals_spark_path(spark, scratch):
-    """The known-stats driver-side pyarrow merge (small-batch fast
-    path) must produce the same readable dataset as the distributed
+    """The driver-side pyarrow merge (small-batch fast path) must produce the same readable dataset as the distributed
     path: same rows after overlapping keep-last merges, same manifest
     stat quality, same file sizing."""
     import os
@@ -444,7 +443,6 @@ def test_driver_merge_fast_path_equals_spark_path(spark, scratch):
             duplicates_on=["sym"],
             row_group_target_size=16,
             validate_monotonic=False,
-            known_stats=(b["ts"].min(), b["ts"].max(), len(b)),
         )
         with pytest.MonkeyPatch.context() as m:
             m.setattr(driver_gate, "MAX_ROWS", 0)  # the distributed path
@@ -2186,6 +2184,79 @@ def test_compact_zorder_post_commit_failure_keeps_rewrite(
         ds2.read().toPandas().sort_values("ts", ignore_index=True)
     )
     pd.testing.assert_frame_equal(got[["ts", "uid", "v"]], pdf)
+
+
+def test_rebase_post_commit_failure_keeps_staged_files(
+    spark, scratch, monkeypatch
+):
+    """The post-commit contract holds on the REBASE path too: when the
+    retain_versions snapshot write fails after the rebase CAS landed,
+    the staged files stay and the handle adopts the rebased
+    manifest."""
+    import os
+
+    from oups_spark.store import manifest as manifest_mod
+    from oups_spark.store.manifest import Manifest
+
+    path = os.path.join(scratch, "pc_rebase")
+    ds = OrderedDataset(spark, path, retain_versions=True)
+    ds.write(df=make_df(spark, [(ts(h), float(h), "a") for h in range(4)]),
+             ordered_on="ts")
+    a = OrderedDataset(spark, path, retain_versions=True)
+    b = OrderedDataset(spark, path, retain_versions=True)
+    a.write(df=make_df(spark, [(ts(h, d=3), 30.0 + h, "c") for h in range(2)]))
+
+    def boom(*a, **k):
+        raise OSError("simulated snapshot-write failure (post-CAS)")
+
+    monkeypatch.setattr(manifest_mod, "write_snapshot", boom)
+    with pytest.raises(OSError, match="post-CAS"):
+        # range-disjoint from a's append: the lost CAS rebases
+        b.write(df=make_df(spark, [(ts(h, d=2), 20.0 + h, "b") for h in range(2)]))
+    monkeypatch.undo()
+
+    stored = Manifest.load(path)
+    assert b.manifest.generation == stored.generation == 3
+    assert sorted(e.name for e in b.manifest.files) == sorted(
+        e.name for e in stored.files
+    )
+    for e in stored.files:
+        assert os.path.exists(os.path.join(path, e.name)), e.name
+    got = OrderedDataset(spark, path).read().toPandas()
+    assert sorted(got["val"]) == [0.0, 1.0, 2.0, 3.0, 20.0, 21.0, 30.0, 31.0]
+
+
+def test_kv_only_write_failed_cas_leaves_handle_as_stored(
+    spark, scratch, monkeypatch
+):
+    """A kv-only write whose head write raises leaves the handle's
+    kv and generation as stored, so the handle's next commit does not
+    land the failed kv."""
+    import os
+
+    from oups_spark.store.manifest import Manifest, PosixTransport
+
+    path = os.path.join(scratch, "kv_fail")
+    ds = OrderedDataset(spark, path)
+    ds.write(df=make_df(spark, [(ts(0), 1.0, "a")]), ordered_on="ts",
+             key_value_metadata={"a": 1})
+    cas_head = PosixTransport.cas_head
+    failures = [OSError("simulated head write failure")]
+
+    def flaky(self, *args, **kw):
+        if failures:
+            raise failures.pop()
+        return cas_head(self, *args, **kw)
+
+    monkeypatch.setattr(PosixTransport, "cas_head", flaky)
+    with pytest.raises(OSError, match="head write"):
+        ds.write(key_value_metadata={"failed": 1})
+    assert ds.key_value_metadata == {"a": 1}
+    assert ds.manifest.generation == 1
+    ds.write(key_value_metadata={"b": 2})
+    stored = Manifest.load(path)
+    assert stored.kv == {"a": 1, "b": 2}
+    assert stored.generation == ds.manifest.generation == 2
 
 
 def test_compact_zorder_driver_equals_distributed(spark, scratch, monkeypatch):
