@@ -69,6 +69,7 @@ _ZCOL = "__oups_zorder"  # transient Morton-curve layout key
 # manifest kv key remembering write(bloom_cols=...) so later appends
 # keep indexing (plain name: dunder-keyed kv dicts read as codec tags)
 _BLOOM_COLS_KV = "oups.bloom_cols"
+_NULL_ORDERED_ON = "null values in ordered_on are not allowed"
 _PERIOD = "__oups_period"
 # DML rewrite: source-file id carrying each surviving row back to its
 # (single) replacement file
@@ -377,24 +378,20 @@ class OrderedDataset:
         manifest, and ``read`` rebuilds the structs.
         """
         # A pyarrow.Table batch (driver-built flushes, e.g. AggStream's
-        # stitched bin frames): the table IS the collected batch, so
-        # the probe job that would otherwise collect it is skipped —
-        # the common small flush then runs with ZERO Spark jobs. The
-        # Spark DataFrame twin is still constructed (driver-side local
-        # relation, no job) for schema checks and as the distributed
-        # fallback when the batch or its overlap outgrows the caps.
-        batch_tbl = None
-        if df is not None and not isinstance(df, DataFrame):
-            batch_tbl = df
-            df = self.spark.createDataFrame(batch_tbl)
+        # stitched bin frames) stays Arrow: its schema comes from
+        # PySpark's own Arrow mapping, its summary and order check from
+        # Arrow compute, and its Spark DataFrame twin is built only when
+        # a Spark plan runs (see _Batch) — the common small flush then
+        # runs with ZERO Spark jobs and no JVM transfer.
+        batch = None if df is None else _Batch(self.spark, df)
 
         def attempt():
             # conform INSIDE the retry loop: a conflict reloads the
             # manifest, and the cmidx merge must re-run against the
             # winning writer's mapping or this commit would overwrite
             # entries that writer just added
-            cdf, c_on, c_dup, cmidx = self._conform_cmidx(
-                df, ordered_on, duplicates_on
+            cbatch, c_on, c_dup, cmidx = self._conform_cmidx(
+                batch, ordered_on, duplicates_on
             )
             # bloom_cols is STICKY: an explicit list persists in the
             # manifest kv, and later writes that omit it keep indexing
@@ -407,7 +404,7 @@ class OrderedDataset:
             if bloom_cols is not None:
                 kv = {**(kv or {}), _BLOOM_COLS_KV: list(bloom_cols)}
             return self._write_attempt(
-                cdf,
+                cbatch,
                 ordered_on=c_on,
                 duplicates_on=c_dup,
                 cmidx=cmidx,
@@ -417,7 +414,6 @@ class OrderedDataset:
                 validate_monotonic=validate_monotonic,
                 evolve_schema=evolve_schema,
                 bloom_cols=bloom_cols,
-                batch_tbl=batch_tbl if cdf is df else None,
             )
 
         return self._retrying(attempt, conflict_retries)
@@ -439,7 +435,7 @@ class OrderedDataset:
 
     _CMIDX_SEP = "_"
 
-    def _conform_cmidx(self, df, ordered_on, duplicates_on):
+    def _conform_cmidx(self, batch, ordered_on, duplicates_on):
         """Normalize tuple column names (the reference's MultiIndex
         form) and flatten struct columns when cmidx mode is engaged —
         by a tuple ``ordered_on`` on first write, or by the stored
@@ -452,17 +448,18 @@ class OrderedDataset:
             and any(isinstance(d, tuple) for d in duplicates_on)
         )
         if not (isinstance(ordered_on, tuple) or stored or has_tuple_dup):
-            return df, ordered_on, duplicates_on, None
+            return batch, ordered_on, duplicates_on, None
         sep = self._CMIDX_SEP
         mapping: dict[str, list[str]] = {}
-        if df is not None and any(
-            f.dataType.typeName() == "struct" for f in df.schema.fields
+        if batch is not None and any(
+            f.dataType.typeName() == "struct" for f in batch.schema.fields
         ):
             from oups_spark.functions.fills import flatten_struct_columns
 
             df, mapping = flatten_struct_columns(
-                df, sep=sep, return_mapping=True
+                batch.frame(), sep=sep, return_mapping=True
             )
+            batch = _Batch(self.spark, df)
         for flat, levels in (stored or {}).items():
             if flat in mapping and mapping[flat] != list(levels):
                 raise ValueError(
@@ -479,11 +476,11 @@ class OrderedDataset:
                     sep.join(d) if isinstance(d, tuple) else d
                     for d in duplicates_on
                 ]
-        return df, ordered_on, duplicates_on, {**(stored or {}), **mapping}
+        return batch, ordered_on, duplicates_on, {**(stored or {}), **mapping}
 
     def _write_attempt(
         self,
-        df: DataFrame | None = None,
+        batch: _Batch | None = None,
         *,
         ordered_on: str | None = None,
         duplicates_on: list[str] | str | None = None,
@@ -494,14 +491,14 @@ class OrderedDataset:
         validate_monotonic: bool = True,
         evolve_schema: bool = False,
         bloom_cols: list[str] | None = None,
-        batch_tbl=None,
     ) -> None:
         """Ordered merge write (see module docstring for the plan).
 
-        ``batch_tbl``: optional pyarrow.Table that IS the batch's
-        collected data (``df`` is its local-relation twin); with
-        ``validate_monotonic=False`` it is the batch summary, and no
-        bounds or probe job runs.
+        ``batch``: the new rows (``_Batch``). When they arrived as a
+        pyarrow Table, that table is the batch summary (bounds, order
+        check, bytes) and the driver merge's input, so no Spark job
+        runs for them; their Spark DataFrame is built only when a
+        Spark plan does run (the distributed merge).
 
         ``key_value_metadata``: dict merged into the manifest kv;
         a ``None`` value removes the key (reference semantics,
@@ -518,7 +515,7 @@ class OrderedDataset:
         mismatch raises — the reference's posture.
         """
         if self._manifest is None:
-            if df is not None and ordered_on is None:
+            if batch is not None and ordered_on is None:
                 raise ValueError("ordered_on required on first write")
         else:
             if ordered_on is not None and ordered_on != self._manifest.ordered_on:
@@ -528,18 +525,18 @@ class OrderedDataset:
                 )
             ordered_on = self._manifest.ordered_on
 
-        if df is None:
+        if batch is None:
             self._update_kv_only(ordered_on, key_value_metadata)
             return
 
-        if ordered_on not in df.columns:
+        if ordered_on not in batch.columns:
             raise ValueError(f"ordered_on column {ordered_on!r} not in DataFrame")
 
         target_schema = None
         if self._manifest is not None and self._manifest.schema_json:
             old_schema = self.schema()
             old_by = {f.name: f for f in old_schema.fields}
-            new_by = {f.name: f for f in df.schema.fields}
+            new_by = {f.name: f for f in batch.schema.fields}
             for c in set(new_by) & set(old_by):
                 # a same-named column must keep its type in ALL cases:
                 # without this, a non-overlapping append could land a
@@ -557,53 +554,55 @@ class OrderedDataset:
                     )
                 target_schema = StructType(
                     list(old_schema.fields)
-                    + [f for f in df.schema.fields if f.name not in old_by]
+                    + [f for f in batch.schema.fields if f.name not in old_by]
                 )
 
-        new = (
-            df.withColumn(_POS, F.monotonically_increasing_id())
-            .withColumn(_SRC, F.lit(1))
-            .withColumn(_FIDX, F.lit(0))
-        )
+        @functools.cache
+        def new():
+            # the batch tagged with its in-batch position and source
+            # rank, for the Spark-side order check and merge
+            return (
+                batch.frame().withColumn(_POS, F.monotonically_increasing_id())
+                .withColumn(_SRC, F.lit(1))
+                .withColumn(_FIDX, F.lit(0))
+            )
+
         # whether the merge may run driver-side at all; the size gate
         # below decides the rest
         driver_ok = (
             isinstance(row_group_target_size, int)
             and target_schema is None
-            and gate.arrow_safe(df.schema)
+            and gate.arrow_safe(batch.schema)
         )
         # THE batch summary (min, max, n_rows, Arrow bytes), from
         # exactly one source, each a single pass over the batch:
-        # - an Arrow table already on the driver, when the caller skips
-        #   the order check: the caller's pyarrow batch (no job), or
-        #   one capped collect of a driver-sized batch, which is also
-        #   the data the driver merge then uses (an oversized batch
-        #   falls through to the stats agg);
+        # - an Arrow table on the driver: the caller's pyarrow batch
+        #   (no job; its order is checked there too), or, when the
+        #   caller skips the order check, one capped collect of a
+        #   driver-sized batch, which is also the data the driver
+        #   merge then uses (an oversized batch falls through to the
+        #   stats agg);
         # - the monotonic check, which stitches per-batch summaries;
         # - one stats agg.
         # The last two measure string bytes in the same job, so the
         # driver-merge byte gate never re-scans the batch.
-        tbl = None
-        if not validate_monotonic:
-            tbl = batch_tbl
-            if tbl is None and driver_ok:
-                tbl = gate.collect(df, max_rows=gate.MAX_ROWS)
+        tbl = batch.tbl
+        if tbl is None and driver_ok and not validate_monotonic:
+            tbl = gate.collect(batch.frame(), max_rows=gate.MAX_ROWS)
         if tbl is not None:
-            col = tbl.column(ordered_on)
-            df_min = _norm_tz(pc.min(col).as_py())
-            df_max = _norm_tz(pc.max(col).as_py())
+            df_min, df_max = _arrow_bounds(tbl, ordered_on, validate_monotonic)
             n_new, new_bytes = tbl.num_rows, tbl.nbytes
         else:
             str_cols = [
-                f.name for f in df.schema.fields
+                f.name for f in batch.schema.fields
                 if f.dataType.simpleString() == "string"
             ]
             if validate_monotonic:
                 df_min, df_max, n_new, str_bytes = self._check_monotonic(
-                    new, ordered_on, str_cols
+                    new(), ordered_on, str_cols
                 )
             else:
-                stats = new.agg(
+                stats = batch.frame().agg(
                     F.min(ordered_on).alias("mn"),
                     F.max(ordered_on).alias("mx"),
                     F.count(F.lit(1)).alias("n"),
@@ -618,7 +617,7 @@ class OrderedDataset:
                 str_bytes = sum(
                     int(stats[f"__sb{i}"] or 0) for i in range(len(str_cols))
                 )
-            new_bytes = self._estimate_new_bytes(df, n_new, str_bytes)
+            new_bytes = self._estimate_new_bytes(batch.schema, n_new, str_bytes)
         if n_new == 0:
             self._update_kv_only(ordered_on, key_value_metadata)
             return
@@ -626,7 +625,7 @@ class OrderedDataset:
         if df_min is None or df_min != df_min or (self.exists and any(
             e.min is None or e.max is None for e in self._manifest.files
         )):
-            raise ValueError("null values in ordered_on are not allowed")
+            raise ValueError(_NULL_ORDERED_ON)
 
         old_entries = self._manifest.files if self._manifest else []
         replaced = self._select_overlap(
@@ -651,19 +650,19 @@ class OrderedDataset:
             n_new + n_old, new_bytes, self._paths(replaced)
         )
         with self._committing(
-            replaced_names, target_schema or df.schema, ordered_on=ordered_on,
+            replaced_names, target_schema or batch.schema, ordered_on=ordered_on,
             key_value_metadata=key_value_metadata, cmidx=cmidx,
             bloom_cols=bloom_cols,
         ) as staged:
             new_entries = None
             if use_driver:
                 new_entries = self._merge_write_driver(
-                    df, replaced, ordered_on, duplicates_on,
-                    row_group_target_size, new_tbl=tbl,
+                    tbl if tbl is not None else gate.collect(batch.frame()),
+                    replaced, ordered_on, duplicates_on, row_group_target_size,
                 )
             if new_entries is None:
                 new_entries = self._merge_write_distributed(
-                    new, replaced, ordered_on, duplicates_on,
+                    new(), replaced, ordered_on, duplicates_on,
                     row_group_target_size, n_old + n_new,
                 )
             staged += new_entries
@@ -696,17 +695,8 @@ class OrderedDataset:
             # allowMissingColumns: under schema evolution either side
             # may lack columns the other has — absent values are NULL
             merged = old.unionByName(new, allowMissingColumns=True)
-        if duplicates_on is not None:
-            merged = self._dedup_keep_last(merged, ordered_on, duplicates_on)
         return self._write_files(
-            merged,
-            ordered_on,
-            target,
-            n_rows,
-            # the range partitioner's sample pass re-executes its child;
-            # cache iff that child contains the dedup window (re-scanning
-            # raw parquet twice is cheaper than materializing it)
-            cache=duplicates_on is not None,
+            merged, ordered_on, target, n_rows, duplicates_on=duplicates_on
         )
 
     def _reader(self):
@@ -934,7 +924,7 @@ class OrderedDataset:
     }
 
     def _estimate_new_bytes(
-        self, df: DataFrame, n_new: int, str_bytes: int
+        self, schema: StructType, n_new: int, str_bytes: int
     ) -> int:
         """Estimated in-memory Arrow bytes of the new batch for the
         driver-merge gate: fixed-width columns priced from the schema,
@@ -944,26 +934,28 @@ class OrderedDataset:
         """
         fixed = sum(
             self._FIXED_WIDTHS.get(s.split("(")[0], 16)
-            for f in df.schema.fields
+            for f in schema.fields
             if (s := f.dataType.simpleString()) != "string"
         )
         return fixed * n_new + str_bytes
 
     def _check_monotonic(self, new: DataFrame, ordered_on: str, str_cols=()):
-        """Reject unsorted input (reference: ``write.py:182-185``) and
-        return the batch bounds ``(min, max, n_rows, str_bytes)``.
+        """Reject unsorted input (reference: ``write.py:182-185``) or a
+        NULL ``ordered_on``, and return the batch bounds
+        ``(min, max, n_rows, str_bytes)``.
 
         Fully distributed: each Arrow batch of the narrow
-        (ordered_on, position[, per-row string bytes]) projection
-        reports (first/last position, first/last value, row count,
-        locally-sorted flag, summed string bytes); the driver stitches
-        the tiny summaries in position order and checks the boundaries
-        — no global sort, no single-partition window — and the same
-        summaries yield min/max/count plus the string payload size the
-        driver-merge byte gate needs, so the write path never scans
-        the new data a second time for stats. Disable with
-        ``validate_monotonic=False`` when the producer guarantees
-        order.
+        (ordered_on, position, NULL flag[, per-row string bytes])
+        projection reports (first/last position, first/last value, row
+        count, locally-sorted flag, NULL count, summed string bytes);
+        the driver stitches the tiny summaries in position order and
+        checks the boundaries — no global sort, no single-partition
+        window — and the same summaries yield min/max/count plus the
+        string payload size the driver-merge byte gate needs, so the
+        write path never scans the new data a second time for stats.
+        Disable with ``validate_monotonic=False`` when the producer
+        guarantees order. A pyarrow Table batch is checked in Arrow
+        instead (``_arrow_bounds``), with no Spark job.
         """
         from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
@@ -973,7 +965,8 @@ class OrderedDataset:
             F.lit(0).cast("long"),
         )
         proj = new.select(
-            F.col(ordered_on).alias("v"), F.col(_POS).alias("p"), sb.alias("sb")
+            F.col(ordered_on).alias("v"), F.col(_POS).alias("p"), sb.alias("sb"),
+            F.col(ordered_on).isNull().cast("long").alias("nl"),
         )
         val_type = proj.schema["v"].dataType
         out_schema = StructType(
@@ -985,6 +978,7 @@ class OrderedDataset:
                 StructField("n", LongType()),
                 StructField("ok", BooleanType()),
                 StructField("sb", LongType()),
+                StructField("nl", LongType()),
             ]
         )
 
@@ -1004,6 +998,7 @@ class OrderedDataset:
                         "n": [len(pdf)],
                         "ok": [bool(pdf["v"].is_monotonic_increasing)],
                         "sb": [int(pdf["sb"].sum())],
+                        "nl": [int(pdf["nl"].sum())],
                     }
                 )
 
@@ -1013,10 +1008,12 @@ class OrderedDataset:
         )
         if not parts:
             return None, None, 0, 0
-        for prev, cur in zip(parts, parts[1:]):
-            if prev["last_v"] > cur["first_v"]:
-                raise ValueError(f"column {ordered_on!r} is not ordered")
-        if any(not r["ok"] for r in parts):
+        if any(r["nl"] for r in parts):
+            raise ValueError(_NULL_ORDERED_ON)
+        # per-batch flags first: a NaN bound cannot be stitched
+        if any(not r["ok"] for r in parts) or any(
+            prev["last_v"] > cur["first_v"] for prev, cur in zip(parts, parts[1:])
+        ):
             raise ValueError(f"column {ordered_on!r} is not ordered")
         return (
             parts[0]["first_v"],
@@ -1095,24 +1092,22 @@ class OrderedDataset:
         )
 
     def _merge_write_driver(
-        self, df, replaced, ordered_on, duplicates_on, target: int,
-        new_tbl=None,
+        self, new_tbl, replaced, ordered_on, duplicates_on, target: int,
     ) -> list[FileEntry] | None:
-        """Driver-side pyarrow merge for small batches: collect the
-        batch as Arrow (type-exact — pandas would widen nullable ints
-        to float), read the overlapping files with pyarrow, replay the
+        """Driver-side pyarrow merge for small batches: take the batch
+        as Arrow (type-exact — pandas would widen nullable ints to
+        float), read the overlapping files with pyarrow, replay the
         keep-last tiebreak on key columns only (the data itself never
         round-trips through pandas), and write size-capped chunks into
         the dataset. File stats come from the SAME ``_footer_stats``
         reader the Spark path uses, so manifest entries are
-        indistinguishable. Returns None when the files cannot be
-        unified under the batch's Arrow schema (caller falls back to
-        the distributed path) or when the batch and the decoded files
-        pass the driver gate's hard bail (``driver_gate``)."""
+        indistinguishable. Returns None when ``new_tbl`` is None (the
+        collect was refused), when the files cannot be unified under
+        the batch's Arrow schema (caller falls back to the distributed
+        path) or when the batch and the decoded files pass the driver
+        gate's hard bail (``driver_gate``)."""
         if new_tbl is None:
-            new_tbl = gate.collect(df)
-            if new_tbl is None:
-                return None
+            return None
         # relax nullability: a batch built from literals arrives with
         # non-nullable fields, but the DATASET schema is nullable —
         # casting old files (which may hold NULLs) to the stricter
@@ -1330,8 +1325,8 @@ class OrderedDataset:
         ordered_on: str,
         target,
         approx_rows: int,
-        cache: bool = False,
         cluster_col: str | None = None,
+        duplicates_on=None,
     ) -> list[FileEntry]:
         """Write merged data into size-controlled files, return stats.
 
@@ -1349,49 +1344,48 @@ class OrderedDataset:
         derived period column (reference's TimePeriod strategy,
         ``time_period_strategy.py``).
 
-        ``cache=True`` persists ``merged`` so the range partitioner's
-        sample pass and the write pass execute the (expensive) child
-        plan once — used when the child contains the keep-last window.
+        ``duplicates_on``: apply the keep-last dedup
+        (``_dedup_keep_last``) on the way. For a row-count target it
+        runs AFTER the range repartition on ``ordered_on``, which is
+        part of the dedup key: that partitioning already clusters the
+        window, so the plan has ONE shuffle, and the range sampler
+        reads the plain union (nothing to persist for it). A period
+        target dedups before its period shuffle.
+
         Per-file stats come from the parquet footers driver-side (no
         second Spark scan of the written data); a Spark scan remains as
         the fallback for ordering columns whose footer stats are
         unreliable (binary/string truncation).
         """
-        if cache:
-            from pyspark import StorageLevel
-
-            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            if isinstance(target, int):
-                n_out = max(1, -(-approx_rows // target))
-                layout_key = cluster_col or ordered_on
-                if n_out == 1:
-                    # one output split: the range partitioner would
-                    # only add its child-re-executing sample pass
-                    out = merged.coalesce(1)
-                else:
-                    out = merged.repartitionByRange(n_out, F.col(layout_key))
-                sort_cols = (
-                    [cluster_col, ordered_on] if cluster_col else [ordered_on]
-                )
-                out = out.sortWithinPartitions(
-                    *sort_cols, _SRC, _FIDX, _POS
-                ).drop(_SRC, _FIDX, _POS)
-                if cluster_col:
-                    out = out.drop(cluster_col)
-                writer = out.write.option("maxRecordsPerFile", target)
+        if isinstance(target, int):
+            n_out = max(1, -(-approx_rows // target))
+            layout_key = cluster_col or ordered_on
+            if n_out == 1:
+                # one output split: the range partitioner would only
+                # add its child-re-executing sample pass
+                out = merged.coalesce(1)
             else:
-                writer = (
-                    merged.withColumn(_PERIOD, floor_ts(F.col(ordered_on), target))
-                    .repartition(F.col(_PERIOD))
-                    .sortWithinPartitions(_PERIOD, ordered_on, _SRC, _FIDX, _POS)
-                    .drop(_SRC, _FIDX, _POS)
-                    .write.partitionBy(_PERIOD)
-                )
-            return self._stage_spark(writer, ordered_on)
-        finally:
-            if cache:
-                merged.unpersist()
+                out = merged.repartitionByRange(n_out, F.col(layout_key))
+            if duplicates_on is not None:
+                out = self._dedup_keep_last(out, ordered_on, duplicates_on)
+            sort_cols = [cluster_col, ordered_on] if cluster_col else [ordered_on]
+            out = out.sortWithinPartitions(
+                *sort_cols, _SRC, _FIDX, _POS
+            ).drop(_SRC, _FIDX, _POS)
+            if cluster_col:
+                out = out.drop(cluster_col)
+            writer = out.write.option("maxRecordsPerFile", target)
+        else:
+            if duplicates_on is not None:
+                merged = self._dedup_keep_last(merged, ordered_on, duplicates_on)
+            writer = (
+                merged.withColumn(_PERIOD, floor_ts(F.col(ordered_on), target))
+                .repartition(F.col(_PERIOD))
+                .sortWithinPartitions(_PERIOD, ordered_on, _SRC, _FIDX, _POS)
+                .drop(_SRC, _FIDX, _POS)
+                .write.partitionBy(_PERIOD)
+            )
+        return self._stage_spark(writer, ordered_on)
 
     # ---------------------------------------------------------- compact
     def compact(
@@ -2858,6 +2852,75 @@ def pandas_to_spark_arrow(pdf, session_tz: str):
         return tbl.cast(pa.schema(fields))
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
         return None
+
+
+class _Batch:
+    """The new rows of one ``write``: a Spark DataFrame, or a pyarrow
+    Table (``tbl``) that stays the only copy until a Spark plan needs
+    it. ``schema`` and ``columns`` are known either way; ``frame()``
+    is the DataFrame, for a Table built at most once, by
+    ``createDataFrame``. The Table's ``schema`` is PySpark's own Arrow
+    mapping (``from_arrow_schema``, what that call applies), so the
+    recorded dataset schema does not depend on whether the frame was
+    built. A Table in another Arrow form than Spark's own (nanosecond
+    or non-UTC timestamps, large strings) is converted to it the way
+    ``createDataFrame`` converts it, so the driver merge writes the
+    values and types the Spark twin would."""
+
+    def __init__(self, spark: SparkSession, data):
+        self._spark = spark
+        if isinstance(data, DataFrame):
+            self.tbl, self._frame, self.schema = None, data, data.schema
+        else:
+            from pyspark.sql.pandas.types import (
+                _check_arrow_table_timestamps_localize,
+                from_arrow_schema,
+                to_arrow_schema,
+            )
+            from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+            self._frame = None
+            self.schema = from_arrow_schema(data.schema)
+            # the session's timestamp type matters (one JVM call) only
+            # for zone-less Arrow timestamps
+            ntz = from_arrow_schema(data.schema, prefer_timestamp_ntz=True)
+            if ntz != self.schema and is_timestamp_ntz_preferred():
+                self.schema = ntz
+            spark_arrow = to_arrow_schema(self.schema)
+            if data.schema.types != spark_arrow.types:
+                # zone-less LTZ values are wall times in the session
+                # zone, read only when such a column exists
+                tz = None
+                if any(
+                    pa.types.is_timestamp(t) and t.tz is None
+                    and f.dataType.typeName() == "timestamp"
+                    for t, f in zip(data.schema.types, self.schema.fields)
+                ):
+                    tz = spark.conf.get("spark.sql.session.timeZone")
+                data = _check_arrow_table_timestamps_localize(
+                    data, self.schema, True, tz
+                ).cast(spark_arrow)
+            self.tbl = data
+        self.columns = self.schema.names
+
+    def frame(self) -> DataFrame:
+        if self._frame is None:
+            self._frame = self._spark.createDataFrame(self.tbl)
+        return self._frame
+
+
+def _arrow_bounds(tbl, ordered_on: str, validate: bool):
+    """``(min, max)`` of ``tbl[ordered_on]``. With ``validate``, a
+    NULL value or a descending step raises the errors
+    ``_check_monotonic`` raises for a Spark batch."""
+    col = tbl.column(ordered_on)
+    if validate:
+        if col.null_count:
+            raise ValueError(_NULL_ORDERED_ON)
+        if not pc.all(pc.less_equal(col[:-1], col[1:]), min_count=0).as_py():
+            raise ValueError(f"column {ordered_on!r} is not ordered")
+    mm = pc.min_max(col)
+    return _norm_tz(mm["min"].as_py()), _norm_tz(mm["max"].as_py())
 
 
 def _merged_kv(kv: dict, update: dict | None) -> dict:

@@ -681,7 +681,7 @@ class AggStream:
         return new if current is None or new > current else current
 
     # ------------------------------------------------------------------
-    def _flush_frame(self, pdf: pd.DataFrame):
+    def _flush_frame(self, pdf: pd.DataFrame, tz: str):
         """The flush payload for the store write: the stitched frames
         are already driver-local pandas, so convert them straight to
         the Arrow table Spark's own pandas→JVM→Arrow round trip would
@@ -692,12 +692,12 @@ class AggStream:
         the JVM). Frames with dtypes outside the audited mapping
         (e.g. a ``post`` hook emitting exotic columns) fall back to
         the classic ``createDataFrame`` path — identical semantics,
-        one job."""
-        tz = self.spark.conf.get("spark.sql.session.timeZone", "UTC")
+        one job. ``tz``: the session time zone, read once per flush."""
         tbl = pandas_to_spark_arrow(pdf, tz)
         return tbl if tbl is not None else self.spark.createDataFrame(pdf)
 
     def _flush(self) -> None:
+        tz = self.spark.conf.get("spark.sql.session.timeZone", "UTC")
         for name, cfg in self.keys.items():
             st = self.state[name]
             if not st.bin_buffer:
@@ -750,10 +750,14 @@ class AggStream:
             # the window's rows are trimmed on restart and those
             # snapshots are lost for good
             # (test_dual_sink_crash_between_commits_converges).
+            #
+            # Each write opens a fresh handle: a maintenance commit
+            # (e.g. ``compact``) landed since the last flush would
+            # make a kept handle's manifest stale and its CAS fail.
             if snap_out is not None and len(snap_out) and cfg.snap_path:
                 sds = OrderedDataset(self.spark, cfg.snap_path)
                 sds.write(
-                    df=self._flush_frame(snap_out),
+                    df=self._flush_frame(snap_out, tz),
                     ordered_on=cfg.snap_col,
                     duplicates_on=[cfg.bin_col],
                     row_group_target_size=cfg.row_group_target_size,
@@ -763,7 +767,7 @@ class AggStream:
             if bin_out is not None and len(bin_out):
                 ds = OrderedDataset(self.spark, cfg.path)
                 ds.write(
-                    df=self._flush_frame(bin_out),
+                    df=self._flush_frame(bin_out, tz),
                     ordered_on=cfg.bin_col,
                     duplicates_on=[],  # dedup on bin label (ordered_on)
                     row_group_target_size=cfg.row_group_target_size,

@@ -131,6 +131,7 @@ def test_write_arrow_table_equals_write_dataframe(
         os.path.join(ds_b.path, ds_b._manifest.files[0].name)
     )
     assert sch_a == sch_b
+    assert ds_a._manifest.schema_json == ds_b._manifest.schema_json
 
 
 def test_write_arrow_merge_with_existing_files(spark, tmp_path):
@@ -164,3 +165,137 @@ def test_write_arrow_merge_with_existing_files(spark, tmp_path):
         "2024-01-02T00:00:00": 20.0,  # keep-last: the batch wins
         "2024-01-03T00:00:00": 3.0,
     }
+
+
+def _last_job(spark) -> int:
+    """The highest Spark job id started so far (one global sequence)."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1)
+
+
+def _ts(*hours):
+    return pa.array(
+        [None if h is None else pd.Timestamp("2024-01-01", tz="UTC")
+         + pd.Timedelta(hours=h) for h in hours],
+        pa.timestamp("us", tz="UTC"),
+    )
+
+
+@pytest.mark.parametrize("validate", [True, False], ids=["validated", "unvalidated"])
+def test_driver_arrow_write_runs_no_spark_job(spark, tmp_path, monkeypatch, validate):
+    """A pyarrow.Table batch merged on the driver starts no Spark job
+    and never builds its DataFrame twin, with or without the order
+    check, also when it overlaps (and dedups against) stored files."""
+
+    def no_twin(*a, **k):
+        raise AssertionError("spark.createDataFrame called")
+
+    ds = OrderedDataset(spark, str(tmp_path / "ds"))
+    kw = dict(ordered_on="ts", duplicates_on=["k"], row_group_target_size=2,
+              validate_monotonic=validate)
+    monkeypatch.setattr(spark, "createDataFrame", no_twin)
+    j0 = _last_job(spark)
+    ds.write(pa.table({"ts": _ts(0, 1, 2), "k": [1, 1, 1], "v": [1.0, 2.0, 3.0]}), **kw)
+    ds.write(pa.table({"ts": _ts(2, 3), "k": [1, 1], "v": [20.0, 4.0]}), **kw)
+    assert _last_job(spark) == j0
+    monkeypatch.undo()
+    assert ds.read_arrow().column("v").to_pylist() == [1.0, 2.0, 20.0, 4.0]
+
+
+@pytest.mark.parametrize("ntz", [False, True], ids=["ltz", "ntz"])
+def test_batch_schema_is_createdataframe_schema(spark, ntz):
+    """The schema a Table batch records is the one its createDataFrame
+    twin reports, under either session timestamp type."""
+    import datetime as dt
+    import decimal
+
+    from oups_spark.store.dataset import _Batch
+
+    tbl = pa.table({
+        "naive": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us")),
+        "utc": _ts(0),
+        "i32": pa.array([1], pa.int32()),
+        "big": pa.array(["x"], pa.large_string()),
+        "day": pa.array([dt.date(2024, 1, 1)], pa.date32()),
+        "dec": pa.array([decimal.Decimal("1.5")], pa.decimal128(5, 2)),
+        "f": pa.array([1.0], pa.float32()),
+        "b": pa.array([True], pa.bool_()),
+    })
+    conf = "spark.sql.timestampType"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "TIMESTAMP_NTZ" if ntz else "TIMESTAMP_LTZ")
+    try:
+        assert _Batch(spark, tbl).schema == spark.createDataFrame(tbl).schema
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_table_in_other_arrow_form_writes_like_its_twin(spark, tmp_path):
+    """A Table whose Arrow types are not Spark's own (nanosecond and
+    non-UTC timestamps, large strings) leaves the dataset its
+    createDataFrame twin leaves: Spark can read it back, with the same
+    rows, file types and recorded schema."""
+    import datetime as dt
+
+    tbl = pa.table({
+        "ts": pa.array([dt.datetime(2024, 1, 1, h) for h in range(3)],
+                       pa.timestamp("ns", tz="UTC")),
+        "ny": pa.array([dt.datetime(2024, 1, 1, h) for h in range(3)],
+                       pa.timestamp("us", tz="America/New_York")),
+        "s": pa.array(["a", None, "c"], pa.large_string()),
+    })
+    got = {}
+    for name, batch in (("arrow", tbl), ("spark", spark.createDataFrame(tbl))):
+        ds = OrderedDataset(spark, str(tmp_path / name))
+        ds.write(batch, ordered_on="ts")
+        got[name] = (ds.read_arrow(), ds._manifest.schema_json, ds.read().collect())
+    assert got["arrow"][0].equals(got["spark"][0])
+    assert got["arrow"][1:] == got["spark"][1:]
+
+
+@pytest.mark.parametrize("case", ["unsorted", "null"])
+def test_arrow_and_dataframe_batches_raise_the_same_error(spark, tmp_path, case):
+    """With the order check on, an unsorted or NULL ``ordered_on``
+    raises the same ValueError for a Table batch (checked in Arrow)
+    and for a DataFrame batch (checked by Spark)."""
+    hours = {"unsorted": (3, 1, 2), "null": (1, None, 2)}[case]
+    tbl = pa.table({"ts": _ts(*hours), "v": [1.0, 2.0, 3.0]})
+    msgs = []
+    for name, batch in (("arrow", tbl), ("spark", spark.createDataFrame(tbl))):
+        with pytest.raises(ValueError) as err:
+            OrderedDataset(spark, str(tmp_path / name)).write(batch, ordered_on="ts")
+        msgs.append(str(err.value))
+    assert msgs[0] == msgs[1]
+    assert ("null values" if case == "null" else "is not ordered") in msgs[0]
+
+
+def test_distributed_merge_equals_driver_merge(spark, tmp_path, monkeypatch):
+    """The distributed merge (keep-last window after the range
+    repartition) leaves the rows the driver merge leaves, with
+    duplicate keys spanning old files, the new batch, and rows within
+    the batch."""
+    base = pa.table({
+        "ts": _ts(*range(12)), "k": [h % 2 for h in range(12)],
+        "v": [float(h) for h in range(12)],
+    })
+    # (ts 4, k 0) twice in the batch: the later row wins
+    batch = pa.table({
+        "ts": _ts(3, 4, 4, 5, 9, 12, 13), "k": [1, 0, 0, 1, 1, 0, 1],
+        "v": [-3.0, -4.0, -40.0, -5.0, -9.0, -12.0, -13.0],
+    })
+    kw = dict(ordered_on="ts", duplicates_on=["k"], row_group_target_size=4,
+              validate_monotonic=False)
+    got = {}
+    for name, max_rows in (("driver", driver_gate.MAX_ROWS), ("distributed", 0)):
+        ds = OrderedDataset(spark, str(tmp_path / name))
+        ds.write(base, **kw)
+        monkeypatch.setattr(driver_gate, "MAX_ROWS", max_rows)
+        ds.write(batch, **kw)
+        monkeypatch.undo()
+        got[name] = sorted(
+            (r["ts"], r["k"], r["v"]) for r in ds.read().collect()
+        )
+        assert ds.n_rows == len(got[name])
+    assert got["driver"] == got["distributed"]
+    v = {r[0].hour: r[2] for r in got["driver"] if r[0].day == 1}
+    assert (v[3], v[4], v[5], v[9], v[2]) == (-3.0, -40.0, -5.0, -9.0, 2.0)
