@@ -1010,10 +1010,10 @@ class OrderedDataset:
             return None, None, 0, 0
         if any(r["nl"] for r in parts):
             raise ValueError(_NULL_ORDERED_ON)
-        # per-batch flags first: a NaN bound cannot be stitched
-        if any(not r["ok"] for r in parts) or any(
-            prev["last_v"] > cur["first_v"] for prev, cur in zip(parts, parts[1:])
-        ):
+        for prev, cur in zip(parts, parts[1:]):
+            if prev["last_v"] > cur["first_v"]:
+                raise ValueError(f"column {ordered_on!r} is not ordered")
+        if any(not r["ok"] for r in parts):
             raise ValueError(f"column {ordered_on!r} is not ordered")
         return (
             parts[0]["first_v"],
@@ -2210,9 +2210,7 @@ class OrderedDataset:
                 ).collect()[0]
                 n_ins = result["inserted"] = int(istats["n"])
                 if n_ins and int(istats["nnull"] or 0):
-                    raise ValueError(
-                        "null values in ordered_on are not allowed"
-                    )
+                    raise ValueError(_NULL_ORDERED_ON)
                 if n_ins:
                     proj = ins.select(
                         *[
@@ -2341,9 +2339,7 @@ class OrderedDataset:
                 )
             if ins_tbl is not None:
                 if ins_tbl.column(o).null_count:
-                    raise ValueError(
-                        "null values in ordered_on are not allowed"
-                    )
+                    raise ValueError(_NULL_ORDERED_ON)
                 staged += self._stage_arrow(
                     ins_tbl, o, _balanced(n_ins, row_group_target_size)
                 )
