@@ -2885,14 +2885,8 @@ class _Batch:
             spark_arrow = to_arrow_schema(self.schema)
             if data.schema.types != spark_arrow.types:
                 # zone-less LTZ values are wall times in the session
-                # zone, read only when such a column exists
-                tz = None
-                if any(
-                    pa.types.is_timestamp(t) and t.tz is None
-                    and f.dataType.typeName() == "timestamp"
-                    for t, f in zip(data.schema.types, self.schema.fields)
-                ):
-                    tz = spark.conf.get("spark.sql.session.timeZone")
+                # zone
+                tz = spark.conf.get("spark.sql.session.timeZone")
                 data = _check_arrow_table_timestamps_localize(
                     data, self.schema, True, tz
                 ).cast(spark_arrow)

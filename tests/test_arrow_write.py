@@ -231,8 +231,8 @@ def test_batch_schema_is_createdataframe_schema(spark, ntz):
 
 
 def test_table_in_other_arrow_form_writes_like_its_twin(spark, tmp_path):
-    """A Table whose Arrow types are not Spark's own (nanosecond and
-    non-UTC timestamps, large strings) leaves the dataset its
+    """A Table whose Arrow types are not Spark's own (nanosecond,
+    non-UTC and zone-less timestamps, large strings) leaves the dataset its
     createDataFrame twin leaves: Spark can read it back, with the same
     rows, file types and recorded schema."""
     import datetime as dt
@@ -242,6 +242,8 @@ def test_table_in_other_arrow_form_writes_like_its_twin(spark, tmp_path):
                        pa.timestamp("ns", tz="UTC")),
         "ny": pa.array([dt.datetime(2024, 1, 1, h) for h in range(3)],
                        pa.timestamp("us", tz="America/New_York")),
+        "naive": pa.array([dt.datetime(2024, 1, 1, h) for h in range(3)],
+                          pa.timestamp("us")),
         "s": pa.array(["a", None, "c"], pa.large_string()),
     })
     got = {}
