@@ -1242,13 +1242,8 @@ class OrderedDataset:
         restored after), stats from the footers or, when untrusted,
         one Spark scan of the staged files."""
         ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts_conf = ts_set = None
-        try:
-            prev_ts_conf = self.spark.conf.get(ts_conf, None)
-            self.spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-            ts_set = True
-        except Exception:  # noqa: BLE001 - conf locked by a custom session
-            pass
+        prev_ts_conf = self.spark.conf.get(ts_conf, None)
+        self.spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
 
         def exact_stats(d):
             rows = (
@@ -1280,13 +1275,10 @@ class OrderedDataset:
                 exact_stats,
             )
         finally:
-            try:
-                if ts_set and prev_ts_conf is not None:
-                    self.spark.conf.set(ts_conf, prev_ts_conf)
-                elif ts_set:
-                    self.spark.conf.unset(ts_conf)
-            except Exception:  # noqa: BLE001
-                pass
+            if prev_ts_conf is None:
+                self.spark.conf.unset(ts_conf)
+            else:
+                self.spark.conf.set(ts_conf, prev_ts_conf)
 
     def _stage_cow(self, rows, touched, o: str) -> list[FileEntry]:
         """Stage a copy-on-write rewrite: ``rows`` (a Spark frame over
@@ -1836,25 +1828,34 @@ class OrderedDataset:
         fold into the returned ``updated``/``deleted`` totals
         (Delta's top-level metrics convention).
 
-        Plan (cost ∝ matched files + insert volume + scoped files,
-        never unscoped table size):
-        (1) one source pass collects count/uniqueness/per-key bounds;
-        (2) candidate target files are pruned DRIVER-side from the
-        manifest's per-file [min, max] stats on every key column —
-        and per-file Blooms, when the source's distinct key set is
-        small enough to collect; (3) one scan of the candidates joined
-        to the source finds the files truly holding matches and the
-        delete/update split; (4) those files are rewritten
-        copy-on-write (one replacement per source file, the
-        ``delete_where`` shape); (5) not-matched source rows are
-        anti-joined against the candidates only (pruning is
-        conservative, so no other file can hold a matching key) and
-        written as NEW size-controlled files — they may overlap
-        existing files' ordering ranges, which the store tolerates
-        (``read(ordered=True)`` sorts; a later ``compact`` or
-        overlapping ``write`` re-merges), exactly Delta's MERGE file
-        shape; (6) replacements + inserts commit in ONE
-        tombstone/CAS/rebase manifest swap.
+        Plan — one flow (cost ∝ matched files + insert volume +
+        scoped files, never unscoped table size): (1) the clauses are
+        validated and normalized; (2) the source summary (count, key
+        uniqueness, per-key bounds) comes from a capped Arrow probe of
+        the source, or from one Spark aggregate when the probe is
+        refused; (3) candidate target files are pruned DRIVER-side
+        from the manifest's per-file [min, max] stats on every key
+        column, and per-file Blooms when the distinct key set is small
+        enough to collect; (4) ``_merge_rows`` is the row-action
+        projection of the files the clauses can touch; (5) the driver
+        gate decides its form — a probed source, a row-count target,
+        an ``arrow_safe`` schema and a scan within the caps collect it
+        as Arrow, otherwise (or when Spark refuses the collect) it
+        stays a Spark frame; (6) one tally finds the files truly
+        holding affected rows and the update/delete counts, and those
+        files are rewritten copy-on-write (one replacement per source
+        file, the ``delete_where`` shape) — both steps take either
+        form; (7) not-matched source rows are inserted as NEW
+        size-controlled files: a left-anti Arrow join of the probe
+        against the matched keys on the driver branch, a left-anti
+        join against the candidates on the Spark one (pruning is
+        conservative, so no other file can hold a matching key).
+        Inserts may overlap existing files' ordering ranges, which the
+        store tolerates (``read(ordered=True)`` sorts; a later
+        ``compact`` or overlapping ``write`` re-merges), exactly
+        Delta's MERGE file shape. Replacements + inserts commit in ONE
+        tombstone/CAS/rebase manifest swap. The driver branch costs 2
+        Spark jobs (probe + scan).
 
         Returns ``{"updated": n, "deleted": n, "inserted": n}``.
         """
@@ -1888,6 +1889,7 @@ class OrderedDataset:
         row_group_target_size=DEFAULT_ROW_GROUP_TARGET_SIZE,
     ) -> dict:
         from pyspark.sql import Column
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from oups_spark.functions.filters import (
             dnf_condition,
@@ -1946,7 +1948,7 @@ class OrderedDataset:
                 schema = StructType(list(schema.fields) + new_fields)
                 tcols = {f.name: f for f in schema.fields}
 
-        # normalize the clauses
+        # (1) normalize the clauses
         def _cond(v):
             if v is None or v is False:
                 return None
@@ -2013,16 +2015,14 @@ class OrderedDataset:
             clauses["nbs_delcond"] is not None or clauses["nbs_upd"] is not None
         )
 
-        # (1) one source pass: count, key uniqueness, per-key bounds.
-        # SINGLE-JOB SMALL-SOURCE PATH (round-14, guide §1.2): a
-        # row/byte-capped Arrow probe collects the source ONCE — the
-        # stats, the uniqueness check, the IN-filter key set and
-        # (below) the whole driver-side merge all derive from that one
-        # CollectLimit job, replacing the stats agg + distinct collect,
-        # and every later pass joins against the collected rows as a
-        # LOCAL relation instead of re-executing a computed source
-        # under each broadcast. Oversized sources fall back to the
-        # distributed stats pass at the cost of the bounded probe.
+        # (2) one source pass: count, key uniqueness, per-key bounds.
+        # A row/byte-capped Arrow probe collects the source ONCE: the
+        # stats, the uniqueness check, the IN-filter key set and the
+        # driver branch below all derive from that one CollectLimit
+        # job, and every later pass joins the collected rows as a
+        # LOCAL relation instead of re-executing a computed source.
+        # An oversized source takes the distributed stats pass at the
+        # cost of the bounded probe.
         probe_tbl = (
             gate.collect(
                 source, max_rows=gate.MAX_ROWS, max_bytes=gate.MAX_BYTES
@@ -2032,17 +2032,14 @@ class OrderedDataset:
         )
         if probe_tbl is not None:
             n_src = probe_tbl.num_rows
-            kcols = {c: probe_tbl.column(c) for c in on}
-            n_null = sum(col.null_count for col in kcols.values())
+            n_null = sum(probe_tbl[c].null_count for c in on)
+            distinct = probe_tbl.group_by(on).aggregate([])
+            nd = distinct.num_rows
             smn, smx = {}, {}
-            for c, col in kcols.items():
-                mm = pc.min_max(col)
+            for c in on:
+                mm = pc.min_max(probe_tbl[c])
                 smn[c] = _norm_tz(mm["min"].as_py())
                 smx[c] = _norm_tz(mm["max"].as_py())
-            if len(on) == 1:
-                nd = int(pc.count_distinct(kcols[on[0]]).as_py())
-            else:
-                nd = len(set(zip(*[col.to_pylist() for col in kcols.values()])))
         else:
             sstats = source.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -2082,7 +2079,7 @@ class OrderedDataset:
                 f"({n_src} rows, {nd} distinct keys)"
             )
 
-        # (2) driver-side candidate pruning: per-key [min, max] overlap
+        # (3) driver-side candidate pruning: per-key [min, max] overlap
         # on every key column; a small distinct key set upgrades to an
         # IN filter, which also engages the per-file Blooms
         cands: list[FileEntry] = []
@@ -2099,12 +2096,7 @@ class OrderedDataset:
             ]
             if len(on) == 1 and nd <= self._MERGE_IN_KEYS_CAP:
                 if probe_tbl is not None:
-                    keys = [
-                        _norm_tz(v)
-                        for v in pc.unique(
-                            probe_tbl.column(on[0])
-                        ).to_pylist()
-                    ]
+                    keys = [_norm_tz(v) for v in distinct[on[0]].to_pylist()]
                 else:
                     keys = [
                         r[0]
@@ -2158,40 +2150,89 @@ class OrderedDataset:
                 )
             ]
 
-        # DRIVER-SIDE MERGE FAST PATH: source probed AND candidates
-        # small — the rest of the merge costs ONE more Spark job
-        # (see _merge_into_driver); None falls through to the
-        # distributed path below, which still reuses the local source
-        if probe_tbl is not None:
-            res = self._merge_into_driver(
-                probe_tbl, src_hinted, on, schema, cands, nbs_cands,
-                clauses, when_not_matched_insert, row_group_target_size,
+        # (4) the row-action projection (``_merge_rows``) of the files
+        # the clauses can touch — a matching row can only live in
+        # `cands`, the key pruning is conservative. (5) THE DRIVER
+        # GATE decides its form: a probed source, a row-count target
+        # and a scan within the caps collect it as Arrow, and the rest
+        # of the merge is driver-side pyarrow work (the scan then
+        # covers `cands` for inserts too: their matched keys are the
+        # anti-join). Otherwise, or when the collect is refused, it
+        # stays a Spark frame that one aggregate tallies per file.
+        scan = _union(
+            cands if want_matched or when_not_matched_insert else [], nbs_cands
+        )
+        rows = None
+        driver = (
+            probe_tbl is not None
+            and isinstance(row_group_target_size, int)
+            and gate.arrow_safe(schema)
+            and gate.fits(
+                sum(e.n_rows for e in scan) + n_src,
+                probe_tbl.nbytes,
+                self._paths(scan),
             )
-            if res is not None:
-                return res
-
-        # (3) which candidates REALLY hold affected rows, and the
-        # per-clause split — ONE aggregate over the union of both
-        # candidate sets (a matching row can only live in `cands`:
-        # the key pruning is conservative)
-        scan = _union(cands if want_matched else [], nbs_cands)
+        )
+        if driver and scan:
+            rows = gate.collect(
+                self._merge_rows(scan, src_hinted, on, schema, **clauses)
+            )
+            driver = rows is not None
+        if not driver:
+            # the Spark inserts anti-join `cands` themselves
+            scan = _union(cands if want_matched else [], nbs_cands)
+            if scan:
+                rows = self._merge_rows(scan, src_hinted, on, schema, **clauses)
         touched, result = _merge_tally(
-            self._merge_rows(scan, src_hinted, on, schema, **clauses)
-            if scan
-            else None,
-            scan, want_matched, clauses["upd"] is not None,
+            rows, scan, want_matched, clauses["upd"] is not None
         )
         with self._committing([e.name for e in touched], schema) as staged:
-            # (4) copy-on-write rewrite of the truly-affected files
+            # (6) copy-on-write rewrite of the truly-affected files (a
+            # Spark frame re-scans only those)
             if touched:
-                rows = self._merge_rows(touched, src_hinted, on, schema, **clauses)
+                if not driver:
+                    rows = self._merge_rows(
+                        touched, src_hinted, on, schema, **clauses
+                    )
                 staged += self._stage_cow(
                     _kept_rows(rows, touched, [_DM, _ND], schema), touched, o
                 )
-            # (5) not-matched source rows -> NEW files (anti-join
-            # against the candidates only: pruning is conservative, no
-            # other file can hold a matching key)
-            if when_not_matched_insert:
+            # (7) not-matched source rows -> NEW files: source rows
+            # whose key no candidate holds (pruning is conservative, no
+            # other file can hold a matching key), projected onto the
+            # target schema
+            if when_not_matched_insert and driver:
+                ins = probe_tbl
+                if rows is not None:
+                    hits = rows.filter(rows[_M]).select(
+                        [f"__oups_k{i}" for i in range(len(on))]
+                    ).rename_columns(on)
+                    # join the keys plus a row index, then take: the
+                    # inserts keep the source order
+                    keep = probe_tbl.select(on).append_column(
+                        _POS, pa.array(np.arange(n_src))
+                    ).join(hits, on, join_type="left anti")[_POS]
+                    ins = probe_tbl.take(keep.sort())
+                n_ins = result["inserted"] = ins.num_rows
+                if n_ins:
+                    tschema = pa.schema(
+                        [f.with_nullable(True) for f in to_arrow_schema(schema)]
+                    )
+                    ins = pa.table(
+                        [
+                            ins[f.name].cast(f.type)
+                            if f.name in ins.column_names
+                            else pa.nulls(n_ins, f.type)
+                            for f in tschema
+                        ],
+                        schema=tschema,
+                    ).sort_by(o)
+                    if ins[o].null_count:
+                        raise ValueError(_NULL_ORDERED_ON)
+                    staged += self._stage_arrow(
+                        ins, o, _balanced(n_ins, row_group_target_size)
+                    )
+            elif when_not_matched_insert:
                 ins = source.alias("s")
                 if cands:
                     ins = ins.join(
@@ -2231,118 +2272,8 @@ class OrderedDataset:
                     staged += self._write_files(
                         proj, o, row_group_target_size, n_ins
                     )
-        # (6) _committing: replacements + inserts in ONE
+        # _committing: replacements + inserts in ONE
         # tombstone/CAS/rebase manifest swap
-        return result
-
-    def _merge_into_driver(
-        self, probe_tbl, local_src, on, schema, cands, nbs_cands, clauses,
-        when_not_matched_insert, row_group_target_size,
-    ) -> dict | None:
-        """Driver-side MERGE fast path (round-14, guide §1.2/§2.1):
-        with the deduped source already collected by the Arrow probe
-        (``local_src``: its broadcast local relation) and the
-        candidate files small (``driver_gate``), the whole merge runs
-        off ONE more Spark job: the candidates' row-action projection
-        (``_merge_rows``, the same one the distributed path
-        aggregates) comes back as Arrow. Touched-file detection,
-        counts, the per-file copy-on-write replacements, the
-        anti-join inserts (probe rows whose key matched nothing in the
-        scan) and the manifest commit are then driver-side
-        pyarrow/fs work. A steady-state CDC micro-batch costs 2 jobs
-        (probe + scan) instead of the stats/keys/hit-scan/rewrite/
-        istats/insert train whose every broadcast re-executed the
-        computed source. Returns None to fall back to the distributed
-        path (period row-group targets, nested target columns,
-        oversized candidate set): at 100 TB the big merges keep the
-        classic plan, exactly like the write path's driver merge."""
-        if not isinstance(row_group_target_size, int) or not gate.arrow_safe(
-            schema
-        ):
-            return None
-        o = self._manifest.ordered_on
-        want_matched = clauses["delcond"] is not None or clauses["upd"] is not None
-        scan = _union(
-            cands if want_matched or when_not_matched_insert else [], nbs_cands
-        )
-        if scan and not gate.fits(
-            sum(e.n_rows for e in scan) + probe_tbl.num_rows,
-            probe_tbl.nbytes,
-            self._paths(scan),
-        ):
-            return None
-        rows = None
-        if scan:
-            rows = gate.collect(
-                self._merge_rows(scan, local_src, on, schema, **clauses)
-            )
-            if rows is None:
-                return None  # over the hard bail, or refused by Spark
-        touched, result = _merge_tally(
-            rows, scan, want_matched, clauses["upd"] is not None
-        )
-
-        # inserts: probe rows whose key matched nothing in the scan
-        # (pruning is conservative — no unscanned candidate can hold
-        # a matching key), projected onto the target schema
-        ins_tbl = None
-        if when_not_matched_insert:
-            ins_src = probe_tbl
-            if rows is not None and cands and probe_tbl.num_rows:
-                hits = rows.filter(rows[_M])
-                if len(on) == 1:
-                    mask = pc.invert(
-                        pc.is_in(probe_tbl[on[0]], value_set=hits["__oups_k0"])
-                    )
-                else:
-                    mset = set(
-                        zip(*[hits[f"__oups_k{i}"].to_pylist() for i in range(len(on))])
-                    )
-                    mask = pa.array(
-                        [t not in mset for t in zip(*[probe_tbl[c].to_pylist() for c in on])]
-                    )
-                ins_src = probe_tbl.filter(mask)
-            n_ins = result["inserted"] = ins_src.num_rows
-            if n_ins:
-                # target-schema arrow types come from Spark itself:
-                # the scan result when there was one, the converted
-                # schema otherwise
-                if rows is not None:
-                    tmap = {f.name: f.type for f in rows.schema}
-                else:
-                    try:
-                        from pyspark.sql.pandas.types import to_arrow_schema
-
-                        tmap = {f.name: f.type for f in to_arrow_schema(schema)}
-                    except Exception:  # noqa: BLE001
-                        return None
-                arrays, fields = [], []
-                for fld in schema.fields:
-                    t = tmap[fld.name]
-                    if fld.name in ins_src.schema.names:
-                        arr = ins_src.column(fld.name)
-                        if arr.type != t:
-                            arr = arr.cast(t)
-                    else:
-                        arr = pa.nulls(n_ins, type=t)
-                    arrays.append(arr)
-                    fields.append(pa.field(fld.name, t, nullable=True))
-                ins_tbl = pa.table(
-                    dict(zip([f.name for f in fields], arrays)),
-                    schema=pa.schema(fields),
-                ).sort_by([(o, "ascending")])
-
-        with self._committing([e.name for e in touched], schema) as staged:
-            if touched:
-                staged += self._stage_cow(
-                    _kept_rows(rows, touched, [_DM, _ND], schema), touched, o
-                )
-            if ins_tbl is not None:
-                if ins_tbl.column(o).null_count:
-                    raise ValueError(_NULL_ORDERED_ON)
-                staged += self._stage_arrow(
-                    ins_tbl, o, _balanced(n_ins, row_group_target_size)
-                )
         return result
 
     def _scan_rows(self, entries, schema, where=None) -> DataFrame:

@@ -140,7 +140,8 @@ def _agg_rows(spark, p):
 
 
 # op -> (set-up, the op, its output, and the driver helper whose
-# non-None return marks the driver path)
+# non-None return marks the driver path; merge_into stages through the
+# Arrow stager only on its driver branch)
 _SITES = {
     "write": (
         _base,
@@ -156,7 +157,7 @@ _SITES = {
             _source(sp), on="ts", when_matched_update={"v": F.col("s.v")},
             when_not_matched_insert=True,
         ),
-        _ds_rows, OrderedDataset, "_merge_into_driver",
+        _ds_rows, OrderedDataset, "_stage_arrow",
     ),
     # a NULL scope value is out of scope on both paths: those rows
     # survive the by-source delete
@@ -166,7 +167,7 @@ _SITES = {
             _source(sp), on="ts", when_not_matched_by_source_delete=True,
             by_source_scope=[("g", "==", 1)],
         ),
-        _ds_rows, OrderedDataset, "_merge_into_driver",
+        _ds_rows, OrderedDataset, "_stage_arrow",
     ),
     "delete_where": (
         _base,
@@ -230,6 +231,47 @@ def test_one_cap_patch_reaches_every_site(spark, scratch, monkeypatch, op):
         assert any(calls) == (cap is None), (op, cap, calls)
         out[cap] = output(spark, path)
     assert out[None] == out[0]
+
+
+def test_merge_into_two_column_key_same_at_both_caps(spark, scratch, monkeypatch):
+    """A two-column key (``on=["ts", "id"]``): matched updates, a
+    matched delete and inserts give the same rows and counts on the
+    driver branch (default cap) and the distributed one (cap 0)."""
+    base = os.path.join(scratch, "base")
+    ds = OrderedDataset(spark, base)
+    # two ids per ts, 10-row files
+    ds.write(
+        df=spark.range(40).selectExpr(
+            "id DIV 2 AS ts", "id % 2 AS id", "CAST(id AS DOUBLE) AS v"
+        ),
+        ordered_on="ts", row_group_target_size=10,
+    )
+    src = [
+        (2, 0, -1.0, "U"), (2, 1, -2.0, "D"), (15, 1, -3.0, "U"),
+        (5, 7, -4.0, "U"), (25, 0, -5.0, "U"),
+    ]
+    out = {}
+    for cap in (None, 0):
+        path = os.path.join(scratch, f"cap{cap}")
+        shutil.copytree(base, path)
+        with monkeypatch.context() as m:
+            calls = _spy(m, OrderedDataset, "_stage_arrow")
+            if cap is not None:
+                m.setattr(driver_gate, "MAX_ROWS", cap)
+            res = _ds(spark, path).merge_into(
+                spark.createDataFrame(src, "ts long, id long, v double, op string"),
+                on=["ts", "id"],
+                when_matched_update={"v": F.col("s.v")},
+                when_matched_delete=F.col("s.op") == "D",
+            )
+        assert any(calls) == (cap is None), (cap, calls)
+        assert res == {"updated": 2, "deleted": 1, "inserted": 2}, cap
+        out[cap] = _ds_rows(spark, path)
+    assert out[None] == out[0]
+    want = {(t, i): float(2 * t + i) for t in range(20) for i in (0, 1)}
+    want.update({(2, 0): -1.0, (15, 1): -3.0, (5, 7): -4.0, (25, 0): -5.0})
+    del want[(2, 1)]
+    assert out[None] == sorted((t, i, v) for (t, i), v in want.items())
 
 
 # ------------------------------------------------ narrow collect fallback

@@ -771,9 +771,11 @@ _merge_src_ops = st.dictionaries(
     vals=_merge_target_rows,
     ops=_merge_src_ops,
     target=st.sampled_from([3, 7, 100]),
+    # the driver branch (default) or the distributed one (cap 0)
+    cap=st.sampled_from([None, 0]),
 )
 def test_merge_into_matches_pandas_ground_truth_property(
-    spark, tmp_path_factory, vals, ops, target
+    spark, tmp_path_factory, vals, ops, target, cap
 ):
     """PROPERTY: for any dataset layout and any unique-keyed source of
     update/delete/insert ops, `merge_into` reads back exactly the
@@ -809,13 +811,14 @@ def test_merge_into_matches_pandas_ground_truth_property(
             "op": [o for o, _ in ops.values()],
         }
     )
-    res = ds.merge_into(
-        spark.createDataFrame(src),
-        on="k",
-        when_matched_update={"val": SF.col("s.val")},
-        when_matched_delete=SF.col("s.op") == "D",
-        when_not_matched_insert=True,
-    )
+    with _gate_cap(cap):
+        res = ds.merge_into(
+            spark.createDataFrame(src),
+            on="k",
+            when_matched_update={"val": SF.col("s.val")},
+            when_matched_delete=SF.col("s.op") == "D",
+            when_not_matched_insert=True,
+        )
 
     matched = {k: ov for k, ov in ops.items() if k < len(vals)}
     truth = pdf[~pdf["k"].isin([k for k, (o, _) in matched.items() if o == "D"])].copy()
